@@ -103,9 +103,11 @@ def main():
     cp = build()
 
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", p + "=ALL-UNNAMED")] +
-           # Serial GC sizes the heap from live data, not from pause-time
-           # goals, so peak RSS repeats across runs.
-           ["-XX:+UseSerialGC", "-Xmx4g", "-XX:-UsePerfData",
+           # Serial GC with a fixed young generation and a 2 GB initial heap:
+           # the heap does not grow at run-dependent moments, so peak RSS
+           # follows the data the program keeps, and repeats across runs.
+           ["-XX:+UseSerialGC", "-Xms2g", "-Xmn512m", "-Xmx4g",
+            "-XX:-UsePerfData",
             "-Djava.io.tmpdir=" + TMP,
             "-cp", cp, "perfbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),

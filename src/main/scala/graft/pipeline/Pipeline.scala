@@ -4078,14 +4078,9 @@ object Pipeline {
         th.start()
         ft
       }
-      // join every body before rethrowing, so no sibling is still running
-      // when the caller unwinds (and releases what the bodies share)
-      var first: Throwable = null
       futs.foreach(ft => try { ft.get(); () } catch {
-        case e: java.util.concurrent.ExecutionException =>
-          if (first == null) first = e.getCause
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
       })
-      if (first != null) throw first
     }
 
   /** Table property pinning the SESSION TIMEZONE an expression-group-key

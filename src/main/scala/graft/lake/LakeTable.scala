@@ -4296,9 +4296,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         dt == org.apache.spark.sql.types.DateType,
         s"z-order column $c has unsupported type $dt")
     }
-    // one numeric shadow column per z-col for the quantile sketch
+    // one numeric shadow column per z-col for the quantile sketch (a DATE
+    // has no cast to DOUBLE: it maps through its day number)
     val shadowed = zcols.zipWithIndex.foldLeft(df) { case (d, (c, i)) =>
-      d.withColumn(s"__zc$i", col(c).cast("double"))
+      val numeric = if (m.schema(c).dataType == org.apache.spark.sql.types.DateType)
+        unix_date(col(c)) else col(c)
+      d.withColumn(s"__zc$i", numeric.cast("double"))
     }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val bits = 8
     val bins = 1 << bits

@@ -964,13 +964,12 @@ object CoreQueries {
         st.append(state1)
       }
       val p = new Pipeline(s, root)
-      p.streamingTable("mv")
-      p.runAggMvFromChangeFeed("mv", src, Seq("event_type"), Seq("value"),
-        "mv_flow") // bootstrap at the cutoff state
+      p.inputTable("src", src)
+      p.incrementalAggMv("mv", "src", Seq("event_type"), Seq("value"))
+      p.refreshMaterializedView("mv") // bootstrap at the cutoff state
       src.merge(latest(ev), Seq("user_id"))
       src.deleteWhere("event_type = 'error'")
-      p.runAggMvFromChangeFeed("mv", src, Seq("event_type"), Seq("value"),
-        "mv_flow") // O(changed rows)
+      p.refreshMaterializedView("mv") // O(changed rows)
       p.read("mv")
         .select(col("event_type"), col("sum_value").cast("double").as("sum_value"),
           col("cnt"))
@@ -990,11 +989,11 @@ object CoreQueries {
         FROM latest WHERE event_type <> 'error'
         GROUP BY event_type ORDER BY event_type""")),
 
-    // O12 incremental MV with MIN/MAX — the append-only arm of the Enzyme
-    // story: over a feed that never retracts, MIN/MAX merge monotonically
-    // (least/greatest), so the full SUM/COUNT/MIN/MAX panel maintains in
-    // O(new rows). Bootstrap on the even-event half, one append of the odd
-    // half, one refresh; the oracle recomputes the final panel directly.
+    // O12 incremental MV with MIN/MAX — each extreme rides a bounded
+    // per-group top-K companion, so the full SUM/COUNT/MIN/MAX panel
+    // maintains in O(new rows). Bootstrap on the even-event half, one
+    // append of the odd half, one refresh; the oracle recomputes the final
+    // panel directly.
     Q("o12_incremental_mv_minmax", (s, d) => {
       val ev = t(s, d, "events")
         .filter(col("event_type").isNotNull && col("value").isNotNull)
@@ -1007,16 +1006,13 @@ object CoreQueries {
         st.append(half1)
       }
       val p = new Pipeline(s, root)
-      p.streamingTable("mv")
-      def refresh(): Unit = {
-        p.runAggMvFromChangeFeed("mv", src, Seq("event_type"), Seq("value"),
-          "mv_flow", mins = Seq("value"), maxs = Seq("value"))
-        ()
-      }
-      refresh() // bootstrap
+      p.inputTable("src", src)
+      p.incrementalAggMv("mv", "src", Seq("event_type"), Seq("value"),
+        mins = Seq("value"), maxs = Seq("value"))
+      p.refreshMaterializedView("mv") // bootstrap
       src.append(ev.filter(col("event_id") % 2 === 1)
         .select("event_type", "value"))
-      refresh() // O(new rows)
+      p.refreshMaterializedView("mv") // O(new rows)
       p.read("mv")
         .select(col("event_type"), col("sum_value").cast("double").as("sum_value"),
           col("min_value"), col("max_value"), col("cnt"))

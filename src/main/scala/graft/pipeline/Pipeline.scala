@@ -174,6 +174,20 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         s"materialized view from union (branch not materialized)"))
       return
     }
+    // the maintained arm: ONE kernel call for the single-source fact and
+    // the union-as-fact shapes alike (`ubs` empty = single source)
+    def maintain(source: LakeTable,
+        ubs: Seq[(LakeTable, Option[Seq[(String, String)]], Option[String])]): Unit = {
+      val (n, mode) = runAggMvCore(name, spec, source,
+        dims = dimTables.map { case (n2, dt) => n2 -> dt.get },
+        union = ubs, unionDef = unionDef, defFp = defFp)
+      val from = if (ubs.nonEmpty) spec.union.map(_._1).mkString(" ∪ ")
+        else spec.source
+      val how = if (mode == "incremental") s"incremental from $from"
+        else s"$mode, from $from"
+      events += (("flow_progress", name, n,
+        s"materialized view refresh ($how)"))
+    }
     asTable(spec.source) match {
       case _ if spec.union.nonEmpty =>
         // union-as-fact STAR joins ride the same arm: branch windows and
@@ -186,55 +200,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         }
         val ubs = unionTables.map { case (_, bt, cols, where) =>
           (bt.get, cols, where) }
-        val (n, mode) = runAggMvCore(name, ubs.head._1, spec.where,
-          spec.groupBy, spec.sums, spec.mins, spec.maxs,
-          cntAlias = spec.counts.headOption.getOrElse("__cnt"),
-          flowId = s"graft.aggmv.$name", minMaxFallback = true,
-          exactDecimal = false, avgs = spec.avgs, cnts = spec.cntCols,
-          groupExprs = spec.groupExprs, union = ubs, unionDef = unionDef,
-          defFp = defFp,
-          dims = dimTables.map { case (n2, dt) => n2 -> dt.get },
-          enrich = autoMvEnrich(spec, _),
-          dimEqui = spec.joins.collect {
-            case j if j.equi.nonEmpty => j.dim -> j.equi }.toMap,
-          dimBands = spec.joins.collect {
-            case j if j.bands.nonEmpty => j.dim -> j.bands }.toMap,
-          dcounts = spec.dcounts,
-          distTables = spec.dcounts.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__dist_$a") },
-          extMins = spec.mins.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__ext_$a") },
-          extMaxs = spec.maxs.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__ext_$a") })
-        val how = if (mode == "incremental")
-          s"incremental from ${spec.union.map(_._1).mkString(" ∪ ")}"
-          else s"$mode, from ${spec.union.map(_._1).mkString(" ∪ ")}"
-        events += (("flow_progress", name, n,
-          s"materialized view refresh ($how)"))
+        maintain(ubs.head._1, ubs)
       case Some(root) if root.exists && dimTables.forall(_._2.isDefined) =>
-        val dims = dimTables.map { case (n, dt) => n -> dt.get }
-        val (n, mode) = runAggMvCore(name, root, spec.where, spec.groupBy,
-          spec.sums, spec.mins, spec.maxs,
-          cntAlias = spec.counts.headOption.getOrElse("__cnt"),
-          flowId = s"graft.aggmv.$name", minMaxFallback = true,
-          exactDecimal = false, avgs = spec.avgs, cnts = spec.cntCols,
-          dims = dims, enrich = autoMvEnrich(spec, _),
-          groupExprs = spec.groupExprs, defFp = defFp,
-          dimEqui = spec.joins.collect {
-            case j if j.equi.nonEmpty => j.dim -> j.equi }.toMap,
-          dimBands = spec.joins.collect {
-            case j if j.bands.nonEmpty => j.dim -> j.bands }.toMap,
-          dcounts = spec.dcounts,
-          distTables = spec.dcounts.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__dist_$a") },
-          extMins = spec.mins.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__ext_$a") },
-          extMaxs = spec.maxs.map { case (a, _) =>
-            LakeTable(spark, s"$storageRoot/${name}__ext_$a") })
-        val how = if (mode == "incremental") s"incremental from ${spec.source}"
-          else s"$mode, from ${spec.source}"
-        events += (("flow_progress", name, n,
-          s"materialized view refresh ($how)"))
+        maintain(root, Nil)
       case Some(_) => events += (("flow_progress", name, 0L,
         s"materialized view from ${spec.source} (source or dimension " +
           "not materialized)"))
@@ -501,30 +469,29 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
   }
 
   /** Declare an INCREMENTALLY MAINTAINED aggregate MV as a graph node —
-   *  the Enzyme-style refresh Lakeflow applies to maintainable views,
-   *  registered in the DAG instead of driven by hand
-   *  ([[runAggMvFromChangeFeed]] remains the standalone form). The view is
-   *  `SELECT groupBy…, SUM/MIN/MAX…, COUNT(*) FROM source GROUP BY …`,
-   *  maintained from the source table's change feed on EVERY run mode
-   *  (the refresh is inherently incremental: signed deltas + a merge over
-   *  touched groups, never a source rescan after bootstrap). `source`
-   *  must name a table-backed dataset ([[inputTable]] or a declared
-   *  streaming table — CDF-enabled if it is merge-maintained). MVs
-   *  refresh AFTER the CDC flows each run, so an MV over a silver target
-   *  sees that run's merged state. */
+   *  the Enzyme-style refresh Lakeflow applies to maintainable views. The
+   *  view is `SELECT groupBy…, SUM(CAST(c AS DECIMAL(28,6))) AS sum_c…,
+   *  MIN(c) AS min_c…, MAX(c) AS max_c…, COUNT(*) AS cnt FROM source
+   *  GROUP BY groupBy…`, declared through [[autoAggMv]] and so maintained
+   *  by the same kernel as a SQL-detected MV: from the source table's
+   *  change feed when it is table-backed ([[inputTable]] or a declared
+   *  streaming table — CDF-enabled if it is merge-maintained), with exact
+   *  SUM NULL algebra and MIN/MAX retractions through the extreme
+   *  companions; a view-backed source recomputes. The DECIMAL(28,6) sum
+   *  input keeps incremental addition order-independent and bit-equal to
+   *  a direct recompute. MVs refresh AFTER the CDC flows each run, so an
+   *  MV over a silver target sees that run's merged state. */
   def incrementalAggMv(name: String, source: String, groupBy: Seq[String],
       sums: Seq[String], mins: Seq[String] = Nil,
       maxs: Seq[String] = Nil): LakeTable = {
     require(groupBy.nonEmpty, "incremental agg MV needs GROUP BY columns")
-    val t = LakeTable(spark, s"$storageRoot/$name")
-    tables(name) = t
-    views(name) = () => t.read
-    aggMvs(name) = (source, groupBy, sums, mins, maxs)
-    t
+    val sumAggs = sums.map(c => s"sum_$c" -> s"CAST(`$c` AS DECIMAL(28,6))")
+    val minAggs = mins.map(c => s"min_$c" -> s"`$c`")
+    val maxAggs = maxs.map(c => s"max_$c" -> s"`$c`")
+    autoAggMv(name, Pipeline.AutoMvSpec(source, where = None, groupBy,
+      sumAggs, minAggs, maxAggs, counts = Seq("cnt"),
+      output = groupBy ++ (sumAggs ++ minAggs ++ maxAggs).map(_._1) :+ "cnt"))
   }
-
-  private val aggMvs = mutable.LinkedHashMap[
-    String, (String, Seq[String], Seq[String], Seq[String], Seq[String])]()
 
   /** An AUTO-DETECTED maintainable MV — the Lakeflow/Enzyme behavior where
    *  `CREATE OR REFRESH MATERIALIZED VIEW` silently gets INCREMENTAL
@@ -537,10 +504,11 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  preserved — the group-death count column is materialized internally
    *  and hidden from reads when the user didn't select COUNT(*). A source
    *  that turns out not to be table-backed at run time falls back to full
-   *  recompute — registration never has to know. MIN/MAX over a feed that
-   *  retracts re-bootstraps (recompute) instead of failing: the USER asked
-   *  for an MV, not an incremental contract — degrading to DLT's
-   *  documented recompute is always legal. */
+   *  recompute — registration never has to know. MIN/MAX retractions
+   *  maintain through bounded extreme companions, and any shape the
+   *  kernel can't maintain re-bootstraps (recompute) instead of failing:
+   *  the USER asked for an MV, not an incremental contract — degrading to
+   *  DLT's documented recompute is always legal. */
   private[pipeline] def autoAggMv(name: String, spec: Pipeline.AutoMvSpec,
       clusterBy: Seq[String] = Nil): LakeTable = {
     val t = LakeTable(spark, s"$storageRoot/$name")
@@ -707,8 +675,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  the guarded merge is replay-idempotent. At 100 TB the dims stay
    *  broadcast-joined inside `enrich` and the merge is partition-scoped
    *  when the target is partitioned ([[streamingTable]]'s partitionBy
-   *  rationale). This is [[runJoinFlowStreaming]]'s semantics as a graph
-   *  node: declared once, executed by every run mode, event-logged.
+   *  rationale). Declared once, executed by every run mode, event-logged;
+   *  the processed (enriched) row count of each refresh lands in
+   *  [[eventLog]].
    *
    *  Join tables refresh AFTER the CDC flows and any streaming-select
    *  tables that FEED them each run (the enrichment must see this run's
@@ -2038,29 +2007,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       barrier = t => opaqueOrigin(t._2),
       dependsOn = (a, b) => chainTouches(a._2, b._1))(
       (t, buf) => refreshSelectTable(t._1, t._2, t._3, incremental, buf))
-    // incrementally maintained aggregate MVs refresh from their source's
-    // change feed — O(changed rows) after bootstrap, in every run mode;
-    // independent MVs refresh concurrently (deps: an MV over another MV's
-    // target waits)
-    runWaves[(String, (String, Seq[String], Seq[String], Seq[String], Seq[String]))](
-      aggMvs.toSeq, events,
-      barrier = _ => false,
-      dependsOn = (a, b) => a._2._1 == b._1)(
-      { case ((name, (source, groupBy, sums, mins, maxs)), buf) =>
-        val root = inputs.get(source).orElse(tables.get(source)).getOrElse(
-          sys.error(s"incremental agg MV $name: source $source is not a " +
-            "table-backed dataset (inputTable or streamingTable)"))
-        // a not-yet-materialized source is an empty input, not a crash —
-        // the MV bootstraps on the first run that finds data
-        if (root.exists) {
-          val n = runAggMvFromChangeFeed(name, root, groupBy, sums,
-            flowId = s"graft.aggmv.$name", mins = mins, maxs = maxs)
-          buf += (("flow_progress", name, n, s"incremental agg mv from $source"))
-        } else buf += (("flow_progress", name, 0L,
-          s"incremental agg mv from $source (source not materialized)"))
-      })
-    // AUTO-detected maintainable MVs (SQL `CREATE OR REFRESH MATERIALIZED
-    // VIEW` whose plan the engine proved maintainable): incremental from
+    // maintained aggregate MVs (SQL `CREATE OR REFRESH MATERIALIZED VIEW`
+    // whose plan the engine proved maintainable, and [[incrementalAggMv]]
+    // declarations): O(changed rows) after bootstrap, incremental from
     // the source's change feed when the source is table-backed; graceful
     // full-recompute fallback otherwise — the user declared an MV, never
     // an incremental contract. View-backed sources are opaque (their
@@ -2199,9 +2148,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         } else if (joinTables.contains(n)) {
           val src = joinTables(n).source
           (n, "streaming_join_table", Option(src), inc(src))
-        } else if (aggMvs.contains(n))
-          (n, "incremental_agg_mv", Option(aggMvs(n)._1), true)
-        else if (autoMvs.contains(n)) {
+        } else if (autoMvs.contains(n)) {
           val spec = autoMvs(n)
           // star-join MVs list fact + dims (the fact leads: it's the
           // delta side; dim changes recompute)
@@ -2577,7 +2524,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // sources' full current contents, so their ledgers remain consistent
     // (clearing them would force a full change-feed replay that vacuumed
     // history might not even serve).
-    (aggMvs.keys ++ autoMvs.keys).filterNot(resetDisallowed).foreach { name =>
+    autoMvs.keys.filterNot(resetDisallowed).foreach { name =>
       val t = tables(name)
       if (t.exists) { t.clearTxn(s"graft.aggmv.$name"); () }
     }
@@ -2636,212 +2583,72 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     runIncremental()
   }
 
-  /**
-   * TRUE STREAMING auto-CDC flow — the execution shape DLT actually gives a
-   * `create_auto_cdc_flow` (SURVEY §3.2): tail an append-only bronze
-   * [[LakeTable]] as a stream and, per micro-batch, dedup latest-per-key and
-   * merge into the target. The stream checkpoint makes runs incremental:
-   * each invocation processes only bronze files appended since the last run
-   * (O(new data), vs [[run]]'s full-snapshot re-merge), and `foreachBatch`
-   * replay after a crash re-merges idempotently (guarded latest-wins).
-   */
-  def runCdcFlowStreaming(
-      target: String,
-      source: LakeTable,
-      keys: Seq[String],
-      sequenceBy: String,
-      checkpoint: String,
-      tiebreak: Seq[String] = Nil): Unit = {
-    runJoinFlowStreaming(target, source, keys, sequenceBy, checkpoint, tiebreak)(identity)
-    ()
-  }
-
-  /**
-   * Incremental CDC flow driven by the SOURCE TABLE'S CHANGE FEED — the
-   * `spark.readStream.option("readChangeFeed", "true")` pattern the
-   * reference's README names for silver→gold (O8). Where
-   * [[runCdcFlowStreaming]] tails FILES (sound only for append-only
-   * sources), this consumes the row-level feed of a MERGE-maintained silver
-   * table: each run processes only the source versions committed since the
-   * last run, keeps the newest insert/update_postimage per key (commit
-   * order is authoritative across versions), and latest-wins merges into
-   * the target.
+  /** The refresh kernel behind every maintained aggregate MV (SQL-detected
+   *  and [[incrementalAggMv]] alike). The view is maintained from the
+   *  SOURCE TABLE'S CHANGE FEED: each refresh reads only the versions
+   *  committed since the last one (the last-consumed version rides the
+   *  target's transaction ledger, committed ATOMICALLY with the merge — a
+   *  ±delta applied twice would double-count, so exactly-once is the
+   *  merge-txn primitive, not replay idempotence), turns the row images
+   *  into SIGNED deltas (+1 for insert/postimage, −1 for delete/preimage —
+   *  a group-moving update subtracts from the old group and adds to the
+   *  new one), pre-aggregates them per group (one shuffled row per
+   *  touched group) and merges: matched groups add their delta, groups
+   *  whose count reaches zero DELETE, new groups insert. The first refresh
+   *  bootstraps from the full snapshot (O(table), once).
    *
-   * The last-consumed source version rides the TARGET's own transaction
-   * ledger (`flowId` as the app id), committed ATOMICALLY with the merge —
-   * there is no side file to half-write, and a crash replays the same
-   * window into an idempotent no-op (the ledger entry marks it applied).
-   * Cost per run is O(changed rows since last run) — no silver rescan.
-   * Returns the number of change rows processed.
-   */
-  def runCdcFlowFromChangeFeed(
-      target: String,
-      source: LakeTable,
-      keys: Seq[String],
-      sequenceBy: String,
-      flowId: String = "",
-      tiebreak: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions.col
-    val t = tables(target)
-    val appId = if (flowId.nonEmpty) flowId else s"graft.cdcflow.$target"
-    val last = t.lastTxnVersion(appId).getOrElse(-1L)
-    val cur = source.currentVersion
-    if (cur <= last) return 0L
-    if (last >= 0 && !source.feedReadable(last + 1, cur)) {
-      // the window spans a full-rewrite source commit — RE-PIN at the
-      // current snapshot (every live row is an upsert; the guarded merge
-      // makes the replay a no-op-or-update) instead of wedging the flow
-      val gb = GoldBuilder(spark)
-      val snap = source.readVersion(cur)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val tb = if (tiebreak.nonEmpty) tiebreak
-          else snap.columns.toSeq.filterNot(c =>
-            keys.contains(c) || c == sequenceBy)
-        val perKey = gb.latestPerKey(snap, keys, sequenceBy, tb)
-        val processed = snap.count()
-        if (!t.exists) t.create(perKey.schema)
-        t.merge(perKey, keys, Some(s"s.$sequenceBy >= t.$sequenceBy"),
-          txn = Some(appId -> cur))
-        return processed
-      } finally snap.unpersist()
-    }
-    // persisted: both the processed-count and the dedup+merge consume the
-    // feed — one pass over the change dirs instead of two
-    val feed = source.readChangeFeed(last + 1, Some(cur))
-      .filter(col(graft.lake.LakeTable.ChangeTypeCol)
-        .isin("insert", "update_postimage"))
-      .drop(graft.lake.LakeTable.ChangeTypeCol,
-        graft.lake.LakeTable.CommitTimestampCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val gb = GoldBuilder(spark)
-      // newest committed state per key: the LAST version a key changed in wins
-      // (source merges are themselves guarded, so commit order ⊇ seq order)
-      val perKey = gb.latestPerKey(feed, keys,
-        graft.lake.LakeTable.CommitVersionCol, Seq(sequenceBy) ++ tiebreak)
-        .drop(graft.lake.LakeTable.CommitVersionCol)
-      val processed = feed.count()
-      if (!t.exists) t.create(perKey.schema)
-      t.merge(perKey, keys, Some(s"s.$sequenceBy >= t.$sequenceBy"),
-        txn = Some(appId -> cur))
-      processed
-    } finally feed.unpersist()
-  }
-
-  /**
-   * INCREMENTALLY MAINTAINED AGGREGATE MV — the Enzyme-style incremental
-   * refresh Lakeflow applies to maintainable materialized views, instead
-   * of [[materializedView]]'s documented full recompute. The view is
-   *   `SELECT groupBy…, SUM(c) AS sum_c (per c), COUNT(*) AS cnt
-   *    FROM source GROUP BY groupBy…`
-   * maintained from the SOURCE TABLE'S CHANGE FEED: each run reads only
-   * the versions committed since the last run (the last-consumed version
-   * rides the target's transaction ledger, committed ATOMICALLY with the
-   * merge — a ±delta applied twice would double-count, so the exactly-once
-   * guarantee here is the merge-txn primitive, not replay idempotence),
-   * turns the row images into SIGNED deltas (+1 for insert/postimage, −1
-   * for delete/preimage — a group-moving update subtracts from the old
-   * group and adds to the new one), pre-aggregates them per group
-   * (map-side combine; the shuffle carries ONE row per touched group),
-   * and merges: matched groups add their delta, groups whose count
-   * reaches zero DELETE, new groups insert.
+   *  Aggregates are the spec's (alias, SQL expression) pairs; an optional
+   *  per-row WHERE filters BOTH the bootstrap snapshot and the change
+   *  images (a stateless row predicate commutes with the signed-delta
+   *  algebra), and the count column carries the spec's COUNT(*) alias
+   *  (the group-death detector, always materialized). Hidden per-SUM
+   *  non-null counts give exact SUM NULL algebra (a group is NULL iff it
+   *  holds no non-null inputs — including the fully-retracted-
+   *  contributions case); `avgs` ride a hidden SUM+COUNT decomposition
+   *  (presented as their quotient cast to the declared AVG type) and
+   *  `cntCols` signed non-null counts. Returns (rows processed, refresh
+   *  mode) — the mode feeds the event log.
    *
-   * Cost per run is O(changed rows) + a merge touching only changed
-   * groups — at 100 TB the MV never rescans the fact. SUM/COUNT are
-   * always maintainable; `mins`/`maxs` are maintainable ONLY while the
-   * feed is APPEND-ONLY (monotone merge `least`/`greatest`) — a delete or
-   * update image with MIN/MAX declared fails loudly (retracting an
-   * extreme needs a group rescan: that is [[materializedView]]'s job).
-   * Sums run over exact DECIMAL(28,6) so incremental addition is
-   * order-independent and bit-equal to a direct recompute; the first run
-   * bootstraps from the full snapshot (O(table), once). Returns the
-   * number of change rows processed.
-   */
-  def runAggMvFromChangeFeed(
-      target: String,
-      source: LakeTable,
-      groupBy: Seq[String],
-      sums: Seq[String],
-      flowId: String = "",
-      mins: Seq[String] = Nil,
-      maxs: Seq[String] = Nil): Long =
-    runAggMvCore(target, source, where = None, groupBy,
-      sums = sums.map(c => s"sum_$c" -> c),
-      mins = mins.map(c => s"min_$c" -> c),
-      maxs = maxs.map(c => s"max_$c" -> c),
-      cntAlias = "cnt", flowId = flowId)._1
-
-  /** The expression-general refresh kernel behind [[runAggMvFromChangeFeed]]
-   *  and the SQL-detected maintainable MVs: aggregates are (alias, SQL
-   *  expression) pairs, an optional per-row WHERE filters BOTH the
-   *  bootstrap snapshot and the change images (a stateless row predicate
-   *  commutes with the signed-delta algebra, so filtered maintenance stays
-   *  exact), and the count column carries the caller's alias (the group-
-   *  death detector, always materialized). The AUTO path (`exactDecimal =
-   *  false`) additionally maintains hidden per-SUM non-null counts (exact
-   *  SUM NULL algebra: a group is NULL iff it holds no non-null inputs —
-   *  including the fully-retracted-contributions case) and supports
-   *  `avgs` (hidden SUM+COUNT decomposition, presented as their quotient
-   *  cast to the declared AVG type) and `cnts` (COUNT(expr) signed
-   *  non-null counts). Returns (rows processed, refresh mode) — the mode
-   *  feeds the event log.
-   *
-   *  STAR-JOIN maintenance (`dims`/`enrich`/`groupExprs`, auto path only):
-   *  the source is the FACT/delta side; `enrich` inner-joins a frame
-   *  against the dimension frames it is given, `groupExprs` carry the
-   *  (possibly qualified) group-defining SQL parallel to the `groupBy`
-   *  output names. Inner joins distribute over the signed-delta union —
-   *  γ((F+ΔF) ⋈ D) = merge(γ(F ⋈ D), γ±(ΔF ⋈ D)) — so while the dims are
-   *  UNCHANGED since the MV's pins the fact window joined against the
-   *  pinned dim snapshots maintains the MV exactly; any dim change (or an
-   *  unpinnable state) falls back to recompute, re-pinning. Pins ride the
-   *  MV's own table properties in a follow-up metadata commit — a crash
-   *  between the bootstrap and the pin write only costs one extra
-   *  recompute, never a wrong incremental window. */
+   *  STAR-JOIN maintenance (`dims` + the spec's joins): the source is the
+   *  FACT/delta side, enriched against the dimension frames through
+   *  [[autoMvEnrich]]; `groupExprs` carry the (possibly qualified)
+   *  group-defining SQL parallel to the `groupBy` output names. Inner joins
+   *  distribute over the signed-delta union — γ((F+ΔF) ⋈ D) =
+   *  merge(γ(F ⋈ D), γ±(ΔF ⋈ D)) — so while the dims are UNCHANGED since
+   *  the MV's pins the fact window joined against the pinned dim snapshots
+   *  maintains the MV exactly; any dim change (or an unpinnable state)
+   *  falls back to recompute, re-pinning. Pins ride the MV's own table
+   *  properties in a follow-up metadata commit — a crash between the
+   *  bootstrap and the pin write only costs one extra recompute, never a
+   *  wrong incremental window. */
   private def runAggMvCore(
       target: String,
+      spec: Pipeline.AutoMvSpec,
       source: LakeTable,
-      where: Option[String],
-      groupBy: Seq[String],
-      sums: Seq[(String, String)],
-      mins: Seq[(String, String)],
-      maxs: Seq[(String, String)],
-      cntAlias: String,
-      flowId: String,
-      minMaxFallback: Boolean = false,
-      exactDecimal: Boolean = true,
-      avgs: Seq[(String, String)] = Nil,
-      cnts: Seq[(String, String)] = Nil,
-      dims: Seq[(String, LakeTable)] = Nil,
-      enrich: Map[String, DataFrame] => DataFrame => DataFrame = _ => identity,
-      groupExprs: Seq[String] = Nil,
-      dcounts: Seq[(String, String)] = Nil,
-      distTables: Seq[LakeTable] = Nil,
-      dimEqui: Map[String, Seq[(String, String)]] = Map.empty,
-      union: Seq[(LakeTable, Option[Seq[(String, String)]], Option[String])] = Nil,
-      dimBands: Map[String, Seq[(String, String, Boolean)]] = Map.empty,
-      extMins: Seq[LakeTable] = Nil,
-      extMaxs: Seq[LakeTable] = Nil,
-      unionDef: Option[String] = None,
-      defFp: Option[String] = None): (Long, String) = {
+      dims: Seq[(String, LakeTable)],
+      union: Seq[(LakeTable, Option[Seq[(String, String)]], Option[String])],
+      unionDef: Option[String],
+      defFp: Option[String]): (Long, String) = {
     import org.apache.spark.sql.functions.{avg, broadcast, col, count, countDistinct, expr, lit, max, min, sum, when}
+    import spec.{avgs, dcounts, groupBy, groupExprs, maxs, mins, sums, where}
     require(groupBy.nonEmpty, "incremental agg MV needs GROUP BY columns")
-    // AVG/COUNT(expr) decompositions ride hidden columns — auto path only
-    // (the explicit API's materialized schema is the user's own)
-    require(!exactDecimal || (avgs.isEmpty && cnts.isEmpty),
-      "AVG/COUNT(expr) maintenance is the auto path's")
-    require(!exactDecimal || dims.isEmpty,
-      "star-join maintenance is the auto path's")
-    require((exactDecimal && dcounts.isEmpty) ||
-      dcounts.size == distTables.size,
-      "COUNT(DISTINCT) maintenance is the auto path's, one companion per column")
-    require(union.isEmpty || !exactDecimal,
-      "UNION ALL maintenance is the auto path's (star-join unions " +
-        "compose: branch windows enrich against the pinned dims)")
-    val auto = !exactDecimal
+    val cnts = spec.cntCols
+    val cntAlias = spec.counts.headOption.getOrElse("__cnt")
+    val enrich: Map[String, DataFrame] => DataFrame => DataFrame =
+      autoMvEnrich(spec, _)
+    val dimEqui = spec.joins.collect {
+      case j if j.equi.nonEmpty => j.dim -> j.equi }.toMap
+    val dimBands = spec.joins.collect {
+      case j if j.bands.nonEmpty => j.dim -> j.bands }.toMap
+    // companion tables: one COUNT(DISTINCT) multiset per dcount, one
+    // extreme top-K per MIN/MAX (see `extremes` below)
+    def companion(kind: String, a: String) =
+      LakeTable(spark, s"$storageRoot/${target}__${kind}_$a")
+    val distTables = dcounts.map { case (a, _) => companion("dist", a) }
+    val extMins = mins.map { case (a, _) => companion("ext", a) }
+    val extMaxs = maxs.map { case (a, _) => companion("ext", a) }
     val t = tables(target)
-    val appId = if (flowId.nonEmpty) flowId else s"graft.aggmv.$target"
+    val appId = s"graft.aggmv.$target"
     // UNION ALL branches: (per-branch ledger id, table, optional
     // positional projection). Empty `union` = the classic single-source
     // MV: ONE branch whose ledger is appId itself — the generalized code
@@ -2869,7 +2676,6 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         cols.fold(df)(cs => df.select(cs.map { case (e, n) =>
           expr(e).as(n) }: _*))
       }.reduce(_ union _)
-    val dec = "decimal(28,6)"
     def filtered(df: DataFrame): DataFrame = where.fold(df)(w => df.filter(expr(w)))
     // SESSION-ZONE sensitivity: expression GROUP keys always (their
     // bucketing IS the zone question), and otherwise any maintained
@@ -2928,17 +2734,12 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // positionally to the declared output names (grouping columns lead)
     def nameGroups(df: DataFrame, tailNames: Seq[String]): DataFrame =
       if (groupExprs.nonEmpty) df.toDF((groupBy ++ tailNames): _*) else df
-    // `exactDecimal` (the explicit API's documented contract): each sum
-    // input passes through DECIMAL(28,6) so incremental addition is
-    // order-independent and bit-equal to a direct recompute. The AUTO path
-    // is TYPE-FAITHFUL instead: the accumulator is whatever the declared
+    // Sums are TYPE-FAITHFUL: the accumulator is whatever the declared
     // query's SUM would produce (long for integral, widened decimal for
     // decimal) — detection must never change the MV's declared result
     // type or values. FLOAT/DOUBLE accumulators are routed to recompute
     // below (not associative — a long-lived MV would drift ULPs from a
-    // recompute), so the type-faithful incremental path only ever adds
-    // exact types.
-    def sumIn(e: String) = if (exactDecimal) expr(e).cast(dec) else expr(e)
+    // recompute), so the incremental path only ever adds exact types.
     val lasts = branches.map { case (lid, _, _, _) =>
       t.lastTxnVersion(lid).getOrElse(-1L) }
     val curs = branches.map(_._2.currentVersion)
@@ -2967,7 +2768,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         case Some(_) => Some("recompute: union shape changed")
         case None => Some("recompute: union definition unpinned")
       }
-    // WHOLE-DEFINITION pin (auto path; checked after the more specific
+    // WHOLE-DEFINITION pin (checked after the more specific
     // union-shape reason): a redeclared WHERE/aggregate/join over the
     // same source is invisible to the ledger — ABSENT pin fails safe
     val defStale: Option[String] =
@@ -2981,14 +2782,14 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         defStale.isEmpty)
       return (0L, "up-to-date")
 
-    // FLOATING-SUM POLICY (auto path; COVERAGE.md): a double/float SUM or
+    // FLOATING-SUM POLICY (COVERAGE.md): a double/float SUM or
     // AVG keeps RECOMPUTE refresh — pinned at the source version and
     // skipped when idle, but never incrementally drifted. Driver-side
     // schema probe only (the enriched zero-row frame carries the join
     // schema — for a union MV the UNIONED frame, whose widened set-op
     // types are the declared result's inputs); an unresolvable expression
     // falls through to fail loudly in the aggregate itself.
-    lazy val floating = auto && source.exists && scala.util.Try {
+    lazy val floating = source.exists && scala.util.Try {
       val probe = en(
         (if (union.isEmpty) source.read else unionAt(curs)).limit(0))
       (sums ++ avgs).exists { case (_, e) =>
@@ -3011,25 +2812,23 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // companion nonempty maintain in O(window); a drained-but-live group
     // (the true extreme fell past the floor) or an overgrown companion
     // (monotone domains outgrow the floor) costs ONE recompute, which
-    // re-trims. AUTO path only — the explicit API keeps its loud
-    // append-only contract; union branches maintain companions too (each
-    // branch window merges under its OWN per-branch companion ledger); a
+    // re-trims. Union branches maintain companions too (each branch
+    // window merges under its OWN per-branch companion ledger); a
     // FLOATING-sum MV (recompute every refresh by policy) skips the
     // companions entirely: they would be rebuilt per refresh and never
-    // consulted.
+    // consulted — so past the floating recompute below, every MIN/MAX is
+    // companion-maintained.
     //   (alias, expr, companion, isMin, index)
     lazy val extremes: Seq[(String, String, LakeTable, Boolean, Int)] =
-      if (!auto || extMins.size != mins.size ||
-          extMaxs.size != maxs.size ||
-          ((mins.nonEmpty || maxs.nonEmpty) && floating)) Nil
+      if ((mins.nonEmpty || maxs.nonEmpty) && floating) Nil
       else (mins.zip(extMins).map { case ((a, e), et) => (a, e, et, true) } ++
         maxs.zip(extMaxs).map { case ((a, e), et) => (a, e, et, false) })
         .zipWithIndex.map { case ((a, e, et, m), i) => (a, e, et, m, i) }
 
     // bootstrap: one full-snapshot aggregation at version `cur` — also the
     // recompute fallback when the window spans a FULL-REWRITE source
-    // commit (the feed can't serve signed deltas across it), when
-    // maintained extremes retract under `minMaxFallback`, and for
+    // commit (the feed can't serve signed deltas across it), when a
+    // maintained extreme drains or overgrows its companion, and for
     // floating-point aggregates: RE-bootstrapping replaces the MV with
     // the recomputed panel — correct by definition and un-wedges the
     // consumer — instead of failing every run.
@@ -3088,39 +2887,33 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         et.overwrite(kept)
       } finally valsByExpr.values.foreach { v => v.unpersist(); () }
       val aggs =
-        sums.map { case (a, e) =>
-          (if (exactDecimal) sum(sumIn(e)).cast(dec) else sum(sumIn(e))).as(a) } ++
+        sums.map { case (a, e) => sum(expr(e)).as(a) } ++
         mins.map { case (a, e) => min(expr(e)).as(a) } ++
         maxs.map { case (a, e) => max(expr(e)).as(a) } ++
         avgs.map { case (a, e) => avg(expr(e)).as(a) } ++
         cnts.map { case (a, e) => count(expr(e)).as(a) } ++
         dcounts.map { case (a, e) => countDistinct(expr(e)).as(a) } ++
-        (if (auto)
-          sums.map { case (a, e) => count(expr(e)).as(s"__nn_$a") } ++
-          avgs.flatMap { case (a, e) => Seq(
-            sum(expr(e)).as(s"__avs_$a"), count(expr(e)).as(s"__avn_$a")) }
-        else Nil) ++
+        sums.map { case (a, e) => count(expr(e)).as(s"__nn_$a") } ++
+        avgs.flatMap { case (a, e) => Seq(
+          sum(expr(e)).as(s"__avs_$a"), count(expr(e)).as(s"__avn_$a")) } ++
         // per-extreme non-null input count: distinguishes an all-NULL-input
         // group (extreme legitimately NULL) from a DRAINED companion
         extremes.map { case (a, e, _, _, _) => count(expr(e)).as(s"__xn_$a") }
       val aggNames =
         (sums ++ mins ++ maxs ++ avgs ++ cnts ++ dcounts).map(_._1) ++
-        (if (auto)
-          sums.map(p => s"__nn_${p._1}") ++
-          avgs.flatMap(p => Seq(s"__avs_${p._1}", s"__avn_${p._1}"))
-        else Nil) ++
+        sums.map(p => s"__nn_${p._1}") ++
+        avgs.flatMap(p => Seq(s"__avs_${p._1}", s"__avn_${p._1}")) ++
         extremes.map { case (a, _, _, _, _) => s"__xn_$a" }
       val base = nameGroups(
         snap.groupBy(gCols: _*).agg(count(lit(1)).as(cntAlias), aggs: _*),
         cntAlias +: aggNames)
         .select((groupBy ++ aggNames :+ cntAlias).map(col): _*)
-      // AUTO-path backing tables capture CDF from birth: their merges then
-      // serve exact row deltas, so a DOWNSTREAM auto-MV (gold-over-gold)
+      // backing tables capture CDF from birth: their merges then serve
+      // exact row deltas, so a DOWNSTREAM auto-MV (gold-over-gold)
       // maintains incrementally off THIS MV's change feed — Enzyme
       // chaining. MV tables are aggregate-sized (one row per live group),
-      // so the capture cost is negligible at any fact scale. The explicit
-      // API keeps the user's own storage contract untouched.
-      if (!t.exists) t.create(base.schema, enableChangeFeed = auto)
+      // so the capture cost is negligible at any fact scale.
+      if (!t.exists) t.create(base.schema, enableChangeFeed = true)
       // REDECLARATION REWIND GUARD: the txn ledger never regresses, so a
       // bootstrap stamping a SMALLER version than a stale life's
       // high-water (the MV redeclared over a different/younger source)
@@ -3212,7 +3005,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // merge under the dim-pin ledger (replay-guarded) with ABSOLUTE
     // recounts, and companion-maintained extremes retract/refill through
     // the same machinery (a drained companion unwinds to one recompute).
-    // MIN/MAX WITHOUT companions (floating MVs, explicit API) still keep
+    // MIN/MAX WITHOUT companions (floating MVs) still keep
     // recompute — a dim change can retract an extreme no monotone merge
     // recovers.
     // the first branch's effective column names — what the declared
@@ -3255,7 +3048,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       }
     val dimDeltaPlans
         : Seq[(String, LakeTable, Long, Long, Seq[(String, String)])] =
-      if (!auto || changedDims.isEmpty ||
+      if (changedDims.isEmpty ||
           ((mins.nonEmpty || maxs.nonEmpty) && extremes.isEmpty)) Nil
       else changedDims.flatMap { case (dn, curV) =>
         for {
@@ -3557,37 +3350,24 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     def signedNn(e: String) =
       sum(when(expr(e).isNull, lit(0L)).otherwise(col("__sign")))
     def applySigned(signed: DataFrame, txnPair: (String, Long)): Long = {
-      // monotone __mn_/__mx_ window extremes serve the least/greatest
-      // merge only — companion-maintained MVs read absolute __xab_
-      // recounts instead, so skip the wasted per-window aggregation
+      // MIN/MAX carry no window aggregate: they land as absolute __xab_
+      // recounts from their companions (below)
       val deltaAggs =
         sums.zipWithIndex.map { case ((_, e), i) =>
-          sum(sumIn(e) * col("__sign")).as(s"__d_$i") } ++
-        (if (extremes.nonEmpty) Nil
-         else mins.zipWithIndex.map { case ((_, e), i) =>
-          min(expr(e)).as(s"__mn_$i") } ++
-        maxs.zipWithIndex.map { case ((_, e), i) =>
-          max(expr(e)).as(s"__mx_$i") }) ++
-        (if (auto)
-          sums.zipWithIndex.map { case ((_, e), i) =>
-            signedNn(e).as(s"__dnn_$i") } ++
-          avgs.zipWithIndex.flatMap { case ((_, e), i) => Seq(
-            sum(expr(e) * col("__sign")).as(s"__davs_$i"),
-            signedNn(e).as(s"__davn_$i")) } ++
-          cnts.zipWithIndex.map { case ((_, e), i) =>
-            signedNn(e).as(s"__dc_$i") }
-        else Nil) ++
+          sum(expr(e) * col("__sign")).as(s"__d_$i") } ++
+        sums.zipWithIndex.map { case ((_, e), i) =>
+          signedNn(e).as(s"__dnn_$i") } ++
+        avgs.zipWithIndex.flatMap { case ((_, e), i) => Seq(
+          sum(expr(e) * col("__sign")).as(s"__davs_$i"),
+          signedNn(e).as(s"__davn_$i")) } ++
+        cnts.zipWithIndex.map { case ((_, e), i) =>
+          signedNn(e).as(s"__dc_$i") } ++
         extremes.map { case (_, e, _, _, i) => signedNn(e).as(s"__dxn_$i") }
       val deltaNames =
         sums.indices.map(i => s"__d_$i") ++
-        (if (extremes.nonEmpty) Nil
-         else mins.indices.map(i => s"__mn_$i") ++
-        maxs.indices.map(i => s"__mx_$i")) ++
-        (if (auto)
-          sums.indices.map(i => s"__dnn_$i") ++
-          avgs.indices.flatMap(i => Seq(s"__davs_$i", s"__davn_$i")) ++
-          cnts.indices.map(i => s"__dc_$i")
-        else Nil) ++
+        sums.indices.map(i => s"__dnn_$i") ++
+        avgs.indices.flatMap(i => Seq(s"__davs_$i", s"__davn_$i")) ++
+        cnts.indices.map(i => s"__dc_$i") ++
         extremes.map { case (_, _, _, _, i) => s"__dxn_$i" }
       val delta = nameGroups(
         signed
@@ -3622,16 +3402,14 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // (recompute), exactly as under the old sequential order.
       // The signed (group, value) multiset is aggregated ONCE per
       // distinct expression (a MIN and MAX over one column share it).
-      val cdeltaUses = scala.collection.mutable.Map.empty[String, Int]
-      val cdeltaOf: String => DataFrame = {
-        val cache = scala.collection.mutable.Map.empty[String, DataFrame]
-        e => {
-          cdeltaUses(e) = cdeltaUses.getOrElse(e, 0) + 1
-          cache.getOrElseUpdate(e, signed.filter(expr(e).isNotNull)
-            .groupBy((gCols :+ expr(e)): _*)
-            .agg(sum(col("__sign")).as("__d"))
-            .toDF((groupBy ++ Seq("__v", "__d")): _*))
-        }
+      val cdeltaUses = mutable.Map.empty[String, Int]
+      val cdeltas = mutable.Map.empty[String, DataFrame]
+      def cdeltaOf(e: String): DataFrame = {
+        cdeltaUses(e) = cdeltaUses.getOrElse(e, 0) + 1
+        cdeltas.getOrElseUpdate(e, signed.filter(expr(e).isNotNull)
+          .groupBy((gCols :+ expr(e)): _*)
+          .agg(sum(col("__sign")).as("__d"))
+          .toDF((groupBy ++ Seq("__v", "__d")): _*))
       }
       val dcountMerges: Seq[() => Unit] = dcounts.zip(distTables).map {
         case ((a, e), dt) =>
@@ -3682,7 +3460,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // thread reads the first's materialization instead of re-running
       // the window aggregation
       val sharedCdeltas = cdeltaUses.collect {
-        case (e, n) if n > 1 => cdeltaOf(e) }.toSeq
+        case (e, n) if n > 1 => cdeltas(e) }.toSeq
       sharedCdeltas.foreach(_.persist(
         org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       try Pipeline.awaitAll(dcountMerges ++ extMerges)
@@ -3786,29 +3564,18 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // the target column's type drives the merge casts (widened-decimal
       // arithmetic folds back; the accumulator type IS the declared type)
       def tpe(a: String): String = t.schema(a).dataType.sql
-      // SUM's NULL algebra. AUTO path: EXACT — the hidden per-sum non-null
-      // count decides nullness (a group is NULL iff it currently holds no
+      // SUM's NULL algebra is EXACT: the hidden per-sum non-null count
+      // decides nullness (a group is NULL iff it currently holds no
       // non-null inputs, INCLUDING the case where every non-null
       // contribution was retracted while NULL-input rows remain), and the
-      // netted arithmetic runs over coalesced exact values. EXPLICIT path
-      // (fixed user-facing schema, no hidden columns): the CASE keeps
-      // NULL+NULL = NULL, but a group whose non-NULL contributions are
-      // fully retracted while NULL-input rows remain reads 0 where a
-      // recompute reads NULL — the documented residual divergence of the
-      // count-less algebra. least/greatest skip NULLs, matching MIN/MAX.
-      val sumUpdates =
-        if (auto) sums.zipWithIndex.flatMap { case ((a, _), i) =>
-          val newNn = s"t.__nn_$a + coalesce(s.__dnn_$i, 0)"
-          Seq(
-            a -> (s"cast(CASE WHEN ($newNn) = 0 THEN NULL ELSE " +
-              s"coalesce(t.$a, 0) + coalesce(s.__d_$i, 0) END AS ${tpe(a)})"),
-            s"__nn_$a" -> s"cast($newNn AS ${tpe(s"__nn_$a")})")
-        } else sums.zipWithIndex.map { case ((a, _), i) =>
-          a -> (s"cast(CASE WHEN t.$a IS NULL AND s.__d_$i IS NULL THEN NULL " +
-            s"WHEN t.$a IS NULL THEN s.__d_$i " +
-            s"WHEN s.__d_$i IS NULL THEN t.$a " +
-            s"ELSE t.$a + s.__d_$i END AS ${tpe(a)})")
-        }
+      // netted arithmetic runs over coalesced exact values
+      val sumUpdates = sums.zipWithIndex.flatMap { case ((a, _), i) =>
+        val newNn = s"t.__nn_$a + coalesce(s.__dnn_$i, 0)"
+        Seq(
+          a -> (s"cast(CASE WHEN ($newNn) = 0 THEN NULL ELSE " +
+            s"coalesce(t.$a, 0) + coalesce(s.__d_$i, 0) END AS ${tpe(a)})"),
+          s"__nn_$a" -> s"cast($newNn AS ${tpe(s"__nn_$a")})")
+      }
       val avgUpdates = avgs.zipWithIndex.flatMap { case ((a, _), i) =>
         val as = s"__avs_$a"; val an = s"__avn_$a"
         val newS = s"coalesce(t.$as, 0) + coalesce(s.__davs_$i, 0)"
@@ -3827,42 +3594,29 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // companion above) — the one aggregate whose delta is not a sum
       val dcUpdates = dcounts.zipWithIndex.map { case ((a, _), i) =>
         a -> s"cast(s.__da_$i AS ${tpe(a)})" }
-      // extremes: monotone least/greatest while no companion maintains
-      // them; ABSOLUTE recounts from the companion (replay-idempotent,
-      // exact through retractions) when one does
-      val extUpdates: Seq[(String, String)] =
-        if (extremes.isEmpty)
-          mins.zipWithIndex.map { case ((a, _), i) =>
-            a -> s"least(t.$a, s.__mn_$i)" } ++
-          maxs.zipWithIndex.map { case ((a, _), i) =>
-            a -> s"greatest(t.$a, s.__mx_$i)" }
-        else extremes.flatMap { case (a, _, _, _, i) => Seq(
-          a -> s"cast(s.__xab_$i AS ${tpe(a)})",
-          s"__xn_$a" -> (s"cast(t.__xn_$a + coalesce(s.__dxn_$i, 0) " +
-            s"AS ${tpe(s"__xn_$a")})")) }
+      // extremes land as ABSOLUTE recounts from their companions
+      // (replay-idempotent, exact through retractions)
+      val extUpdates = extremes.flatMap { case (a, _, _, _, i) => Seq(
+        a -> s"cast(s.__xab_$i AS ${tpe(a)})",
+        s"__xn_$a" -> (s"cast(t.__xn_$a + coalesce(s.__dxn_$i, 0) " +
+          s"AS ${tpe(s"__xn_$a")})")) }
       val updates = (sumUpdates ++ extUpdates ++
         avgUpdates ++ cntUpdates ++ dcUpdates :+
         (cntAlias -> s"t.$cntAlias + s.__dcnt")).toMap
-      val sumInserts =
-        if (auto) sums.zipWithIndex.flatMap { case ((a, _), i) => Seq(
-          a -> (s"cast(CASE WHEN coalesce(s.__dnn_$i, 0) = 0 THEN NULL " +
-            s"ELSE s.__d_$i END AS ${tpe(a)})"),
-          s"__nn_$a" -> s"cast(coalesce(s.__dnn_$i, 0) AS ${tpe(s"__nn_$a")})")
-        } else sums.zipWithIndex.map { case ((a, _), i) =>
-          a -> s"cast(s.__d_$i AS ${tpe(a)})" }
+      val sumInserts = sums.zipWithIndex.flatMap { case ((a, _), i) => Seq(
+        a -> (s"cast(CASE WHEN coalesce(s.__dnn_$i, 0) = 0 THEN NULL " +
+          s"ELSE s.__d_$i END AS ${tpe(a)})"),
+        s"__nn_$a" -> s"cast(coalesce(s.__dnn_$i, 0) AS ${tpe(s"__nn_$a")})")
+      }
       val avgInserts = avgs.zipWithIndex.flatMap { case ((a, _), i) => Seq(
         a -> (s"cast(CASE WHEN coalesce(s.__davn_$i, 0) = 0 THEN NULL " +
           s"ELSE s.__davs_$i / s.__davn_$i END AS ${tpe(a)})"),
         s"__avs_$a" -> s"cast(coalesce(s.__davs_$i, 0) AS ${tpe(s"__avs_$a")})",
         s"__avn_$a" -> s"cast(coalesce(s.__davn_$i, 0) AS ${tpe(s"__avn_$a")})") }
-      val extInserts: Seq[(String, String)] =
-        if (extremes.isEmpty)
-          mins.zipWithIndex.map { case ((a, _), i) => a -> s"s.__mn_$i" } ++
-          maxs.zipWithIndex.map { case ((a, _), i) => a -> s"s.__mx_$i" }
-        else extremes.flatMap { case (a, _, _, _, i) => Seq(
-          a -> s"cast(s.__xab_$i AS ${tpe(a)})",
-          s"__xn_$a" -> (s"cast(coalesce(s.__dxn_$i, 0) " +
-            s"AS ${tpe(s"__xn_$a")})")) }
+      val extInserts = extremes.flatMap { case (a, _, _, _, i) => Seq(
+        a -> s"cast(s.__xab_$i AS ${tpe(a)})",
+        s"__xn_$a" -> (s"cast(coalesce(s.__dxn_$i, 0) " +
+          s"AS ${tpe(s"__xn_$a")})")) }
       val inserts = (groupBy.map(c => c -> s"s.$c") ++
         sumInserts ++
         extInserts ++
@@ -3896,10 +3650,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // overwrite rebuilds companions and panel consistently
     try branches.zipWithIndex.foreach { case ((lid, bt, bcols, bwhere), bi) =>
       if (curs(bi) > lasts(bi)) {
-        // ONE read of the window, pinned: the retraction probe (when
-        // extremes are maintained over a window with row-mutating
-        // commits), the signed-delta aggregation, and the processed count
-        // all consume the same cached pass over the change dirs. The
+        // ONE read of the window, pinned: the signed-delta aggregation,
+        // the companion merges and the processed count all consume the
+        // same cached pass over the change dirs. The
         // WHERE predicate applies per-image BEFORE signing (but AFTER the
         // dim enrich — it may reference dim columns): Filter never drops
         // columns, so the change-type metadata rides through it. The
@@ -3930,26 +3683,6 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         val feed = filtered(enPinned(projected))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          if ((mins.nonEmpty || maxs.nonEmpty) && extremes.isEmpty &&
-              !bt.appendOnlyOps(lasts(bi) + 1, curs(bi))) {
-            // WITHOUT companions, monotone merge is sound only while
-            // nothing ever retracts: an extreme that LEAVES needs a group
-            // rescan. The AUTO path re-bootstraps (the user declared an
-            // MV — recompute is always legal); the explicit API keeps its
-            // loud contract. WITH companions (the auto single-source
-            // path) retractions maintain through the bounded top-K and
-            // only a drain/overgrowth refills — no probe needed here.
-            val retracts = feed
-              .filter(!col("__graft_ct").isin("insert"))
-              .limit(1).count() != 0L
-            if (retracts) {
-              if (minMaxFallback)
-                return bootstrap("recompute: retracting extremes")
-              require(false,
-                "MIN/MAX incremental maintenance needs an APPEND-ONLY source — " +
-                  "the feed carries delete/update images; use a recompute MV")
-            }
-          }
           val sign = when(col("__graft_ct")
             .isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
           processedTotal += applySigned(
@@ -3977,55 +3710,6 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     }
     } catch { case Pipeline.ExtremeRefill(m) => return bootstrap(m) }
     (processedTotal, mode)
-  }
-
-  /**
-   * TRUE INCREMENTAL `business_silver` (J1 — the reference's streaming
-   * multi-way join, `dlt_bronze_to_silver_pipeline.py:125-133`): tail the
-   * append-only fact table as a checkpointed stream and, per micro-batch,
-   * `enrich` ONLY the new fact rows — typically joins against current silver
-   * snapshots resolved through [[read]], exactly how DLT pairs
-   * `dlt.readStream` facts with `dlt.read` dims under trigger-once — then
-   * dedup latest-per-key and latest-wins merge into the target.
-   *
-   * Each run costs O(new fact rows) stream-side (the checkpoint skips files
-   * already processed) plus the dim snapshot reads, instead of [[run]]'s
-   * full-fact re-join; `foreachBatch` replay after a crash re-merges
-   * idempotently. At 100 TB the dims stay broadcast-joined and the merge is
-   * partition-scoped when the target is partitioned.
-   *
-   * Returns the number of new fact rows processed this run (counted per
-   * batch, never via table scans).
-   */
-  def runJoinFlowStreaming(
-      target: String,
-      source: LakeTable,
-      keys: Seq[String],
-      sequenceBy: String,
-      checkpoint: String,
-      tiebreak: Seq[String] = Nil)(
-      enrich: DataFrame => DataFrame): Long = {
-    import org.apache.spark.sql.streaming.Trigger
-    val t = tables(target)
-    val gb = GoldBuilder(spark)
-    val processed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val q = source.readStream.writeStream
-      .trigger(Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        processed.addAndGet(batch.count())
-        val enriched = enrich(batch)
-        val tb =
-          if (tiebreak.nonEmpty) tiebreak
-          else enriched.columns.toSeq.filterNot(c => keys.contains(c) || c == sequenceBy)
-        val latest = gb.latestPerKey(enriched, keys, sequenceBy, tb)
-        if (!t.exists) t.create(latest.schema)
-        t.merge(latest, keys, Some(s"s.$sequenceBy >= t.$sequenceBy"))
-        ()
-      }
-      .start()
-    q.awaitTermination()
-    processed.get()
   }
 }
 
@@ -4066,8 +3750,10 @@ object Pipeline {
     extends Exception(mode)
 
   /** Run independent bodies concurrently (one thread each, daemon) and
-   *  join them all, rethrowing the first failure. A single body runs
-   *  inline — no thread for the common one-companion refresh. */
+   *  join them ALL before rethrowing the first failure (in body order) —
+   *  no sibling is still running when the caller sees the exception. A
+   *  single body runs inline — no thread for the common one-companion
+   *  refresh. */
   private[pipeline] def awaitAll(bodies: Seq[() => Unit]): Unit =
     if (bodies.lengthCompare(1) <= 0) bodies.foreach(_.apply())
     else {
@@ -4078,9 +3764,10 @@ object Pipeline {
         th.start()
         ft
       }
-      futs.foreach(ft => try { ft.get(); () } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      val failures = futs.flatMap(ft => try { ft.get(); None } catch {
+        case e: java.util.concurrent.ExecutionException => Some(e.getCause)
       })
+      failures.headOption.foreach(e => throw e)
     }
 
   /** Table property pinning the SESSION TIMEZONE an expression-group-key

@@ -19,8 +19,8 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, Log
  *    materialized from its defining query each [[Pipeline.run]]. Under the
  *    Pipeline's documented trigger-once snapshot execution both refresh as
  *    a full recompute (DLT's MV semantic; a deterministic ST AS SELECT
- *    yields the same rows — the incremental append path is the checkpointed
- *    [[Pipeline.runCdcFlowStreaming]]/[[Pipeline.runJoinFlowStreaming]]).
+ *    yields the same rows — the incremental paths are the change-feed
+ *    windows [[Pipeline.runIncremental]] applies to the same declarations).
  *  - `[CREATE FLOW f AS] APPLY CHANGES INTO t FROM [STREAM(]src[)]
  *     KEYS (k, …) [IGNORE NULL UPDATES] [APPLY AS DELETE WHEN cond]
  *     [APPLY AS TRUNCATE WHEN cond] SEQUENCE BY seq|(seq, …)

@@ -188,10 +188,10 @@ class MedallionE2ESpec extends SparkSpec {
     assert(dim3.select("flight_id", "DimFlightsKey", "airline").orderBy("flight_id").collect().toSeq ==
       dim2.select("flight_id", "DimFlightsKey", "airline").orderBy("flight_id").collect().toSeq)
 
-    // ---- incremental business_silver (J1 streaming shape): checkpointed
-    // tail of bookings BRONZE joined per-batch against current silver
+    // ---- incremental business_silver (J1 streaming shape): the bookings
+    // BRONZE delta since the last run joined against current silver
     // snapshots, merged into a business table — each run is O(new bookings)
-    pipeline.streamingTable("business_silver_tbl")
+    pipeline.inputTable("bookings_bronze", LakeTable(spark, s"$root/bronze/bookings"))
     def enrich(batch: DataFrame): DataFrame = batch
       .withColumn("amount", col("amount").cast(DoubleType))
       .withColumn("booking_date", to_date(col("booking_date")))
@@ -199,13 +199,22 @@ class MedallionE2ESpec extends SparkSpec {
       .filter(col("booking_id").isNotNull && col("passenger_id").isNotNull)
       .join(pipeline.read("flights_silver").select("flight_id", "airline"), Seq("flight_id"))
       .join(pipeline.read("passengers_silver").select("passenger_id", "name"), Seq("passenger_id"))
-    def runBiz(): Long = pipeline.runJoinFlowStreaming("business_silver_tbl",
-      LakeTable(spark, s"$root/bronze/bookings"), Seq("booking_id", "passenger_id"),
-      "booking_date", s"$root/cp/bizjoin")(enrich)
+    pipeline.streamingJoinTable("business_silver_tbl", "bookings_bronze",
+      Seq("booking_id", "passenger_id"), "booking_date")(enrich)
+    // one incremental run; the event log counts the enriched rows it merged
+    def runBiz(): Long = {
+      pipeline.runIncremental()
+      pipeline.eventLog
+        .filter(col("event_type") === "flow_progress" &&
+          col("dataset") === "business_silver_tbl")
+        .orderBy(col("run_id").desc).select("rows").as[Long].head()
+    }
 
-    assert(runBiz() == 4)  // bootstrap drains all bronze booking rows
-    assert(pipeline.read("business_silver_tbl").count() == 3) // null-key row never joins
-    assert(runBiz() == 0)  // checkpointed: nothing new
+    // bootstrap drains all 4 bronze booking rows; the null-key row never
+    // joins, so 3 enriched rows merge
+    assert(runBiz() == 3)
+    assert(pipeline.read("business_silver_tbl").count() == 3)
+    assert(runBiz() == 0)  // ledger up to date: nothing new
 
     writeCsv(bLanding, "bookings_increment.csv",
       "booking_id,passenger_id,flight_id,amount,booking_date",

@@ -46,6 +46,29 @@ class OptimizeSpec extends SparkSpec {
     assert(skipped >= 1, s"kept=$kept skipped=$skipped")
   }
 
+  test("OPTIMIZE ZORDER BY a DATE column keeps every row and narrows " +
+      "per-file date ranges") {
+    val t = LakeTable(spark, s"${tmpDir("opt_zdate")}/t")
+    // a year of dates scattered over 8 files: every file spans the year
+    val df = spark.range(0, 4096).select(col("id").as("k"),
+      date_add(lit("2024-01-01").cast("date"),
+        ((col("id") * 2654435761L) % 365).cast("int")).as("d"))
+    t.create(df.schema, statsColumns = Seq("d"))
+    t.append(df.repartition(8, col("k")))
+    val before = t.read.select("k", "d").collect().toSet
+    val window = Seq(LakeTable.ZonePred.between("d", "2024-03-01", "2024-03-10"))
+    val (_, skippedBefore) = t.skippingStats(window)
+    LakeSql.register("opt_zdate_t", t)
+    try LakeSql.sql(spark, "OPTIMIZE opt_zdate_t ZORDER BY (d)").collect()
+    finally LakeSql.unregister("opt_zdate_t")
+    assert(t.read.select("k", "d").collect().toSet == before)
+    // each rewritten file covers a contiguous date span: a 10-day window
+    // now skips most files
+    val (kept, skipped) = t.skippingStats(window)
+    assert(skipped > skippedBefore && kept <= 3,
+      s"kept=$kept skipped=$skipped (before: skipped $skippedBefore)")
+  }
+
   test("optimize materializes deletion vectors and clears them") {
     val t = LakeTable(spark, s"${tmpDir("opt_dv")}/t")
     val df = (1L to 1000L).map(k => (k, k * 2.0)).toDF("k", "v")

@@ -11,6 +11,15 @@ class PipelineSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** Refresh one MV synchronously and return the rows that refresh
+   *  processed, read back from the event log. */
+  private def refreshedRows(p: Pipeline, mv: String): Long = {
+    p.refreshMaterializedView(mv)
+    p.eventLog
+      .filter(col("event_type") === "flow_progress" && col("dataset") === mv)
+      .orderBy(col("run_id").desc).select("rows").as[Long].head()
+  }
+
   test("autoCdcFlow applies SCD1 latest-wins per key across runs") {
     val p = new Pipeline(spark, tmpDir("pl_cdc"))
     var batch = Seq(
@@ -208,7 +217,8 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalStateException] { p.run() }
   }
 
-  test("runCdcFlowStreaming: incremental bronze→silver CDC with checkpoint") {
+  test("autoCdcFlow over an inputTable: incremental bronze→silver CDC, " +
+      "ledger on the target") {
     import graft.lake.LakeTable
     val root = tmpDir("pl_stream")
     val bronze = LakeTable(spark, s"$root/bronze")
@@ -218,25 +228,32 @@ class PipelineSpec extends SparkSpec {
       (2L, "x", ts("2024-01-01 00:00:00"))).toDF("k", "v", "seq"))
 
     val p = new Pipeline(spark, s"$root/silver")
+    p.inputTable("bronze", bronze)
     p.streamingTable("silver")
-    p.runCdcFlowStreaming("silver", bronze, Seq("k"), "seq", s"$root/cp")
+    p.autoCdcFlow("silver", "bronze", Seq("k"), "seq")
+    p.runIncremental()
     assert(p.read("silver").orderBy("k").as[(Long, String, Timestamp)].collect().toSeq ==
       Seq((1L, "b", ts("2024-01-02 00:00:00")), (2L, "x", ts("2024-01-01 00:00:00"))))
     val v1 = p.table("silver").currentVersion
 
-    // no new bronze files → checkpoint yields an empty run, no new merge
-    p.runCdcFlowStreaming("silver", bronze, Seq("k"), "seq", s"$root/cp")
+    // no new bronze commits → the ledger is up to date, no new merge
+    p.runIncremental()
     assert(p.table("silver").currentVersion == v1)
 
     // new bronze append: only the new rows flow; latest-wins applies
     bronze.append(Seq(
       (1L, "stale", ts("2023-12-01 00:00:00")),
       (3L, "new", ts("2024-01-05 00:00:00"))).toDF("k", "v", "seq"))
-    p.runCdcFlowStreaming("silver", bronze, Seq("k"), "seq", s"$root/cp")
+    p.runIncremental()
     assert(p.read("silver").orderBy("k").as[(Long, String, Timestamp)].collect().toSeq ==
       Seq((1L, "b", ts("2024-01-02 00:00:00")),
         (2L, "x", ts("2024-01-01 00:00:00")),
         (3L, "new", ts("2024-01-05 00:00:00"))))
+    // the event log carries each run's processed rows: the bootstrap
+    // snapshot, nothing, then only the 2 appended rows
+    assert(p.eventLog
+      .filter(col("event_type") === "flow_progress" && col("dataset") === "silver")
+      .orderBy("run_id").select("rows").as[Long].collect().toSeq == Seq(3L, 0L, 2L))
   }
 
   test("appendFlowStream: true streaming append — each incremental run " +
@@ -756,7 +773,7 @@ class PipelineSpec extends SparkSpec {
     assert(p3.read("tgt").count() == 1)
   }
 
-  test("runCdcFlowFromChangeFeed: silver→gold via CDF, only new versions per run") {
+  test("autoCdcFlow over a CDF inputTable: silver→gold, only new versions per run") {
     import graft.lake.LakeTable
     def ts(s: String) = Timestamp.valueOf(s)
     val root = tmpDir("pl_cdf")
@@ -769,9 +786,16 @@ class PipelineSpec extends SparkSpec {
       Seq("k"), Some("s.seq >= t.seq"))                                  // v1
 
     val p = new Pipeline(spark, s"$root/pipe")
+    p.inputTable("silver", silver)
     p.streamingTable("gold")
-    def run(): Long = p.runCdcFlowFromChangeFeed(
-      "gold", silver, Seq("k"), "seq", "gold_flow")
+    p.autoCdcFlow("gold", "silver", Seq("k"), "seq")
+    // one incremental run; its processed rows come from the event log
+    def run(): Long = {
+      p.runIncremental()
+      p.eventLog
+        .filter(col("event_type") === "flow_progress" && col("dataset") === "gold")
+        .orderBy(col("run_id").desc).select("rows").as[Long].head()
+    }
 
     assert(run() == 2) // bootstrap: both inserts flow
     assert(run() == 0) // no new silver versions → nothing processed
@@ -1224,7 +1248,7 @@ class PipelineSpec extends SparkSpec {
     assert(p.table("silver").tableProperties.contains("clusteringColumns"))
   }
 
-  test("runAggMvFromChangeFeed: bootstrap then O(changed rows) maintenance " +
+  test("incrementalAggMv: bootstrap then O(changed rows) maintenance " +
       "— value changes, group moves, group death, group birth all via " +
       "signed deltas; idle runs process nothing") {
     import graft.lake.LakeTable
@@ -1237,9 +1261,9 @@ class PipelineSpec extends SparkSpec {
       (1L, "a", 10.0), (2L, "a", 20.0), (3L, "b", 30.0)).toDF("k", "g", "v"))
 
     val p = new Pipeline(spark, root)
-    p.streamingTable("mv")
-    def refresh(): Long =
-      p.runAggMvFromChangeFeed("mv", src, Seq("g"), Seq("v"), "mv_flow")
+    p.inputTable("src", src)
+    p.incrementalAggMv("mv", "src", Seq("g"), Seq("v"))
+    def refresh(): Long = refreshedRows(p, "mv")
     refresh() // bootstrap
     def mv: Seq[(String, java.math.BigDecimal, Long)] =
       p.read("mv").orderBy("g")
@@ -1258,7 +1282,7 @@ class PipelineSpec extends SparkSpec {
       Seq(("a", 20.0, 2L), ("c", 30.0, 1L)))
     // the MV equals a direct recompute of the source
     val direct = src.read.groupBy("g")
-      .agg(sum(col("v").cast("decimal(28,6)")).cast("decimal(28,6)").as("sum_v"),
+      .agg(sum(col("v").cast("decimal(28,6)")).as("sum_v"),
         count(lit(1)).as("cnt"))
       .orderBy("g").as[(String, java.math.BigDecimal, Long)].collect().toSeq
     assert(mv == direct)
@@ -1417,9 +1441,8 @@ class PipelineSpec extends SparkSpec {
     assert(p.eventLog.filter($"run_id" === 1).count() > 0)
   }
 
-  test("runAggMvFromChangeFeed MIN/MAX: maintainable while the feed is " +
-      "append-only (monotone least/greatest merge); a delete in the feed " +
-      "fails the refresh loudly") {
+  test("incrementalAggMv MIN/MAX: appends and a delete in the feed both " +
+      "maintain through the extreme companions, equal to a recompute") {
     import graft.lake.LakeTable
     import org.apache.spark.sql.types._
     val root = tmpDir("pl_aggmv_minmax")
@@ -1428,21 +1451,36 @@ class PipelineSpec extends SparkSpec {
         StructField("v", DoubleType))), enableChangeFeed = true)
     src.append(Seq((1L, "a", 10.0), (2L, "a", 20.0)).toDF("k", "g", "v"))
     val p = new Pipeline(spark, root)
-    p.streamingTable("mv")
-    def refresh(): Long = p.runAggMvFromChangeFeed("mv", src, Seq("g"),
-      Seq("v"), "mv_flow", mins = Seq("v"), maxs = Seq("v"))
+    p.inputTable("src", src)
+    p.incrementalAggMv("mv", "src", Seq("g"), Seq("v"),
+      mins = Seq("v"), maxs = Seq("v"))
+    def refresh(): Long = refreshedRows(p, "mv")
     refresh() // bootstrap
     src.append(Seq((3L, "a", 5.0), (4L, "b", 7.0)).toDF("k", "g", "v"))
-    refresh()
-    val rows = p.read("mv").orderBy("g")
+    assert(refresh() == 2L)
+    def rows = p.read("mv").orderBy("g")
       .select($"g", $"sum_v".cast("double"), $"min_v", $"max_v", $"cnt")
       .as[(String, Double, Double, Double, Long)].collect().toSeq
     assert(rows == Seq(("a", 35.0, 5.0, 20.0, 3L), ("b", 7.0, 7.0, 7.0, 1L)))
+    def direct = src.read.groupBy("g")
+      .agg(sum("v").as("sum_v"), min("v").as("min_v"), max("v").as("max_v"),
+        count(lit(1)).as("cnt"))
+      .orderBy("g").as[(String, Double, Double, Double, Long)].collect().toSeq
 
-    // a delete breaks monotonicity: the next refresh refuses
+    // a delete retracts group a's value 10.0: the companions keep the
+    // extremes exact, the refresh stays incremental, the panel ≡ recompute
     src.deleteWhere("k = 1")
-    val e = intercept[IllegalArgumentException] { refresh() }
-    assert(e.getMessage.contains("APPEND-ONLY"))
+    assert(refresh() == 1L)
+    assert(rows == Seq(("a", 25.0, 5.0, 20.0, 2L), ("b", 7.0, 7.0, 7.0, 1L)))
+    assert(rows == direct)
+    // retracting group a's current MAXIMUM re-exposes the next value
+    src.deleteWhere("k = 2")
+    refresh()
+    assert(rows == Seq(("a", 5.0, 5.0, 5.0, 1L), ("b", 7.0, 7.0, 7.0, 1L)))
+    assert(rows == direct)
+    assert(p.eventLog.filter(col("dataset") === "mv")
+      .orderBy(col("run_id").desc).select("message").as[String].head()
+      .contains("incremental"))
   }
 
   test("appendFlowStream snapshot fallback stamps its ledger ATOMICALLY " +
@@ -1683,10 +1721,9 @@ class PipelineSpec extends SparkSpec {
     src.append(Seq((1L, Option("a"), 10.0), (2L, Option.empty[String], 5.0))
       .toDF("k", "g", "v"))
     val p = new Pipeline(spark, root)
-    p.streamingTable("mv")
-    def refresh(): Unit = {
-      p.runAggMvFromChangeFeed("mv", src, Seq("g"), Seq("v"), "f"); ()
-    }
+    p.inputTable("src", src)
+    p.incrementalAggMv("mv", "src", Seq("g"), Seq("v"))
+    def refresh(): Unit = p.refreshMaterializedView("mv")
     refresh() // bootstrap: groups (a) and (NULL)
     src.append(Seq((3L, Option.empty[String], 7.0)).toDF("k", "g", "v"))
     refresh() // the NULL group's delta must MERGE, not insert a second row
@@ -1704,10 +1741,9 @@ class PipelineSpec extends SparkSpec {
     src.append(Seq((1L, "a", Option.empty[Double]), (2L, "b", Option(3.0)))
       .toDF("k", "g", "v"))
     val p = new Pipeline(spark, root)
-    p.streamingTable("mv")
-    def refresh(): Unit = {
-      p.runAggMvFromChangeFeed("mv", src, Seq("g"), Seq("v"), "f"); ()
-    }
+    p.inputTable("src", src)
+    p.incrementalAggMv("mv", "src", Seq("g"), Seq("v"))
+    def refresh(): Unit = p.refreshMaterializedView("mv")
     refresh() // bootstrap: group a sums NULL (its only input is NULL)
     // touch group a with ANOTHER null input: still NULL, cnt advances
     src.append(Seq((3L, "a", Option.empty[Double])).toDF("k", "g", "v"))
@@ -1720,6 +1756,31 @@ class PipelineSpec extends SparkSpec {
     src.append(Seq((4L, "a", Option(5.0))).toDF("k", "g", "v"))
     refresh()
     assert(rows == Seq(("a", Some(5.0), 3L), ("b", Some(3.0), 1L)))
+  }
+
+  test("incrementalAggMv SUM NULL algebra: retracting every non-NULL input " +
+      "while NULL-input rows remain reads NULL, as a recompute does") {
+    import graft.lake.LakeTable
+    val root = tmpDir("pl_nullsum_retract")
+    val src = LakeTable(spark, s"$root/src")
+    val seed = Seq((1L, "a", Option.empty[Double]), (2L, "a", Option(3.0)),
+      (3L, "b", Option(4.0))).toDF("k", "g", "v")
+    src.create(seed.schema, enableChangeFeed = true)
+    src.append(seed)
+    val p = new Pipeline(spark, s"$root/pipe")
+    p.inputTable("src", src)
+    p.incrementalAggMv("mv", "src", Seq("g"), Seq("v"))
+    p.runIncremental() // bootstrap: group a sums 3.0 over one NULL input
+    src.deleteWhere("k = 2") // group a keeps only its NULL-input row
+    p.runIncremental()
+    def rows = p.read("mv")
+      .select($"g", $"sum_v".cast("double"), $"cnt")
+      .orderBy("g").as[(String, Option[Double], Long)].collect().toSeq
+    val direct = src.read.groupBy("g")
+      .agg(sum(col("v").cast("decimal(28,6)")).cast("double"), count(lit(1)))
+      .orderBy("g").as[(String, Option[Double], Long)].collect().toSeq
+    assert(rows == Seq(("a", None, 1L), ("b", Some(4.0), 1L)))
+    assert(rows == direct)
   }
 
   test("a select table NOT consumed by any flow refreshes AFTER the flows " +
@@ -1808,7 +1869,7 @@ class PipelineSpec extends SparkSpec {
     assert(ds("clean") == (("streaming_view", Some("bronze"), true)))
     assert(ds("silver") == (("streaming_table", Some("clean"), true)))
     assert(ds("business") == (("streaming_join_table", Some("silver"), true)))
-    assert(ds("gold") == (("incremental_agg_mv", Some("silver"), true)))
+    assert(ds("gold") == (("materialized_view_auto", Some("silver"), true)))
   }
 
   test("views resolve lazily and read() prefers materialized tables") {

@@ -142,11 +142,18 @@ class StreamingSpec extends SparkSpec {
       .toDF("booking_id", "cust_id", "amount", "modified"))
 
     val p = new Pipeline(spark, s"$root/pipe")
-    p.streamingTable("business_silver")
-    def run(): Long =
-      p.runJoinFlowStreaming("business_silver", bookings,
-        Seq("booking_id"), "modified", s"$root/cp")(
-        batch => batch.join(customers.read, Seq("cust_id")))
+    p.inputTable("bookings", bookings)
+    p.streamingJoinTable("business_silver", "bookings",
+      Seq("booking_id"), "modified")(
+      batch => batch.join(customers.read, Seq("cust_id")))
+    // one incremental run; the fact rows it joined come from the event log
+    def run(): Long = {
+      p.runIncremental()
+      p.eventLog
+        .filter(col("event_type") === "flow_progress" &&
+          col("dataset") === "business_silver")
+        .orderBy(col("run_id").desc).select("rows").as[Long].head()
+    }
 
     assert(run() == 2) // bootstrap: both fact rows joined
     assert(p.table("business_silver").read.count() == 2)

@@ -25,13 +25,23 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.shingleHashSetDescriptor)
     ext.injectFunction(GraftExtensions.jaccardSortedDescriptor)
     // LakeSql-registered tables resolve inside plain spark.sql text
-    // (SELECT/time travel/table_changes) — see ResolveLakeRelations
+    // (SELECT/time travel) — see ResolveLakeRelations; `table_changes` is a
+    // table function, which Spark resolves before any extension rule runs
     ext.injectResolutionRule(session => new graft.lake.ResolveLakeRelations(session))
+    ext.injectTableFunction(GraftExtensions.tableChangesDescriptor)
   }
 }
 
 object GraftExtensions {
   type Descriptor = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
+
+  /** `table_changes('t', from[, to])` — the change feed of a
+   *  `LakeSql`-registered lake table (Delta's SQL CDF read). */
+  val tableChangesDescriptor: (FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) = (
+    FunctionIdentifier("table_changes"),
+    new ExpressionInfo("graft.lake.LakeSql", "table_changes"),
+    (args: Seq[Expression]) => graft.lake.LakeSql.tableChanges(args))
 
   private def litInt(e: Expression, what: String): Int = e match {
     case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v

@@ -5,7 +5,7 @@ import java.util.Locale
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteFromTable, Filter, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, OverwriteByExpression, SubqueryAlias, UnresolvedTableSpec, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.plans.logical.{ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteFromTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, OverwriteByExpression, SubqueryAlias, UnresolvedTableSpec, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.types.TimestampType
@@ -755,8 +755,11 @@ object LakeSql {
    * SELECT issued after a commit sees that commit. Temp views, subqueries,
    * joins against non-lake relations, and every SQL construct Spark's
    * analyzer handles all compose (only the relation leaves are touched).
-   * This is the read path the reference drives through `spark.sql`
-   * (`Setup.py:58-75` count checks, `README.md:106-110` invariants).
+   * Each snapshot is one scan over a [[ManifestFileIndex]], so a `WHERE`
+   * prunes files wherever Catalyst pushes it — directly on the relation,
+   * above a join or inside a subquery. This is the read path the reference
+   * drives through `spark.sql` (`Setup.py:58-75` count checks,
+   * `README.md:106-110` invariants).
    */
   def select(spark: SparkSession, sqlText: String): DataFrame = {
     val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
@@ -805,58 +808,14 @@ object LakeSql {
       case _ => None
     }
 
-  /** Replace registered lake relations (plain or time-travelled) with the
-   *  corresponding snapshot's logical plan, aliased under the table's last
-   *  name part so qualified column references keep resolving. */
-  /** FILE SKIPPING FOR SQL-TEXT SELECT: a `WHERE` sitting directly on a
-   *  lake relation is split into its zone-expressible conjuncts
-   *  (`col = / >= / <= literal`), which prune whole files through the
-   *  manifest's zone maps and bloom index BEFORE Spark plans the scan —
-   *  the same [[LakeTable.readWhere]] path the Scala API takes, now
-   *  reached from plain `SELECT ... FROM t WHERE key = x` text. At 100 TB
-   *  this is the difference between a point lookup scanning the table and
-   *  scanning the handful of files that can hold the key. The FULL original
-   *  predicate stays as a residual filter (skipping is only ever an
-   *  optimization), so non-zone conjuncts and strict bounds are exact. */
-  private def pruneFilteredScans(plan: LogicalPlan): LogicalPlan = {
-    def unwrap(p: LogicalPlan): Option[(String, String)] = p match {
-      case SubqueryAlias(ident, UnresolvedRelation(parts, _, _)) =>
-        Some((parts.mkString("."), ident.name))
-      case UnresolvedRelation(parts, _, _) =>
-        Some((parts.mkString("."), parts.last))
-      case _ => None
-    }
-    def conjunctsOf(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjunctsOf(l) ++ conjunctsOf(r)
-      case other => Seq(other)
-    }
-    plan.transformDownWithSubqueries {
-      case f @ Filter(cond, rel0) =>
-        unwrap(rel0) match {
-          case Some((name, alias)) if tables.contains(norm(name)) =>
-            val tbl = tables(norm(name))
-            val fields = tbl.schema.fieldNames
-            val preds = conjunctsOf(cond).flatMap { c =>
-              // only schema-resolved columns may prune (unknown names are
-              // someone else's references — readWhere would refuse them)
-              zonePreds(c).getOrElse(Nil).flatMap { pr =>
-                fields.find(_.equalsIgnoreCase(pr.col)).map(n => pr.copy(col = n))
-              }
-            }
-            val qualified = conjunctsOf(cond).forall(_.collect {
-              case a: UnresolvedAttribute => a
-            }.forall(a => a.nameParts.length == 1 ||
-              (a.nameParts.length == 2 && a.nameParts.head.equalsIgnoreCase(alias))))
-            if (preds.isEmpty || !qualified) f
-            else Filter(cond, SubqueryAlias(alias,
-              GraftColumnBridge.logicalPlan(tbl.readWhere(preds))))
-          case _ => f
-        }
-    }
-  }
-
+  /** Replace registered lake relations (plain or time-travelled) and
+   *  `table_changes` calls with the corresponding snapshot's logical plan,
+   *  aliased under the table's last name part so qualified column
+   *  references keep resolving. File skipping needs nothing here: each
+   *  snapshot is one scan over a [[ManifestFileIndex]], which prunes with
+   *  whatever filters Catalyst pushes down once the query is optimized. */
   private def substituteLakeRelations(spark: SparkSession,
-      plan: LogicalPlan): LogicalPlan = pruneFilteredScans(plan) transformUpWithSubqueries {
+      plan: LogicalPlan): LogicalPlan = plan transformUpWithSubqueries {
     case RelationTimeTravel(UnresolvedRelation(parts, _, _), ts, version)
         if tables.contains(norm(parts.mkString("."))) =>
       val tbl = tables(norm(parts.mkString(".")))
@@ -873,42 +832,7 @@ object LakeSql {
       SubqueryAlias(parts.last, GraftColumnBridge.logicalPlan(df))
     case tvf: UnresolvedTableValuedFunction
         if tableChangesTarget(tvf).isDefined =>
-      // Delta's table_changes('t', from [, to]): version bounds must be
-      // foldable integers (timestamp bounds are not supported — resolve a
-      // timestamp to a version with DESCRIBE HISTORY first)
-      val tbl = tables(norm(tableChangesTarget(tvf).get))
-      // Delta's bound forms: an integer VERSION, or a TIMESTAMP string —
-      // start resolves to the first commit AT OR AFTER it, end to the last
-      // commit at-or-before (DESCRIBE HISTORY's clock, versioned manifests)
-      def ver(e: Expression, what: String, isStart: Boolean): Long = {
-        require(e.foldable, s"table_changes $what must be a literal, got ${e.sql}")
-        val v = try Cast(e, org.apache.spark.sql.types.LongType, Some("UTC")).eval(null)
-          catch { case _: Exception => null } // ANSI cast throws on malformed
-        if (v != null) v.asInstanceOf[Long]
-        else {
-          val ms = try evalTimestampMs(e) catch {
-            case _: Exception => throw new IllegalArgumentException(
-              s"table_changes $what must be an integer version or a " +
-                s"timestamp, got ${e.sql}")
-          }
-          if (isStart) {
-            tbl.historyDetail.collectFirst {
-              case (hv, _, Some(ts)) if ts >= ms => hv
-            }.getOrElse(throw new IllegalArgumentException(
-              s"table_changes start timestamp ${e.sql} is after the last commit"))
-          } else tbl.versionAtTimestamp(ms)
-        }
-      }
-      val df = tvf.functionArgs match {
-        case Seq(_, from) => tbl.readChangeFeed(ver(from, "start bound", isStart = true))
-        case Seq(_, from, to) => tbl.readChangeFeed(
-          ver(from, "start bound", isStart = true),
-          Some(ver(to, "end bound", isStart = false)))
-        case args => throw new IllegalArgumentException(
-          s"table_changes takes (table, from [, to]), " +
-            s"got ${args.size} argument(s)")
-      }
-      SubqueryAlias("table_changes", GraftColumnBridge.logicalPlan(df))
+      tableChanges(tvf.functionArgs)
     case UnresolvedRelation(parts, _, _)
         if tables.contains(norm(parts.mkString("."))) =>
       SubqueryAlias(parts.last,
@@ -918,6 +842,46 @@ object LakeSql {
       // read-only relation: the thunk yields the CURRENT presented frame
       SubqueryAlias(parts.last,
         GraftColumnBridge.logicalPlan(relations(norm(parts.mkString(".")))()))
+  }
+
+  /** Delta's `table_changes('t', from [, to])` over a registered lake
+   *  table: the change feed's logical plan. The one implementation behind
+   *  both the SQL-text arm above and the table function
+   *  [[graft.expressions.GraftExtensions]] registers for native
+   *  `spark.sql`. Bounds are foldable: an integer VERSION, or a TIMESTAMP
+   *  string — start resolves to the first commit AT OR AFTER it, end to
+   *  the last commit at-or-before (DESCRIBE HISTORY's clock, versioned
+   *  manifests). */
+  def tableChanges(args: Seq[Expression]): LogicalPlan = {
+    require(args.size == 2 || args.size == 3,
+      s"table_changes takes (table, from [, to]), got ${args.size} argument(s)")
+    require(args.head.foldable,
+      s"table_changes table name must be a literal, got ${args.head.sql}")
+    val tbl = lookup(String.valueOf(
+      Cast(args.head, org.apache.spark.sql.types.StringType, Some("UTC")).eval(null)))
+    def ver(e: Expression, what: String, isStart: Boolean): Long = {
+      require(e.foldable, s"table_changes $what must be a literal, got ${e.sql}")
+      val v = try Cast(e, org.apache.spark.sql.types.LongType, Some("UTC")).eval(null)
+        catch { case _: Exception => null } // ANSI cast throws on malformed
+      if (v != null) v.asInstanceOf[Long]
+      else {
+        val ms = try evalTimestampMs(e) catch {
+          case _: Exception => throw new IllegalArgumentException(
+            s"table_changes $what must be an integer version or a " +
+              s"timestamp, got ${e.sql}")
+        }
+        if (isStart) {
+          tbl.historyDetail.collectFirst {
+            case (hv, _, Some(ts)) if ts >= ms => hv
+          }.getOrElse(throw new IllegalArgumentException(
+            s"table_changes start timestamp ${e.sql} is after the last commit"))
+        } else tbl.versionAtTimestamp(ms)
+      }
+    }
+    val from = ver(args(1), "start bound", isStart = true)
+    val df = tbl.readChangeFeed(from,
+      args.lift(2).map(ver(_, "end bound", isStart = false)))
+    SubqueryAlias("table_changes", GraftColumnBridge.logicalPlan(df))
   }
 
   /** Evaluate a (foldable) TIMESTAMP AS OF operand to epoch millis — UTC,

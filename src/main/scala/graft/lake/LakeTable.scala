@@ -4,9 +4,16 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.{Base64, UUID}
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -56,9 +63,10 @@ import scala.jdk.CollectionConverters._
  * partitions into a new dir, and re-points ownership — cost is O(touched
  * partitions), independent of table size. `append` adds a dir owning the
  * batch's partitions without disturbing earlier owners (append-only
- * accumulation). Reads union the per-dir scans filtered to owned values;
- * the ownership filter is an equality OR-chain on the partition column, so
- * Spark's partition pruning skips non-owned directories entirely.
+ * accumulation). Reads list only the files under owned values: every
+ * snapshot read is ONE scan over a [[ManifestFileIndex]], which also prunes
+ * files by partition value, zone map and bloom sidecar with the filters
+ * Catalyst pushes down.
  *
  * Unpartitioned scale notes: `append` is O(new data) — it never rewrites
  * existing files, so streaming ingest cost is independent of table size.
@@ -254,7 +262,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /** Snapshot read of the current version (explicit schema: no inference
    *  drift, empty tables read fine; partitioned reads prune to owned dirs). */
-  def read: DataFrame = readScoped(manifest, None)
+  def read: DataFrame = snapshot(manifest)
 
   /** TIME-TRAVEL read of historical version `v` (Delta
    *  `VERSION AS OF` — `DIM_Gold_layer.py` targets run under Delta's
@@ -269,7 +277,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       .filterNot(d => Files.isDirectory(Paths.get(root, d)))
     require(missing.isEmpty,
       s"version $v has been vacuumed (missing ${missing.mkString(", ")})")
-    readScoped(m, None)
+    snapshot(m)
   }
 
   /** Commit history, oldest first: (version, operation). Operations:
@@ -428,12 +436,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   def detail: LakeTable.TableDetail = {
     require(exists, s"LakeTable at $root does not exist")
     val m = manifest
-    val files = m.entries.flatMap(e => listParquet(Paths.get(root, e.dir)))
+    val files = snapshotFiles(m)
     LakeTable.TableDetail(
       location = root,
       version = currentVersion,
       numFiles = files.size.toLong,
-      sizeInBytes = files.map(Files.size).sum,
+      sizeInBytes = files.map(_.status.getLen).sum,
       partitionColumns = m.pcol.toSeq,
       statsColumns = m.statsCols,
       changeFeedEnabled = m.cdfEnabled,
@@ -466,7 +474,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       val cur = readManifest(v)
       require(!cur.constraints.exists(_._1 == name),
         s"constraint $name already exists")
-      val bad = readScoped(cur, None)
+      val bad = snapshot(cur)
         .filter(!coalesce(expr(expression), lit(false))).limit(1).count()
       require(bad == 0,
         s"cannot add CHECK constraint $name ($expression): existing rows violate it")
@@ -896,19 +904,15 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val feedSchema = m.schema
       .add(ChangeTypeCol, org.apache.spark.sql.types.StringType, nullable = false)
     def insertsFromData(v: Long, mv: Manifest): Option[DataFrame] = {
-      val prevDirs: Set[String] =
-        if (v == 0) Set.empty else readManifest(v - 1).entries.map(_.dir).toSet
-      val added = mv.entries.map(_.dir).filterNot(prevDirs)
-      added.foreach(d => require(Files.isDirectory(Paths.get(root, d)),
-        s"change feed for v$v has been vacuumed ($d)"))
-      added.map { d =>
-        // files carry PHYSICAL names; serve the feed under the CURRENT
-        // logical names (physical ids are stable across renames, so a
-        // feed spanning a RENAME COLUMN stays column-consistent)
-        toLogicalNames(m, spark.read.schema(physSchema(m))
-          .option("basePath", s"$root/$d").parquet(s"$root/$d"))
-          .withColumn(ChangeTypeCol, lit("insert"))
-      }.reduceOption(_ unionByName _)
+      val added = addedEntries(v, mv)
+      added.foreach(e => require(Files.isDirectory(Paths.get(root, e.dir)),
+        s"change feed for v$v has been vacuumed (${e.dir})"))
+      // files carry PHYSICAL names; serve the feed under the CURRENT
+      // logical names (physical ids are stable across renames, so a feed
+      // spanning a RENAME COLUMN stays column-consistent)
+      if (added.isEmpty) None
+      else Some(scanFiles(m, snapshotFiles(mv.copy(entries = added)))
+        .withColumn(ChangeTypeCol, lit("insert")))
     }
     val parts = (fromVersion to hi).flatMap { v =>
       val mv = readManifest(v)
@@ -1001,28 +1005,27 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             // consumer under an aggressive retention): unreadable → the
             // consumer falls back to re-bootstrap instead of wedging on
             // readChangeFeed's vacuumed-range error every subsequent run
-            val prevDirs: Set[String] =
-              if (v == 0) Set.empty
-              else readManifest(v - 1).entries.map(_.dir).toSet
-            mv.entries.map(_.dir).filterNot(prevDirs)
-              .forall(d => Files.isDirectory(Paths.get(root, d)))
+            addedEntries(v, mv).forall(e => Files.isDirectory(Paths.get(root, e.dir)))
           case "merge" | "delete" | "update" | "replace" =>
             // mirror readChangeFeed: images recorded (and still on disk —
             // same vacuum consideration), an all-insert commit served from
             // its added data dirs, or a CDF-on delete/update that matched
             // zero rows (legal empty part)
-            (if (mv.cdfDir.contains(LakeTable.CdfFromData)) {
-              val prevDirs: Set[String] =
-                if (v == 0) Set.empty
-                else readManifest(v - 1).entries.map(_.dir).toSet
-              mv.entries.map(_.dir).filterNot(prevDirs)
-                .forall(d => Files.isDirectory(Paths.get(root, d)))
-            } else mv.cdfDir.exists(d => Files.isDirectory(Paths.get(root, d)))) ||
+            (if (mv.cdfDir.contains(LakeTable.CdfFromData))
+              addedEntries(v, mv).forall(e => Files.isDirectory(Paths.get(root, e.dir)))
+            else mv.cdfDir.exists(d => Files.isDirectory(Paths.get(root, d)))) ||
               (mv.cdfDir.isEmpty && mv.cdfEnabled &&
                 (mv.op == "delete" || mv.op == "update"))
           case _ => false // overwrite and any other full-rewrite op
         }
       }
+  }
+
+  /** The data dirs version `v` (manifest `mv`) added over its parent. */
+  private def addedEntries(v: Long, mv: Manifest): Seq[DirEntry] = {
+    val prev = if (v == 0) Set.empty[String]
+      else readManifest(v - 1).entries.map(_.dir).toSet
+    mv.entries.filterNot(e => prev(e.dir))
   }
 
   /** Whether every commit in `[fromVersion, toVersion]` is STRUCTURALLY
@@ -1048,120 +1051,46 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /** Partition-pruned read of only the given partition values. */
   def readPartitions(values: Seq[String]): DataFrame =
-    readScoped(manifest, Some(values.toSet))
+    snapshot(manifest, Some(values.toSet))
 
   /**
    * DATA-SKIPPING read (Delta's stats-based file pruning rebuilt on the
-   * manifest): whole files whose zone map proves no row can satisfy the
-   * conjunction of `preds` are dropped BEFORE Spark plans the scan, so at
-   * 100 TB a narrow time/key range touches only the files that can hold it —
-   * the scan cost tracks the selectivity, not the table size. The residual
-   * predicate is still applied row-level (zone maps are necessary, never
-   * sufficient), so the result equals `read.filter(...)` exactly. Files
-   * without recorded stats (table created without `statsColumns`, or a
-   * column all-NULL in the file) are always read — skipping is only ever an
-   * optimization, never a filter.
+   * manifest): the snapshot filtered by the conjunction of `preds`. The
+   * filter reaches the scan's [[ManifestFileIndex]] as a pushed-down data
+   * filter, so whole files whose zone map (or bloom sidecar) proves no row
+   * can match are never read — at 100 TB a narrow time/key range touches
+   * only the files that can hold it. The result equals `read.filter(...)`
+   * exactly: files without recorded stats (table created without
+   * `statsColumns`, or a column all-NULL in the file) are always read —
+   * skipping is only ever an optimization, never a filter.
    */
   def readWhere(preds: Seq[ZonePred], asOf: Option[Long] = None): DataFrame = {
     val m = asOf.fold(manifest)(readManifest)
     preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
       s"unknown predicate column ${p.col}"))
-    def residual(df: DataFrame): DataFrame =
-      preds.foldLeft(df) { (d, pr) =>
-        val dt = m.schema(pr.col).dataType
-        val conds = pr.lo.map(v => col(pr.col) >= lit(v).cast(dt)).toSeq ++
-          pr.hi.map(v => col(pr.col) <= lit(v).cast(dt)).toSeq
-        conds.foldLeft(d)(_ filter _)
-      }
-    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-    val scans = planSkip(m, preds).flatMap { case (e, kept, _) =>
-      // a partitioned dir that owns no partition values is invisible
-      val disowned = m.pcol.isDefined && e.owned.exists(_.isEmpty)
-      if (kept.isEmpty || disowned) None
-      else {
-        val scanP = spark.read.schema(physSchema(m))
-          .option("basePath", s"$root/${e.dir}")
-          .parquet(kept.map(f => s"$root/$f"): _*)
-        // zone maps stay sound under deletion vectors (they only remove
-        // rows), but the surviving files must still drop their dead rows
-        val scan = toLogicalNames(m,
-          if (m.deleteVectors.isEmpty) scanP else rowIdCols(scanP))
-        // partitioned dirs still honor manifest ownership (a dir keeps files
-        // for partitions it no longer owns until vacuum)
-        val ownedFiltered = (m.pcol, e.owned) match {
-          case (Some(p), Some(vs)) if vs.nonEmpty =>
-            val dt = m.schema(p).dataType
-            scan.filter(vs.map(v => col(p) === lit(v).cast(dt)).reduce(_ || _))
-          case _ => scan
-        }
-        Some(residual(ownedFiltered))
-      }
-    }
-    if (scans.isEmpty) empty
-    else antiJoinDeleteVectors(scans.reduce(_ unionByName _), m)
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
+    snapshot(m).filter(zonePredCondition(m, preds))
   }
 
   /** Introspection for [[readWhere]]: (files read, files skipped) under the
-   *  given predicates — the observability hook specs and operators use to
-   *  prove skipping actually happens. */
+   *  given predicates, asked of the snapshot's file index — the
+   *  observability hook specs and operators use to prove skipping actually
+   *  happens. */
   def skippingStats(preds: Seq[ZonePred]): (Int, Int) = {
-    val plan = planSkip(manifest, preds)
-    val kept = plan.map(_._2.size).sum
-    val total = plan.map(_._3).sum
-    (kept, total - kept)
+    val m = manifest
+    val index = fileIndex(m, snapshotFiles(m))
+    val kept = index.filesMatching(zoneFilters(m, preds)).size
+    (kept, index.files.size - kept)
   }
 
-  /** Per dir-entry: (entry, kept root-relative files, total files).
-   *  Zone maps prune range predicates; the bloom index additionally prunes
-   *  EQUALITY predicates on indexed columns (both necessary conditions —
-   *  a file survives only if every pred admits it; missing stats/sidecars
-   *  admit everything). */
-  private def planSkip(m: Manifest,
-      preds0: Seq[ZonePred]): Seq[(DirEntry, Seq[String], Int)] = {
-    // callers pass LOGICAL predicate columns; per-file stats, bloom sidecar
-    // keys and Hive dir names are all PHYSICAL — translate once here
-    val bloomPhys = m.bloomCols.map(physName(m, _))
-    val preds = toPhysicalPreds(m, preds0)
-    val statByPath = m.fileStats.map(fs => fs.path -> fs.minMax).toMap
-    val eqPreds = preds.filter(p =>
-      p.lo.isDefined && p.lo == p.hi && bloomPhys.contains(p.col))
-    // Hive-layout pruning: an EQUALITY pred on the partition column drops
-    // files of other partitions by their `p=value` subpath (the partition
-    // column has no zone stats — its value IS the directory name)
-    val pcolEq = m.pcol.map(physName(m, _)).toSeq.flatMap(pc => preds.collect {
-      case pr if pr.col == pc && pr.lo.isDefined && pr.lo == pr.hi => pr.lo.get
-    })
-    m.entries.map { e =>
-      val blooms = if (eqPreds.isEmpty) Map.empty[String,
-        Map[String, org.apache.spark.util.sketch.BloomFilter]]
-      else readBloomIndex(e.dir)
-      val all = listParquet(Paths.get(root, e.dir))
-        .map(p => Paths.get(root).relativize(p).toString).sorted
-      val kept = all.filter { f =>
-        statByPath.get(f).forall { mm =>
-          preds.forall(pr => mayMatch(mm, pr, physSchema(m)))
-        } && eqPreds.forall { pr =>
-          blooms.get(f).flatMap(_.get(pr.col))
-            .forall(_.mightContainString(pr.lo.get))
-        } && (pcolEq.isEmpty || m.pcol.map(physName(m, _)).forall { pc =>
-          val sub = Paths.get(e.dir).relativize(Paths.get(f)).toString
-          partitionValueOf(sub, pc).forall(v => pcolEq.forall(_ == v))
-        })
-      }
-      (e, kept, all.size)
-    }
-  }
-
-  /** Candidate-file plan for a FILE-PRUNED unpartitioned merge, or None
-   *  when the path doesn't apply. The source's per-key [min, max] (rendered
-   *  through the same canonical CAST-to-string both zone stats use) becomes
-   *  one [[ZonePred]] per stats-carrying key; [[planSkip]] then names which
-   *  files may hold a matching row. Gates:
-   *   - at least one merge key must carry zone stats of a type whose
-   *     rendering orders correctly under [[mayMatch]] (numerics compare as
-   *     BigDecimal; strings/dates lexicographically — timestamps are
-   *     excluded, their trimmed-fraction rendering does not);
+  /** Candidate files for a FILE-PRUNED unpartitioned merge, or None when
+   *  the path doesn't apply. The source's per-key [min, max], aggregated in
+   *  the key's own type, becomes a `key BETWEEN min AND max` filter per
+   *  stats-carrying key, and the snapshot's file index names which files
+   *  may hold a matching row — the same prune function every read uses.
+   *  Gates:
+   *   - at least one merge key must carry zone stats and have the SAME type
+   *     in source and target: a mixed-type key matches through the join's
+   *     implicit coercion, which target-typed bounds cannot describe;
    *   - the table must be big enough that one bounds aggregation over the
    *     source beats a blind full rewrite
    *     (`spark.graft.merge.pruneMinBytes`, default 64 MB — derived from
@@ -1171,21 +1100,14 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *   - a plan that touches every file anyway returns None (the caller's
    *     full-rewrite path skips the relink machinery). */
   private def mergePrunePlan(m: Manifest, src: DataFrame, keys: Seq[String],
-      nullSafeKeys: Boolean): Option[Seq[(DirEntry, Seq[String], Int)]] = {
-    import org.apache.spark.sql.types._
-    def prunable(dt: DataType): Boolean = dt match {
-      case _: NumericType | StringType | DateType => true
-      case _ => false
-    }
+      nullSafeKeys: Boolean): Option[Seq[SnapshotFile]] = {
     val statKeys = keys.filter(k => m.statsCols.contains(k) &&
-      prunable(m.schema(k).dataType))
+      src.schema(k).dataType == m.schema(k).dataType)
     if (statKeys.isEmpty) return None
-    val totalBytes = m.entries.iterator.flatMap(e =>
-      listParquet(Paths.get(root, e.dir))).map(Files.size(_)).sum
-    if (totalBytes < LakeTable.mergePruneMinBytes(spark)) return None
+    val files = snapshotFiles(m)
+    if (files.map(_.status.getLen).sum < LakeTable.mergePruneMinBytes(spark)) return None
     val aggs = statKeys.flatMap { k =>
-      Seq(min(col(k)).cast("string").as(s"__lo_$k"),
-        max(col(k)).cast("string").as(s"__hi_$k")) ++
+      Seq(min(col(k)).as(s"__lo_$k"), max(col(k)).as(s"__hi_$k")) ++
       (if (nullSafeKeys) Seq(max(col(k).isNull.cast("int")).as(s"__nul_$k"))
        else Nil)
     }
@@ -1193,44 +1115,31 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     if (nullSafeKeys && statKeys.exists { k =>
         val i = r.fieldIndex(s"__nul_$k"); !r.isNullAt(i) && r.getInt(i) == 1 })
       return None
-    val preds = statKeys.flatMap { k =>
+    val bounds = statKeys.flatMap { k =>
       val lo = r.fieldIndex(s"__lo_$k"); val hi = r.fieldIndex(s"__hi_$k")
       if (r.isNullAt(lo) || r.isNullAt(hi)) None // empty/all-null source key
-      else Some(ZonePred(k, Some(r.getString(lo)), Some(r.getString(hi))))
+      else {
+        val a = AttributeReference(physName(m, k), m.schema(k).dataType)()
+        Some(And(GreaterThanOrEqual(a, Literal.create(r.get(lo), a.dataType)),
+          LessThanOrEqual(a, Literal.create(r.get(hi), a.dataType))))
+      }
     }
-    if (preds.isEmpty) return None
-    val plan = planSkip(m, preds)
-    if (plan.map(_._2.size).sum >= plan.map(_._3).sum) None else Some(plan)
+    if (bounds.isEmpty) return None
+    val kept = fileIndex(m, files).filesMatching(bounds)
+    if (kept.size >= files.size) None else Some(kept)
   }
-
-  /** Can a file with zone map `mm` contain a row satisfying `pr`? Missing
-   *  stats keep the file; comparisons are numeric for numeric columns and
-   *  lexicographic otherwise (Spark's fixed-width timestamp/date renderings
-   *  order correctly as strings). Unparseable values never prune. */
-  private def mayMatch(mm: Map[String, (String, String)], pr: ZonePred,
-      schema: StructType): Boolean =
-    mm.get(pr.col).forall { case (mn, mx) =>
-      val numeric = schema(pr.col).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-      def cmp(a: String, b: String): Int =
-        if (!numeric) a.compareTo(b)
-        else try { BigDecimal(a).compare(BigDecimal(b)) }
-        catch { case _: NumberFormatException => 0 } // can't prove → keep
-      val aboveMax = pr.lo.exists(l => cmp(l, mx) > 0)
-      val belowMin = pr.hi.exists(h => cmp(h, mn) < 0)
-      !aboveMax && !belowMin
-    }
 
   // ---- COLUMN-MAPPING translation boundary --------------------------------
   //
   // With a non-empty colMap, parquet files carry PHYSICAL column names while
   // every API surface (schema, predicates, conditions, constraints,
   // generated expressions) speaks LOGICAL names. These helpers are the ONLY
-  // translation points: file reads force the physical schema and rename to
-  // logical immediately; file writes rename to physical just before
-  // `.write.parquet`. Per-file artifacts (zone stats, bloom sidecars, Hive
-  // partition dirs) describe physical files and stay keyed physical, so a
-  // rename can never invalidate them. Empty colMap ⇒ every helper is the
-  // identity.
+  // translation points: the snapshot scan carries the physical schema and
+  // renames to logical immediately; file writes rename to physical just
+  // before `.write.parquet`. Per-file artifacts (zone stats, bloom sidecars,
+  // Hive partition dirs) describe physical files and stay keyed physical,
+  // so a rename can never invalidate them. Empty colMap ⇒ every helper is
+  // the identity.
 
   /** Logical → physical column name (identity when unmapped). */
   private def physName(m: Manifest, c: String): String =
@@ -1251,68 +1160,122 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     if (m.colMap.isEmpty) df
     else df.withColumnsRenamed(m.colMap.map { case (l, p) => p -> l }.toMap)
 
-  /** Zone predicates translated onto physical column names, for consulting
-   *  per-file stats/bloom sidecars and Hive partition dir names. */
-  private def toPhysicalPreds(m: Manifest, preds: Seq[ZonePred]): Seq[ZonePred] =
-    if (m.colMap.isEmpty) preds
-    else preds.map(pr => pr.copy(col = physName(m, pr.col)))
+  // ---- SNAPSHOT SCAN -------------------------------------------------------
 
-  private def readScoped(m: Manifest, scope: Option[Set[String]]): DataFrame =
-    readScopedRows(m, scope, withRowIds = false)
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
+  /** The table root as a Hadoop path: file statuses listed under it render
+   *  exactly as Spark's `_metadata.file_path` does (see [[rowIdCols]]). */
+  private lazy val rootPath = new HPath(
+    "file:" + Paths.get(root).toAbsolutePath.normalize.toString)
+
+  /** A partition value as the manifest and the Hive dir names record it,
+   *  parsed into the column's type the way Spark's partition discovery
+   *  parses dir names (null when it does not parse). */
+  private def typedValue(dt: DataType): String => Any = {
+    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    v => Cast(Literal(v), dt, zone, EvalMode.TRY).eval()
+  }
+
+  /** Every file of snapshot `m` a read may return, listed from the
+   *  manifest's data dirs. Partitioned tables apply the ownership rule: a
+   *  file is visible only while its entry owns the file's partition value
+   *  (narrowed to `scope` when given) — a dir keeps files of partitions it
+   *  no longer owns until vacuum. */
+  private def snapshotFiles(m: Manifest,
+      scope: Option[Set[String]] = None): Seq[SnapshotFile] = {
+    val prefix = rootPath.toUri.getPath + "/"
+    val typed = m.pcol.map(p => typedValue(m.schema(p).dataType))
+    m.entries.flatMap { e =>
+      val owned = typed.map(t => e.owned.getOrElse(Nil)
+        .filter(v => scope.forall(_(v))).map(t).toSet)
+      if (owned.exists(_.isEmpty)) Nil
+      else listStatuses(new HPath(rootPath, e.dir)).flatMap { st =>
+        val rel = st.getPath.toUri.getPath.stripPrefix(prefix)
+        owned match {
+          case Some(vs) =>
+            partitionValueOf(rel.stripPrefix(e.dir + "/"), physName(m, m.pcol.get))
+              .map(typed.get).filter(v => v != null && vs(v))
+              .map(v => SnapshotFile(rel, e.dir, st, InternalRow(v)))
+          case None => Some(SnapshotFile(rel, e.dir, st, InternalRow.empty))
+        }
+      }
+    }
+  }
+
+  /** Every `.parquet` file under `dir`, recursively, in name order (none if
+   *  `dir` is missing) — the ONE data-file lister. Hadoop renders these
+   *  paths exactly as Spark's `_metadata.file_path` (see [[rowIdCols]]). */
+  private def listStatuses(dir: HPath): Seq[FileStatus] = {
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def list(p: HPath): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.sortBy(_.getPath.getName).flatMap { st =>
+        if (st.isDirectory) list(st.getPath)
+        else if (st.getPath.getName.endsWith(".parquet")) Seq(st)
+        else Nil
+      }
+    try list(dir) catch { case _: java.io.FileNotFoundException => Nil }
+  }
+
+  /** [[listStatuses]] of a local dir, as local paths under `dir`. */
+  private def listParquet(dir: Path): Seq[Path] = {
+    val abs = dir.toAbsolutePath.normalize
+    listStatuses(new HPath("file:" + abs)).map(st =>
+      dir.resolve(abs.relativize(Paths.get(st.getPath.toUri.getPath))))
+  }
+
+  /** The file index over `files` of snapshot `m`: physical data and
+   *  partition schemas (nullable, as file sources read them), the
+   *  manifest's zone stats and the dirs' bloom sidecars. */
+  private def fileIndex(m: Manifest, files: Seq[SnapshotFile]): ManifestFileIndex = {
+    val phys = GraftColumnBridge.asNullable(physSchema(m))
+    val pcol = m.pcol.map(physName(m, _))
+    new ManifestFileIndex(rootPath, files,
+      StructType(phys.filter(f => pcol.contains(f.name))),
+      StructType(phys.filterNot(f => pcol.contains(f.name))),
+      m.fileStats.map(fs => fs.path -> fs.minMax).toMap,
+      readBloomIndex, m.bloomCols.map(physName(m, _)).toSet,
+      spark.sessionState.conf.sessionLocalTimeZone)
+  }
+
+  /** ONE scan over `files` of snapshot `m` — a `HadoopFsRelation` over
+   *  their [[ManifestFileIndex]] — renamed to logical columns, with the
+   *  row-id columns attached when `rowIds`. Deletion vectors are NOT
+   *  applied (see [[snapshot]]). */
+  private def scanFiles(m: Manifest, files: Seq[SnapshotFile],
+      rowIds: Boolean = false): DataFrame = {
+    val index = fileIndex(m, files)
+    val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
+      index.partitionSchema, index.dataSchema, None, new ParquetFileFormat,
+      Map.empty)(spark))
+    toLogicalNames(m, if (rowIds) rowIdCols(df) else df)
+  }
+
+  /** Snapshot rows of `m` over `files` with logically deleted rows
+   *  anti-joined out against the manifest's deletion vectors, projected to
+   *  `m.schema` — plus [[DvFileCol]]/[[DvPosCol]] when `withRowIds` (the
+   *  merge-on-read write paths need the coordinates). The DV side is
+   *  broadcast: it is sized by deleted-row count, not table size — tables
+   *  accumulating large vectors compact (which materializes and clears
+   *  them). */
+  private def snapshot(m: Manifest, files: Seq[SnapshotFile],
+      withRowIds: Boolean): DataFrame = {
+    val scan = scanFiles(m, files, rowIds = withRowIds || m.deleteVectors.nonEmpty)
+    val ids = if (withRowIds) Seq(DvFileCol, DvPosCol) else Nil
+    antiJoinDeleteVectors(scan, m).select((m.schema.fieldNames.toSeq ++ ids).map(col): _*)
+  }
+
+  /** The snapshot of `m` (optionally partition-scoped), deletion vectors
+   *  applied. */
+  private def snapshot(m: Manifest, scope: Option[Set[String]] = None): DataFrame =
+    snapshot(m, snapshotFiles(m, scope), withRowIds = false)
 
   /** Root-relative path + in-file row index of every scanned row — the
    *  coordinates deletion vectors address rows by. Hadoop renders
    *  `_metadata.file_path` as `file:` + absolute path (single slash). */
   private def rowIdCols(df: DataFrame): DataFrame = {
-    val prefix = "file:" + Paths.get(root).toAbsolutePath.normalize.toString + "/"
+    val prefix = s"$rootPath/"
     df.withColumn(DvFileCol,
         expr(s"substring(_metadata.file_path, ${prefix.length + 1})"))
       .withColumn(DvPosCol, col("_metadata.row_index"))
-  }
-
-  /** Snapshot rows of `m` (optionally partition-scoped), with logically
-   *  deleted rows anti-joined out against the manifest's deletion vectors.
-   *  `withRowIds = true` keeps [[DvFileCol]]/[[DvPosCol]] on the output
-   *  (the merge-on-read DELETE write path needs the coordinates); callers
-   *  re-project to `m.schema` either way. The DV side is broadcast: it is
-   *  sized by deleted-row count, not table size — tables accumulating
-   *  large vectors compact (which materializes and clears them). */
-  private def readScopedRows(m: Manifest, scope: Option[Set[String]],
-      withRowIds: Boolean): DataFrame = {
-    def empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], m.schema)
-    val needIds = withRowIds || m.deleteVectors.nonEmpty
-    def attach(df: DataFrame): DataFrame = if (needIds) rowIdCols(df) else df
-    val base: Option[DataFrame] = m.pcol match {
-      case None =>
-        if (m.entries.isEmpty) None
-        else Some(toLogicalNames(m, attach(spark.read.schema(physSchema(m))
-          .parquet(m.entries.map(e => s"$root/${e.dir}"): _*))))
-      case Some(p) =>
-        val dt = m.schema(p).dataType
-        val pp = physName(m, p) // Hive dirs are named with the physical pcol
-        val scans = m.entries.flatMap { e =>
-          val owned = e.owned.getOrElse(Nil)
-          val visible = scope.fold(owned)(s => owned.filter(s))
-          if (visible.isEmpty) None
-          else Some(toLogicalNames(m, attach(
-            spark.read.schema(physSchema(m))
-              .option("basePath", s"$root/${e.dir}")
-              .parquet(s"$root/${e.dir}"))
-              // equality OR-chain on the partition column → Spark prunes
-              // non-owned subdirectories at planning time
-              .filter(visible.map(v => col(pp) === lit(v).cast(dt)).reduce(_ || _))))
-        }
-        scans.reduceOption(_ unionByName _)
-    }
-    base match {
-      case None =>
-        if (withRowIds)
-          empty.withColumn(DvFileCol, lit(null).cast("string"))
-            .withColumn(DvPosCol, lit(null).cast("long"))
-        else empty
-      case Some(df) => antiJoinDeleteVectors(df, m)
-    }
   }
 
   /** Filter logically deleted rows out of a scan carrying row-id columns. */
@@ -2668,8 +2631,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val target = m.props.collectFirst {
       case (LakeTable.AutoCompactTargetBytesProp, v) => v.trim.toLong
     }.getOrElse(128L * 1024 * 1024)
-    val small = m.entries.flatMap(e => listParquet(Paths.get(root, e.dir)))
-      .count(p => Files.size(p) < target / 2)
+    val small = snapshotFiles(m).count(_.status.getLen < target / 2)
     if (small < minFiles) return
     try { optimizeCompact(target); () }
     catch { case scala.util.control.NonFatal(_) => () } // best-effort
@@ -3047,16 +3009,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         .filter(col("__ch").isNotNull)
         .select((cols :+ ChangeTypeCol).map(c => col(s"__ch.$c").as(c)): _*)
     }
-    /** Materialize the commit's change rows under `_changes/` (referenced by
-     *  the manifest; orphaned by a lost race → cleaned by vacuum). */
-    def writeChanges(changes: DataFrame): Option[String] = {
-      if (!m.cdfEnabled) None
-      else {
-        val d = s"_changes/${UUID.randomUUID()}"
-        toPhysicalNames(m, changes).write.parquet(s"$root/$d")
-        Some(d)
-      }
-    }
+    def changeImages(changes: DataFrame): Option[String] =
+      if (m.cdfEnabled) Some(writeChanges(m, changes)) else None
 
     // fast path: merging into a table with no data dirs inserts everything —
     // skip the full-outer join against an empty side (bootstrap merges are
@@ -3103,13 +3057,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     // (whose coordinates are path-keyed) and schema evolution are absent.
     if (m.pcol.isEmpty && deleteUnmatchedTarget.isEmpty &&
         m.deleteVectors.isEmpty && !mergeSchema) {
-      mergePrunePlan(m, src, keys, nullSafeKeys).foreach { plan =>
-        val touched = plan.flatMap(_._2)
-        val candidates =
-          if (touched.isEmpty) readScoped(m, None).limit(0)
-          else toLogicalNames(m, spark.read.schema(physSchema(m))
-            .parquet(touched.map(f => s"$root/$f"): _*))
-        val joined = joinedOf(candidates)
+      mergePrunePlan(m, src, keys, nullSafeKeys).foreach { touched =>
+        val joined = joinedOf(scanFiles(m, touched))
         val merged = mergedFrom(joined)
         if (matchedSet.nonEmpty || insertSet.nonEmpty)
           enforceConstraints(merged, m.constraints)
@@ -3125,29 +3074,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           }
         val newEntries = scala.collection.mutable.ArrayBuffer.empty[DirEntry]
         val newStats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
-        plan.foreach { case (e, touchedInDir, _) =>
+        m.entries.foreach { e =>
+          val touchedInDir = touched.filter(_.dir == e.dir)
           if (touchedInDir.isEmpty) {
             // no file in this dir can match: re-reference as-is (stats,
             // bloom sidecar and clustered flag all stay valid)
             newEntries += e
             newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
           } else {
-            // hard-link the untouched files into a fresh dir (zero data
-            // I/O), dropping the rewritten ones — the mutateWhere pattern
-            val newDir = s"data/${UUID.randomUUID()}"
-            Files.createDirectories(Paths.get(root, newDir))
-            val touchedSet = touchedInDir.toSet
-            val all = listParquet(Paths.get(root, e.dir))
-              .map(p => Paths.get(root).relativize(p).toString)
-            all.filterNot(touchedSet).foreach { f =>
-              val rel = Paths.get(e.dir).relativize(Paths.get(f))
-              val dst = Paths.get(root, newDir).resolve(rel)
-              Files.createDirectories(dst.getParent)
-              Files.createLink(dst, Paths.get(root, f))
-              m.fileStats.find(_.path == f).foreach { fs =>
-                newStats += fs.copy(path = s"$newDir/$rel")
-              }
-            }
+            // the rewritten files drop out; the rest are re-linked
+            val newDir = relinkExcept(m, e, touchedInDir.map(_.rel).toSet, newStats)
             newEntries += DirEntry(newDir, e.owned, clustered = e.clustered)
           }
         }
@@ -3181,7 +3117,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         // sequential jobs over it. The union branches reuse the join's
         // exchanges, so the (often expensive) merge-source subtree
         // evaluates once.
-        val joined = joinedOf(widen(readScoped(m, None)))
+        val joined = joinedOf(widen(snapshot(m)))
         val merged = mergedFrom(joined)
         // SET * writes source rows (validated above); column-level
         // clauses synthesize new rows — gate them before anything lands
@@ -3191,12 +3127,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           changes = Some(changesFrom(joined)))
         maybeAutoCompact()
       case None =>
-        val joined = joinedOf(widen(readScoped(m, None)))
+        val joined = joinedOf(widen(snapshot(m)))
         val pinned = // two consumers under CDF: pin the join, not twice the work
           if (m.cdfEnabled) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else joined
         try {
-          val chDir = writeChanges(changesFrom(pinned))
+          val chDir = changeImages(changesFrom(pinned))
           val merged = mergedFrom(pinned)
           // SET * writes source rows (validated above); column-level
           // clauses synthesize new rows — gate them before anything lands
@@ -3215,7 +3151,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           .collect().map(_.getString(0)).toSeq
         require(!touched.contains(null), s"null partition value in column $p")
         val touchedSet = touched.toSet
-        val joined = joinedOf(widen(readScoped(m, Some(touchedSet))))
+        val joined = joinedOf(widen(snapshot(m, Some(touchedSet))))
         val pinned =
           if (m.cdfEnabled) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           else joined
@@ -3223,7 +3159,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           // same overlap as the unpartitioned arm: images ride their own
           // thread while the merged partitions are written
           val chDirF =
-            if (m.cdfEnabled) inParallel { writeChanges(changesFrom(pinned)) }
+            if (m.cdfEnabled) inParallel { changeImages(changesFrom(pinned)) }
             else () => Option.empty[String]
           val merged = mergedFrom(pinned)
           if (matchedSet.nonEmpty || insertSet.nonEmpty)
@@ -3344,16 +3280,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     require(exists, s"LakeTable at $root does not exist")
     val v0 = currentVersion
     val m = readManifest(v0)
-    deleteRows(m, v0, coalesce(expr(condition), lit(false)),
-      readScopedRows(m, None, withRowIds = true))
+    deleteRows(m, v0, coalesce(expr(condition), lit(false)))
   }
 
   /**
    * MERGE-ON-READ POINT DELETE with file skipping — the merge-on-read twin
-   * of the copy-on-write [[delete]]: the candidate scan is pruned by zone
-   * maps AND the bloom index FIRST (the preds name which files can hold a
-   * match), then the surviving rows are filtered by the same preds and
-   * their coordinates written as a deletion vector. At 100 TB a keyed
+   * of the copy-on-write [[delete]]: the preds reach the snapshot scan as a
+   * pushed-down filter, so its file index prunes by zone maps AND the bloom
+   * index (the preds name which files can hold a match), then the
+   * surviving rows are filtered by the same preds and their coordinates
+   * written as a deletion vector. At 100 TB a keyed
    * delete on a stats/bloom-indexed column touches the handful of files
    * that can contain the key instead of scanning the table to locate the
    * rows it will not rewrite anyway. Semantics ≡ `deleteWhere(<preds as
@@ -3370,67 +3306,79 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val m = readManifest(v0)
     preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
       s"unknown predicate column ${p.col}"))
-    deleteRows(m, v0, zonePredCondition(m, preds), readKeptRows(m, preds))
+    deleteRows(m, v0, zonePredCondition(m, preds))
   }
 
-  /** Conjunction of [[ZonePred]] bounds as a row-level Column. */
-  private def zonePredCondition(m: Manifest, preds: Seq[ZonePred]): org.apache.spark.sql.Column =
-    preds.map { pr =>
-      val dt = m.schema(pr.col).dataType
-      (pr.lo.map(v => col(pr.col) >= lit(v).cast(dt)).toSeq ++
-        pr.hi.map(v => col(pr.col) <= lit(v).cast(dt)).toSeq)
-        .reduce(_ && _)
-    }.reduce(_ && _)
+  /** Conjunction of [[ZonePred]] bounds as a row-level Column: bounds cast
+   *  to the column's type, equal bounds as `=` (the shape bloom sidecars
+   *  answer), no bound at all as `true`. */
+  private def zonePredCondition(m: Manifest, preds: Seq[ZonePred]): Column =
+    GraftColumnBridge.column(zonePredExpr(m, preds, UnresolvedAttribute.quoted))
 
-  /** Zone/bloom-pruned scan carrying row-id columns, deletion vectors
-   *  applied — the candidate set for a pruned merge-on-read delete. */
-  private def readKeptRows(m: Manifest, preds: Seq[ZonePred]): DataFrame = {
-    val scans = planSkip(m, preds).flatMap { case (e, kept, _) =>
-      val disowned = m.pcol.isDefined && e.owned.exists(_.isEmpty)
-      if (kept.isEmpty || disowned) None
-      else {
-        val scan = toLogicalNames(m, rowIdCols(spark.read.schema(physSchema(m))
-          .option("basePath", s"$root/${e.dir}")
-          .parquet(kept.map(f => s"$root/$f"): _*)))
-        Some((m.pcol, e.owned) match {
-          case (Some(p), Some(vs)) if vs.nonEmpty =>
-            val dt = m.schema(p).dataType
-            scan.filter(vs.map(v => col(p) === lit(v).cast(dt)).reduce(_ || _))
-          case _ => scan
-        })
+  /** [[zonePredCondition]] as Catalyst filters over the scan's physical
+   *  columns — what the file index prunes with when a caller needs the
+   *  candidate files themselves ([[skippingStats]], copy-on-write DML). */
+  private def zoneFilters(m: Manifest, preds: Seq[ZonePred]): Seq[Expression] =
+    preds.map(pr => zonePredExpr(m, Seq(pr), c =>
+      AttributeReference(physName(m, c), m.schema(c).dataType)()))
+
+  private def zonePredExpr(m: Manifest, preds: Seq[ZonePred],
+      column: String => Expression): Expression = {
+    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    preds.flatMap { pr =>
+      val a = column(pr.col)
+      def v(s: String) = Cast(Literal(s), m.schema(pr.col).dataType, zone)
+      (pr.lo, pr.hi) match {
+        case (Some(lo), Some(hi)) if lo == hi => Seq(EqualTo(a, v(lo)))
+        case (lo, hi) =>
+          lo.map(x => GreaterThanOrEqual(a, v(x))).toSeq ++
+            hi.map(x => LessThanOrEqual(a, v(x)))
       }
-    }
-    scans.reduceOption(_ unionByName _) match {
-      case None => readScopedRows(m, Some(Set.empty), withRowIds = true)
-        .limit(0) // no file can hold a match: empty, schema-correct
-      case Some(df) => antiJoinDeleteVectors(df, m)
-    }
+    }.reduceOption(And).getOrElse(Literal(true))
   }
 
-  private def deleteRows(m: Manifest, v0: Long,
-      cond: org.apache.spark.sql.Column, live: DataFrame): Long = {
-    val matches = live.filter(cond)
+  /** Materialize a commit's change rows under `_changes/` — physical
+   *  names, and INT64 micros timestamps like the data files, whichever
+   *  thread writes them (referenced by the manifest; orphaned by a lost
+   *  race → cleaned by vacuum). Returns the root-relative dir. */
+  private def writeChanges(m: Manifest, changes: DataFrame): String = {
+    val d = s"_changes/${UUID.randomUUID()}"
+    withMicrosTimestamps { toPhysicalNames(m, changes).write.parquet(s"$root/$d") }
+    d
+  }
+
+  /** Write the row-id coordinates of `matches` as a fresh deletion-vector
+   *  dir. Returns the root-relative dir. */
+  private def writeDeleteVector(matches: DataFrame): String = {
+    val d = s"_dv/${UUID.randomUUID()}"
+    matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
+      .write.parquet(s"$root/$d")
+    d
+  }
+
+  /** Coordinates in deletion-vector dir `d`, counted from the written
+   *  files' FOOTERS — no read-back Spark job for a number the parquet
+   *  metadata records exactly. */
+  private def deleteVectorRows(d: String): Long =
+    parquetRowCount(Paths.get(root, d)).getOrElse(
+      spark.read.schema(DvSchema).parquet(s"$root/$d").count())
+
+  /** Deletion-vector the live rows of `m` matching `cond`; the filter
+   *  reaches the snapshot scan, so the file index prunes the candidates. */
+  private def deleteRows(m: Manifest, v0: Long, cond: Column): Long = {
+    val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dvDir = s"_dv/${UUID.randomUUID()}"
       // the delete images and the DV coordinates are independent projections
       // of the pinned matches: write the images on their own thread so the
       // two jobs overlap (both dirs are vacuumable orphans if either fails)
       val chDirF: () => Option[String] =
         if (m.cdfEnabled) inParallel {
-          val d = s"_changes/${UUID.randomUUID()}"
-          toPhysicalNames(m, matches.select(m.schema.fieldNames.map(col).toSeq: _*)
-            .withColumn(ChangeTypeCol, lit("delete")))
-            .write.parquet(s"$root/$d")
-          Some(d)
+          Some(writeChanges(m, matches.select(m.schema.fieldNames.map(col).toSeq: _*)
+            .withColumn(ChangeTypeCol, lit("delete"))))
         } else () => None
-      matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.parquet(s"$root/$dvDir")
-      // count the coordinates from the written files' FOOTERS — the old
-      // read-back count was one more Spark job per delete for a number
-      // the parquet metadata already records exactly
-      val matched = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-        spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+      val dvDir = writeDeleteVector(matches)
+      val matched = deleteVectorRows(dvDir)
       if (matched == 0) {
         deleteRecursively(Paths.get(root, dvDir))
         chDirF().foreach(d => deleteRecursively(Paths.get(root, d)))
@@ -3481,31 +3429,23 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(data.filter(!cond).limit(1).count() == 0L,
         s"replaceWhere contract: every incoming row must satisfy '$condition'")
       enforceConstraints(data, m.constraints)
-      val matches = readScopedRows(m, None, withRowIds = true).filter(cond)
+      val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val dvDir = s"_dv/${UUID.randomUUID()}"
         // three independent consumers of the two pinned frames — DV
         // coordinates, change images, new data — overlap all three writes
         val chDirF: () => Option[String] =
           if (m.cdfEnabled) inParallel {
-            val d = s"_changes/${UUID.randomUUID()}"
-            toPhysicalNames(m, matches.select(cols.map(col): _*)
+            Some(writeChanges(m, matches.select(cols.map(col): _*)
               .withColumn(ChangeTypeCol, lit("delete"))
-              .unionByName(data.withColumn(ChangeTypeCol, lit("insert"))))
-              .write.parquet(s"$root/$d")
-            Some(d)
+              .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else () => None
-        val dvF = inParallel {
-          matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-            .write.parquet(s"$root/$dvDir")
-        }
+        val dvF = inParallel { writeDeleteVector(matches) }
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        dvF()
-        val replaced = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-          spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+        val dvDir = dvF()
+        val replaced = deleteVectorRows(dvDir)
         val chDir = chDirF()
         if (!tryCommit(m.copy(op = "replace", cdfDir = chDir, commitTsMs = None,
             entries = m.entries :+ DirEntry(dir, owned),
@@ -3548,11 +3488,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(df.columns.toSet == cols.toSet,
         s"replace batch columns ${df.columns.sorted.mkString(",")} != table " +
           s"schema ${cols.sorted.mkString(",")}")
-      val dt = m.schema(p).dataType
-      val inScope = preds.map { pr =>
-        pr.lo.map(v => col(p) >= lit(v).cast(dt)).getOrElse(lit(true)) &&
-        pr.hi.map(v => col(p) <= lit(v).cast(dt)).getOrElse(lit(true))
-      }.reduce(_ && _)
+      val inScope = zonePredCondition(m, preds)
       val data = df.select(cols.map(col): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -3563,13 +3499,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        val numeric = dt.isInstanceOf[org.apache.spark.sql.types.NumericType]
-        def cmp(a: String, b: String): Int =
-          if (!numeric) a.compareTo(b)
-          else try BigDecimal(a).compare(BigDecimal(b))
-          catch { case _: NumberFormatException => 0 }
-        def replaced(v: String): Boolean = preds.forall(pr =>
-          pr.lo.forall(l => cmp(v, l) >= 0) && pr.hi.forall(h => cmp(v, h) <= 0))
+        val replaced = partitionInRange(m, preds)
         val keptEntries = m.entries.flatMap { e =>
           val rest = e.owned.map(_.filterNot(replaced))
           if (rest.exists(_.isEmpty)) None else Some(e.copy(owned = rest))
@@ -3584,13 +3514,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             // relaxes to O(replaced region) exactly when CDF demands it)
             val scope = m.entries.flatMap(_.owned.getOrElse(Nil))
               .distinct.filter(replaced).toSet
-            val d = s"_changes/${UUID.randomUUID()}"
-            toPhysicalNames(m, readScoped(m, Some(scope))
-              .select(cols.map(col): _*)
+            Some(writeChanges(m, snapshot(m, Some(scope))
               .withColumn(ChangeTypeCol, lit("delete"))
-              .unionByName(data.withColumn(ChangeTypeCol, lit("insert"))))
-              .write.parquet(s"$root/$d")
-            Some(d)
+              .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else None
         if (!tryCommit(Manifest(m.schema, m.pcol,
             keptEntries :+ DirEntry(dir, owned), "replace", m.cdfEnabled, chDir,
@@ -3635,44 +3561,24 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(!m.pcol.contains(c), s"cannot update partition column $c")
     })
     val cols = m.schema.fieldNames.toSeq
-    val cond = preds.map { pr =>
-      val dt = m.schema(pr.col).dataType
-      (pr.lo.map(v => col(pr.col) >= lit(v).cast(dt)).toSeq ++
-        pr.hi.map(v => col(pr.col) <= lit(v).cast(dt)).toSeq)
-        .reduce(_ && _)
-    }.reduce(_ && _)
+    val cond = zonePredCondition(m, preds)
 
-    val plan = planSkip(m, preds)
+    val candidates = fileIndex(m, snapshotFiles(m)).filesMatching(zoneFilters(m, preds))
     var matched = 0L
     val newEntries = scala.collection.mutable.ArrayBuffer.empty[DirEntry]
     val newStats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
     val changeParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    plan.foreach { case (e, touched, _) =>
+    m.entries.foreach { e =>
+      val touched = candidates.filter(_.dir == e.dir)
       if (touched.isEmpty) {
         // no file in this dir can hold a match: re-reference as-is
         newEntries += e
         newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
       } else {
-        val newDir = s"data/${UUID.randomUUID()}"
-        Files.createDirectories(Paths.get(root, newDir))
-        // 1. hard-link every untouched file (zero data I/O), keeping the
-        //    partition subpath so basePath reads still recover the pcol
-        val touchedSet = touched.toSet
-        val all = listParquet(Paths.get(root, e.dir))
-          .map(p => Paths.get(root).relativize(p).toString)
-        all.filterNot(touchedSet).foreach { f =>
-          val rel = Paths.get(e.dir).relativize(Paths.get(f))
-          val dst = Paths.get(root, newDir).resolve(rel)
-          Files.createDirectories(dst.getParent)
-          Files.createLink(dst, Paths.get(root, f))
-          m.fileStats.find(_.path == f).foreach { fs =>
-            newStats += fs.copy(path = s"$newDir/$rel")
-          }
-        }
+        // 1. re-link every untouched file
+        val newDir = relinkExcept(m, e, touched.map(_.rel).toSet, newStats)
         // 2. rewrite the touched files with the mutation applied
-        val touchedDf = toLogicalNames(m, spark.read.schema(physSchema(m))
-          .option("basePath", s"$root/${e.dir}")
-          .parquet(touched.map(f => s"$root/$f"): _*))
+        val touchedDf = scanFiles(m, touched)
         matched += touchedDf.filter(cond).count()
         val rewritten = set match {
           case None => touchedDf.filter(!coalesce(cond, lit(false)))
@@ -3708,40 +3614,14 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             .write.partitionBy(p).parquet(s"$root/$rwTmp")
           case None => rewrittenP.write.parquet(s"$root/$rwTmp")
         } }
-        val rwFiles = listParquet(Paths.get(root, rwTmp))
-        rwFiles.foreach { src =>
-          val rel = Paths.get(root, rwTmp).relativize(src)
-          val dst = Paths.get(root, newDir).resolve(rel)
-          Files.createDirectories(dst.getParent)
-          Files.createLink(dst, src)
-        }
-        // stats for just the rewritten files (linked files kept theirs)
-        val rwRel = rwFiles.map(src =>
-          s"$newDir/${Paths.get(root, rwTmp).relativize(src)}")
-        if (m.statsCols.nonEmpty && rwRel.nonEmpty) {
-          // footers of the freshly rewritten files (read via the rwTmp
-          // paths — same inodes as the hard links under newDir)
-          newStats ++= footerStats(rwFiles.zip(rwRel), physSchema(m),
-            m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-            .getOrElse {
-              val rwDf = spark.read.schema(physSchema(m))
-                .option("basePath", s"$root/$newDir")
-                .parquet(rwRel.map(f => s"$root/$f"): _*)
-              statsOf(rwDf, newDir, physSchema(m),
-                m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-            }
-        }
-        deleteRecursively(Paths.get(root, rwTmp))
+        linkRewritten(m, rwTmp, newDir, newStats)
         newEntries += DirEntry(newDir, e.owned)
       }
     }
     val chDir =
-      if (m.cdfEnabled && changeParts.nonEmpty) {
-        val d = s"_changes/${UUID.randomUUID()}"
-        toPhysicalNames(m, changeParts.reduce(_ unionByName _))
-          .write.parquet(s"$root/$d")
-        Some(d)
-      } else None
+      if (m.cdfEnabled && changeParts.nonEmpty)
+        Some(writeChanges(m, changeParts.reduce(_ unionByName _)))
+      else None
     if (!tryCommit(Manifest(m.schema, m.pcol, newEntries.toSeq, opName,
         m.cdfEnabled, chDir, m.statsCols, newStats.toSeq, txns = m.txns,
         droppedCols = m.droppedCols,
@@ -3786,17 +3666,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
     val cols = m.schema.fieldNames.toSeq
     val cond = coalesce(expr(condition), lit(false))
-    val matches = readScopedRows(m, None, withRowIds = true).filter(cond)
+    val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val dvDir = s"_dv/${UUID.randomUUID()}"
-      matches.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-        .write.parquet(s"$root/$dvDir")
-      // count the coordinates from the written files' FOOTERS — the old
-      // read-back count was one more Spark job per delete for a number
-      // the parquet metadata already records exactly
-      val matched = parquetRowCount(Paths.get(root, dvDir)).getOrElse(
-        spark.read.schema(DvSchema).parquet(s"$root/$dvDir").count())
+      val dvDir = writeDeleteVector(matches)
+      val matched = deleteVectorRows(dvDir)
       if (matched == 0) {
         deleteRecursively(Paths.get(root, dvDir))
         return 0L
@@ -3812,12 +3686,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       // data: write them on their own thread, overlapping the data write
       val chDirF: () => Option[String] =
         if (m.cdfEnabled) inParallel {
-          val d = s"_changes/${UUID.randomUUID()}"
-          toPhysicalNames(m, matches.select(cols.map(col): _*)
+          Some(writeChanges(m, matches.select(cols.map(col): _*)
             .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage"))))
-            .write.parquet(s"$root/$d")
-          Some(d)
+            .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage")))))
         } else () => None
       val (dir, owned, fstats) =
         writeData(updated, m.pcol, m.statsCols, bloomCols = m.bloomCols,
@@ -3926,7 +3797,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   def compact(): Unit = synchronized {
     val v0 = currentVersion
     val m = readManifest(v0)
-    replaceAll(readScoped(m, None), m.pcol, "compact", Some(v0))
+    replaceAll(snapshot(m), m.pcol, "compact", Some(v0))
   }
 
   /** [[optimizeCompact]] result: what was rewritten vs carried by link. */
@@ -3943,16 +3814,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     synchronized {
       require(exists, s"LakeTable at $root does not exist")
       val m = manifest
-      if (m.deleteVectors.nonEmpty) return true
-      val minSize = targetFileBytes / 2
-      var small = 0
-      m.entries.foreach { e =>
-        listParquet(Paths.get(root, e.dir)).foreach { p =>
-          if (Files.size(p) < minSize) small += 1
-          if (small >= 2) return true
-        }
-      }
-      false
+      m.deleteVectors.nonEmpty ||
+        snapshotFiles(m).count(_.status.getLen < targetFileBytes / 2) >= 2
     }
 
   /**
@@ -4000,54 +3863,24 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
     val newDir = s"data/${UUID.randomUUID()}"
     Files.createDirectories(Paths.get(root, newDir))
-    // per entry: owned-partition files only; small-or-deleted → rewrite,
-    // the rest hard-link into the packed dir (Spark part-file names embed a
-    // job UUID, so cross-dir links cannot collide)
-    var linked = 0
-    var rewriteBytes = 0L
-    val rewriteByDir = scala.collection.mutable.Map.empty[String, Seq[String]]
+    // visible (owned-partition) files only; small-or-deleted → rewrite, the
+    // rest hard-link into the packed dir (Spark part-file names embed a job
+    // UUID, so cross-dir links cannot collide)
+    val (rewrite, keep) = snapshotFiles(m).partition(f =>
+      f.status.getLen < minSize || dvFiles.contains(f.rel))
+    val statOf = m.fileStats.map(fs => fs.path -> fs).toMap
     val newStats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
-    m.entries.foreach { e =>
-      val ownedVals = e.owned.map(_.toSet)
-      listParquet(Paths.get(root, e.dir)).foreach { p =>
-        val rel = Paths.get(root).relativize(p).toString
-        val sub = Paths.get(root, e.dir).relativize(p).toString
-        val inOwned = (m.pcol.map(physName(m, _)), ownedVals) match {
-          case (Some(pc), Some(vs)) =>
-            partitionValueOf(sub, pc).exists(vs.contains)
-          case _ => true
-        }
-        if (inOwned) {
-          if (Files.size(p) < minSize || dvFiles.contains(rel)) {
-            rewriteBytes += Files.size(p)
-            rewriteByDir(e.dir) = rewriteByDir.getOrElse(e.dir, Nil) :+ rel
-          } else {
-            val dst = Paths.get(root, newDir).resolve(sub)
-            Files.createDirectories(dst.getParent)
-            Files.createLink(dst, p)
-            linked += 1
-            m.fileStats.find(_.path == rel).foreach { fs =>
-              newStats += fs.copy(path = s"$newDir/$sub")
-            }
-          }
-        }
-      }
+    keep.foreach { f =>
+      val sub = Paths.get(f.dir).relativize(Paths.get(f.rel))
+      val dst = Paths.get(root, newDir).resolve(sub)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, Paths.get(root, f.rel))
+      statOf.get(f.rel).foreach(fs => newStats += fs.copy(path = s"$newDir/$sub"))
     }
-    val rewritten = rewriteByDir.toSeq.sortBy(_._1).map { case (dir, rels) =>
-      val scan0 = spark.read.schema(physSchema(m))
-        .option("basePath", s"$root/$dir")
-        .parquet(rels.map(f => s"$root/$f"): _*)
-      toLogicalNames(m, if (m.deleteVectors.isEmpty) scan0 else rowIdCols(scan0))
-    } match {
-      case Nil => None
-      case scans => Some(antiJoinDeleteVectors(
-        scans.reduce(_ unionByName _), m)
-        .select(m.schema.fieldNames.map(col).toSeq: _*))
-    }
-    var rewrittenCount = 0
-    rewritten.foreach { df =>
+    val rewriteBytes = rewrite.map(_.status.getLen).sum
+    val rewrittenCount = if (rewrite.isEmpty) 0 else {
       val rwTmp = s"data/.opt-${UUID.randomUUID()}"
-      val dfP = toPhysicalNames(m, df)
+      val dfP = toPhysicalNames(m, snapshot(m, rewrite, withRowIds = false))
       withMicrosTimestamps { m.pcol.map(physName(m, _)) match {
         case Some(p) => dfP.repartition(col(p))
           .write.partitionBy(p).parquet(s"$root/$rwTmp")
@@ -4055,28 +3888,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           val n = math.max(1, math.ceil(rewriteBytes.toDouble / targetFileBytes).toInt)
           dfP.coalesce(n).write.parquet(s"$root/$rwTmp")
       } }
-      val rwFiles = listParquet(Paths.get(root, rwTmp))
-      rwFiles.foreach { src =>
-        val sub = Paths.get(root, rwTmp).relativize(src)
-        val dst = Paths.get(root, newDir).resolve(sub)
-        Files.createDirectories(dst.getParent)
-        Files.createLink(dst, src)
-      }
-      rewrittenCount = rwFiles.size
-      if (m.statsCols.nonEmpty && rwFiles.nonEmpty) {
-        val rwRel = rwFiles.map(src =>
-          s"$newDir/${Paths.get(root, rwTmp).relativize(src)}")
-        newStats ++= footerStats(rwFiles.zip(rwRel), physSchema(m),
-          m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-          .getOrElse {
-            val rwDf = spark.read.schema(physSchema(m))
-              .option("basePath", s"$root/$newDir")
-              .parquet(rwRel.map(f => s"$root/$f"): _*)
-            statsOf(rwDf, newDir, physSchema(m),
-              m.pcol.map(physName(m, _)), m.statsCols.map(physName(m, _)))
-          }
-      }
-      deleteRecursively(Paths.get(root, rwTmp))
+      linkRewritten(m, rwTmp, newDir, newStats)
     }
     // owned values for the packed dir = the union of what the entries owned
     val owned = m.pcol.map(_ => m.entries.flatMap(_.owned.getOrElse(Nil)).distinct)
@@ -4091,7 +3903,69 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       throw new ConcurrentWriteException(
         s"optimize computed against version $v0 of $root, but a concurrent " +
           s"writer committed v${v0 + 1} first — recompute and retry")
-    OptimizeStats(rewrittenCount, linked, rewriteBytes)
+    OptimizeStats(rewrittenCount, keep.size, rewriteBytes)
+  }
+
+  /** Hard-link every file of entry `e` except `rewritten` (root-relative)
+   *  into a fresh data dir — zero data I/O, partition subpaths kept —
+   *  carrying their zone stats into `newStats`. Returns the new dir. */
+  private def relinkExcept(m: Manifest, e: DirEntry, rewritten: Set[String],
+      newStats: scala.collection.mutable.ArrayBuffer[FileStat]): String = {
+    val newDir = s"data/${UUID.randomUUID()}"
+    Files.createDirectories(Paths.get(root, newDir))
+    val statOf = m.fileStats.map(fs => fs.path -> fs).toMap
+    listParquet(Paths.get(root, e.dir)).map(p => Paths.get(root).relativize(p).toString)
+      .filterNot(rewritten).foreach { f =>
+        val rel = Paths.get(e.dir).relativize(Paths.get(f))
+        val dst = Paths.get(root, newDir).resolve(rel)
+        Files.createDirectories(dst.getParent)
+        Files.createLink(dst, Paths.get(root, f))
+        statOf.get(f).foreach(fs => newStats += fs.copy(path = s"$newDir/$rel"))
+      }
+    newDir
+  }
+
+  /** Hard-link the files a rewrite wrote under `rwTmp` into `newDir` and
+   *  drop `rwTmp`, adding their zone stats to `newStats` — read from the
+   *  fresh footers (same inodes as the links), or by the aggregation pass
+   *  when a footer is unusable. Returns the number of files. */
+  private def linkRewritten(m: Manifest, rwTmp: String, newDir: String,
+      newStats: scala.collection.mutable.ArrayBuffer[FileStat]): Int = {
+    val rwFiles = listParquet(Paths.get(root, rwTmp))
+    val rwRel = rwFiles.map { src =>
+      val sub = Paths.get(root, rwTmp).relativize(src)
+      val dst = Paths.get(root, newDir).resolve(sub)
+      Files.createDirectories(dst.getParent)
+      Files.createLink(dst, src)
+      s"$newDir/$sub"
+    }
+    if (m.statsCols.nonEmpty && rwRel.nonEmpty) {
+      val (phys, pcol) = (physSchema(m), m.pcol.map(physName(m, _)))
+      val scols = m.statsCols.map(physName(m, _))
+      newStats ++= footerStats(rwFiles.zip(rwRel), phys, pcol, scols).getOrElse(
+        statsOf(spark.read.schema(phys).option("basePath", s"$root/$newDir")
+          .parquet(rwRel.map(f => s"$root/$f"): _*), newDir, phys, pcol, scols))
+    }
+    deleteRecursively(Paths.get(root, rwTmp))
+    rwFiles.size
+  }
+
+  /** Whether a partition value, as the manifest records it, lies inside
+   *  the conjunction of `preds` on the partition column — compared in the
+   *  column's type under Catalyst's ordering (an unreadable bound fails
+   *  loudly rather than scoping the wrong partitions). */
+  private def partitionInRange(m: Manifest, preds: Seq[ZonePred]): String => Boolean = {
+    val dt = m.schema(m.pcol.get).dataType
+    val ord = PhysicalDataType.ordering(dt)
+    val typed = typedValue(dt)
+    def bound(v: String): Any = {
+      val x = typed(v)
+      require(x != null, s"cannot read partition bound '$v' as $dt")
+      x
+    }
+    val bounds = preds.map(pr => (pr.lo.map(bound), pr.hi.map(bound)))
+    v => Option(typed(v)).exists(x => bounds.forall { case (lo, hi) =>
+      lo.forall(ord.gteq(x, _)) && hi.forall(ord.lteq(x, _)) })
   }
 
   /** Hive-layout partition value of a file's dir-relative subpath, if any. */
@@ -4129,7 +4003,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val v0 = currentVersion
     val m = readManifest(v0)
     val (clustered, release) =
-      zorderClustered(readScoped(m, None), m, zcols, targetFiles)
+      zorderClustered(snapshot(m), m, zcols, targetFiles)
     try replaceAll(clustered, m.pcol, "compact", Some(v0),
       preclustered = m.pcol.isDefined, clusteredAs = zcols)
     finally release()
@@ -4151,7 +4025,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(m.schema.fieldNames.contains(c), s"unknown cluster column $c")
       require(!m.pcol.contains(c), s"$c is the partition column")
     }
-    val clustered = readScoped(m, None)
+    val clustered = snapshot(m)
       .repartitionByRange(targetFiles max 1, cols.map(col): _*)
       .sortWithinPartitions(cols.map(col): _*)
     replaceAll(clustered, m.pcol, "compact", Some(v0),
@@ -4194,19 +4068,15 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       "liquid clustering applies to unpartitioned tables only")
     val keyMatches = m.clusterKey == cols
     val (kept, uncl) = m.entries.partition(e => e.clustered && keyMatches)
-    if (uncl.isEmpty) return OptimizeStats(0,
-      kept.map(e => listParquet(Paths.get(root, e.dir)).size).sum, 0L)
-    val unclFiles = uncl.flatMap(e => listParquet(Paths.get(root, e.dir)))
-    val bytes = unclFiles.map(Files.size).sum
+    val keptDirs = kept.map(_.dir).toSet
+    val (keptFiles, unclFiles) = snapshotFiles(m).partition(f => keptDirs(f.dir))
+    if (uncl.isEmpty) return OptimizeStats(0, keptFiles.size, 0L)
+    val bytes = unclFiles.map(_.status.getLen).sum
     val targetFiles = math.max(1,
       math.ceil(bytes.toDouble / targetFileBytes).toInt)
     // read the unclustered dirs through their deletion vectors (dead rows
     // materialize away — the targeted REORG, same as optimizeCompact)
-    val scan0 = spark.read.schema(physSchema(m))
-      .parquet(uncl.map(e => s"$root/${e.dir}"): _*)
-    val batch = antiJoinDeleteVectors(toLogicalNames(m,
-        if (m.deleteVectors.isEmpty) scan0 else rowIdCols(scan0)), m)
-      .select(m.schema.fieldNames.map(col).toSeq: _*)
+    val batch = snapshot(m, unclFiles, withRowIds = false)
     val (clustered, release) =
       if (zOrderable(cols)) zorderClustered(batch, m, cols, targetFiles)
       else (batch.repartitionByRange(targetFiles, cols.map(col): _*)
@@ -4214,7 +4084,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     try {
       val (dir, _, fstats) = writeData(clustered, None, m.statsCols,
         preclustered = true, bloomCols = m.bloomCols, colMap = m.colMap)
-      val keptDirs = kept.map(_.dir).toSet
       val keptStats =
         m.fileStats.filter(fs => keptDirs.exists(d => fs.path.startsWith(d + "/")))
       // DRAIN stale deletion vectors: the rewritten dirs' dead rows just
@@ -4228,8 +4097,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       val keptDvs =
         if (m.deleteVectors.isEmpty || kept.isEmpty) Nil
         else {
-          val prefix = "file:" +
-            Paths.get(root).toAbsolutePath.normalize.toString + "/"
+          val prefix = s"$rootPath/"
           val dv = spark.read.schema(DvSchema)
             .parquet(m.deleteVectors.map(d => s"$root/$d"): _*)
             .select(
@@ -4256,8 +4124,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         throw new ConcurrentWriteException(
           s"optimize computed against version $v0 of $root, but a concurrent " +
             s"writer committed v${v0 + 1} first — recompute and retry")
-      OptimizeStats(listParquet(Paths.get(root, dir)).size,
-        kept.map(e => listParquet(Paths.get(root, e.dir)).size).sum, bytes)
+      OptimizeStats(listParquet(Paths.get(root, dir)).size, keptFiles.size, bytes)
     } finally release()
   }
 
@@ -4391,34 +4258,19 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     preds.foreach(pr => require(pr.col == p,
       s"OPTIMIZE WHERE must predicate only the partition column $p, " +
         s"got ${pr.col} (Delta's rule — only partition predicates scope files)"))
-    val numeric =
-      m.schema(p).dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-    def cmp(a: String, b: String): Int =
-      if (!numeric) a.compareTo(b)
-      else try BigDecimal(a).compare(BigDecimal(b))
-      catch { case _: NumberFormatException => 0 }
-    def inScope(v: String): Boolean = preds.forall(pr =>
-      pr.lo.forall(l => cmp(v, l) >= 0) && pr.hi.forall(h => cmp(v, h) <= 0))
-    val scope = m.entries.flatMap(_.owned.getOrElse(Nil)).distinct.filter(inScope)
-    val (scopedFiles, scopedBytes, keptFiles) = {
-      var sf = 0; var sb = 0L; var kf = 0
-      m.entries.foreach { e =>
-        val owned = e.owned.getOrElse(Nil).toSet
-        listParquet(Paths.get(root, e.dir)).foreach { f =>
-          val sub = Paths.get(root, e.dir).relativize(f).toString
-          val v = partitionValueOf(sub, physName(m, p))
-          if (v.exists(x => owned(x) && inScope(x))) { sf += 1; sb += Files.size(f) }
-          else if (v.exists(owned)) kf += 1 // live, out of scope: untouched
-          // else: a partition this dir no longer owns — dead, vacuum's business
-        }
-      }
-      (sf, sb, kf)
-    }
-    if (scope.isEmpty) return OptimizeStats(0, keptFiles, 0L)
-    val scopeSet = scope.toSet
+    val scopeSet = m.entries.flatMap(_.owned.getOrElse(Nil))
+      .filter(partitionInRange(m, preds)).toSet
+    // live files in scope are rewritten; the rest stay untouched (files of
+    // partitions a dir no longer owns are dead — vacuum's business)
+    val pt = m.schema(p).dataType
+    val inScope = scopeSet.map(typedValue(pt))
+    val (scoped, kept) = snapshotFiles(m).partition(f => inScope(f.partition.get(0, pt)))
+    val keptFiles = kept.size
+    if (scopeSet.isEmpty) return OptimizeStats(0, keptFiles, 0L)
+    val scopedBytes = scoped.map(_.status.getLen).sum
     // scoped snapshot rows, deletion vectors applied (the rewrite
     // materializes deletes for these partitions)
-    val df0 = readScoped(m, Some(scopeSet))
+    val df0 = snapshot(m, scoped, withRowIds = false)
     val (df, release) =
       if (zcols.isEmpty) (df0.repartition(col(p)), () => ())
       else zorderClustered(df0, m, zcols, targetFiles)
@@ -4740,14 +4592,5 @@ object LakeTable {
     if (Files.isDirectory(p))
       Files.list(p).iterator().asScala.toList.foreach(deleteRecursively)
     Files.deleteIfExists(p)
-  }
-
-  private def listParquet(dir: Path): Seq[Path] = {
-    if (!Files.isDirectory(dir)) Nil
-    else Files.list(dir).iterator().asScala.toList.flatMap { p =>
-      if (Files.isDirectory(p)) listParquet(p)
-      else if (p.getFileName.toString.endsWith(".parquet")) Seq(p)
-      else Nil
-    }
   }
 }

@@ -19,9 +19,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
  * }}}
  *
  * The substitution is the SAME one `LakeSql.sql`/`select` use — plain
- * relations, `VERSION/TIMESTAMP AS OF` time travel, and the
- * `table_changes('t', from[, to])` CDF function all resolve to the CURRENT
- * snapshot's logical plan (DV-filtered, schema-evolved, never stale).
+ * relations and `VERSION/TIMESTAMP AS OF` time travel resolve to the
+ * CURRENT snapshot's logical plan (DV-filtered, schema-evolved, never
+ * stale); the `table_changes('t', from[, to])` CDF function resolves
+ * through the table function the extension registers, which calls the same
+ * [[LakeSql.tableChanges]]. Each snapshot is one scan over a
+ * [[ManifestFileIndex]]: a `WHERE` prunes files wherever Catalyst pushes
+ * it, with no rewrite here.
  * Catalog names win: Spark's own resolution runs in the same fixed-point
  * batch, so a temp view or catalog table with the same name resolves first
  * and this rule never sees it. Plans with no registered relation pass

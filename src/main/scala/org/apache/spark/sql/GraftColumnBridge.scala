@@ -23,4 +23,11 @@ object GraftColumnBridge {
   def logicalPlan(df: DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.logical
+
+  /** `s` with every field, nested ones too, nullable — the schema a file
+    * source reads with. */
+  def asNullable(s: types.StructType): types.StructType = s.asNullable
+
+  /** Whether values of `s` order by their UTF8 bytes (no collation). */
+  def binaryOrdered(s: types.StringType): Boolean = s.supportsBinaryOrdering
 }

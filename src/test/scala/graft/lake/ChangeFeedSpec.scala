@@ -154,4 +154,33 @@ class ChangeFeedSpec extends SparkSpec {
     val e = intercept[RuntimeException](t.readChangeFeed(1, Some(1)).collect())
     assert(e.getMessage.contains("vacuumed"), e.getMessage)
   }
+
+  test("change images carry INT64 TIMESTAMP_MICROS like the data files, " +
+      "whichever thread writes them") {
+    import scala.jdk.CollectionConverters._
+    val t = LakeTable(spark, s"${tmpDir("cdf_micros")}/t").create(
+      StructType(Seq(StructField("k", LongType), StructField("p", StringType),
+        StructField("ts", TimestampType))),
+      partitionBy = Some("p"), enableChangeFeed = true)
+    val ts = java.sql.Timestamp.valueOf("2024-03-01 12:00:00")
+    t.append(Seq((1L, "a", ts), (2L, "b", ts)).toDF("k", "p", "ts"))
+    // a partitioned merge writes its images on a second thread while the
+    // data write runs; a merge-on-read delete writes them beside the
+    // deletion vector
+    t.merge(Seq((1L, "a", new java.sql.Timestamp(ts.getTime + 1000))).toDF("k", "p", "ts"),
+      Seq("k"))
+    t.deleteWhere("k = 2")
+    val conf = spark.sessionState.newHadoopConf()
+    val encodings = java.nio.file.Files.walk(java.nio.file.Paths.get(t.root, "_changes"))
+      .iterator().asScala.filter(_.toString.endsWith(".parquet")).map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), conf)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try {
+          val pt = r.getFooter.getFileMetaData.getSchema.getType(Array("ts"): _*).asPrimitiveType
+          s"${pt.getPrimitiveTypeName} ${pt.getLogicalTypeAnnotation}"
+        } finally r.close()
+      }.toSet
+    assert(encodings == Set("INT64 TIMESTAMP(MICROS,true)"), encodings.toString)
+  }
 }

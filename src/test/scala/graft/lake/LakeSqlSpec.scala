@@ -9,6 +9,36 @@ import graft.SparkSpec
 class LakeSqlSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Files the executed scans read: each `FileSourceScanExec`'s
+   *  `numFiles` metric after running `df` (the index lists the whole
+   *  snapshot as its input files; the metric counts what survived
+   *  pruning). */
+  private def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    df.collect()
+    def files(p: SparkPlan): Long = p match {
+      case a: AdaptiveSparkPlanExec => files(a.executedPlan)
+      case q: QueryStageExec => files(q.plan)
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+      case other => (other.children ++ other.subqueries).map(files).sum
+    }
+    files(df.queryExecution.executedPlan)
+  }
+
+  /** Three single-file appends: ids 1..100 (a), 101..200 (b), 201..300 (c),
+   *  zone stats on id. */
+  private def skipTable(name: String): LakeTable = {
+    val t = LakeTable(spark, s"${tmpDir(name)}/t")
+    t.create(Seq((0L, "")).toDF("id", "tag").schema, statsColumns = Seq("id"))
+    def batch(r: Range, tag: String) =
+      r.map(i => (i.toLong, tag)).toDF("id", "tag").coalesce(1)
+    t.append(batch(1 to 100, "a"))
+    t.append(batch(101 to 200, "b"))
+    t.append(batch(201 to 300, "c"))
+    t
+  }
+
   private def fresh(name: String): LakeTable = {
     val t = LakeTable(spark, s"${tmpDir(name)}/t")
     t.append(Seq((1L, "a", 1), (2L, "b", 1)).toDF("k", "v", "seq"))
@@ -950,21 +980,9 @@ class LakeSqlSpec extends SparkSpec {
 
   test("SELECT ... WHERE over a lake table prunes whole files through the " +
       "manifest zone maps before Spark plans the scan") {
-    val root = tmpDir("sql_skip")
-    val t = LakeTable(spark, s"$root/t")
-    t.create(Seq((0L, "")).toDF("id", "tag").schema, statsColumns = Seq("id"))
-    def batch(r: Range, tag: String) =
-      r.map(i => (i.toLong, tag)).toDF("id", "tag").coalesce(1)
-    t.append(batch(1 to 100, "a"))
-    t.append(batch(101 to 200, "b"))
-    t.append(batch(201 to 300, "c"))
+    val t = skipTable("sql_skip")
     LakeSql.register("skip_t", t)
     try {
-      def scannedFiles(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.executedPlan.collect {
-          case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-            s.relation.location.inputFiles.length
-        }.sum
       val pruned = LakeSql.sql(spark,
         "SELECT id, tag FROM skip_t WHERE id >= 150 AND id <= 160")
       assert(scannedFiles(pruned) == 1, "two of three files must be zone-skipped")
@@ -981,6 +999,67 @@ class LakeSqlSpec extends SparkSpec {
         "SELECT x.id FROM skip_t AS x WHERE x.id <= 50")
       assert(scannedFiles(aliased) == 1)
     } finally LakeSql.unregister("skip_t")
+  }
+
+  test("a fact-column filter above a join prunes the fact's files") {
+    LakeSql.register("join_fact", skipTable("sql_skip_join"))
+    Seq(("a", "alpha"), ("b", "beta"), ("c", "gamma")).toDF("tag", "name")
+      .createOrReplaceTempView("join_dim")
+    try {
+      val q = LakeSql.sql(spark, "SELECT f.id, d.name FROM join_fact f " +
+        "JOIN join_dim d ON f.tag = d.tag WHERE f.id >= 150 AND f.id <= 160")
+      assert(scannedFiles(q) == 1, "the filter sits above the join, not the scan")
+      assert(q.as[(Long, String)].collect().toSet ==
+        (150L to 160L).map(_ -> "beta").toSet)
+    } finally {
+      LakeSql.unregister("join_fact")
+      spark.catalog.dropTempView("join_dim")
+    }
+  }
+
+  test("strict < and > bounds prune") {
+    LakeSql.register("strict_t", skipTable("sql_skip_strict"))
+    try {
+      val q = LakeSql.sql(spark, "SELECT id FROM strict_t WHERE id > 100 AND id < 201")
+      assert(scannedFiles(q) == 1, "file a tops out at 100, file c starts at 201")
+      assert(q.as[Long].collect().toSet == (101L to 200L).toSet)
+    } finally LakeSql.unregister("strict_t")
+  }
+
+  test("a TIMESTAMP-keyed MERGE prunes: only the admitting file is rewritten") {
+    import java.sql.Timestamp
+    val pruneKey = "spark.graft.merge.pruneMinBytes"
+    val t = LakeTable(spark, s"${tmpDir("sql_ts_merge")}/t")
+    t.create(Seq((new Timestamp(0L), 0)).toDF("ts", "v").schema,
+      statsColumns = Seq("ts"))
+    Seq("01", "10", "20").foreach { day =>
+      t.append((0 until 24).map(h =>
+        (Timestamp.valueOf(f"2024-01-$day $h%02d:00:00"), h)).toDF("ts", "v")
+        .coalesce(1))
+    }
+    def inodes: Set[Long] =
+      t.read.select(input_file_name()).distinct().as[String].collect().map { f =>
+        java.nio.file.Files.getAttribute(java.nio.file.Paths.get(
+          f.stripPrefix("file:")), "unix:ino").asInstanceOf[Long]
+      }.toSet
+    val before = inodes
+    Seq((Timestamp.valueOf("2024-01-10 05:00:00"), 500),
+      (Timestamp.valueOf("2024-01-10 05:30:00"), 530)).toDF("ts", "v")
+      .createOrReplaceTempView("ts_src")
+    LakeSql.register("ts_t", t)
+    spark.conf.set(pruneKey, "1")
+    try {
+      LakeSql.merge(spark, "MERGE INTO ts_t t USING ts_src s ON t.ts = s.ts " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
+    } finally {
+      spark.conf.unset(pruneKey)
+      LakeSql.unregister("ts_t")
+      spark.catalog.dropTempView("ts_src")
+    }
+    assert(t.read.count() == 73)
+    assert(t.read.filter(col("v") >= 500).count() == 2)
+    assert(before.intersect(inodes).size == 2,
+      "the 01 and 20 files must be re-linked, not rewritten")
   }
 
   test("CREATE TABLE ... SHALLOW CLONE forks through SQL text: zero-copy, " +

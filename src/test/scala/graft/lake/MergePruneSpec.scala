@@ -150,4 +150,76 @@ class MergePruneSpec extends SparkSpec {
       .map(_.getDouble(1)).toSeq == Seq(50.0))
     assert(t3.read.count() == 3)
   }
+
+  test("a mixed-type merge key never prunes: an INT source key updates the " +
+      "STRING target row the join's coercion matches, no duplicate insert") {
+    // the join matches '07' = 7, but 7 rendered in the target's type sorts
+    // outside the file's ['07', '08'] — pruning on it would skip the match
+    val t = LakeTable(spark, tmpDir("mgp_mixed"))
+    t.create(Seq(("", "")).toDF("id", "v").schema, statsColumns = Seq("id"))
+    t.append(Seq(("07", "old"), ("08", "x")).toDF("id", "v").coalesce(1))
+    t.append(Seq(("50", "y"), ("60", "z")).toDF("id", "v").coalesce(1))
+    withPruneThreshold(1L) {
+      t.merge(Seq((7, "new")).toDF("id", "v"), Seq("id"))
+    }
+    assert(t.read.count() == 4)
+    assert(t.read.filter(col("v") === "old").count() == 0)
+    assert(t.read.filter(col("v") === "new").count() == 1)
+  }
+
+  test("string keys prune in UTF8 byte order: a supplementary-plane key is " +
+      "found by readWhere, a SQL point SELECT and a pruned merge") {
+    // "\uFFFF" (UTF8 EF BF BF) sorts BELOW the emoji (F0 9F 98 80) in byte
+    // order — the order the file's stats record — but ABOVE it in UTF-16
+    // code units (FFFF > D83D)
+    val emoji = "\uD83D\uDE00"
+    val t = LakeTable(spark, tmpDir("mgp_utf8"))
+    t.create(Seq(("", 0)).toDF("k", "v").schema, statsColumns = Seq("k"))
+    t.append(Seq(("\uFFFF", 1), (emoji, 2)).toDF("k", "v").coalesce(1))
+    t.append(Seq(("a", 3), ("b", 4)).toDF("k", "v").coalesce(1))
+    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("k", emoji)))
+      .select("v").as[Int].collect().toSeq == Seq(2))
+    LakeSql.register("utf8_keys", t)
+    try assert(LakeSql.sql(spark, s"SELECT v FROM utf8_keys WHERE k = '$emoji'")
+      .as[Int].collect().toSeq == Seq(2))
+    finally LakeSql.unregister("utf8_keys")
+    val before = inodes(t)
+    withPruneThreshold(1L) {
+      t.merge(Seq((emoji, 20)).toDF("k", "v"), Seq("k"))
+    }
+    assert(t.read.count() == 4)
+    assert(t.read.filter(col("k") === emoji).select("v").as[Int].collect().toSeq ==
+      Seq(20))
+    // the pruned path ran: the a/b file was re-linked, not rewritten
+    assert(before.toSet.intersect(inodes(t).toSet).size == 1)
+  }
+
+  test("TIMESTAMP stats written under one session zone still admit their " +
+      "rows read and merged under another: no missed row, no duplicate") {
+    // stats are CAST-to-STRING renderings in the writer's zone; read back
+    // under a zone 8h behind UTC they parse 8h late — the 10th's file
+    // would seem to start at 08:00 UTC and drop the 05:00 UTC row
+    val zoneKey = "spark.sql.session.timeZone"
+    val prevZone = spark.conf.get(zoneKey)
+    val jan = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
+    def day(d: Int) = spark.range(24).select(
+      timestamp_seconds(lit(jan + (d - 1) * 86400L) + col("id") * 3600).as("ts"),
+      col("id").cast("int").as("v")).coalesce(1)
+    val at0500 = timestamp_seconds(lit(jan + 9 * 86400L + 5 * 3600))
+    val t = LakeTable(spark, tmpDir("mgp_tz"))
+    try {
+      spark.conf.set(zoneKey, "UTC")
+      t.create(day(1).schema, statsColumns = Seq("ts"))
+      Seq(1, 10, 20).foreach(d => t.append(day(d)))
+      spark.conf.set(zoneKey, "America/Los_Angeles")
+      assert(t.read.filter(col("ts") === at0500).select("v").as[Int]
+        .collect().toSeq == Seq(5))
+      withPruneThreshold(1L) {
+        t.merge(spark.range(1).select(at0500.as("ts"), lit(500).as("v")), Seq("ts"))
+      }
+      assert(t.read.count() == 72)
+      assert(t.read.filter(col("ts") === at0500).select("v").as[Int]
+        .collect().toSeq == Seq(500))
+    } finally spark.conf.set(zoneKey, prevZone)
+  }
 }

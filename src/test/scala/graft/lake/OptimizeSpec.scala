@@ -103,6 +103,21 @@ class OptimizeSpec extends SparkSpec {
     assert(kept <= 1 && skipped >= 2, s"kept=$kept skipped=$skipped")
   }
 
+  test("DESCRIBE DETAIL counts only the files a read can return") {
+    // a merge touching partition a moves it to a new dir; the old dir keeps
+    // a's file on disk until vacuum, but no longer owns it
+    val t = LakeTable(spark, s"${tmpDir("opt_visible")}/t")
+    val df = Seq((1L, "a"), (2L, "b")).toDF("k", "pt")
+    t.create(df.schema, partitionBy = Some("pt"))
+    t.append(df)
+    t.merge(Seq((1L, "a")).toDF("k", "pt"), Seq("k"))
+    val read = t.read.select(input_file_name()).distinct().as[String].collect()
+    assert(read.length == 2)
+    assert(t.detail.numFiles == 2)
+    assert(t.detail.sizeInBytes ==
+      read.map(f => Files.size(Paths.get(f.stripPrefix("file:")))).sum)
+  }
+
   test("scoped optimizeWhere rewrites one partition; the rest keep path AND inode") {
     val root = s"${tmpDir("opt_where")}/t"
     val t = LakeTable(spark, root)

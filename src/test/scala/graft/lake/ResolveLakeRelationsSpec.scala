@@ -60,4 +60,36 @@ class ResolveLakeRelationsSpec extends SparkSpec {
     val plan = spark.sessionState.sqlParser.parsePlan("SELECT 1 AS one")
     assert(new ResolveLakeRelations(spark)(plan) eq plan)
   }
+
+  test("table_changes resolves in native spark.sql on an extended session") {
+    val t = LakeTable(spark, s"${tmpDir("resolve_tvf")}/t").create(
+      Seq((0L, "")).toDF("k", "v").schema, enableChangeFeed = true)
+    t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))                 // v1
+    t.merge(Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), Seq("k"))        // v2
+    LakeSql.register("tvf_t", t)
+    val q = "SELECT _change_type, COUNT(*) FROM table_changes('tvf_t', 1, 2) GROUP BY 1"
+    val viaLakeSql = LakeSql.sql(spark, q).collect().map(_.toString).sorted.toSeq
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val extended = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.expressions.GraftExtensions)
+      .getOrCreate()
+    try {
+      assert(extended ne spark)
+      val native = extended.sql(q).collect().map(_.toString).sorted.toSeq
+      assert(native == viaLakeSql)
+      assert(native == Seq("[insert,3]", "[update_postimage,1]",
+        "[update_preimage,1]"), native.toString)
+    } finally {
+      LakeSql.unregister("tvf_t")
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
 }

@@ -120,10 +120,12 @@ class ZoneMapSpec extends SparkSpec {
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 1 && skipped == 2, s"kept=$kept skipped=$skipped")
     assert(t.readWhere(preds).select("id").as[Long].collect().toSeq == Seq(2L))
-    // range preds on the partition column never mis-prune (not handled →
-    // all kept, row-filtered)
+    // beside a zone pred on another column it still prunes by partition
+    assert(t.skippingStats(preds :+ ZonePred.atLeast("id", "2"))._1 == 1)
+    // a range pred on the partition column prunes exactly as well: it is
+    // evaluated on each file's typed partition value, so only c's file goes
     val range = Seq(ZonePred.between("part", "a", "b"))
-    assert(t.skippingStats(range)._1 == 3)
+    assert(t.skippingStats(range)._1 == 2)
     assert(t.readWhere(range).count() == 2)
     // and a pruned MoR delete keyed on the partition value touches one file
     assert(t.deleteWhere(Seq(ZonePred.eq("part", "c"))) == 1L)

@@ -1873,7 +1873,7 @@ class PipelineSqlSpec extends SparkSpec {
     p.run()
     // the trickle touches only low-range keys: the high-range fact file's
     // zone map proves it can hold none of them — the manifest-level skip
-    // the dim-delta slice rides (same pred, same planSkip)
+    // the dim-delta slice rides (same pred, same file index)
     dim.merge(Seq(("c0003", 5L), ("c0007", 5L)).toDF("cat", "w"), Seq("cat"))
     val (_, skipped) = fact.skippingStats(
       Seq(LakeTable.ZonePred.between("cat", "c0003", "c0007")))

@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS); read as long, re-typed in ops.t
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // optional subset filter for profiling: SPARK_GRAFT_ONLY=x1_a,x2_b
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries

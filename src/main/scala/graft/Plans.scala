@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Dev measurement harness (optimization rounds; not part of the driver
@@ -26,15 +25,7 @@ object Plans {
     val suffix = if (args.length > 1 && args(1).nonEmpty) "_" + args(1) else ""
     val only = if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = DevSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     Files.createDirectories(Paths.get(outDir))
 
     @volatile var jobs = 0L

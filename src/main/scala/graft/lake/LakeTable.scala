@@ -71,7 +71,9 @@ import scala.jdk.CollectionConverters._
  * Unpartitioned scale notes: `append` is O(new data) — it never rewrites
  * existing files, so streaming ingest cost is independent of table size.
  * `merge` is join-based (shuffle on the merge keys, broadcast when the
- * source is small — left to AQE) and rewrites on commit.
+ * source is small — left to AQE) and copy-on-write: it rewrites the files
+ * it touches — every file unless zone maps prune them — and leaves the
+ * rest in place.
  */
 /** A snapshot-dependent commit (merge/compact) lost an optimistic-concurrency
  *  race: the table advanced past the version the result was computed from.
@@ -211,7 +213,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       case l if l.startsWith("fstat=") =>
         val parts = l.stripPrefix("fstat=").split('|')
         FileStat(b64d(parts.head), parts.tail.toSeq.map { cs =>
-          val Array(c, mn, mx) = cs.split(':')
+          val Array(c, mn, mx) = cs.split(":", -1)
           b64d(c) -> ((b64d(mn), b64d(mx)))
         }.toMap)
     }.toSeq
@@ -237,7 +239,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }.getOrElse(Nil)
     val props = lines.collect {
       case l if l.startsWith("prop=") =>
-        val Array(k, v0) = l.stripPrefix("prop=").split(':')
+        val Array(k, v0) = l.stripPrefix("prop=").split(":", -1)
         b64d(k) -> b64d(v0)
     }.toSeq
     val clusterKey = lines.collectFirst { case l if l.startsWith("ckey=") =>
@@ -643,21 +645,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(!wideningBlocked(cur).contains(f.name),
         s"column ${f.name} is partition/bloom/constraint/generated/identity-" +
           "bound — its physical type is load-bearing and cannot widen")
-      // FLOAT→DOUBLE invalidates the column's zone stats: a float's
-      // shortest decimal rendering ("0.1") disagrees with its promoted
-      // double value (0.10000000149…), so a high-precision predicate
-      // could WRONGLY prune a float-era file. Absent stats never prune —
-      // drop them (integral widenings are decimal-exact and keep theirs);
-      // post-widen appends write double files with double stats.
-      val pc = physName(cur, f.name)
-      val keptStats =
-        if (f.dataType == org.apache.spark.sql.types.FloatType)
-          cur.fileStats.map(fs => fs.copy(minMax = fs.minMax - pc))
-        else cur.fileStats
+      // post-widen appends write files with stats in the new type
+      val widened = StructType(cur.schema.fields.map(x =>
+        if (x.name == f.name) x.copy(dataType = to) else x))
       (cur.copy(op = "alter", cdfDir = None, commitTsMs = None,
-        schema = StructType(cur.schema.fields.map(x =>
-          if (x.name == f.name) x.copy(dataType = to) else x)),
-        fileStats = keptStats), v + 1)
+        schema = widened, fileStats = statsUnder(cur, widened)), v + 1)
     }
   }
 
@@ -1097,8 +1089,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *     data size, never from the local core count);
    *   - under null-safe key matching a NULL source key matches NULL target
    *     rows, which zone stats do not describe — bail;
-   *   - a plan that touches every file anyway returns None (the caller's
-   *     full-rewrite path skips the relink machinery). */
+   *   - a plan that keeps every file returns None (the touched set is
+   *     then every file, without the bounds). */
   private def mergePrunePlan(m: Manifest, src: DataFrame, keys: Seq[String],
       nullSafeKeys: Boolean): Option[Seq[SnapshotFile]] = {
     val statKeys = keys.filter(k => m.statsCols.contains(k) &&
@@ -1919,7 +1911,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   // written dir and stored as a `_bloom/<dir-uuid>.idx` sidecar (never in
   // the manifest: index bytes are O(files × bits), manifests are read on
   // every snapshot resolution). Missing sidecars never prune, so hard-link
-  // relinks (mutateWhere) and pre-index dirs stay correct, just unpruned.
+  // relinks (the copy-on-write rewrites) and pre-index dirs stay correct,
+  // just unpruned.
   // At 100 TB: a point lookup on an indexed key reads ~fpp of the files a
   // zone-mapped-but-unclustered scan would read.
 
@@ -2323,6 +2316,22 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     m.props.exists { case (k, v) =>
       k == LakeTable.TypeWideningProp && v.equalsIgnoreCase("true") }
 
+  /** `cur`'s zone stats as they hold under `schema`, a widening of
+   *  `cur.schema`: a FLOAT column widened to DOUBLE loses its float-era
+   *  stats — a float's shortest decimal rendering ('0.1') disagrees with
+   *  its promoted double value (0.10000000149…), so they could WRONGLY
+   *  prune (absent stats never prune). Every other widening is
+   *  decimal-exact and keeps its stats. */
+  private def statsUnder(cur: Manifest, schema: StructType): Seq[FileStat] = {
+    import org.apache.spark.sql.types.{DoubleType, FloatType}
+    val floatWidened = cur.schema.fields.iterator.filter { f =>
+      f.dataType == FloatType &&
+        schema.fields.exists(n => n.name == f.name && n.dataType == DoubleType)
+    }.map(f => physName(cur, f.name)).toSet
+    if (floatWidened.isEmpty) cur.fileStats
+    else cur.fileStats.map(fs => fs.copy(minMax = fs.minMax -- floatWidened))
+  }
+
   /** Append-only write — O(new data), never rewrites existing files.
    *  This is the bronze-sink primitive (reference keeps bronze append-only,
    *  `README.md:89`). On a partitioned table the new dir owns the batch's
@@ -2562,24 +2571,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             widen = wideningOn(cur),
             wideBlocked =
               if (wideningOn(cur)) wideningBlocked(cur) else Set.empty)
-          // append-driven FLOAT→DOUBLE widening invalidates the column's
-          // zone stats exactly like alterColumnType's explicit form: a
-          // float's shortest decimal rendering ('0.1') disagrees with its
-          // promoted double value, so float-era stats under the widened
-          // type could WRONGLY prune. Drop them (absent stats never prune);
-          // all other widenings are decimal-exact and keep theirs.
-          val floatWidened = cur.schema.fields.iterator.filter { f =>
-            f.dataType == org.apache.spark.sql.types.FloatType &&
-              mergedSchema.fields.exists(n => n.name == f.name &&
-                n.dataType == org.apache.spark.sql.types.DoubleType)
-          }.map(f => physName(cur, f.name)).toSet
-          val keptStats =
-            if (floatWidened.isEmpty) cur.fileStats
-            else cur.fileStats.map(fs => fs.copy(minMax = fs.minMax -- floatWidened))
           (Manifest(mergedSchema, pcol,
             cur.entries :+ DirEntry(dir, owned), "append",
             cur.cdfEnabled, statsCols = cur.statsCols,
-            fileStats = keptStats ++ fstats,
+            fileStats = statsUnder(cur, mergedSchema) ++ fstats,
             constraints = cur.constraints, generated = cur.generated,
             deleteVectors = cur.deleteVectors, bloomCols = cur.bloomCols,
             txns = withTxn(cur.txns), droppedCols = cur.droppedCols,
@@ -2679,16 +2674,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   }
 
   private def replaceAll(df: DataFrame, partitionBy: Option[String],
-      op: String, expected: Option[Long], cdfDir: () => Option[String] = () => None,
+      op: String, expected: Option[Long], cdfDir: Option[String] = None,
       preclustered: Boolean = false,
       txn: Option[(String, Long)] = None,
       // non-empty = this rewrite CLUSTERED the table on these columns:
       // flag the output entry and record the key for incremental OPTIMIZE
-      clusteredAs: Seq[String] = Nil,
-      // the commit's change images, written in the SAME Spark job as the
-      // data (one-pass union write; unpartitioned targets only) — takes
-      // precedence over `cdfDir`
-      changes: Option[DataFrame] = None): Unit = synchronized {
+      clusteredAs: Seq[String] = Nil): Unit = synchronized {
     Files.createDirectories(Paths.get(root))
     val cur = if (exists) Some(manifest) else None
     val pcol = partitionBy.orElse(cur.flatMap(_.pcol))
@@ -2706,25 +2697,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       else df
     val keptMap = cur.map(_.colMap.filter { case (l, _) =>
       df1.columns.contains(l) }).getOrElse(Nil)
-    require(changes.isEmpty || pcol.isEmpty,
-      "one-pass change-image writes are for unpartitioned targets")
-    val (dir, owned, fstats, unionCh) = changes match {
-      case Some(ch) =>
-        val (d, fs, c) = writeDataAndChanges(df1, ch, scols,
-          bloomCols = cur.map(_.bloomCols).getOrElse(Nil), colMap = keptMap)
-        (d, None, fs, Some(c))
-      case None =>
-        val (d, o, fs) = writeData(df1, pcol, scols, preclustered,
-          bloomCols = cur.map(_.bloomCols).getOrElse(Nil), colMap = keptMap)
-        (d, o, fs, None)
-    }
-    // resolve AFTER writeData: a caller's in-flight change-image write
-    // (launched via inParallel) overlaps the data write above
-    val cdfDirV = unionCh.orElse(cdfDir())
+    val (dir, owned, fstats) = writeData(df1, pcol, scols, preclustered,
+      bloomCols = cur.map(_.bloomCols).getOrElse(Nil), colMap = keptMap)
     val validatedConstraints = cur.map(_.constraints).getOrElse(Nil).toSet
     val m = Manifest(df1.schema, pcol,
       Seq(DirEntry(dir, owned, clustered = clusteredAs.nonEmpty)), op,
-      cur.exists(_.cdfEnabled), cdfDirV, statsCols = scols, fileStats = fstats,
+      cur.exists(_.cdfEnabled), cdfDir, statsCols = scols, fileStats = fstats,
       txns = withTxnLedger(cur.map(_.txns).getOrElse(Nil), txn),
       constraints = cur.map(_.constraints).getOrElse(Nil),
       generated = cur.map(_.generated).getOrElse(Nil),
@@ -2776,16 +2754,30 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * first — see Pipeline.autoCdcFlow); enforced cheaply only when
    * `checkUniqueKeys` is set.
    *
-   * On a PARTITIONED table the merge is partition-scoped: only the
-   * partitions present in the source are read (pruned scan), merged, and
-   * rewritten — O(touched partitions), not O(table). Rows may not change
-   * their partition value through a matched update (enforced by the join
-   * semantics only when the partition column is part of `keys`; callers
-   * partitioning by a stable column satisfy this by construction).
+   * Copy-on-write, as Delta merges (Armbrust et al., VLDB 2020): the merge
+   * picks the files it may touch, full-outer joins only those with the
+   * source (one shuffle on the keys; AQE broadcasts a small source side
+   * where legal) and commits the projected rows through
+   * [[rewriteTouched]] — every other file stays where it is. The touched
+   * set is every file, except:
+   *   - on a PARTITIONED table, the files of the partitions present in the
+   *     source — O(touched partitions), not O(table). Rows may not change
+   *     their partition value through a matched update (enforced by the
+   *     join semantics only when the partition column is part of `keys`;
+   *     callers partitioning by a stable column satisfy this by
+   *     construction). `WHEN NOT MATCHED BY SOURCE`, or a source without
+   *     the partition column, touches every file;
+   *   - on an unpartitioned table of `spark.graft.merge.pruneMinBytes` or
+   *     more, the files whose zone maps admit a source key
+   *     ([[mergePrunePlan]]).
    *
-   * Plan shape: one shuffle on the merge keys (full-outer hash/sort-merge
-   * join; AQE broadcasts a small source side as a broadcast outer join where
-   * legal) followed by a projection — no driver-side iteration.
+   * Types: a source column whose type differs from the table's lands cast
+   * to the table's type when Spark's lossless up-cast allows it
+   * (`Cast.canUpCast`: INT into BIGINT, a number into STRING); under
+   * `mergeSchema` the table may instead widen, by append's rule (a
+   * [[LakeTable.widensTo]] pair under the type-widening property). Any
+   * other difference is refused with an error naming the column: the
+   * table's type never changes as a side effect of the projection.
    */
   def merge(
       src0: DataFrame,
@@ -2819,12 +2811,13 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     // WITH SCHEMA EVOLUTION (Delta's MERGE form): the source may carry
     // ADDITIVE new columns — the table schema widens (nullable), matched
     // target pre-images serve NULL for them. Source must still supply every
-    // existing target column; type changes are rejected (same contract as
-    // append's mergeSchema).
+    // existing target column; a type change follows append's rule.
     val schema1 =
       if (mergeSchema) {
         rejectTombstoned(m, src.schema)
-        reconcileSchema(m.schema, src.schema, mergeSchema = true)
+        val widenOn = wideningOn(m)
+        reconcileSchema(m.schema, src.schema, mergeSchema = true, widen = widenOn,
+          wideBlocked = if (widenOn) wideningBlocked(m) else Set.empty)
       } else m.schema
     val cols = schema1.fieldNames.toSeq
     // full-ROW clauses (UPDATE SET *, INSERT *) reference every target
@@ -2887,16 +2880,27 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
 
     val guard = matchedGuard.map(expr).getOrElse(lit(true))
-    // A source-side column reference that tolerates a KEYS-ONLY source: when
-    // no full-row clause is active (e.g. WHEN MATCHED THEN DELETE only — a
-    // Delta-legal shape), the projection's insert/update branches are dead
-    // (`lit(false)` predicates) but would still fail ANALYSIS on `s.<col>`
-    // references to columns the source never carried. Substitute a typed
-    // NULL for absent columns — live full-row branches can never see it
-    // because the presence `require` above already demanded every column.
-    def srcCol(c: String): Column =
-      if (src.columns.contains(c)) col(s"s.$c")
-      else lit(null).cast(schema1(c).dataType)
+    // A source value as it lands: in the table's type. Without the cast the
+    // CASE WHENs below would coerce both sides to a common type and retype
+    // the column (an INT 7 merged into STRING '07' made it BIGINT). Without
+    // a full-row clause no source value lands (e.g. WHEN MATCHED THEN
+    // DELETE only, a Delta-legal shape whose source may carry only the
+    // keys): the branches reading it are dead (`lit(false)` predicates) but
+    // must still analyze, so they read a typed NULL.
+    def srcCol(c: String): Column = src.schema.find(_.name == c) match {
+      case Some(f) if fullFromUpdate || fullFromInsert =>
+        val to = schema1(c).dataType
+        if (sameType(f.dataType, to)) col(s"s.$c")
+        else {
+          require(Cast.canUpCast(f.dataType, to),
+            s"merge source column $c is ${f.dataType.simpleString}, which does " +
+              s"not cast losslessly to the table's ${to.simpleString} — cast it " +
+              "in the source (a wider type needs mergeSchema and the " +
+              s"${LakeTable.TypeWideningProp} property)")
+          col(s"s.$c").cast(to)
+        }
+      case _ => lit(null).cast(schema1(c).dataType)
+    }
     def joinedOf(target: DataFrame): DataFrame = {
       val t = target.withColumn(T_MARK, lit(true)).alias("t")
       val s = src.withColumn(S_MARK, lit(true)).alias("s")
@@ -2924,6 +2928,14 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       if (matchedDelete) lit(false)
       else isMatched && !matchedDelPred && guard
 
+    // the inserted image: the source row (INSERT *), or — column-level
+    // INSERT (cols) VALUES (...) — the assigned expressions with NULL for
+    // omitted columns (Delta's rule)
+    def insertedCol(c: String): Column = insertSet match {
+      case None => srcCol(c)
+      case Some(as) => as.get(c).map(expr).getOrElse(
+        lit(null).cast(schema1(c).dataType))
+    }
     def mergedFrom(joined0: DataFrame): DataFrame = {
       // row classes shared by every clause combination; DELETE clauses and
       // a missing INSERT * clause DROP whole classes before the projection
@@ -2944,19 +2956,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         }
       val joined = joined0.filter(!coalesce(
         dropMatched || dropTargetOnly || dropInsert, lit(false)))
-      // the inserted image: the source row (INSERT *), or — column-level
-      // INSERT (cols) VALUES (...) — the assigned expressions with NULL for
-      // omitted columns (Delta's rule)
-      def insertedCol(c: String): Column = insertSet match {
-        case None => srcCol(c)
-        case Some(as) => as.get(c).map(expr).getOrElse(
-          lit(null).cast(schema1(c).dataType))
-      }
-      val isIns = col(S_MARK).isNotNull && col(T_MARK).isNull
-      matchedSet match {
+      conformTo(matchedSet match {
         case None => // UPDATE SET *: update-class rows take the source row
           joined.select(cols.map(c =>
-            when(isIns, insertedCol(c))
+            when(isInsertRow, insertedCol(c))
               .otherwise(when(matchedUpdPred, srcCol(c)).otherwise(col(s"t.$c")))
               .as(c)): _*)
         case Some(assigns) =>
@@ -2965,10 +2968,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           joined.select(cols.map { c =>
             val updated = assigns.get(c).map(expr).getOrElse(col(s"t.$c"))
             when(matchedUpdPred, updated)
-              .otherwise(when(isIns, insertedCol(c)).otherwise(col(s"t.$c")))
+              .otherwise(when(isInsertRow, insertedCol(c)).otherwise(col(s"t.$c")))
               .as(c)
           }: _*)
-      }
+      }, schema1)
     }
     // O8 change rows out of the SAME join: a source-only row is an insert;
     // a matched-and-guard-passing row emits its target pre-image and source
@@ -2983,34 +2986,24 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           coalesce(expr(c), lit(false))
         case None => lit(false)
       }
-      def row(side: String, kind: String) = struct(
-        (cols.map(c => (if (side == "s") srcCol(c) else col(s"$side.$c")).as(c)) :+
-          lit(kind).as(ChangeTypeCol)): _*)
+      def row(kind: String)(value: String => Column) = struct(
+        (cols.map(c => value(c).as(c)) :+ lit(kind).as(ChangeTypeCol)): _*)
+      def target(kind: String) = row(kind)(c => col(s"t.$c"))
       // with column-level assignments the POSTIMAGE is the assigned target
       // row, not the raw source row
-      def postRow = matchedSet match {
-        case None => row("s", "update_postimage")
-        case Some(assigns) => struct(
-          (cols.map(c => assigns.get(c).map(expr).getOrElse(col(s"t.$c")).as(c)) :+
-            lit("update_postimage").as(ChangeTypeCol)): _*)
+      val postRow = matchedSet match {
+        case None => row("update_postimage")(srcCol)
+        case Some(assigns) => row("update_postimage")(c =>
+          assigns.get(c).map(expr).getOrElse(col(s"t.$c")))
       }
-      def insRow = insertSet match {
-        case None => row("s", "insert")
-        case Some(as) => struct(
-          (cols.map(c => as.get(c).map(expr)
-            .getOrElse(lit(null).cast(schema1(c).dataType)).as(c)) :+
-            lit("insert").as(ChangeTypeCol)): _*)
-      }
-      joined.select(explode(array(
-          when(isInsert, insRow),
-          when(isUpdate, row("t", "update_preimage")),
+      conformTo(joined.select(explode(array(
+          when(isInsert, row("insert")(insertedCol)),
+          when(isUpdate, target("update_preimage")),
           when(isUpdate, postRow),
-          when(isMatchDel || isSyncDel, row("t", "delete")))).as("__ch"))
+          when(isMatchDel || isSyncDel, target("delete")))).as("__ch"))
         .filter(col("__ch").isNotNull)
-        .select((cols :+ ChangeTypeCol).map(c => col(s"__ch.$c").as(c)): _*)
+        .select((cols :+ ChangeTypeCol).map(c => col(s"__ch.$c").as(c)): _*), schema1)
     }
-    def changeImages(changes: DataFrame): Option[String] =
-      if (m.cdfEnabled) Some(writeChanges(m, changes)) else None
 
     // fast path: merging into a table with no data dirs inserts everything —
     // skip the full-outer join against an empty side (bootstrap merges are
@@ -3024,230 +3017,209 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         case Some(c) => sAliased.filter(coalesce(expr(c), lit(false)))
         case None => sAliased
       }
-      val flat = insertSet match {
-        case None => guarded.select(cols.map(col): _*)
-        case Some(as) => guarded.select(cols.map(c =>
-          as.get(c).map(expr).getOrElse(lit(null).cast(schema1(c).dataType))
-            .as(c)): _*)
-      }
+      val flat = conformTo(guarded.select(cols.map(c => insertedCol(c).as(c)): _*),
+        schema1)
       if (insertSet.nonEmpty) enforceConstraints(flat, m.constraints)
       // all-insert commit: the data dir IS the change set — record the
       // from-data marker instead of writing every row a second time
       val chDir = if (m.cdfEnabled) Some(LakeTable.CdfFromData) else None
-      replaceAll(flat, m.pcol, "merge", Some(v0), () => chDir, txn = txn)
+      replaceAll(flat, m.pcol, "merge", Some(v0), chDir, txn = txn)
       maybeAutoCompact()
       return
     }
 
+    // the touched set. Partition-scoped: the source's partition values
+    // (small, driver-side). Zone-map pruned (Delta's merge file pruning) is
+    // SOUND: a skipped file's key range provably misses every source key, so
+    // it holds no matched row and no row that would flip an insert
+    // classification. It stays off where the sync clause must see every
+    // target row, under schema evolution, and with live deletion vectors
+    // (their coordinates are path-keyed: a file may not be re-linked).
+    val partitions = m.pcol.filter(p =>
+        deleteUnmatchedTarget.isEmpty && src.columns.contains(p)).map { p =>
+      val vs = src.select(col(p).cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+      require(!vs.contains(null), s"null partition value in column $p")
+      vs
+    }
+    val touched = partitions match {
+      case Some(vs) => snapshotFiles(m, Some(vs))
+      case None if m.pcol.isEmpty && deleteUnmatchedTarget.isEmpty &&
+          m.deleteVectors.isEmpty && !mergeSchema =>
+        mergePrunePlan(m, src, keys, nullSafeKeys).getOrElse(snapshotFiles(m))
+      case None => snapshotFiles(m)
+    }
     // under evolution the target snapshot serves NULL for the new columns
-    def widen(target: DataFrame): DataFrame =
-      schema1.fields.foldLeft(target)((d, f) =>
-        if (d.columns.contains(f.name)) d
+    val target = schema1.fields.foldLeft(snapshot(m, touched, withRowIds = false))(
+      (d, f) => if (d.columns.contains(f.name)) d
         else d.withColumn(f.name, lit(null).cast(f.dataType)))
-
-    // FILE-PRUNED unpartitioned merge (Delta's merge file pruning): when
-    // the table is large enough that a full rewrite dwarfs one small
-    // bounds aggregation, join only the files whose zone maps admit a
-    // source key — every other file is re-referenced by hard link, making
-    // a keyed merge O(files that may contain matches + new data) instead
-    // of O(table). Pruning is SOUND: a skipped file's key range provably
-    // misses every source key, so it can hold no matched row and no row
-    // that would flip an insert classification. Applies only when the
-    // sync clause (which must see every target row), deletion vectors
-    // (whose coordinates are path-keyed) and schema evolution are absent.
-    if (m.pcol.isEmpty && deleteUnmatchedTarget.isEmpty &&
-        m.deleteVectors.isEmpty && !mergeSchema) {
-      mergePrunePlan(m, src, keys, nullSafeKeys).foreach { touched =>
-        val joined = joinedOf(scanFiles(m, touched))
-        val merged = mergedFrom(joined)
-        if (matchedSet.nonEmpty || insertSet.nonEmpty)
-          enforceConstraints(merged, m.constraints)
-        val (dir, fstats, chDir) =
-          if (m.cdfEnabled) {
-            val (d, fs, c) = writeDataAndChanges(merged, changesFrom(joined),
-              m.statsCols, m.bloomCols, m.colMap)
-            (d, fs, Some(c))
-          } else {
-            val (d, _, fs) = writeData(merged, None, m.statsCols,
-              bloomCols = m.bloomCols, colMap = m.colMap)
-            (d, fs, None)
-          }
-        val newEntries = scala.collection.mutable.ArrayBuffer.empty[DirEntry]
-        val newStats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
-        m.entries.foreach { e =>
-          val touchedInDir = touched.filter(_.dir == e.dir)
-          if (touchedInDir.isEmpty) {
-            // no file in this dir can match: re-reference as-is (stats,
-            // bloom sidecar and clustered flag all stay valid)
-            newEntries += e
-            newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
-          } else {
-            // the rewritten files drop out; the rest are re-linked
-            val newDir = relinkExcept(m, e, touchedInDir.map(_.rel).toSet, newStats)
-            newEntries += DirEntry(newDir, e.owned, clustered = e.clustered)
-          }
-        }
-        if (!tryCommit(Manifest(schema1, m.pcol,
-            newEntries.toSeq :+ DirEntry(dir, None), "merge",
-            m.cdfEnabled, chDir, statsCols = m.statsCols,
-            fileStats = newStats.toSeq ++ fstats,
-            txns = withTxnLedger(m.txns, txn), droppedCols = m.droppedCols,
-            constraints = m.constraints, generated = m.generated,
-            bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-            clusterKey = m.clusterKey), v0 + 1))
-          throw new ConcurrentWriteException(
-            s"merge computed against version $v0 of $root, but a concurrent " +
-              s"writer committed v${v0 + 1} first — recompute and retry")
+    val joined = joinedOf(target)
+    // a partitioned change-feed table writes data and images as two jobs
+    // over the join: pin it, not twice the work
+    val pin = m.cdfEnabled && m.pcol.nonEmpty
+    if (pin) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      val merged = mergedFrom(joined)
+      // SET * writes source rows (validated above); column-level clauses
+      // synthesize new rows — gate them before anything lands
+      if (matchedSet.nonEmpty || insertSet.nonEmpty)
+        enforceConstraints(merged, m.constraints)
+      // Delta fires auto-compact after MERGE too: merges accumulate one dir
+      // per run, the small-file shape the property exists to bound
+      // (best-effort, post-commit)
+      if (rewriteTouched(m, v0, schema1, touched, merged,
+          if (m.cdfEnabled) Some(changesFrom(joined)) else None, "merge", txn,
+          partitions))
         maybeAutoCompact()
-        return
+    } finally if (pin) { joined.unpersist(); () }
+  }
+
+  /**
+   * The copy-on-write commit shared by [[merge]], [[delete]] and
+   * [[update]]: `rows` (in `schema1`) replace the `touched` files of
+   * snapshot `m`, read at version `v0`, in ONE commit.
+   *
+   *  1. `rows` and their change images (`changes`, on change-feed tables)
+   *     are written in one pass: one union job on an unpartitioned table
+   *     ([[writeDataAndChanges]]); on a partitioned one the images ride
+   *     their own thread beside the data write.
+   *  2. The touched files leave the snapshot ([[withoutFiles]]). A rewrite
+   *     that leaves no old entry (every file touched) also clears the
+   *     deletion vectors — it read through them — and the dropped-column
+   *     tombstones, whose bytes no live file carries any more; a
+   *     partition-scoped one carries both (vectors on replaced dirs go
+   *     stale and harmless).
+   *  3. One CAS against `v0`. A lost race throws
+   *     [[ConcurrentWriteException]]: the caller recomputes. When
+   *     `partitions` names the touched set as whole partitions, the commit
+   *     instead REBASES onto the winner (Delta's partition-level conflict
+   *     resolution) if schema and metadata are unchanged and the same dirs
+   *     still own those partitions — a recompute would read the same rows
+   *     and write the same output, so the written dir is re-pointed at the
+   *     new base; and a concurrent replay of the same `txn` that won makes
+   *     this one a no-op.
+   *
+   * Returns whether this rewrite committed.
+   */
+  private def rewriteTouched(m: Manifest, v0: Long, schema1: StructType,
+      touched: Seq[SnapshotFile], rows: DataFrame, changes: Option[DataFrame],
+      op: String, txn: Option[(String, Long)] = None,
+      partitions: Option[Set[String]] = None): Boolean = {
+    val (dir, owned, fstats, chDir) = changes match {
+      case Some(ch) if m.pcol.isEmpty =>
+        val (d, fs, c) = writeDataAndChanges(rows, ch, m.statsCols, m.bloomCols,
+          m.colMap)
+        (d, None, fs, Some(c))
+      case _ =>
+        val chDirF = changes.fold(() => Option.empty[String])(ch =>
+          inParallel(Some(writeChanges(m, ch))))
+        val (d, o, fs) = writeData(rows, m.pcol, m.statsCols,
+          bloomCols = m.bloomCols, colMap = m.colMap)
+        (d, o, fs, chDirF())
+    }
+    def ownTouched(mm: Manifest): Set[(String, String)] =
+      mm.entries.flatMap(e => e.owned.getOrElse(Nil)
+        .filter(v => partitions.exists(_(v))).map(v => (e.dir, v))).toSet
+    def rebasable(mN: Manifest): Boolean =
+      partitions.nonEmpty && schema1 == m.schema && mN.schema == m.schema &&
+        mN.pcol == m.pcol && mN.cdfEnabled == m.cdfEnabled &&
+        mN.statsCols == m.statsCols && mN.bloomCols == m.bloomCols &&
+        mN.colMap == m.colMap && mN.droppedCols == m.droppedCols &&
+        mN.constraints == m.constraints && mN.generated == m.generated &&
+        mN.props == m.props && mN.deleteVectors == m.deleteVectors &&
+        mN.txns == m.txns && ownTouched(mN) == ownTouched(m)
+    @scala.annotation.tailrec
+    def commit(base: Manifest, baseV: Long): Boolean = {
+      val stats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
+      val kept = withoutFiles(base.copy(fileStats = statsUnder(base, schema1)),
+        touched, stats)
+      val whole = kept.isEmpty && partitions.isEmpty
+      if (tryCommit(Manifest(schema1, base.pcol, kept :+ DirEntry(dir, owned), op,
+          base.cdfEnabled, chDir, statsCols = base.statsCols,
+          fileStats = stats.toSeq ++ fstats, txns = withTxnLedger(base.txns, txn),
+          droppedCols = if (whole) Nil else base.droppedCols,
+          constraints = base.constraints, generated = base.generated,
+          deleteVectors = if (whole) Nil else base.deleteVectors,
+          bloomCols = base.bloomCols, colMap = base.colMap, props = base.props,
+          clusterKey = base.clusterKey), baseV + 1)) true
+      else {
+        val vN = currentVersion
+        val mN = readManifest(vN)
+        if (partitions.nonEmpty && txnAppliedIn(mN, txn)) {
+          // the unreferenced data dir is reclaimed at once
+          deleteRecursively(Paths.get(root, dir))
+          Files.deleteIfExists(bloomIndexFile(dir))
+          false
+        } else if (rebasable(mN)) commit(mN, vN)
+        else throw new ConcurrentWriteException(
+          s"$op computed against version $v0 of $root, but a concurrent " +
+            s"writer committed v${baseV + 1} first — recompute and retry")
       }
     }
+    commit(m, v0)
+  }
 
-    // WHEN NOT MATCHED BY SOURCE DELETE must examine target-only rows in
-    // EVERY partition (sync semantics touch the whole table by definition),
-    // so it takes the full-rewrite path even on partitioned targets —
-    // replaceAll keeps the partitioning. A keys-only source (delete-only
-    // merge) that doesn't carry the partition column can't scope the touched
-    // partitions either — same full-rewrite fallback, partitioning kept.
-    m.pcol.filter(p => deleteUnmatchedTarget.isEmpty && src.columns.contains(p)) match {
-      case None if m.cdfEnabled && m.pcol.isEmpty =>
-        // ONE-PASS commit: merged rows and change images are two projections
-        // of the same join — write both in a single job (union + side
-        // partition) instead of persisting the join and running two
-        // sequential jobs over it. The union branches reuse the join's
-        // exchanges, so the (often expensive) merge-source subtree
-        // evaluates once.
-        val joined = joinedOf(widen(snapshot(m)))
-        val merged = mergedFrom(joined)
-        // SET * writes source rows (validated above); column-level
-        // clauses synthesize new rows — gate them before anything lands
-        if (matchedSet.nonEmpty || insertSet.nonEmpty)
-          enforceConstraints(merged, m.constraints)
-        replaceAll(merged, m.pcol, "merge", Some(v0), txn = txn,
-          changes = Some(changesFrom(joined)))
-        maybeAutoCompact()
-      case None =>
-        val joined = joinedOf(widen(snapshot(m)))
-        val pinned = // two consumers under CDF: pin the join, not twice the work
-          if (m.cdfEnabled) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else joined
-        try {
-          val chDir = changeImages(changesFrom(pinned))
-          val merged = mergedFrom(pinned)
-          // SET * writes source rows (validated above); column-level
-          // clauses synthesize new rows — gate them before anything lands
-          if (matchedSet.nonEmpty || insertSet.nonEmpty)
-            enforceConstraints(merged, m.constraints)
-          // pass m.pcol explicitly: a partitioned table taking the
-          // full-rewrite path (NOT MATCHED BY SOURCE sync) must come out the
-          // other side still partitioned — Hive layout, SHOW PARTITIONS and
-          // replaceWhere ownership all key off the manifest's pcol
-          replaceAll(merged, m.pcol, "merge", Some(v0), () => chDir, txn = txn)
-          maybeAutoCompact()
-        } finally if (m.cdfEnabled) { pinned.unpersist(); () }
-      case Some(p) =>
-        // touched partitions = the source's partition values (small, driver-side)
-        val touched = src.select(col(p).cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        require(!touched.contains(null), s"null partition value in column $p")
-        val touchedSet = touched.toSet
-        val joined = joinedOf(widen(snapshot(m, Some(touchedSet))))
-        val pinned =
-          if (m.cdfEnabled) joined.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else joined
-        try {
-          // same overlap as the unpartitioned arm: images ride their own
-          // thread while the merged partitions are written
-          val chDirF =
-            if (m.cdfEnabled) inParallel { changeImages(changesFrom(pinned)) }
-            else () => Option.empty[String]
-          val merged = mergedFrom(pinned)
-          if (matchedSet.nonEmpty || insertSet.nonEmpty)
-            enforceConstraints(merged, m.constraints)
-          val (dir, owned, fstats) = writeData(merged, Some(p),
-            m.statsCols, bloomCols = m.bloomCols, colMap = m.colMap)
-          val chDir = chDirF()
-          // PARTITION-DISJOINT CONCURRENT MERGES both commit without
-          // recompute (Delta's partition-level conflict resolution): on a
-          // lost CAS, REBASE instead of throwing when the interleaved
-          // commits provably did not touch this merge's input — identical
-          // schema/metadata and an identical (dir → touched-partition-value)
-          // ownership map mean a recompute against the new snapshot would
-          // read the same rows and write the same output, so the
-          // already-written data dir is simply re-pointed at the new base
-          // (kept entries and their stats re-derived from it). Anything
-          // else — overlapping partitions, schema evolution in flight,
-          // property/constraint/DV/txn drift — stays a
-          // [[ConcurrentWriteException]]: the loser must recompute.
-          def ownTouched(mm: Manifest): Set[(String, String)] =
-            mm.entries.flatMap(e => e.owned.getOrElse(Seq.empty)
-              .filter(touchedSet).map(v => (e.dir, v))).toSet
-          def rebasable(mN: Manifest): Boolean =
-            schema1 == m.schema && mN.schema == m.schema &&
-              mN.pcol == m.pcol && mN.cdfEnabled == m.cdfEnabled &&
-              mN.statsCols == m.statsCols && mN.bloomCols == m.bloomCols &&
-              mN.colMap == m.colMap && mN.droppedCols == m.droppedCols &&
-              mN.constraints == m.constraints && mN.generated == m.generated &&
-              mN.props == m.props && mN.deleteVectors == m.deleteVectors &&
-              mN.txns == m.txns && ownTouched(mN) == ownTouched(m)
-          var base = m
-          var baseV = v0
-          var committed = false
-          while (!committed) {
-            val kept = base.entries
-              .map(e => e.copy(owned = e.owned.map(_.filterNot(touchedSet))))
-              .filter(_.owned.exists(_.nonEmpty))
-            val keptDirs = kept.map(_.dir).toSet
-            val keptStats = base.fileStats.filter(fs =>
-              keptDirs.exists(d => fs.path.startsWith(d + "/")))
-            // carry live deletion vectors: kept dirs' coordinates stay
-            // valid; entries for replaced dirs are stale-but-harmless
-            // (anti-join can't match a file no longer scanned)
-            committed = tryCommit(Manifest(schema1, base.pcol,
-              kept :+ DirEntry(dir, owned), "merge",
-              base.cdfEnabled, chDir, statsCols = base.statsCols,
-              txns = withTxnLedger(base.txns, txn), droppedCols = base.droppedCols,
-              fileStats = keptStats ++ fstats, constraints = base.constraints,
-              generated = base.generated, deleteVectors = base.deleteVectors,
-              clusterKey = base.clusterKey,
-              bloomCols = base.bloomCols, colMap = base.colMap,
-              props = base.props), baseV + 1)
-            if (!committed) {
-              val vN = currentVersion
-              val mN = readManifest(vN)
-              // a concurrent replay of the SAME transaction won the race:
-              // reclaim the unreferenced data dir and no-op
-              if (txnAppliedIn(mN, txn)) {
-                deleteRecursively(Paths.get(root, dir))
-                Files.deleteIfExists(bloomIndexFile(dir))
-                return
-              }
-              if (!rebasable(mN))
-                throw new ConcurrentWriteException(
-                  s"merge computed against version $v0 of $root, but a " +
-                    s"concurrent writer committed conflicting changes by " +
-                    s"v$vN — recompute and retry")
-              base = mN
-              baseV = vN
-            }
-          }
-          // Delta fires auto-compact after MERGE too: partition-scoped
-          // merges accumulate one dir per run, the small-file shape the
-          // property exists to bound (best-effort, post-commit)
-          maybeAutoCompact()
-        } finally if (m.cdfEnabled) { pinned.unpersist(); () }
+  /** `m`'s entries with the `touched` files taken out, each by the cheapest
+   *  means the manifest has: an entry without a touched file stays as it
+   *  is; one without an untouched visible file is dropped; a partition
+   *  value all of whose visible files in an entry are touched leaves the
+   *  entry's `owned` list; any other touched entry has its untouched files
+   *  re-linked into a fresh dir. The kept files' zone stats go to `stats`. */
+  private def withoutFiles(m: Manifest, touched: Seq[SnapshotFile],
+      stats: scala.collection.mutable.ArrayBuffer[FileStat]): Seq[DirEntry] = {
+    val hit = touched.map(_.rel).toSet
+    val visible = snapshotFiles(m).groupBy(_.dir)
+    val typed = m.pcol.map(p => typedValue(m.schema(p).dataType))
+    m.entries.flatMap { e =>
+      val (gone, left) = visible.getOrElse(e.dir, Nil).partition(f => hit(f.rel))
+      // partitions (the one group of an unpartitioned entry among them)
+      // left without a file in this entry
+      val drained = gone.map(_.partition).toSet -- left.map(_.partition)
+      def carried(e1: DirEntry) = {
+        stats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
+        Some(e1)
+      }
+      if (left.isEmpty) None
+      else if (gone.isEmpty) carried(e)
+      else {
+        val owned = e.owned.map(_.filterNot(v =>
+          typed.exists(t => drained(InternalRow(t(v))))))
+        if (gone.forall(f => drained(f.partition))) carried(e.copy(owned = owned))
+        else {
+          // vectors address rows by file path: a re-linked file would slip
+          // out from under its vector and resurrect the deleted rows
+          require(m.deleteVectors.isEmpty,
+            s"cannot re-link files of $root under live deletion vectors")
+          Some(e.copy(dir = relinkExcept(m, e, hit, stats), owned = owned))
+        }
+      }
     }
   }
+
+  /** `df` with each column `schema` also names cast to `schema`'s type where
+   *  the two differ (nullability aside): a commit writes the table's
+   *  types, never a projection's coerced ones. */
+  private def conformTo(df: DataFrame, schema: StructType): DataFrame =
+    df.select(df.schema.fields.toIndexedSeq.map { f =>
+      schema.find(_.name == f.name).filterNot(t => sameType(f.dataType, t.dataType))
+        .fold(col(f.name))(t => col(f.name).cast(t.dataType).as(f.name))
+    }: _*)
+
+  private def sameType(a: DataType, b: DataType): Boolean =
+    DataType.equalsStructurally(a, b, ignoreNullability = true)
 
   /**
    * Copy-on-write DELETE (Delta `DELETE FROM ... WHERE`): remove the rows
    * matching the conjunction of `preds`, rewriting ONLY the files whose zone
-   * map admits a match — every other file is re-referenced by hard link, so
-   * I/O is O(files that may contain matches), not O(table). At 100 TB a
-   * targeted delete (one doc id, one day) touches a handful of files when
-   * the table records stats on the predicate column (ideally Z-ordered).
-   * Returns the number of rows deleted. With change feed enabled the
-   * deleted rows are materialized as `_change_type = 'delete'`.
+   * map admits a match, in one count job and one write job through the
+   * copy-on-write step merge uses ([[rewriteTouched]]) — every other file
+   * stays (re-linked when it shares a dir with a touched one), so I/O is
+   * O(files that may contain matches), not O(table). At 100 TB a targeted
+   * delete (one doc id, one day) touches a handful of files when the table
+   * records stats on the predicate column (ideally Z-ordered). A predicate
+   * no file admits commits nothing. Returns the number of rows deleted.
+   * With change feed enabled the deleted rows are materialized as
+   * `_change_type = 'delete'`.
    */
   def delete(preds: Seq[ZonePred]): Long = mutateWhere(preds, None)
 
@@ -3561,76 +3533,35 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(!m.pcol.contains(c), s"cannot update partition column $c")
     })
     val cols = m.schema.fieldNames.toSeq
-    val cond = zonePredCondition(m, preds)
-
-    val candidates = fileIndex(m, snapshotFiles(m)).filesMatching(zoneFilters(m, preds))
-    var matched = 0L
-    val newEntries = scala.collection.mutable.ArrayBuffer.empty[DirEntry]
-    val newStats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
-    val changeParts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    m.entries.foreach { e =>
-      val touched = candidates.filter(_.dir == e.dir)
-      if (touched.isEmpty) {
-        // no file in this dir can hold a match: re-reference as-is
-        newEntries += e
-        newStats ++= m.fileStats.filter(_.path.startsWith(e.dir + "/"))
-      } else {
-        // 1. re-link every untouched file
-        val newDir = relinkExcept(m, e, touched.map(_.rel).toSet, newStats)
-        // 2. rewrite the touched files with the mutation applied
-        val touchedDf = scanFiles(m, touched)
-        matched += touchedDf.filter(cond).count()
-        val rewritten = set match {
-          case None => touchedDf.filter(!coalesce(cond, lit(false)))
-          case Some(assigns) => touchedDf.select(cols.map { c =>
-            assigns.get(c) match {
-              case Some(expr0) => when(coalesce(cond, lit(false)), expr0)
-                .otherwise(col(c)).as(c)
-              case None => col(c)
-            }
-          }: _*)
-        }
-        // UPDATE can write new values: enforce CHECK constraints on the
-        // rewritten rows before any file lands (DELETE can't violate).
-        // A failure before commit leaves only uncommitted dirs (vacuumable).
-        if (set.nonEmpty) enforceConstraints(rewritten, m.constraints)
-        if (m.cdfEnabled) {
-          val pinned = touchedDf.filter(cond)
-          changeParts += (set match {
-            case None => pinned.withColumn(ChangeTypeCol, lit("delete"))
-            case Some(assigns) =>
-              pinned.withColumn(ChangeTypeCol, lit("update_preimage"))
-                .unionByName(pinned.select(cols.map { c =>
-                  assigns.get(c).map(x => x.as(c)).getOrElse(col(c))
-                }: _*).withColumn(ChangeTypeCol, lit("update_postimage")))
-          })
-        }
-        val rwTmp = s"data/.rw-${UUID.randomUUID()}"
-        // preserve partition subdirs for partitioned tables; files are
-        // written under PHYSICAL column names (column-mapping boundary)
-        val rewrittenP = toPhysicalNames(m, rewritten)
-        withMicrosTimestamps { m.pcol.map(physName(m, _)) match {
-          case Some(p) => rewrittenP.repartition(col(p))
-            .write.partitionBy(p).parquet(s"$root/$rwTmp")
-          case None => rewrittenP.write.parquet(s"$root/$rwTmp")
-        } }
-        linkRewritten(m, rwTmp, newDir, newStats)
-        newEntries += DirEntry(newDir, e.owned)
-      }
+    val hit = coalesce(zonePredCondition(m, preds), lit(false))
+    // the touched set: the files whose partition values and zone maps admit
+    // a match (none: nothing to rewrite, nothing to commit)
+    val touched = fileIndex(m, snapshotFiles(m)).filesMatching(zoneFilters(m, preds))
+    if (touched.isEmpty) return 0L
+    val rows = scanFiles(m, touched)
+    val matched = rows.filter(hit).count()
+    def assigned(df: DataFrame, assigns: Map[String, Column], when0: Column) =
+      df.select(cols.map(c => assigns.get(c)
+        .fold(col(c))(e => when(when0, e).otherwise(col(c)).as(c))): _*)
+    val rewritten = set match {
+      case None => rows.filter(!hit)
+      case Some(assigns) => assigned(rows, assigns, hit)
     }
-    val chDir =
-      if (m.cdfEnabled && changeParts.nonEmpty)
-        Some(writeChanges(m, changeParts.reduce(_ unionByName _)))
-      else None
-    if (!tryCommit(Manifest(m.schema, m.pcol, newEntries.toSeq, opName,
-        m.cdfEnabled, chDir, m.statsCols, newStats.toSeq, txns = m.txns,
-        droppedCols = m.droppedCols,
-        constraints = m.constraints, generated = m.generated,
-        bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-        clusterKey = m.clusterKey), v0 + 1))
-      throw new ConcurrentWriteException(
-        s"$opName computed against version $v0 of $root, but a concurrent " +
-          s"writer committed v${v0 + 1} first — recompute and retry")
+    // UPDATE can write new values: enforce CHECK constraints on the
+    // rewritten rows before any file lands (DELETE can't violate).
+    // A failure before commit leaves only uncommitted dirs (vacuumable).
+    if (set.nonEmpty) enforceConstraints(rewritten, m.constraints)
+    val changes = Option.when(m.cdfEnabled) {
+      val pre = rows.filter(hit)
+      conformTo(set match {
+        case None => pre.withColumn(ChangeTypeCol, lit("delete"))
+        case Some(assigns) => pre.withColumn(ChangeTypeCol, lit("update_preimage"))
+          .unionByName(assigned(pre, assigns, lit(true))
+            .withColumn(ChangeTypeCol, lit("update_postimage")))
+      }, m.schema)
+    }
+    rewriteTouched(m, v0, m.schema, touched, conformTo(rewritten, m.schema),
+      changes, opName)
     matched
   }
 

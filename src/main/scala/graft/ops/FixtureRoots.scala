@@ -7,7 +7,7 @@ import java.nio.file.{Files, Path}
   * measuring the operator under test).
   *
   * Every root a query creates is registered here, and the harness mains
-  * ([[graft.Verify]], [[graft.Bench]], [[graft.Profile]]) call [[sweep]]
+  * ([[graft.Verify]], [[graft.Bench]]) call [[sweep]]
   * after each query's result is dumped/timed. Repeated verify/bench/test
   * runs therefore leave NO /tmp residue — the r15 profile root-caused a
   * uniform ~1.22x bench inflation to ~5,000 accumulated fixture dirs from

@@ -1,10 +1,11 @@
 package graft.lake
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
 
 import scala.util.{Failure, Success, Try}
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -161,5 +162,113 @@ class ConcurrencySpec extends SparkSpec {
     // the old name is GONE for a late writer: loud, never silent
     val e = intercept[IllegalArgumentException](t.renameColumn("v", "x"))
     assert(e.getMessage.contains("no column v"), e.getMessage)
+  }
+
+  private def liveFiles(df: DataFrame): Set[String] =
+    df.select(input_file_name()).distinct().as[String].collect().toSet
+
+  /** Three single-file appends of 50 ids each (1.., 1001.., 2001..) with
+    * zone maps on `id`. */
+  private def threeFiles(root: String): LakeTable = {
+    val t = LakeTable(spark, root)
+    t.create(Seq((0L, "", 0L)).toDF("id", "tag", "n").schema,
+      statsColumns = Seq("id"))
+    Seq(0, 1, 2).foreach(b => t.append((1 to 50)
+      .map(i => (b * 1000L + i, s"b$b", 0L)).toDF("id", "tag", "n").coalesce(1)))
+    t
+  }
+
+  /** Run `loser` here while `winner` commits from another thread exactly
+    * when the loser's first row passes [[CasGate]] — inside a Spark task,
+    * after the loser read its snapshot and before it commits. */
+  private def loseRace[A](winner: => Unit)(loser: => A): Try[A] = {
+    val gate = CasGate.arm()
+    val pool = Executors.newSingleThreadExecutor()
+    val won = pool.submit(new Runnable {
+      def run(): Unit = {
+        assert(gate.entered.await(120, TimeUnit.SECONDS), "the loser never reached the gate")
+        try winner finally gate.resume.countDown()
+      }
+    })
+    try Try(loser) finally {
+      gate.resume.countDown()
+      pool.shutdown()
+      won.get(120, TimeUnit.SECONDS)
+    }
+  }
+
+  /** The shared rewrite step's lost-CAS contract: the loser throws, the
+    * snapshot is exactly the winner's (no file the loser wrote or
+    * re-linked is in it), and a retry converges. */
+  private def assertLostThenConverges[A](root: String, winnerRows: DataFrame)(
+      loser: => A)(retry: LakeTable => Unit): LakeTable = {
+    val t = LakeTable(spark, root)
+    val before = liveFiles(t.read)
+    val lost = loseRace(LakeTable(spark, root).append(winnerRows))(loser)
+    assert(lost.failed.toOption.exists(_.isInstanceOf[ConcurrentWriteException]),
+      lost.toString)
+    val winnerFiles = liveFiles(t.read.filter(col("tag") === "winner"))
+    assert(winnerFiles.size == 1)
+    assert(liveFiles(t.read) == before ++ winnerFiles)
+    assert(t.read.count() == 151)
+    assert(t.read.filter(col("tag") === "upd" || col("n") =!= 0).count() == 0)
+    retry(t)
+    t
+  }
+
+  test("a PRUNED unpartitioned merge that loses its CAS throws, leaves the " +
+      "winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_pruned")}/t"
+    val key = "spark.graft.merge.pruneMinBytes"
+    val before = liveFiles(threeFiles(root).read)
+    val src = Seq((1010L, "upd", 0L), (1020L, "upd", 0L)).toDF("id", "tag", "n")
+      .withColumn("id", CasGate.pass(col("id")))
+    spark.conf.set(key, "1")
+    try {
+      val t = assertLostThenConverges(root,
+          Seq((5000L, "winner", 0L)).toDF("id", "tag", "n"))(
+        LakeTable(spark, root).merge(src, Seq("id")))(_.merge(src, Seq("id")))
+      assert(t.read.filter(col("tag") === "upd").count() == 2)
+      assert(t.read.count() == 151)
+      // the retry pruned too: only the 1001..1050 file was rewritten
+      assert((before -- liveFiles(t.read)).size == 1)
+    } finally spark.conf.unset(key)
+  }
+
+  test("a copy-on-write update spanning several dirs that loses its CAS " +
+      "throws, leaves the winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_cow")}/t"
+    threeFiles(root)
+    // 40..50 sit in the first file, 1001..1010 in the second
+    val preds = Seq(LakeTable.ZonePred.between("id", "40", "1010"))
+    val t = assertLostThenConverges(root,
+        Seq((5000L, "winner", 0L)).toDF("id", "tag", "n"))(
+      LakeTable(spark, root).update(preds, Map("n" -> (CasGate.pass(col("n")) + 1))))(
+      t => assert(t.update(preds, Map("n" -> (col("n") + 1))) == 21))
+    assert(t.read.filter(col("n") === 1).count() == 21)
+    assert(t.read.filter(col("id").between(40, 1010) && col("n") =!= 1).count() == 0)
+    assert(t.read.count() == 151)
+  }
+}
+
+/** A one-shot pause inside a Spark task (tasks run in the driver JVM under a
+  * local master): after [[CasGate.arm]], the first value through
+  * [[CasGate.pass]] signals `entered` and waits for `resume`. */
+private object CasGate extends Serializable {
+  final class Latches {
+    val entered = new CountDownLatch(1)
+    val resume = new CountDownLatch(1)
+  }
+  private val armed = new AtomicReference[Latches](null)
+
+  def arm(): Latches = { val l = new Latches; armed.set(l); l }
+
+  val pass = udf { (x: Long) =>
+    val l = armed.getAndSet(null)
+    if (l != null) {
+      l.entered.countDown()
+      l.resume.await(120, TimeUnit.SECONDS)
+    }
+    x
   }
 }

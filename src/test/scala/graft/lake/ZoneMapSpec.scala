@@ -28,6 +28,16 @@ class ZoneMapSpec extends SparkSpec {
     t
   }
 
+  test("an empty-string zone bound and an empty property value read back") {
+    val t = LakeTable(spark, tmpDir("zm_empty"))
+    t.create(Seq(("", 0)).toDF("k", "v").schema, statsColumns = Seq("k"))
+    t.append(Seq(("", 1)).toDF("k", "v").coalesce(1)) // min = max = ""
+    t.setTableProperties(Map("note" -> ""))
+    assert(t.read.as[(String, Int)].collect().toSeq == Seq(("", 1)))
+    assert(t.readWhere(Seq(ZonePred.eq("k", ""))).count() == 1)
+    assert(t.tableProperties.get("note").contains(""))
+  }
+
   test("readWhere equals read.filter exactly, and skips files outside the range") {
     val t = rangedTable(Seq("id", "ts", "v"))
     val preds = Seq(ZonePred.between("id", "120", "180"))

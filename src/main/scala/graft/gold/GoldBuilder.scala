@@ -1,10 +1,13 @@
 package graft.gold
 
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.lake.LakeTable
@@ -56,8 +59,8 @@ final case class FactConfig(
  *    generated N-way left join, merged on the fact grain
  *    (`FACT_Gold_Layer.py:84-148,174-198`).
  *
- * Documented deviations (SURVEY.md §7.5), both for determinism so the DuckDB
- * oracle can replay results:
+ * Documented deviations (SURVEY.md §7.5), the first three for determinism so
+ * the DuckDB oracle can replay results:
  *  - surrogate keys are dense `row_number` over the business keys offset by
  *    the current max, not `monotonically_increasing_id`
  *    (`DIM_Gold_layer.py:238-246` yields unique but partition-offset-gapped,
@@ -66,7 +69,19 @@ final case class FactConfig(
  *    `MAX(cdc)` already loaded; bootstrap → full load), not the inverted
  *    logic at `DIM_Gold_layer.py:120-134`;
  *  - `clock` is injectable instead of raw `current_timestamp()`
- *    (`DIM_Gold_layer.py:221,239-240`) so audit columns are reproducible.
+ *    (`DIM_Gold_layer.py:221,239-240`) so audit columns are reproducible;
+ *  - a dimension build with no new input does nothing: when the source is
+ *    the lake snapshot the dimension's last build consumed (same table
+ *    snapshot, plan shape and [[DimConfig]] — recorded in that build's own
+ *    commit, see [[GoldBuilder.dimLedgerEntry]]), `buildDim` runs no Spark
+ *    job and commits no version. The reference would re-stamp
+ *    `update_date` on the rows tied at the `>=` watermark; here they keep
+ *    their old `update_date`. A source without a snapshot identity (local
+ *    data, plain files, deletion vectors, several tables —
+ *    [[graft.lake.LakeTable.snapshotOf]]) always builds, as does a
+ *    `backdatedRefresh`. The record describes the source, not the
+ *    dimension: a dimension restored or edited by hand keeps it, so
+ *    rebuild one with `backdatedRefresh`.
  *
  * Scale notes: surrogate minting is DISTRIBUTED ([[GoldBuilder.mintSurrogateKeys]]):
  * a range-partitioned per-partition `row_number` plus driver-side range
@@ -86,24 +101,37 @@ final class GoldBuilder(spark: SparkSession, clock: () => Timestamp) {
    *
    *  `backdatedRefresh` (reference `DIM_Gold_layer.py:120-123`): when set,
    *  the incremental watermark is overridden so rows at/after that instant
-   *  reprocess — the manual-recovery knob for late/corrected upstream data. */
+   *  reprocess — the manual-recovery knob for late/corrected upstream data.
+   *
+   *  Returns at once, with no job and no commit, when `source` is the
+   *  snapshot the last build consumed (class doc: the no-new-input
+   *  deviation). */
   def buildDim(cfg: DimConfig, source: DataFrame,
       backdatedRefresh: Option[Timestamp] = None): LakeTable = {
     val table = LakeTable(spark, cfg.targetPath)
+    // The source snapshot this build consumes rides its own commit; the
+    // snapshot the last build consumed holds no new input — no job, no
+    // commit. A backdated re-run over it builds but records nothing new
+    // (the ledger's "recorded ≥ requested" rule would void its merge).
+    val consumed = GoldBuilder.dimLedgerEntry(cfg, source)
+    val recorded = consumed.flatMap { case (id, _) => table.lastTxnVersion(id) }
+    if (backdatedRefresh.isEmpty && consumed.exists { case (_, v) => recorded.contains(v) })
+      return table
+    val txn = consumed.filterNot { case (_, v) => recorded.exists(_ >= v) }
     val ts = lit(now()).cast("timestamp")
     val businessCols = cfg.keyCols ++ cfg.attrCols :+ cfg.cdcCol
+    val rows = source.select(businessCols.map(col): _*)
 
     // Latest row per business key (AUTO CDC core — SURVEY §2.8/O1); tiebreak
     // on the attribute columns for full determinism when cdc values collide
     // (the reference's constant-per-batch current_timestamp guarantees ties).
-    val latest = latestPerKey(source.select(businessCols.map(col): _*),
-      cfg.keyCols, cfg.cdcCol, cfg.attrCols)
+    def latest(df: DataFrame) = latestPerKey(df, cfg.keyCols, cfg.cdcCol, cfg.attrCols)
 
     if (!table.exists) {
-      val dim = GoldBuilder.mintSurrogateKeys(latest, cfg.keyCols, cfg.surrogateCol)
+      val dim = GoldBuilder.mintSurrogateKeys(latest(rows), cfg.keyCols, cfg.surrogateCol)
         .withColumn("create_date", ts)
         .withColumn("update_date", ts)
-      table.overwrite(dim)
+      table.overwrite(dim, txn = txn)
       return table
     }
 
@@ -117,7 +145,11 @@ final class GoldBuilder(spark: SparkSession, clock: () => Timestamp) {
       (Option(r.getTimestamp(0)), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     val lastLoad = backdatedRefresh.orElse(aggLoad)
-    val src = lastLoad.fold(latest)(w => latest.filter(col(cfg.cdcCol) >= lit(w)))
+    // Filtered BEFORE the window (Catalyst does not push a filter on a
+    // non-partition column through it): a key's latest row passes `>= w`
+    // exactly when its max cdc does, and then so do all its rows tied at
+    // that max — the window picks the same row from fewer.
+    val src = latest(lastLoad.fold(rows)(w => rows.filter(col(cfg.cdcCol) >= lit(w))))
 
     // J2: attach existing surrogate + create_date by left join on business
     // keys. Persisted: the OLD/NEW split below consumes it twice, and the
@@ -142,8 +174,9 @@ final class GoldBuilder(spark: SparkSession, clock: () => Timestamp) {
 
     // U1 + S8: recombine and latest-wins merge (guard as in DIM_Gold_layer.py:281).
     val upserts = old.unionByName(fresh)
-    table.merge(upserts, cfg.keyCols, Some(s"s.${cfg.cdcCol} >= t.${cfg.cdcCol}"))
-    joined.unpersist()
+    try table.merge(upserts, cfg.keyCols, Some(s"s.${cfg.cdcCol} >= t.${cfg.cdcCol}"),
+      txn = txn)
+    finally { joined.unpersist(); () }
     table
   }
 
@@ -416,6 +449,29 @@ object GoldBuilder {
     new GoldBuilder(spark, () => new Timestamp(System.currentTimeMillis()))
   def fixed(spark: SparkSession, at: Timestamp): GoldBuilder =
     new GoldBuilder(spark, () => at)
+
+  /** The ledger entry a [[GoldBuilder.buildDim]] over `source` stamps:
+   *  `(DimLedgerFamily + id, source version)`, one per target
+   *  ([[LakeTable.DimLedgerFamily]]). `id` digests the source snapshot
+   *  (root and files), the canonical shape and output schema of the
+   *  source's plan, the session zone its literals render in, and `cfg`.
+   *  None when the source has no snapshot ([[LakeTable.snapshotOf]]). */
+  private[gold] def dimLedgerEntry(cfg: DimConfig, source: DataFrame): Option[(String, Long)] =
+    LakeTable.snapshotOf(source).map { s =>
+      // rendered in full: the session's field and length limits would cut
+      // an expression's argument list or the plan, and two plans differing
+      // past the cut would digest alike
+      val full = source.sparkSession.sessionState.conf.clone()
+      full.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+      full.unsetConf(SQLConf.MAX_PLAN_STRING_LENGTH)
+      val plan = SQLConf.withExistingConf(full)(source.queryExecution.analyzed.canonicalized
+        .treeString(verbose = true, maxFields = Int.MaxValue))
+      val md = MessageDigest.getInstance("SHA-256")
+      (Seq(s.root) ++ s.files ++ Seq(plan, source.schema.json,
+          source.sparkSession.sessionState.conf.sessionLocalTimeZone, cfg.toString))
+        .foreach(x => md.update(s"${x.length}:$x".getBytes(StandardCharsets.UTF_8)))
+      (LakeTable.DimLedgerFamily + md.digest().map("%02x".format(_)).mkString, s.version)
+    }
 
   /**
    * Distributed dense surrogate minting: numbers `df`'s rows 1..N in global

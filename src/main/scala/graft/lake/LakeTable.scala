@@ -8,12 +8,14 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, PythonFuncExpression, UserDefinedExpression, UserDefinedGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, ObjectConsumer, ObjectProducer}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.catalyst.types.PhysicalDataType
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{DataType, ObjectType, StructType}
 
 import scala.jdk.CollectionConverters._
 
@@ -264,7 +266,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /** Snapshot read of the current version (explicit schema: no inference
    *  drift, empty tables read fine; partitioned reads prune to owned dirs). */
-  def read: DataFrame = snapshot(manifest)
+  def read: DataFrame = snapshotAt(currentVersion)
 
   /** TIME-TRAVEL read of historical version `v` (Delta
    *  `VERSION AS OF` — `DIM_Gold_layer.py` targets run under Delta's
@@ -279,7 +281,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       .filterNot(d => Files.isDirectory(Paths.get(root, d)))
     require(missing.isEmpty,
       s"version $v has been vacuumed (missing ${missing.mkString(", ")})")
-    snapshot(m)
+    snapshotAt(v)
   }
 
   /** Commit history, oldest first: (version, operation). Operations:
@@ -1216,11 +1218,13 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /** The file index over `files` of snapshot `m`: physical data and
    *  partition schemas (nullable, as file sources read them), the
-   *  manifest's zone stats and the dirs' bloom sidecars. */
-  private def fileIndex(m: Manifest, files: Seq[SnapshotFile]): ManifestFileIndex = {
+   *  manifest's zone stats and the dirs' bloom sidecars. `version` names
+   *  `m` only when `files` is its whole visible set. */
+  private def fileIndex(m: Manifest, files: Seq[SnapshotFile],
+      version: Option[Long] = None): ManifestFileIndex = {
     val phys = GraftColumnBridge.asNullable(physSchema(m))
     val pcol = m.pcol.map(physName(m, _))
-    new ManifestFileIndex(rootPath, files,
+    new ManifestFileIndex(rootPath, version, files,
       StructType(phys.filter(f => pcol.contains(f.name))),
       StructType(phys.filterNot(f => pcol.contains(f.name))),
       m.fileStats.map(fs => fs.path -> fs.minMax).toMap,
@@ -1233,8 +1237,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  row-id columns attached when `rowIds`. Deletion vectors are NOT
    *  applied (see [[snapshot]]). */
   private def scanFiles(m: Manifest, files: Seq[SnapshotFile],
-      rowIds: Boolean = false): DataFrame = {
-    val index = fileIndex(m, files)
+      rowIds: Boolean = false, version: Option[Long] = None): DataFrame = {
+    val index = fileIndex(m, files, version)
     val df = spark.baseRelationToDataFrame(HadoopFsRelation(index,
       index.partitionSchema, index.dataSchema, None, new ParquetFileFormat,
       Map.empty)(spark))
@@ -1249,8 +1253,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  accumulating large vectors compact (which materializes and clears
    *  them). */
   private def snapshot(m: Manifest, files: Seq[SnapshotFile],
-      withRowIds: Boolean): DataFrame = {
-    val scan = scanFiles(m, files, rowIds = withRowIds || m.deleteVectors.nonEmpty)
+      withRowIds: Boolean, version: Option[Long]): DataFrame = {
+    val scan = scanFiles(m, files, rowIds = withRowIds || m.deleteVectors.nonEmpty, version)
     val ids = if (withRowIds) Seq(DvFileCol, DvPosCol) else Nil
     antiJoinDeleteVectors(scan, m).select((m.schema.fieldNames.toSeq ++ ids).map(col): _*)
   }
@@ -1258,7 +1262,13 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   /** The snapshot of `m` (optionally partition-scoped), deletion vectors
    *  applied. */
   private def snapshot(m: Manifest, scope: Option[Set[String]] = None): DataFrame =
-    snapshot(m, snapshotFiles(m, scope), withRowIds = false)
+    snapshot(m, snapshotFiles(m, scope), withRowIds = false, version = None)
+
+  /** The whole snapshot of version `v`, its scan labelled with `v`. */
+  private def snapshotAt(v: Long): DataFrame = {
+    val m = readManifest(v)
+    snapshot(m, snapshotFiles(m), withRowIds = false, version = Some(v))
+  }
 
   /** Root-relative path + in-file row index of every scanned row — the
    *  coordinates deletion vectors address rows by. Hadoop renders
@@ -2645,13 +2655,15 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  (merge/compact). `None`: last-writer-wins replace, retried on races. */
   /** `(appId → tv)` upserted into a transaction ledger (one entry per app);
    *  the ledger never regresses — a replayed older version keeps the
-   *  recorded high-water. */
+   *  recorded high-water. The [[LakeTable.DimLedgerFamily]] holds one slot
+   *  per table: stamping one of its appIds retires the others. */
   private def withTxnLedger(ts: Seq[(String, Long)],
       txn: Option[(String, Long)]): Seq[(String, Long)] = txn match {
     case None => ts
     case Some((a, tv)) =>
+      def slot(x: String) = if (x.startsWith(DimLedgerFamily)) DimLedgerFamily else x
       if (ts.exists { case (a0, tv0) => a0 == a && tv0 >= tv }) ts
-      else ts.filterNot(_._1 == a) :+ (a -> tv)
+      else ts.filterNot { case (a0, _) => slot(a0) == slot(a) } :+ (a -> tv)
   }
 
   private def txnAppliedIn(m: Manifest, txn: Option[(String, Long)]): Boolean =
@@ -3050,7 +3062,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       case None => snapshotFiles(m)
     }
     // under evolution the target snapshot serves NULL for the new columns
-    val target = schema1.fields.foldLeft(snapshot(m, touched, withRowIds = false))(
+    val scan = snapshot(m, touched, withRowIds = false, version = None)
+    val target = schema1.fields.foldLeft(scan)(
       (d, f) => if (d.columns.contains(f.name)) d
         else d.withColumn(f.name, lit(null).cast(f.dataType)))
     val joined = joinedOf(target)
@@ -3338,7 +3351,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   /** Deletion-vector the live rows of `m` matching `cond`; the filter
    *  reaches the snapshot scan, so the file index prunes the candidates. */
   private def deleteRows(m: Manifest, v0: Long, cond: Column): Long = {
-    val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
+    val matches = snapshot(m, snapshotFiles(m), withRowIds = true, version = None).filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // the delete images and the DV coordinates are independent projections
@@ -3401,7 +3414,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       require(data.filter(!cond).limit(1).count() == 0L,
         s"replaceWhere contract: every incoming row must satisfy '$condition'")
       enforceConstraints(data, m.constraints)
-      val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
+      val matches = snapshot(m, snapshotFiles(m), withRowIds = true, version = None).filter(cond)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
         // three independent consumers of the two pinned frames — DV
@@ -3597,7 +3610,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
     val cols = m.schema.fieldNames.toSeq
     val cond = coalesce(expr(condition), lit(false))
-    val matches = snapshot(m, snapshotFiles(m), withRowIds = true).filter(cond)
+    val matches = snapshot(m, snapshotFiles(m), withRowIds = true, version = None).filter(cond)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val dvDir = writeDeleteVector(matches)
@@ -3811,7 +3824,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val rewriteBytes = rewrite.map(_.status.getLen).sum
     val rewrittenCount = if (rewrite.isEmpty) 0 else {
       val rwTmp = s"data/.opt-${UUID.randomUUID()}"
-      val dfP = toPhysicalNames(m, snapshot(m, rewrite, withRowIds = false))
+      val dfP = toPhysicalNames(m, snapshot(m, rewrite, withRowIds = false, version = None))
       withMicrosTimestamps { m.pcol.map(physName(m, _)) match {
         case Some(p) => dfP.repartition(col(p))
           .write.partitionBy(p).parquet(s"$root/$rwTmp")
@@ -4007,7 +4020,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       math.ceil(bytes.toDouble / targetFileBytes).toInt)
     // read the unclustered dirs through their deletion vectors (dead rows
     // materialize away — the targeted REORG, same as optimizeCompact)
-    val batch = snapshot(m, unclFiles, withRowIds = false)
+    val batch = snapshot(m, unclFiles, withRowIds = false, version = None)
     val (clustered, release) =
       if (zOrderable(cols)) zorderClustered(batch, m, cols, targetFiles)
       else (batch.repartitionByRange(targetFiles, cols.map(col): _*)
@@ -4201,7 +4214,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val scopedBytes = scoped.map(_.status.getLen).sum
     // scoped snapshot rows, deletion vectors applied (the rewrite
     // materializes deletes for these partitions)
-    val df0 = snapshot(m, scoped, withRowIds = false)
+    val df0 = snapshot(m, scoped, withRowIds = false, version = None)
     val (df, release) =
       if (zcols.isEmpty) (df0.repartition(col(p)), () => ())
       else zorderClustered(df0, m, zcols, targetFiles)
@@ -4426,7 +4439,9 @@ object LakeTable {
       /** TRANSACTION LEDGER (Delta `txnAppId`/`txnVersion` idempotent
        *  writes): highest committed application version per writer id.
        *  [[LakeTable.appendIdempotent]] consults it to make retried job
-       *  writes exactly-once. Carried verbatim across every commit kind. */
+       *  writes exactly-once. Carried verbatim across every commit kind.
+       *  A merge or overwrite stamping a [[LakeTable.DimLedgerFamily]]
+       *  appId replaces the family's previous entry. */
       txns: Seq[(String, Long)] = Nil,
       /** TOMBSTONES of metadata-only [[LakeTable.dropColumn]]s: old data
        *  files still physically carry these columns (under their PHYSICAL
@@ -4472,6 +4487,48 @@ object LakeTable {
       bloomFilterColumns: Seq[String] = Nil,
       /** Liquid-clustering key (empty = not clustered). */
       clusteringColumns: Seq[String] = Nil)
+
+  /** Transaction-ledger appId prefix of gold dimension builds' source
+   *  records ([[graft.gold.GoldBuilder.buildDim]]): one entry per table —
+   *  a merge or overwrite stamping one retires the others, so the header
+   *  does not grow as the dimension's source or config changes. */
+  val DimLedgerFamily = "graft.dim#"
+
+  /** One lake table snapshot a read resolved to: the table root, its
+   *  manifest version and the root-relative files that version lists. A
+   *  table deleted and recreated at the same root restarts its versions
+   *  but never reuses a data file name, so equal snapshots read equal rows. */
+  final case class Snapshot(root: String, version: Long, files: Seq[String])
+
+  /** The one snapshot `df` reads, or None. Some only when every leaf of its
+   *  analyzed plan, subqueries included, is a whole-snapshot lake scan
+   *  ([[LakeTable.read]], [[LakeTable.readVersion]]) of one version, and
+   *  every node is deterministic, runs no user code (UDFs, typed lambdas)
+   *  and reads no clock: the same plan over the same snapshot then
+   *  computes the same rows. Local data, a plain file read, a table with
+   *  deletion vectors (its anti-join side is a plain parquet read) and
+   *  multi-table plans have no snapshot. Analysis only — runs no job. */
+  def snapshotOf(df: DataFrame): Option[Snapshot] = {
+    val nodes = df.queryExecution.analyzed.collectWithSubqueries { case p => p }
+    def userCode(e: Expression): Boolean = e.exists {
+      case _: UserDefinedExpression | _: PythonFuncExpression | _: UserDefinedGenerator => true
+      case x => x.dataType.isInstanceOf[ObjectType]
+    }
+    val pure = nodes.forall { p =>
+      !p.isStreaming && !p.isInstanceOf[ObjectProducer] && !p.isInstanceOf[ObjectConsumer] &&
+        p.expressions.forall(e =>
+          e.deterministic && !e.containsPattern(CURRENT_LIKE) && !userCode(e))
+    }
+    val leaves = nodes.collect {
+      case LogicalRelation(HadoopFsRelation(i: ManifestFileIndex, _, _, _, _, _), _, _, _, _) =>
+        i.version.map(v => Snapshot(i.root.toString, v, i.files.map(_.rel)))
+      case _: LeafNode => None
+    }.distinct
+    leaves match {
+      case Seq(Some(s)) if pure => Some(s)
+      case _ => None
+    }
+  }
 
   /** Conjunctive data-skipping predicate: `col` between `lo` and `hi`, both
    *  inclusive, either bound open. Bound values are Spark CAST-to-STRING

@@ -40,9 +40,16 @@ private[lake] final case class SnapshotFile(rel: String, dir: String,
  * column's type with Catalyst `Cast`. A TIMESTAMP rendering is local time
  * in the WRITER's session zone, which the manifest does not record, so its
  * parsed bounds widen by the largest gap two zone offsets can have.
+ *
+ * `version` is `Some(v)` when the index lists every visible file of
+ * manifest version `v` of the table at `root` (a plain snapshot read), so
+ * an analyzed plan can say which snapshot it reads
+ * ([[LakeTable.snapshotOf]]); a partition-scoped or write-path index
+ * carries None.
  */
 private[lake] final class ManifestFileIndex(
-    root: Path,
+    val root: Path,
+    val version: Option[Long],
     val files: Seq[SnapshotFile],
     override val partitionSchema: StructType,
     val dataSchema: StructType,

@@ -181,8 +181,11 @@ class MedallionE2ESpec extends SparkSpec {
     assert(f3row.getAs[Timestamp]("update_date") == Timestamp.valueOf("2030-02-01 12:00:00"))
     assert(dim2.groupBy("DimFlightsKey").count().filter(col("count") > 1).count() == 0)
 
-    // re-running the same dim build is a no-op (idempotent merge)
+    // re-running the same dim build is a no-op: same source snapshot, so
+    // no commit either
+    val dimVersion = LakeTable(spark, dimCfg.targetPath).currentVersion
     goldAt("2030-03-01 12:00:00").buildDim(dimCfg, silver2)
+    assert(LakeTable(spark, dimCfg.targetPath).currentVersion == dimVersion)
     val dim3 = LakeTable(spark, dimCfg.targetPath).read
     assert(dim3.count() == 5)
     assert(dim3.select("flight_id", "DimFlightsKey", "airline").orderBy("flight_id").collect().toSeq ==

@@ -1,10 +1,16 @@
 package graft.gold
 
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import graft.lake.LakeTable
@@ -155,5 +161,143 @@ class GoldBuilderSpec extends SparkSpec {
     assert(p.partitionColumn.contains("month"))
     // incremental watermark pruning really pruned: only the max month is read
     assert(p.ownedPartitionValues.sorted == Seq("2024-01", "2024-02", "2024-03"))
+  }
+
+  /** Spark jobs `body` launches, counted once the listener bus drains. */
+  private def jobsIn(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { n.incrementAndGet(); () }
+    }
+    ListenerBusBridge.drain(sc)
+    sc.addSparkListener(l)
+    try { body; ListenerBusBridge.drain(sc) } finally sc.removeSparkListener(l)
+    n.get
+  }
+
+  /** Did `body` commit a new version of `dim`? */
+  private def commits(dim: LakeTable)(body: => Unit): Boolean = {
+    val v = dim.currentVersion
+    body
+    dim.currentVersion > v
+  }
+
+  /** A lake-table dimension source and a config over it. */
+  private def lakeSource(prefix: String) = {
+    val root = tmpDir(prefix)
+    val src = LakeTable(spark, s"$root/src")
+    src.overwrite(Seq(
+      (1L, "a", "x", ts("2024-01-01 00:00:00")),
+      (2L, "b", "y", ts("2024-01-02 00:00:00"))).toDF("k", "attr", "note", "cdc"))
+    (src, DimConfig(s"$root/dim", Seq("k"), Seq("attr", "note"), "cdc", "sk"))
+  }
+
+  test("the watermark filtered before latestPerKey keeps the rows it keeps after it") {
+    val w = ts("2024-01-10 00:00:00")
+    val df = Seq[(Long, Option[Timestamp], String)](
+      (1L, Some(w), "a"), (1L, Some(w), "b"),              // tied at the watermark
+      (1L, Some(ts("2024-01-05 00:00:00")), "z"),
+      (2L, None, "n"), (2L, Some(ts("2024-01-11 00:00:00")), "p"), // NULL beside newer
+      (3L, None, "q"),                                      // NULL cdc only
+      (4L, Some(ts("2024-01-09 00:00:00")), "o"),           // only older rows
+      (4L, Some(ts("2024-01-08 00:00:00")), "o2"),
+      (5L, Some(ts("2024-01-12 00:00:00")), "x"), (5L, None, "y")
+    ).toDF("k", "cdc", "attr")
+    val gb = GoldBuilder(spark)
+    // the incremental watermark, and a backdated refresh rewinding it
+    for (mark <- Seq(w, ts("2024-01-06 00:00:00"))) {
+      def rows(d: DataFrame) = d.orderBy("k").as[(Long, Option[Timestamp], String)].collect().toSeq
+      val after = rows(gb.latestPerKey(df, Seq("k"), "cdc", Seq("attr")).filter(col("cdc") >= lit(mark)))
+      val before = rows(gb.latestPerKey(df.filter(col("cdc") >= lit(mark)), Seq("k"), "cdc", Seq("attr")))
+      assert(before == after, s"watermark $mark")
+      assert(after.map(_._1).contains(1L) && !after.map(_._1).contains(3L))
+    }
+  }
+
+  test("buildDim over the snapshot its last build consumed runs no job and commits nothing") {
+    val (src, cfg) = lakeSource("gb_skip")
+    GoldBuilder.fixed(spark, t1).buildDim(cfg, src.read)
+    val dim = LakeTable(spark, cfg.targetPath)
+    val v = dim.currentVersion
+    assert(jobsIn(GoldBuilder.fixed(spark, t2).buildDim(cfg, src.read)) == 0)
+    assert(dim.currentVersion == v)
+    // deviation: the row tied at the watermark keeps its update_date
+    assert(dim.read.select("update_date").as[Timestamp].collect().toSet == Set(t1))
+  }
+
+  test("buildDim builds again on new input: a source commit, another plan, another config") {
+    val (src, cfg) = lakeSource("gb_rebuild")
+    val gb = GoldBuilder.fixed(spark, t1)
+    val dim = LakeTable(spark, cfg.targetPath)
+    def builds(c: DimConfig, source: => DataFrame) = commits(dim)(gb.buildDim(c, source))
+    gb.buildDim(cfg, src.read)
+    src.append(Seq((3L, "c", "z", ts("2024-01-03 00:00:00"))).toDF("k", "attr", "note", "cdc"))
+    assert(builds(cfg, src.read))
+    assert(dim.read.count() == 3)
+    assert(!builds(cfg, src.read))
+    assert(builds(cfg, src.read.filter(col("k") =!= 1L)))
+    assert(!builds(cfg, src.read.filter(col("k") =!= 1L)))
+    assert(builds(cfg, src.read.filter(col("k") =!= 2L)))
+    // plans that differ only past the session's maxToStringFields (25)
+    def wide(last: String) = src.read.withColumn("note",
+      coalesce((col("note") +: (1 to 30).map(i => lit(i.toString)) :+ lit(last)): _*))
+    assert(builds(cfg, wide("a")))
+    assert(!builds(cfg, wide("a")))
+    assert(builds(cfg, wide("b")))
+    val reordered = cfg.copy(attrCols = Seq("note", "attr"))
+    assert(builds(reordered, src.read))
+    assert(!builds(reordered, src.read))
+    // one ledger entry per target, however many sources it has consumed
+    val mf = Paths.get(cfg.targetPath, "_commits", f"v${dim.currentVersion}%09d.mf")
+    assert(Files.readAllLines(mf).asScala.count(_.startsWith("txn=")) == 1)
+  }
+
+  test("buildDim builds again on a backdated refresh, a recreated source and local data") {
+    val (src, cfg) = lakeSource("gb_rebuild2")
+    val gb = GoldBuilder.fixed(spark, t1)
+    val dim = LakeTable(spark, cfg.targetPath)
+    def builds(source: => DataFrame, back: Option[Timestamp] = None) =
+      commits(dim)(gb.buildDim(cfg, source, back))
+    gb.buildDim(cfg, src.read)
+    assert(builds(src.read, Some(ts("2023-12-01 00:00:00"))))
+    assert(!builds(src.read)) // the backdated run left the record as it was
+    // deleted and recreated at the same root: its versions restart at 0
+    val srcV = src.currentVersion
+    Files.walk(Paths.get(src.root)).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    val again = LakeTable(spark, src.root)
+    again.overwrite(Seq((7L, "g", "w", ts("2024-01-02 00:00:00"))).toDF("k", "attr", "note", "cdc"))
+    assert(again.currentVersion == srcV)
+    assert(builds(again.read))
+    assert(dim.read.filter(col("k") === 7L).count() == 1)
+    assert(!builds(again.read))
+    // a LocalRelation has no snapshot: every build runs
+    val local = Seq((8L, "h", "v", ts("2024-01-02 00:00:00"))).toDF("k", "attr", "note", "cdc")
+    assert(builds(local))
+    assert(builds(local))
+  }
+
+  test("a buildDim interrupted before its commit records nothing: the next run builds") {
+    val (src, cfg) = lakeSource("gb_crash")
+    val gb = GoldBuilder.fixed(spark, t1)
+    gb.buildDim(cfg, src.read)
+    val dim = LakeTable(spark, cfg.targetPath)
+    dim.addCheckConstraint("no_bad", "attr <> 'bad'")
+    src.append(Seq((3L, "bad", "z", ts("2024-01-03 00:00:00"))).toDF("k", "attr", "note", "cdc"))
+    assert(!commits(dim)(intercept[Exception](gb.buildDim(cfg, src.read))))
+    dim.dropCheckConstraint("no_bad")
+    gb.buildDim(cfg, src.read)
+    assert(dim.read.filter(col("k") === 3L).count() == 1)
+  }
+
+  test("a refused buildDim merge leaves nothing cached") {
+    val cfg = DimConfig(s"${tmpDir("gb_leak")}/dim", Seq("k"), Seq("attr"), "cdc", "sk")
+    val gb = GoldBuilder.fixed(spark, t1)
+    gb.buildDim(cfg, Seq((1L, 1, ts("2024-01-01 00:00:00"))).toDF("k", "attr", "cdc"))
+    spark.catalog.clearCache()
+    // STRING into the INT attribute is lossy: the merge refuses it
+    intercept[Exception](gb.buildDim(cfg,
+      Seq((1L, "x", ts("2024-01-02 00:00:00"))).toDF("k", "attr", "cdc")))
+    assert(spark.sharedState.cacheManager.isEmpty)
   }
 }

@@ -79,9 +79,11 @@ final case class FactConfig(
  *    their old `update_date`. A source without a snapshot identity (local
  *    data, plain files, deletion vectors, several tables —
  *    [[graft.lake.LakeTable.snapshotOf]]) always builds, as does a
- *    `backdatedRefresh`. The record describes the source, not the
- *    dimension: a dimension restored or edited by hand keeps it, so
- *    rebuild one with `backdatedRefresh`.
+ *    `backdatedRefresh`. The record rides the dimension's own versions:
+ *    a restore brings back the record of the version it restores, and
+ *    maintenance (optimize, compact) carries it. A dimension edited by
+ *    hand (a write outside `buildDim`) keeps its record, so rebuild one
+ *    with `backdatedRefresh`.
  *
  * Scale notes: surrogate minting is DISTRIBUTED ([[GoldBuilder.mintSurrogateKeys]]):
  * a range-partitioned per-partition `row_number` plus driver-side range
@@ -128,7 +130,13 @@ final class GoldBuilder(spark: SparkSession, clock: () => Timestamp) {
     def latest(df: DataFrame) = latestPerKey(df, cfg.keyCols, cfg.cdcCol, cfg.attrCols)
 
     if (!table.exists) {
-      val dim = GoldBuilder.mintSurrogateKeys(latest(rows), cfg.keyCols, cfg.surrogateCol)
+      // one file per 128 MB of planned input, not one per range partition:
+      // the narrow coalesce runs no job and keeps the numbering
+      val src = latest(rows)
+      val files = (src.queryExecution.optimizedPlan.stats.sizeInBytes / (128L << 20) + 1)
+        .min(Int.MaxValue).toInt
+      val dim = GoldBuilder.mintSurrogateKeys(src, cfg.keyCols, cfg.surrogateCol)
+        .coalesce(files)
         .withColumn("create_date", ts)
         .withColumn("update_date", ts)
       table.overwrite(dim, txn = txn)

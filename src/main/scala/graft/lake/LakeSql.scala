@@ -3,7 +3,7 @@ package graft.lake
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteFromTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, OverwriteByExpression, SubqueryAlias, UnresolvedTableSpec, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -447,12 +447,7 @@ object LakeSql {
           case ac: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint =>
             // the parser wraps the target in a validation Filter — the named
             // relation sits below it
-            val name = ac.child.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${ac.child.nodeName}"))
+            val name = targetName(ac.child, "ALTER TABLE")
             val cc = ac.checkConstraint
             val cname = Option(cc.userProvidedName).getOrElse(
               throw new IllegalArgumentException(
@@ -462,12 +457,7 @@ object LakeSql {
           case ac: org.apache.spark.sql.catalyst.plans.logical.AddColumns =>
             // metadata-only ADD COLUMNS — O(manifest); existing files serve
             // NULL for the new columns (see LakeTable.addColumns)
-            val name = ac.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${ac.table.nodeName}"))
+            val name = targetName(ac.table, "ALTER TABLE")
             val cols = ac.columnsToAdd.map { q =>
               require(q.path.isEmpty,
                 s"nested column ${q.name.mkString(".")} is not supported")
@@ -484,12 +474,7 @@ object LakeSql {
           case dc: org.apache.spark.sql.catalyst.plans.logical.DropColumns =>
             // metadata-only DROP COLUMN — O(manifest); tombstoned against
             // resurrection (see LakeTable.dropColumn)
-            val name = dc.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${dc.table.nodeName}"))
+            val name = targetName(dc.table, "ALTER TABLE")
             val tbl = lookup(name)
             dc.columnsToDrop.foreach { fn =>
               val c = fn.name.mkString(".")
@@ -503,12 +488,7 @@ object LakeSql {
             // CURRENT logical names, plus partition-column and generated/
             // constraint annotations — schema facts only (DESCRIBE DETAIL
             // carries the snapshot facts)
-            val name = dr.relation.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"DESCRIBE target must be a named table, got ${dr.relation.nodeName}"))
+            val name = targetName(dr.relation, "DESCRIBE")
             val tbl = lookup(name)
             val gen = tbl.generatedColumns
             tbl.schema.fields.toSeq.map { f =>
@@ -518,22 +498,12 @@ object LakeSql {
               (f.name, f.dataType.simpleString, f.nullable, notes.mkString("; "))
             }.toDF("col_name", "data_type", "nullable", "comment")
           case sc: org.apache.spark.sql.catalyst.plans.logical.ShowColumns =>
-            val name = sc.child.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"SHOW COLUMNS target must be a named table, got ${sc.child.nodeName}"))
+            val name = targetName(sc.child, "SHOW COLUMNS")
             lookup(name).schema.fieldNames.toSeq.toDF("col_name")
           case rc: org.apache.spark.sql.catalyst.plans.logical.RenameColumn =>
             // metadata-only RENAME COLUMN (column mapping) — O(manifest);
             // no data file is touched (see LakeTable.renameColumn)
-            val name = rc.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${rc.table.nodeName}"))
+            val name = targetName(rc.table, "ALTER TABLE")
             require(rc.column.name.length == 1,
               s"nested column ${rc.column.name.mkString(".")} is not supported")
             val tbl = lookup(name)
@@ -546,12 +516,7 @@ object LakeSql {
             // (needs `delta.enableTypeWidening`; see
             // LakeTable.alterColumnType). Other ALTER COLUMN forms
             // (nullability/comment/position) are rejected loudly.
-            val name = ac.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${ac.table.nodeName}"))
+            val name = targetName(ac.table, "ALTER TABLE")
             val tbl = lookup(name)
             ac.specs.foreach { sp =>
               require(sp.column.name.length == 1,
@@ -577,12 +542,7 @@ object LakeSql {
             // `ALTER TABLE t CLUSTER BY (c, …)` / `CLUSTER BY NONE` —
             // liquid clustering: metadata-only key change, the layout
             // follows at the next OPTIMIZE (see LakeTable.setClusterBy)
-            val name = cb.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${cb.table.nodeName}"))
+            val name = targetName(cb.table, "ALTER TABLE")
             val cols = cb.clusterBySpec.toSeq.flatMap(_.columnNames).map { r =>
               require(r.fieldNames.length == 1,
                 s"nested clustering column ${r.fieldNames.mkString(".")} is not supported")
@@ -593,34 +553,17 @@ object LakeSql {
             Seq((norm(name), cols.mkString(","), tbl.currentVersion))
               .toDF("table", "cluster_by", "version")
           case sp: org.apache.spark.sql.catalyst.plans.logical.SetTableProperties =>
-            val name = sp.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${sp.table.nodeName}"))
+            val name = targetName(sp.table, "ALTER TABLE")
             val tbl = lookup(name)
             tbl.setTableProperties(sp.properties)
             Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
           case up: org.apache.spark.sql.catalyst.plans.logical.UnsetTableProperties =>
-            val name = up.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"ALTER TABLE target must be a named table, got ${up.table.nodeName}"))
+            val name = targetName(up.table, "ALTER TABLE")
             val tbl = lookup(name)
             tbl.unsetTableProperties(up.propertyKeys)
             Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
           case st: org.apache.spark.sql.catalyst.plans.logical.ShowTableProperties =>
-            val name = st.table.collectFirst {
-              case UnresolvedRelation(parts, _, _) => parts.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTableOrView =>
-                ut.multipartIdentifier.mkString(".")
-              case ut: org.apache.spark.sql.catalyst.analysis.UnresolvedTable =>
-                ut.multipartIdentifier.mkString(".")
-            }.getOrElse(throw new IllegalArgumentException(
-              s"SHOW TBLPROPERTIES target must be a named table, got ${st.table.nodeName}"))
+            val name = targetName(st.table, "SHOW TBLPROPERTIES")
             val all = lookup(name).tableProperties
             val shown = st.propertyKey match {
               case Some(k) => all.get(k).map(k -> _).toSeq
@@ -944,6 +887,15 @@ object LakeSql {
       }
     }.toSeq: _*)
   }
+
+  /** The named table a DDL or utility statement targets, wherever the
+   *  parser put it (ADD CONSTRAINT wraps it in a validation Filter). */
+  private def targetName(plan: LogicalPlan, what: String): String = plan.collectFirst {
+    case UnresolvedRelation(parts, _, _) => parts.mkString(".")
+    case ut: UnresolvedTable => ut.multipartIdentifier.mkString(".")
+    case ut: UnresolvedTableOrView => ut.multipartIdentifier.mkString(".")
+  }.getOrElse(throw new IllegalArgumentException(
+    s"$what target must be a named table, got ${plan.nodeName}"))
 
   private def identifierOf(plan: LogicalPlan, what: String): String = plan match {
     case id: UnresolvedIdentifier => id.nameParts.mkString(".")

@@ -1,8 +1,8 @@
 package graft.lake
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.{Base64, UUID}
+import java.nio.file.{Files, Path, Paths}
+import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
@@ -18,6 +18,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, ObjectType, StructType}
 
 import scala.jdk.CollectionConverters._
+
+import Commit.{DirEntry, FileStat, Manifest, txnAppliedIn}
 
 /**
  * Parquet-backed versioned table — the engine's replacement for the Delta
@@ -53,6 +55,9 @@ import scala.jdk.CollectionConverters._
  *    version and retries, exactly Delta's `ConcurrentAppendException`
  *    contract.
  *
+ * Both halves are the two publish modes of the one [[Commit]] seam every
+ * write goes through (latest and pinned).
+ *
  * `_VERSION` is a monotonic cache of the newest version, updated after a
  * successful publish; readers resolve it and probe forward over `_commits`
  * so a stale pointer can never hide a committed version. Readers always see
@@ -87,170 +92,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     clock: () => Long) {
   import LakeTable._
 
-  private def versionFile: Path = Paths.get(root, "_VERSION")
-  private def commitsDir: Path = Paths.get(root, "_commits")
-  private def manifestFile(v: Long): Path = commitsDir.resolve(f"v$v%09d.mf")
+  private val commit = new Commit(root, clock)
 
-  def exists: Boolean = Files.exists(versionFile) || Files.exists(manifestFile(0))
+  def exists: Boolean = commit.exists
 
   /** Newest committed version: the `_VERSION` cache, probed forward over
    *  `_commits` — a concurrent writer that published but hasn't refreshed
    *  the pointer yet is still visible. */
-  def currentVersion: Long = {
-    require(exists, s"LakeTable at $root does not exist")
-    var v =
-      if (Files.exists(versionFile))
-        new String(Files.readAllBytes(versionFile), StandardCharsets.UTF_8).trim.toLong
-      else -1L
-    while (Files.exists(manifestFile(v + 1))) v += 1
-    require(v >= 0, s"LakeTable at $root has a pointer but no manifest")
-    v
-  }
+  def currentVersion: Long = commit.currentVersion
 
-  private def b64e(s: String): String =
-    Base64.getEncoder.encodeToString(s.getBytes(StandardCharsets.UTF_8))
-  private def b64d(s: String): String =
-    new String(Base64.getDecoder.decode(s), StandardCharsets.UTF_8)
-
-  /** Resolved manifests by version. Committed manifest files are immutable
-   *  (the CAS link publishes exactly one file per version, never rewritten),
-   *  so cached resolutions can never go stale — the cache only bounds the
-   *  repeated IO of delta-chain resolution. Kept small: snapshot reads only
-   *  ever need the chain back to the nearest checkpoint. */
-  private val mfCache = new java.util.concurrent.ConcurrentHashMap[Long, Manifest]()
-
-  /** Chain depth of version `v`'s manifest file: 0 for a full checkpoint,
-   *  parent's depth + 1 for a delta. Reads only the first two lines —
-   *  delta files lead with `base=`/`chain=`. */
-  private def chainLenOf(v: Long): Int = {
-    val it = Files.lines(manifestFile(v), StandardCharsets.UTF_8)
-    try it.iterator().asScala.take(2).collectFirst {
-      case l if l.startsWith("chain=") => l.stripPrefix("chain=").toInt
-    }.getOrElse(0) finally it.close()
-  }
-
-  private def parseDirEntry(s: String): DirEntry = s.split('|') match {
-    case Array(d) => DirEntry(d, None)
-    case Array(d, owned) =>
-      DirEntry(d, Some(owned.split(',').toSeq.filter(_.nonEmpty).map(b64d)))
-    // third field: entry flags — "c" marks the dir clustered on the
-    // manifest's clusterKey (an empty second field keeps owned = None)
-    case Array(d, owned, flags) =>
-      DirEntry(d,
-        if (owned.isEmpty) None
-        else Some(owned.split(',').toSeq.filter(_.nonEmpty).map(b64d)),
-        clustered = flags.contains('c'))
-    case _ => sys.error(s"bad manifest dir entry: $s")
-  }
-
-  /** Load version `v`'s manifest. A file is either a FULL checkpoint (the
-   *  complete snapshot) or a DELTA against `base=` (its immediate parent):
-   *  all O(columns + writers) metadata is carried in full either way, and
-   *  only the O(files) `dir=`/`fstat=` body is diff-encoded (`adddir=` /
-   *  `rmdir=` / added `fstat=`). Resolution walks the chain to the nearest
-   *  checkpoint (bounded by [[LakeTable.ManifestCheckpointInterval]]) and
-   *  is memoized per instance. */
-  private def readManifest(v: Long): Manifest = {
-    val cached = mfCache.get(v)
-    if (cached != null) return cached
-    val lines = Files.readAllLines(manifestFile(v), StandardCharsets.UTF_8).asScala
-    val own = parseManifestLines(v, lines)
-    val m = lines.collectFirst {
-      case l if l.startsWith("base=") => l.stripPrefix("base=").toLong
-    } match {
-      case None => own
-      case Some(b) =>
-        val parent = readManifest(b)
-        val rmDirs = lines.collect {
-          case l if l.startsWith("rmdir=") => l.stripPrefix("rmdir=")
-        }.toSet
-        val addEntries = lines.collect {
-          case l if l.startsWith("adddir=") => parseDirEntry(l.stripPrefix("adddir="))
-        }.toSeq
-        // `fstat=` lines in a delta are the ADDED stats only
-        val addPaths = own.fileStats.map(_.path).toSet
-        val entries = parent.entries.filterNot(e => rmDirs.contains(e.dir)) ++ addEntries
-        val fileStats = parent.fileStats.filterNot(f =>
-          addPaths.contains(f.path) || rmDirs.exists(d => f.path.startsWith(d + "/"))) ++
-          own.fileStats
-        own.copy(entries = entries, fileStats = fileStats)
-    }
-    mfCache.put(v, m)
-    if (mfCache.size() > 32) {
-      val ks = mfCache.keySet().asScala.toSeq.sorted
-      ks.dropRight(16).foreach(k => mfCache.remove(k))
-    }
-    m
-  }
-
-  private def parseManifestLines(v: Long,
-      lines: scala.collection.Seq[String]): Manifest = {
-    val schemaB64 = lines.collectFirst { case l if l.startsWith("schema=") => l.stripPrefix("schema=") }
-      .getOrElse(sys.error(s"manifest v$v missing schema"))
-    val schema = StructType.fromDDL(b64d(schemaB64))
-    val pcol = lines.collectFirst { case l if l.startsWith("pcol=") => l.stripPrefix("pcol=") }
-    val op = lines.collectFirst { case l if l.startsWith("op=") => l.stripPrefix("op=") }
-      .getOrElse("unknown")
-    val cdfEnabled = lines.contains("cdf=on")
-    val commitTsMs = lines.collectFirst { case l if l.startsWith("ts=") =>
-      l.stripPrefix("ts=").toLong }
-    val cdfDir = lines.collectFirst { case l if l.startsWith("cdfdir=") => l.stripPrefix("cdfdir=") }
-    val statsCols = lines.collectFirst { case l if l.startsWith("statscols=") =>
-      l.stripPrefix("statscols=").split(',').toSeq.filter(_.nonEmpty).map(b64d)
-    }.getOrElse(Nil)
-    val constraints = lines.collect {
-      case l if l.startsWith("check=") =>
-        val Array(n, e) = l.stripPrefix("check=").split(':')
-        b64d(n) -> b64d(e)
-    }.toSeq
-    val generated = lines.collect {
-      case l if l.startsWith("gen=") =>
-        val Array(n, e) = l.stripPrefix("gen=").split(':')
-        b64d(n) -> b64d(e)
-    }.toSeq
-    val entries = lines.collect {
-      case l if l.startsWith("dir=") => parseDirEntry(l.stripPrefix("dir="))
-    }.toSeq
-    val fileStats = lines.collect {
-      case l if l.startsWith("fstat=") =>
-        val parts = l.stripPrefix("fstat=").split('|')
-        FileStat(b64d(parts.head), parts.tail.toSeq.map { cs =>
-          val Array(c, mn, mx) = cs.split(":", -1)
-          b64d(c) -> ((b64d(mn), b64d(mx)))
-        }.toMap)
-    }.toSeq
-    val deleteVectors = lines.collect {
-      case l if l.startsWith("dv=") => l.stripPrefix("dv=")
-    }.toSeq
-    val bloomCols = lines.collectFirst { case l if l.startsWith("bloomcols=") =>
-      l.stripPrefix("bloomcols=").split(',').toSeq.filter(_.nonEmpty).map(b64d)
-    }.getOrElse(Nil)
-    val txns = lines.collect {
-      case l if l.startsWith("txn=") =>
-        val Array(a, tv) = l.stripPrefix("txn=").split(':')
-        b64d(a) -> tv.toLong
-    }.toSeq
-    val dropped = lines.collectFirst { case l if l.startsWith("dropped=") =>
-      l.stripPrefix("dropped=").split(',').toSeq.filter(_.nonEmpty).map(b64d)
-    }.getOrElse(Nil)
-    val colMap = lines.collectFirst { case l if l.startsWith("colmap=") =>
-      l.stripPrefix("colmap=").split(',').toSeq.filter(_.nonEmpty).map { kv =>
-        val Array(lg, ph) = kv.split(':')
-        b64d(lg) -> b64d(ph)
-      }
-    }.getOrElse(Nil)
-    val props = lines.collect {
-      case l if l.startsWith("prop=") =>
-        val Array(k, v0) = l.stripPrefix("prop=").split(":", -1)
-        b64d(k) -> b64d(v0)
-    }.toSeq
-    val clusterKey = lines.collectFirst { case l if l.startsWith("ckey=") =>
-      l.stripPrefix("ckey=").split(',').toSeq.filter(_.nonEmpty).map(b64d)
-    }.getOrElse(Nil)
-    Manifest(schema, pcol, entries, op, cdfEnabled, cdfDir, statsCols, fileStats,
-      commitTsMs, constraints, generated, deleteVectors, bloomCols, txns,
-      dropped, colMap, props, clusterKey)
-  }
+  private def readManifest(v: Long): Manifest = commit.read(v)
 
   private def manifest: Manifest = readManifest(currentVersion)
 
@@ -276,45 +127,28 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   def readVersion(v: Long): DataFrame = {
     require(exists, s"LakeTable at $root does not exist")
     require(v >= 0 && v <= currentVersion, s"version $v out of range [0, $currentVersion]")
-    val m = readManifest(v)
+    requireRetained(readManifest(v), s"version $v has been vacuumed")
+    snapshotAt(v)
+  }
+
+  /** Refuse a version whose data dirs `vacuum` has reclaimed. */
+  private def requireRetained(m: Manifest, what: String): Unit = {
     val missing = (m.entries.map(_.dir) ++ m.deleteVectors)
       .filterNot(d => Files.isDirectory(Paths.get(root, d)))
-    require(missing.isEmpty,
-      s"version $v has been vacuumed (missing ${missing.mkString(", ")})")
-    snapshotAt(v)
+    require(missing.isEmpty, s"$what (missing ${missing.mkString(", ")})")
   }
 
   /** Commit history, oldest first: (version, operation). Operations:
    *  create/append/overwrite/merge/delete/update/compact/restore/clone/
    *  constraint. */
-  def history: Seq[(Long, String)] = {
-    require(exists, s"LakeTable at $root does not exist")
-    (0L to currentVersion).filter(v => Files.exists(manifestFile(v)))
-      .map(v => v -> manifestHeader(v)._1)
-  }
+  def history: Seq[(Long, String)] = historyDetail.map { case (v, op, _) => (v, op) }
 
   /** DESCRIBE HISTORY with commit wall-clocks, oldest first:
    *  (version, operation, commit epoch ms — None only for manifests written
    *  before the clock field existed). */
-  def historyDetail: Seq[(Long, String, Option[Long])] = {
-    require(exists, s"LakeTable at $root does not exist")
-    (0L to currentVersion).filter(v => Files.exists(manifestFile(v)))
-      .map { v => val (op, ts) = manifestHeader(v); (v, op, ts) }
-  }
-
-  /** Cheap manifest header scan — (op, commit ts) only, skipping the schema
-   *  DDL parse and the per-file stats bodies. History listings and timestamp
-   *  resolution over long histories are O(versions × header line scan), not
-   *  O(versions × full manifest parse). */
-  private def manifestHeader(v: Long): (String, Option[Long]) = {
-    var op = "unknown"; var ts: Option[Long] = None
-    val it = Files.lines(manifestFile(v), StandardCharsets.UTF_8)
-    try it.iterator().asScala.foreach { l =>
-      if (l.startsWith("op=")) op = l.stripPrefix("op=")
-      else if (l.startsWith("ts=")) ts = Some(l.stripPrefix("ts=").toLong)
-    } finally it.close()
-    (op, ts)
-  }
+  def historyDetail: Seq[(Long, String, Option[Long])] =
+    (0L to currentVersion).filter(commit.has)
+      .map { v => val (op, ts) = commit.header(v); (v, op, ts) }
 
   /** TIME TRAVEL by wall-clock (Delta `TIMESTAMP AS OF`): the snapshot of
    *  the LATEST commit published at or before `epochMs` — Delta's rule
@@ -329,12 +163,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   /** The version [[readTimestampAsOf]] resolves `epochMs` to — the latest
    *  commit published at or before it (Delta's resolution rule). */
   def versionAtTimestamp(epochMs: Long): Long = {
-    require(exists, s"LakeTable at $root does not exist")
-    val candidates = (0L to currentVersion)
-      .filter(v => Files.exists(manifestFile(v)))
-      .flatMap { v => manifestHeader(v)._2.collect {
-        case ts if ts <= epochMs => v
-      } }
+    val candidates = historyDetail.collect { case (v, _, Some(ts)) if ts <= epochMs => v }
     require(candidates.nonEmpty,
       s"no commit at or before epoch ms $epochMs in $root " +
         "(timestamp precedes the table's first commit)")
@@ -349,26 +178,21 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  `vacuum` reclaims them, and the restore itself can be restored over.
    *  Fails loudly if `v`'s data dirs have already been vacuumed. Like
    *  Delta, the change feed does not span a restore (it is a rewrite-class
-   *  commit, not row-level change). */
+   *  commit, not row-level change). The transaction ledger carries the
+   *  current entries forward, except a gold dimension's build record
+   *  ([[LakeTable.DimLedgerFamily]]), which is version `v`'s: the next
+   *  build sees the input the restored rows were built from. */
   def restore(v: Long): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(v >= 0 && v <= currentVersion,
       s"version $v out of range [0, $currentVersion]")
     val m = readManifest(v)
-    val missing = (m.entries.map(_.dir) ++ m.deleteVectors)
-      .filterNot(d => Files.isDirectory(Paths.get(root, d)))
-    require(missing.isEmpty,
-      s"cannot restore to vacuumed version $v (missing ${missing.mkString(", ")})")
-    commitWithRetry { () =>
-      val cur = currentVersion
-      val curM = readManifest(cur)
-      (Manifest(m.schema, m.pcol, m.entries, "restore",
-        cdfEnabled = curM.cdfEnabled, statsCols = m.statsCols,
-        fileStats = m.fileStats, constraints = m.constraints,
-        generated = m.generated, deleteVectors = m.deleteVectors,
-        txns = curM.txns, droppedCols = curM.droppedCols,
-        bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-        clusterKey = m.clusterKey), cur + 1)
+    requireRetained(m, s"cannot restore to vacuumed version $v")
+    // the ledger moves forward, except the dimension-build record: it
+    // describes the rows, so it comes back with them
+    def dimRecord(t: (String, Long)) = t._1.startsWith(DimLedgerFamily)
+    commit.latest("restore") { cur =>
+      m.copy(cdfEnabled = cur.cdfEnabled, droppedCols = cur.droppedCols,
+        txns = cur.txns.filterNot(dimRecord) ++ m.txns.filter(dimRecord))
     }
   }
 
@@ -397,7 +221,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     cloneTo(targetRoot, deep = true)
 
   private def cloneTo(targetRoot: String, deep: Boolean): LakeTable = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     val m = manifest
     val dst = new LakeTable(spark, targetRoot, clock)
     require(!dst.exists, s"clone target $targetRoot already exists")
@@ -420,14 +243,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     m.entries.map(e => bloomIndexFile(e.dir)).filter(Files.exists(_)).foreach { src =>
       adopt(src, Paths.get(targetRoot, "_bloom", src.getFileName.toString))
     }
-    require(dst.tryCommit(Manifest(m.schema, m.pcol, m.entries, "clone",
-      cdfEnabled = m.cdfEnabled, statsCols = m.statsCols,
-      fileStats = m.fileStats, constraints = m.constraints,
-      generated = m.generated, deleteVectors = m.deleteVectors,
-      txns = m.txns, droppedCols = m.droppedCols,
-      bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-      clusterKey = m.clusterKey), 0L),
-      s"clone target $targetRoot was created concurrently")
+    dst.commit.pinned("clone", -1L, m)(identity)
     dst
   }
 
@@ -466,24 +282,20 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  (a violating batch fails BEFORE commit). NULL predicate results count as
    *  violations (three-valued logic, matching the expectations gate). */
   def addCheckConstraint(name: String, expression: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(name.nonEmpty && !name.contains(':'), s"bad constraint name $name")
     // validation runs INSIDE the commit loop against the exact snapshot the
     // constraint commit lands on top of: a concurrent append racing this add
     // loses the CAS, we re-read the grown snapshot and re-validate it — no
     // check-then-commit window where unvalidated data slips under an active
     // constraint (mirrors Delta's metadata-conflict detection)
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("constraint") { cur =>
       require(!cur.constraints.exists(_._1 == name),
         s"constraint $name already exists")
       val bad = snapshot(cur)
         .filter(!coalesce(expr(expression), lit(false))).limit(1).count()
       require(bad == 0,
         s"cannot add CHECK constraint $name ($expression): existing rows violate it")
-      (cur.copy(op = "constraint", cdfDir = None, commitTsMs = None,
-        constraints = cur.constraints :+ (name -> expression)), v + 1)
+      cur.copy(constraints = cur.constraints :+ (name -> expression))
     }
   }
 
@@ -493,41 +305,29 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  prune (the index is an optimization, never a filter). `optimizeCompact`
    *  or `compact` re-writes old data under the new index. */
   def addBloomFilterColumn(c: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("index") { cur =>
       require(cur.schema.fieldNames.contains(c), s"unknown column $c")
       require(!cur.pcol.contains(c),
         s"$c is the partition column — the Hive layout already prunes it")
       require(!cur.bloomCols.contains(c), s"$c is already bloom-indexed")
-      (cur.copy(op = "index", cdfDir = None, commitTsMs = None,
-        bloomCols = cur.bloomCols :+ c), v + 1)
+      cur.copy(bloomCols = cur.bloomCols :+ c)
     }
   }
 
   /** DROP a bloom-index column (metadata-only; sidecars for it become dead
    *  weight until their data dirs rotate out). */
   def dropBloomFilterColumn(c: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("index") { cur =>
       require(cur.bloomCols.contains(c), s"$c is not bloom-indexed")
-      (cur.copy(op = "index", cdfDir = None, commitTsMs = None,
-        bloomCols = cur.bloomCols.filterNot(_ == c)), v + 1)
+      cur.copy(bloomCols = cur.bloomCols.filterNot(_ == c))
     }
   }
 
   /** DROP a CHECK constraint (metadata-only commit). */
   def dropCheckConstraint(name: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("constraint") { cur =>
       require(cur.constraints.exists(_._1 == name), s"no constraint named $name")
-      (cur.copy(op = "constraint", cdfDir = None, commitTsMs = None,
-        constraints = cur.constraints.filterNot(_._1 == name)), v + 1)
+      cur.copy(constraints = cur.constraints.filterNot(_._1 == name))
     }
   }
 
@@ -544,34 +344,23 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * is refused. Time travel to pre-drop versions still serves the column.
    */
   def dropColumn(colName: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    def refs(e: String): Boolean =
-      spark.sessionState.sqlParser.parseExpression(e).collect {
-        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-            if a.nameParts.head.equalsIgnoreCase(colName) => a
-      }.nonEmpty
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
-      val f = cur.schema.fields.find(_.name.equalsIgnoreCase(colName))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no column $colName in ${cur.schema.fieldNames.mkString(",")}"))
+    commit.latest("alter") { cur =>
+      val f = fieldOf(cur, colName)
       val c = f.name
       require(cur.schema.fields.length > 1, "cannot drop the only column")
       require(!cur.pcol.contains(c), s"cannot drop partition column $c")
-      cur.constraints.foreach { case (n, e) => require(!refs(e),
+      cur.constraints.foreach { case (n, e) => require(!references(e, c),
         s"constraint $n references $c — drop the constraint first") }
-      cur.generated.foreach { case (g, e) => require(g == c || !refs(e),
+      cur.generated.foreach { case (g, e) => require(g == c || !references(e, c),
         s"generated column $g is computed from $c — drop it first") }
       val pc = physName(cur, c) // files carry the physical name forever
-      (cur.copy(op = "alter", cdfDir = None, commitTsMs = None,
-        schema = StructType(cur.schema.fields.filterNot(_.name == c)),
+      cur.copy(schema = StructType(cur.schema.fields.filterNot(_.name == c)),
         statsCols = cur.statsCols.filterNot(_ == c),
         fileStats = cur.fileStats.map(fs => fs.copy(minMax = fs.minMax - pc)),
         generated = cur.generated.filterNot(_._1 == c),
         bloomCols = cur.bloomCols.filterNot(_ == c),
         colMap = cur.colMap.filterNot(_._1 == c),
-        droppedCols = cur.droppedCols :+ pc), v + 1)
+        droppedCols = cur.droppedCols :+ pc)
     }
   }
 
@@ -588,7 +377,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def addColumns(cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Unit =
     synchronized {
-      require(exists, s"LakeTable at $root does not exist")
       require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
       cols.foreach { case (n, _) =>
         require(!n.contains("."), s"nested column $n is not supported") }
@@ -596,17 +384,14 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         .filter(_._2.size > 1)
       require(dups.isEmpty,
         s"duplicate column name(s) in ADD COLUMNS: ${dups.keys.mkString(", ")}")
-      commitWithRetry { () =>
-        val v = currentVersion
-        val cur = readManifest(v)
+      commit.latest("alter") { cur =>
         cols.foreach { case (n, _) =>
           require(!cur.schema.fieldNames.exists(_.equalsIgnoreCase(n)),
             s"column $n already exists") }
         val incoming = StructType(cols.map { case (n, dt) =>
           org.apache.spark.sql.types.StructField(n, dt, nullable = true) })
         rejectTombstoned(cur, incoming)
-        (cur.copy(op = "alter", cdfDir = None, commitTsMs = None,
-          schema = StructType(cur.schema.fields ++ incoming.fields)), v + 1)
+        cur.copy(schema = StructType(cur.schema.fields ++ incoming.fields))
       }
     }
 
@@ -628,16 +413,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def alterColumnType(colName: String,
       to: org.apache.spark.sql.types.DataType): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("alter") { cur =>
       require(wideningOn(cur),
         s"ALTER COLUMN TYPE needs TBLPROPERTIES ('${LakeTable.TypeWideningProp}' " +
           "= 'true') — widening is opt-in (Delta's rule)")
-      val f = cur.schema.fields.find(_.name.equalsIgnoreCase(colName))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no column $colName in ${cur.schema.fieldNames.mkString(",")}"))
+      val f = fieldOf(cur, colName)
       require(f.dataType != to, s"column ${f.name} already has type ${to.simpleString}")
       require(LakeTable.widensTo(f.dataType, to),
         s"${f.dataType.simpleString} → ${to.simpleString} is not a lossless " +
@@ -650,8 +430,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       // post-widen appends write files with stats in the new type
       val widened = StructType(cur.schema.fields.map(x =>
         if (x.name == f.name) x.copy(dataType = to) else x))
-      (cur.copy(op = "alter", cdfDir = None, commitTsMs = None,
-        schema = widened, fileStats = statsUnder(cur, widened)), v + 1)
+      cur.copy(schema = widened, fileStats = statsUnder(cur, widened))
     }
   }
 
@@ -671,21 +450,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * rewritten), as is adopting an existing or tombstoned name.
    */
   def renameColumn(oldName: String, newName: String): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(newName.nonEmpty && !newName.contains("."),
       s"bad column name '$newName'")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
-      val f = cur.schema.fields.find(_.name.equalsIgnoreCase(oldName))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no column $oldName in ${cur.schema.fieldNames.mkString(",")}"))
+    commit.latest("rename") { cur =>
+      val f = fieldOf(cur, oldName)
       val c = f.name
-      def refs(e: String): Boolean =
-        spark.sessionState.sqlParser.parseExpression(e).collect {
-          case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-              if a.nameParts.head.equalsIgnoreCase(c) => a
-        }.nonEmpty
       require(!cur.schema.fieldNames.exists(n => n != c && n.equalsIgnoreCase(newName)),
         s"column $newName already exists")
       require(!cur.droppedCols.exists(_.equalsIgnoreCase(newName)),
@@ -695,23 +464,34 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         l != c && l != ph && ph.equalsIgnoreCase(newName) },
         s"$newName is the physical name of another renamed column — old " +
           "files still carry its bytes")
-      cur.constraints.foreach { case (n, e) => require(!refs(e),
+      cur.constraints.foreach { case (n, e) => require(!references(e, c),
         s"constraint $n references $c — drop the constraint first") }
-      cur.generated.foreach { case (g, e) => require(g != c && !refs(e),
+      cur.generated.foreach { case (g, e) => require(g != c && !references(e, c),
         s"generated column $g is defined as '$e' — renames do not rewrite " +
           "expressions; drop the generated column first") }
       val phys = physName(cur, c)
       val newMap = cur.colMap.filterNot(_._1 == c) ++
         (if (phys == newName) Nil else Seq(newName -> phys))
-      (cur.copy(op = "rename", cdfDir = None, commitTsMs = None,
-        schema = StructType(cur.schema.fields.map(x =>
-          if (x.name == c) x.copy(name = newName) else x)),
+      cur.copy(schema = StructType(cur.schema.fields.map(x =>
+        if (x.name == c) x.copy(name = newName) else x)),
         pcol = cur.pcol.map(p => if (p == c) newName else p),
         statsCols = cur.statsCols.map(x => if (x == c) newName else x),
         bloomCols = cur.bloomCols.map(x => if (x == c) newName else x),
-        colMap = newMap), v + 1)
+        colMap = newMap)
     }
   }
+
+  /** Whether SQL expression `e` references column `c` (case-insensitive). */
+  private def references(e: String, c: String): Boolean =
+    spark.sessionState.sqlParser.parseExpression(e).exists {
+      case a: UnresolvedAttribute => a.nameParts.head.equalsIgnoreCase(c)
+      case _ => false
+    }
+
+  /** The field of `m`'s schema named `name`, case-insensitively. */
+  private def fieldOf(m: Manifest, name: String) =
+    m.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(throw new
+      IllegalArgumentException(s"no column $name in ${m.schema.fieldNames.mkString(",")}"))
 
   /** Current logical → physical column mapping (renamed columns only). */
   def columnMapping: Map[String, String] = manifest.colMap.toMap
@@ -725,36 +505,37 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * version that enabled it).
    */
   def setTableProperties(kvs: Map[String, String]): Unit = {
-    // reserved namespaces (Delta likewise reserves delta.*): the identity
-    // sequence state, column DEFAULTs, and the clustering key are managed
-    // by their dedicated DDL — a raw SET could bypass their validation
-    // (e.g. a malformed identity spec would MatchError every later append)
-    val reserved = kvs.keys.filter(k =>
+    refuseReserved(kvs.keys,
+      "IDENTITY at CREATE, ALTER COLUMN SET DEFAULT, ALTER TABLE CLUSTER BY")
+    setTablePropertiesInternal(kvs)
+  }
+
+  /** Reserved namespaces (Delta likewise reserves delta.*): the identity
+   *  sequence state, column DEFAULTs, and the clustering key are managed
+   *  by their dedicated DDL, named by `ddl` — a raw SET or UNSET could
+   *  bypass their validation (e.g. a malformed identity spec would
+   *  MatchError every later append). */
+  private def refuseReserved(keys: Iterable[String], ddl: String): Unit = {
+    val reserved = keys.filter(k =>
       k.startsWith(LakeTable.IdentityPropPrefix) ||
         k.startsWith(LakeTable.DefaultPropPrefix) ||
         k == LakeTable.ClusterByProp)
     require(reserved.isEmpty,
       s"table propert${if (reserved.size == 1) "y" else "ies"} " +
-        s"${reserved.mkString(", ")} are reserved — use the dedicated DDL " +
-        "(IDENTITY at CREATE, ALTER COLUMN SET DEFAULT, ALTER TABLE CLUSTER BY)")
-    setTablePropertiesInternal(kvs)
+        s"${reserved.mkString(", ")} are reserved — use the dedicated DDL ($ddl)")
   }
 
   private def setTablePropertiesInternal(
       kvs: Map[String, String]): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(kvs.nonEmpty, "SET TBLPROPERTIES with no properties")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
+    commit.latest("properties") { cur =>
       val cdf = kvs.get(LakeTable.ChangeFeedProp) match {
         case Some(x) => x.trim.toLowerCase(java.util.Locale.ROOT) == "true"
         case None => cur.cdfEnabled
       }
       val merged = (cur.props.toMap ++ (kvs - LakeTable.ChangeFeedProp))
         .toSeq.sortBy(_._1)
-      (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-        props = merged, cdfEnabled = cdf), v + 1)
+      cur.copy(props = merged, cdfEnabled = cdf)
     }
   }
 
@@ -762,29 +543,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  (Delta's IF EXISTS semantics). Unsetting `enableChangeFeed` disables
    *  capture for subsequent commits. */
   def unsetTableProperties(keys: Seq[String]): Unit = {
-    val reserved = keys.filter(k =>
-      k.startsWith(LakeTable.IdentityPropPrefix) ||
-        k.startsWith(LakeTable.DefaultPropPrefix) ||
-        k == LakeTable.ClusterByProp)
-    require(reserved.isEmpty,
-      s"table propert${if (reserved.size == 1) "y" else "ies"} " +
-        s"${reserved.mkString(", ")} are reserved — use the dedicated DDL " +
-        "(ALTER COLUMN DROP DEFAULT, ALTER TABLE CLUSTER BY NONE; " +
-        "identity state cannot be unset)")
+    refuseReserved(keys, "ALTER COLUMN DROP DEFAULT, ALTER TABLE CLUSTER BY NONE; " +
+      "identity state cannot be unset")
     unsetTablePropertiesInternal(keys)
   }
 
   private def unsetTablePropertiesInternal(keys: Seq[String]): Unit = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(keys.nonEmpty, "UNSET TBLPROPERTIES with no keys")
-    commitWithRetry { () =>
-      val v = currentVersion
-      val cur = readManifest(v)
-      val cdf = if (keys.contains(LakeTable.ChangeFeedProp)) false
-        else cur.cdfEnabled
-      (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-        props = cur.props.filterNot(p => keys.contains(p._1)),
-        cdfEnabled = cdf), v + 1)
+    commit.latest("properties") { cur =>
+      cur.copy(props = cur.props.filterNot(p => keys.contains(p._1)),
+        cdfEnabled = cur.cdfEnabled && !keys.contains(LakeTable.ChangeFeedProp))
     }
   }
 
@@ -798,7 +566,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  Partitioned tables are refused — Delta's rule: liquid clustering and
    *  Hive-style partitioning are exclusive layouts. */
   def setClusterBy(cols: Seq[String]): Unit = {
-    require(exists, s"LakeTable at $root does not exist")
     if (cols.isEmpty) unsetTablePropertiesInternal(Seq(LakeTable.ClusterByProp))
     else {
       require(partitionColumn.isEmpty,
@@ -1341,126 +1108,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       .parquet(s"$root/data/*"))
   }
 
-  /** Conditional put of manifest `m` as version `next`: stage to a temp
-   *  file, hard-link it to the manifest path — atomic, and EEXIST if another
-   *  writer already committed `next`. Returns whether this writer won. */
-  private def dirLine(prefix: String, e: DirEntry): String = {
-    val ownedPart = e.owned.map(_.map(b64e).mkString(",")).getOrElse("")
-    if (e.clustered) s"$prefix${e.dir}|$ownedPart|c"
-    else e.owned match {
-      case None => s"$prefix${e.dir}"
-      case Some(_) => s"$prefix${e.dir}|$ownedPart"
-    }
-  }
-
-  private def fstatLine(fs: FileStat): String =
-    (b64e(fs.path) +: fs.minMax.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-      s"${b64e(c)}:${b64e(mn)}:${b64e(mx)}"
-    }).mkString("fstat=", "|", "")
-
-  /** Delta-encode `m`'s O(files) body against its parent, or None when a
-   *  full checkpoint is due: v0, every
-   *  [[LakeTable.ManifestCheckpointInterval]]th commit in a chain, a parent
-   *  that can't be read, a diff no smaller than the full body
-   *  (overwrite/compact-class rewrites), or — the safety net — a diff whose
-   *  in-memory resolution does not reproduce `m` exactly. */
-  private def deltaBodyFor(m: Manifest, next: Long,
-      fullBody: Seq[String]): Option[Seq[String]] = {
-    if (next == 0) return None
-    val pv = next - 1
-    if (!Files.exists(manifestFile(pv))) return None
-    val chain = chainLenOf(pv)
-    if (chain + 1 >= LakeTable.ManifestCheckpointInterval) return None
-    val parent = try readManifest(pv) catch { case scala.util.control.NonFatal(_) => return None }
-    val parentDirs = parent.entries.map(e => e.dir -> e).toMap
-    val newDirs = m.entries.map(e => e.dir -> e).toMap
-    val rm = parent.entries.filterNot(e => newDirs.get(e.dir).contains(e)).map(_.dir)
-    val add = m.entries.filterNot(e => parentDirs.get(e.dir).contains(e))
-    val parentStats = parent.fileStats.map(f => f.path -> f).toMap
-    val addStats = m.fileStats.filterNot(f => parentStats.get(f.path).contains(f))
-    // verify: the reader's resolution of this diff must reproduce m exactly
-    val rmSet = rm.toSet
-    val addPaths = addStats.map(_.path).toSet
-    val resolvedEntries = parent.entries.filterNot(e => rmSet(e.dir)) ++ add
-    val resolvedStats = parent.fileStats.filterNot(f =>
-      addPaths(f.path) || rmSet.exists(d => f.path.startsWith(d + "/"))) ++ addStats
-    if (resolvedEntries.toSet != m.entries.toSet ||
-        resolvedStats.toSet != m.fileStats.toSet) return None
-    val delta = Seq(s"base=$pv", s"chain=${chain + 1}") ++
-      rm.map(d => s"rmdir=$d") ++
-      add.map(dirLine("adddir=", _)) ++
-      addStats.map(fstatLine)
-    if (delta.size >= fullBody.size + 2) None else Some(delta)
-  }
-
-  /** Publish `m` as version `next` via hard-link CAS. The manifest LOG uses
-   *  Delta Lake's discipline (delta log + `delta.checkpointInterval`-style
-   *  checkpoints, default 10): between checkpoints a commit records only the
-   *  dirs/file-stats it added or removed, so a one-file append to a
-   *  million-file table writes O(new files) manifest bytes, not O(table) —
-   *  the shape that keeps per-commit metadata cost flat at 100 TB. Readers
-   *  resolve at most one checkpoint + interval-1 deltas per snapshot load. */
-  private def tryCommit(m: Manifest, next: Long): Boolean = {
-    Files.createDirectories(commitsDir)
-    val header = Seq(s"schema=${b64e(m.schema.toDDL)}", s"op=${m.op}",
-      s"ts=${clock()}") ++
-      m.pcol.map(p => s"pcol=$p").toSeq ++
-      (if (m.cdfEnabled) Seq("cdf=on") else Nil) ++
-      m.cdfDir.map(d => s"cdfdir=$d").toSeq ++
-      (if (m.statsCols.nonEmpty)
-        Seq(s"statscols=${m.statsCols.map(b64e).mkString(",")}") else Nil) ++
-      m.constraints.sortBy(_._1).map { case (n, e) => s"check=${b64e(n)}:${b64e(e)}" } ++
-      m.generated.sortBy(_._1).map { case (n, e) => s"gen=${b64e(n)}:${b64e(e)}" } ++
-      m.deleteVectors.map(d => s"dv=$d") ++
-      (if (m.bloomCols.nonEmpty)
-        Seq(s"bloomcols=${m.bloomCols.map(b64e).mkString(",")}") else Nil) ++
-      m.txns.sortBy(_._1).map { case (a, tv) => s"txn=${b64e(a)}:$tv" } ++
-      (if (m.droppedCols.nonEmpty)
-        Seq(s"dropped=${m.droppedCols.map(b64e).mkString(",")}") else Nil) ++
-      (if (m.colMap.nonEmpty)
-        Seq(s"colmap=${m.colMap.sortBy(_._1).map { case (l, p) =>
-          s"${b64e(l)}:${b64e(p)}" }.mkString(",")}") else Nil) ++
-      m.props.sortBy(_._1).map { case (k, v) => s"prop=${b64e(k)}:${b64e(v)}" } ++
-      (if (m.clusterKey.nonEmpty)
-        Seq(s"ckey=${m.clusterKey.map(b64e).mkString(",")}") else Nil)
-    val fullBody = m.entries.map(dirLine("dir=", _)) ++ m.fileStats.map(fstatLine)
-    val lines = deltaBodyFor(m, next, fullBody) match {
-      // base=/chain= lead the file so chain-depth probes read 2 lines only
-      case Some(delta) => delta.take(2) ++ header ++ delta.drop(2)
-      case None => header ++ fullBody
-    }
-    val staged = commitsDir.resolve(s".stage-${UUID.randomUUID()}")
-    Files.write(staged, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    val won =
-      try { Files.createLink(manifestFile(next), staged); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-      finally Files.deleteIfExists(staged)
-    if (won) {
-      // refresh the pointer cache (stale/regressed values are harmless:
-      // currentVersion probes forward past them)
-      val tmp = Paths.get(root, s"_VERSION.tmp.${UUID.randomUUID()}")
-      Files.write(tmp, next.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, versionFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-    won
-  }
-
-  /** Commit on top of whatever the current version is, retrying lost races —
-   *  sound only when `mkManifest` re-derives the manifest from the LATEST
-   *  snapshot on each attempt (append/overwrite). */
-  private def commitWithRetry(mkManifest: () => (Manifest, Long)): Unit = {
-    var attempts = 0
-    var done = false
-    while (!done) {
-      val (m, next) = mkManifest()
-      done = tryCommit(m, next)
-      attempts += 1
-      if (!done && attempts >= 100)
-        throw new ConcurrentWriteException(
-          s"lost $attempts consecutive commit races at $root")
-    }
-  }
-
   /** Create an empty table (idempotent). `partitionBy` fixes the partition
    *  column for the table's lifetime; `enableChangeFeed` turns on O8 change
    *  data capture — every later MERGE materializes its row-level changes for
@@ -1505,12 +1152,13 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       }
       Files.createDirectories(Paths.get(root))
       // idempotent: losing the v0 race means someone else created the table
-      tryCommit(Manifest(schema, partitionBy, Nil, "create",
-        cdfEnabled = enableChangeFeed,
+      try commit.pinned("create", -1L, Commit.Empty)(_.copy(schema = schema,
+        pcol = partitionBy, cdfEnabled = enableChangeFeed,
         statsCols = statsColumns.filterNot(partitionBy.contains),
         generated = generatedColumns.toSeq.sortBy(_._1),
         bloomCols = bloomFilterColumns.filterNot(partitionBy.contains),
-        props = identProps), 0L)
+        props = identProps))
+      catch { case _: ConcurrentWriteException => false }
     }
     this
   }
@@ -1659,14 +1307,13 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val scols = statsColumns.filterNot(partitionBy.contains)
     val bcols = bloomFilterColumns.filterNot(partitionBy.contains)
     writeBloomIndex(dir, inferred, partitionBy, bcols)
-    val committed = tryCommit(Manifest(inferred, partitionBy,
-      Seq(DirEntry(dir, owned)), "convert", statsCols = scols,
-      fileStats = collectFileStats(dir, inferred, partitionBy, scols),
-      bloomCols = bcols), 0L)
-    if (!committed) {
-      deleteRecursively(Paths.get(root, dir))
-      throw new ConcurrentWriteException(
-        s"another writer created a table at $root during CONVERT")
+    val fstats = collectFileStats(dir, inferred, partitionBy, scols)
+    try commit.pinned("convert", -1L, Commit.Empty)(_.copy(schema = inferred,
+      pcol = partitionBy, entries = Seq(DirEntry(dir, owned)), statsCols = scols,
+      fileStats = fstats, bloomCols = bcols))
+    catch { case e: ConcurrentWriteException => // another writer created the table
+      reclaimDir(dir)
+      throw e
     }
     this
   }
@@ -2372,8 +2019,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     appendImpl(df0, mergeSchema, Some(appId -> txnVersion))
   }
 
-  private case class TxnAlreadyApplied() extends RuntimeException
-
   /** Highest `txnVersion` the manifest's transaction ledger records for
    *  `appId` (Delta's `DeltaTable.txnVersion` probe — the read side of the
    *  idempotent-writer protocol). None before the app's first commit or on
@@ -2387,100 +2032,50 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  feed). The version-must-advance rule of [[appendIdempotent]] applies:
    *  a stale or replayed version is a no-op (returns false). Used by
    *  incremental flows whose data effect is itself idempotent (guarded
-   *  merges) to advance their source-version ledger crash-safely: the
-   *  ledger rides the manifest, so it snapshots, restores, and clones with
-   *  the table — no side file to half-write. */
+   *  merges) to advance their source-version ledger crash-safely, and by
+   *  flows whose content landed in a commit that could carry only ONE
+   *  ledger entry (a multi-source MV bootstrap: the overwrite carries the
+   *  first source's stamp, the rest land here — a crash before this stamp
+   *  leaves that source's ledger absent, which re-bootstraps: one extra
+   *  recompute, never a double-applied window). The ledger rides the
+   *  manifest, so it snapshots, restores, and clones with the table — no
+   *  side file to half-write. */
   def recordTxn(appId: String, txnVersion: Long): Boolean = synchronized {
     require(exists, s"recordTxn target $root does not exist")
     require(appId.nonEmpty, "recordTxn needs a non-empty appId")
-    try {
-      commitWithRetry { () =>
-        val v = currentVersion
-        val cur = readManifest(v)
-        if (cur.txns.exists { case (a, tv) => a == appId && tv >= txnVersion })
-          throw TxnAlreadyApplied()
-        (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-          txns = cur.txns.filterNot(_._1 == appId) :+ (appId -> txnVersion)),
-          v + 1)
-      }
-      true
-    } catch { case TxnAlreadyApplied() => false }
-  }
-
-  /** Upsert `appId`'s transaction-ledger entry in a METADATA-ONLY commit —
-   *  for flows whose content landed in a commit that could carry only ONE
-   *  ledger entry (a multi-source MV bootstrap: the overwrite carries the
-   *  first source's stamp, the rest land here). The ledger never regresses
-   *  (same rule as txn-carrying writes); a crash before this stamp leaves
-   *  that source's ledger absent, which re-bootstraps — one extra
-   *  recompute, never a double-applied window. No-op (false) when the
-   *  recorded high-water is already at/past `version`. */
-  def stampTxn(appId: String, version: Long): Boolean = synchronized {
-    require(exists, s"stampTxn target $root does not exist")
-    try {
-      commitWithRetry { () =>
-        val v = currentVersion
-        val cur = readManifest(v)
-        if (cur.txns.exists { case (a, tv) => a == appId && tv >= version })
-          throw TxnAlreadyApplied()
-        (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-          txns = cur.txns.filterNot(_._1 == appId) :+ (appId -> version)),
-          v + 1)
-      }
-      true
-    } catch { case TxnAlreadyApplied() => false }
+    val txn = Some(appId -> txnVersion)
+    commit.latest("properties", txn) { cur =>
+      if (txnAppliedIn(cur, txn)) throw Commit.Unchanged
+      cur
+    }
   }
 
   /** Remove `appId`'s transaction-ledger entry (metadata-only commit) —
    *  the full-refresh primitive: a flow whose target was rebuilt from
    *  scratch must re-bootstrap instead of resuming from a ledger that
-   *  now describes wiped state. No-op (false) when the entry is absent. */
-  def clearTxn(appId: String): Boolean = synchronized {
+   *  now describes wiped state. With `family`, every dot-suffixed
+   *  descendant (`appId.…`) goes in the same commit (an MV carries a
+   *  family of ledgers: per-union-branch `.uN`, dim pins `.dimpin.*`,
+   *  distinct companions `.dist.*` — a recompute overwrite must retire
+   *  them all atomically or a later incremental life resumes from ledgers
+   *  describing replaced state); the dot boundary keeps sibling ids that
+   *  merely share a name prefix (`…mv.panel` vs `…mv.panel2`) untouched.
+   *  No-op (false) when no entry matches. */
+  def clearTxn(appId: String, family: Boolean = false): Boolean = synchronized {
     require(exists, s"clearTxn target $root does not exist")
-    try {
-      commitWithRetry { () =>
-        val v = currentVersion
-        val cur = readManifest(v)
-        if (!cur.txns.exists(_._1 == appId)) throw TxnAlreadyApplied()
-        (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-          txns = cur.txns.filterNot(_._1 == appId)), v + 1)
-      }
-      true
-    } catch { case TxnAlreadyApplied() => false }
-  }
-
-  /** Remove `appId`'s ledger entry AND every dot-suffixed descendant
-   *  (`appId.…`) in ONE metadata commit — the multi-ledger [[clearTxn]]
-   *  (an MV carries a family of ledgers: per-union-branch `.uN`, dim pins
-   *  `.dimpin.*`, distinct companions `.dist.*` — a recompute overwrite
-   *  must retire them all atomically or a later incremental life resumes
-   *  from ledgers describing replaced state). The dot boundary keeps
-   *  sibling ids that merely share a name prefix (`…mv.panel` vs
-   *  `…mv.panel2`) untouched. No-op (false) when none match. */
-  def clearTxnFamily(appId: String): Boolean = synchronized {
-    require(exists, s"clearTxnFamily target $root does not exist")
-    def inFamily(id: String): Boolean =
-      id == appId || id.startsWith(appId + ".")
-    try {
-      commitWithRetry { () =>
-        val v = currentVersion
-        val cur = readManifest(v)
-        if (!cur.txns.exists(t => inFamily(t._1))) throw TxnAlreadyApplied()
-        (cur.copy(op = "properties", cdfDir = None, commitTsMs = None,
-          txns = cur.txns.filterNot(t => inFamily(t._1))), v + 1)
-      }
-      true
-    } catch { case TxnAlreadyApplied() => false }
+    def hit(t: (String, Long)) = t._1 == appId || (family && t._1.startsWith(appId + "."))
+    commit.latest("properties") { cur =>
+      if (!cur.txns.exists(hit)) throw Commit.Unchanged
+      cur.copy(txns = cur.txns.filterNot(hit))
+    }
   }
 
   private def appendImpl(df0: DataFrame, mergeSchema: Boolean,
       txn: Option[(String, Long)]): Boolean = {
     Files.createDirectories(Paths.get(root))
     val m0 = if (exists) Some(manifest) else None
-    def applied(m: Manifest): Boolean = txn.exists { case (a, tv) =>
-      m.txns.exists { case (a0, tv0) => a0 == a && tv0 >= tv } }
     // fast path: the transaction already landed — skip before the write
-    if (m0.exists(applied)) return false
+    if (m0.exists(txnAppliedIn(_, txn))) return false
     val (pcol, scols) = m0.map(m => (m.pcol, m.statsCols)).getOrElse((None, Nil))
     val bcols = m0.map(_.bloomCols).getOrElse(Nil)
     // fail-fast validation BEFORE the (expensive) physical write; the commit
@@ -2537,78 +2132,57 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val validatedConstraints = m0.map(_.constraints).getOrElse(Nil).toSet
     val (dir, owned, fstats) = writeData(df, pcol, scols, bloomCols = bcols,
       colMap = m0.map(_.colMap).getOrElse(Nil))
-    def withTxn(ts: Seq[(String, Long)]): Seq[(String, Long)] = txn match {
-      case None => ts
-      case Some((a, tv)) => ts.filterNot(_._1 == a) :+ (a -> tv)
-    }
     // a lost race re-reads the entry list and re-commits — the data dir is
     // already written, so append retries are manifest-only (no lost updates)
-    try {
-      commitWithRetry { () =>
-        if (exists) {
-          // snapshot the version ONCE and read THAT manifest: entry list and
-          // CAS slot must come from the same version, or a racer committing
-          // in between would make us publish a stale entry list one slot later
-          val v = currentVersion
-          val cur = readManifest(v)
-          // a concurrent replay of the SAME transaction may have won the
-          // race: re-check the ledger each attempt, never double-commit
-          if (applied(cur)) throw TxnAlreadyApplied()
-          // a concurrent addCheckConstraint may have landed after the
-          // pre-write validation: re-enforce any constraint we did not
-          // validate against, so the published table never carries data that
-          // violates an active constraint (Delta's metadata-conflict rule)
-          val unvalidated = cur.constraints.filterNot(validatedConstraints)
-          if (unvalidated.nonEmpty) enforceConstraints(df, unvalidated)
-          rejectTombstoned(cur, df.schema)
-          // identity ids were minted against a specific high-water: if a
-          // concurrent writer advanced it, committing would publish
-          // duplicate ids — refuse (the caller retries the append, which
-          // re-mints above the new high-water). Same-process appends are
-          // serialized by `synchronized`, so this only fires cross-process.
-          identBase.foreach { case (c, base) =>
-            if (identityHw(cur, c) != base)
-              throw new ConcurrentWriteException(
-                s"identity column $c advanced concurrently — retry the append")
-          }
-          val props1 =
-            if (identNew.isEmpty) cur.props
-            else cur.props.filterNot { case (k, _) => identNew.keys.exists(c =>
-                k == s"${LakeTable.IdentityPropPrefix}$c.hw") } ++
-              identNew.toSeq.sortBy(_._1).map { case (c, n) =>
-                s"${LakeTable.IdentityPropPrefix}$c.hw" -> n.toString }
-          val mergedSchema = reconcileSchema(cur.schema, df.schema, mergeSchema,
-            widen = wideningOn(cur),
-            wideBlocked =
-              if (wideningOn(cur)) wideningBlocked(cur) else Set.empty)
-          (Manifest(mergedSchema, pcol,
-            cur.entries :+ DirEntry(dir, owned), "append",
-            cur.cdfEnabled, statsCols = cur.statsCols,
-            fileStats = statsUnder(cur, mergedSchema) ++ fstats,
-            constraints = cur.constraints, generated = cur.generated,
-            deleteVectors = cur.deleteVectors, bloomCols = cur.bloomCols,
-            txns = withTxn(cur.txns), droppedCols = cur.droppedCols,
-            colMap = cur.colMap, props = props1,
-            clusterKey = cur.clusterKey), v + 1)
-        } else
-          (Manifest(df.schema, pcol, Seq(DirEntry(dir, owned)), "append",
-            statsCols = scols, fileStats = fstats, txns = withTxn(Nil)), 0L)
+    val published = try commit.latest("append", txn, create = true) { cur =>
+      // a concurrent replay of the SAME transaction may have won the
+      // race: re-check the ledger each attempt, never double-commit
+      if (txnAppliedIn(cur, txn)) throw Commit.Unchanged
+      if (cur eq Commit.Empty)
+        cur.copy(schema = df.schema, pcol = pcol, entries = Seq(DirEntry(dir, owned)),
+          statsCols = scols, fileStats = fstats)
+      else {
+        // a concurrent addCheckConstraint may have landed after the
+        // pre-write validation: re-enforce any constraint we did not
+        // validate against, so the published table never carries data that
+        // violates an active constraint (Delta's metadata-conflict rule)
+        val unvalidated = cur.constraints.filterNot(validatedConstraints)
+        if (unvalidated.nonEmpty) enforceConstraints(df, unvalidated)
+        rejectTombstoned(cur, df.schema)
+        // identity ids were minted against a specific high-water: if a
+        // concurrent writer advanced it, committing would publish
+        // duplicate ids — refuse (the caller retries the append, which
+        // re-mints above the new high-water). Same-process appends are
+        // serialized by `synchronized`, so this only fires cross-process.
+        identBase.foreach { case (c, base) =>
+          if (identityHw(cur, c) != base)
+            throw new ConcurrentWriteException(
+              s"identity column $c advanced concurrently — retry the append")
+        }
+        val props1 =
+          if (identNew.isEmpty) cur.props
+          else cur.props.filterNot { case (k, _) => identNew.keys.exists(c =>
+              k == s"${LakeTable.IdentityPropPrefix}$c.hw") } ++
+            identNew.toSeq.sortBy(_._1).map { case (c, n) =>
+              s"${LakeTable.IdentityPropPrefix}$c.hw" -> n.toString }
+        val mergedSchema = reconcileSchema(cur.schema, df.schema, mergeSchema,
+          widen = wideningOn(cur),
+          wideBlocked =
+            if (wideningOn(cur)) wideningBlocked(cur) else Set.empty)
+        cur.copy(schema = mergedSchema, pcol = pcol,
+          entries = cur.entries :+ DirEntry(dir, owned),
+          fileStats = statsUnder(cur, mergedSchema) ++ fstats, props = props1)
       }
-      maybeAutoCompact()
-      true
     } catch {
-      case TxnAlreadyApplied() =>
-        // the orphaned dir was never referenced by any manifest: reclaim it
-        deleteRecursively(Paths.get(root, dir))
-        Files.deleteIfExists(bloomIndexFile(dir))
-        false
       case e: ConcurrentWriteException =>
         // identity conflict (or exhausted races): the written dir carries
         // ids minted against a stale high-water — reclaim before rethrow
-        deleteRecursively(Paths.get(root, dir))
-        Files.deleteIfExists(bloomIndexFile(dir))
+        reclaimDir(dir)
         throw e
     }
+    // not published: the orphaned dir was never referenced by any manifest
+    if (published) maybeAutoCompact() else reclaimDir(dir)
+    published
     } finally identPinned.foreach { r => r.unpersist(false); () }
   }
 
@@ -2650,26 +2224,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       txn: Option[(String, Long)] = None): Unit =
     replaceAll(df, partitionBy, "overwrite", expected = None, txn = txn)
 
-  /** `expected = Some(v)`: conditional replace — the snapshot this data was
-   *  computed from must still be current, else [[ConcurrentWriteException]]
-   *  (merge/compact). `None`: last-writer-wins replace, retried on races. */
-  /** `(appId → tv)` upserted into a transaction ledger (one entry per app);
-   *  the ledger never regresses — a replayed older version keeps the
-   *  recorded high-water. The [[LakeTable.DimLedgerFamily]] holds one slot
-   *  per table: stamping one of its appIds retires the others. */
-  private def withTxnLedger(ts: Seq[(String, Long)],
-      txn: Option[(String, Long)]): Seq[(String, Long)] = txn match {
-    case None => ts
-    case Some((a, tv)) =>
-      def slot(x: String) = if (x.startsWith(DimLedgerFamily)) DimLedgerFamily else x
-      if (ts.exists { case (a0, tv0) => a0 == a && tv0 >= tv }) ts
-      else ts.filterNot { case (a0, _) => slot(a0) == slot(a) } :+ (a -> tv)
-  }
-
-  private def txnAppliedIn(m: Manifest, txn: Option[(String, Long)]): Boolean =
-    txn.exists { case (a, tv) =>
-      m.txns.exists { case (a0, tv0) => a0 == a && tv0 >= tv } }
-
   /** Run `body` on its own thread so its Spark job(s) OVERLAP the caller's
    *  next job instead of serializing behind it (guide §2.6: a commit's
    *  independent writes — change images, deletion vectors, data files — are
@@ -2685,6 +2239,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     }
   }
 
+  /** `expected = Some(v)`: conditional replace — the snapshot this data was
+   *  computed from must still be current, else [[ConcurrentWriteException]]
+   *  (merge/compact). `None`: last-writer-wins replace, retried on races. */
   private def replaceAll(df: DataFrame, partitionBy: Option[String],
       op: String, expected: Option[Long], cdfDir: Option[String] = None,
       preclustered: Boolean = false,
@@ -2712,41 +2269,24 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val (dir, owned, fstats) = writeData(df1, pcol, scols, preclustered,
       bloomCols = cur.map(_.bloomCols).getOrElse(Nil), colMap = keptMap)
     val validatedConstraints = cur.map(_.constraints).getOrElse(Nil).toSet
-    val m = Manifest(df1.schema, pcol,
-      Seq(DirEntry(dir, owned, clustered = clusteredAs.nonEmpty)), op,
-      cur.exists(_.cdfEnabled), cdfDir, statsCols = scols, fileStats = fstats,
-      txns = withTxnLedger(cur.map(_.txns).getOrElse(Nil), txn),
-      constraints = cur.map(_.constraints).getOrElse(Nil),
-      generated = cur.map(_.generated).getOrElse(Nil),
-      bloomCols = cur.map(_.bloomCols).getOrElse(Nil),
-      colMap = keptMap, props = cur.map(_.props).getOrElse(Nil),
-      clusterKey =
-        if (clusteredAs.nonEmpty) clusteredAs
-        else cur.map(_.clusterKey).getOrElse(Nil))
+    // a full rewrite read through the deletion vectors and sheds the
+    // dropped columns' bytes
+    def replaced(b: Manifest) = b.copy(schema = df1.schema, pcol = pcol,
+      entries = Seq(DirEntry(dir, owned, clustered = clusteredAs.nonEmpty)),
+      statsCols = scols, fileStats = fstats, deleteVectors = Nil, droppedCols = Nil,
+      colMap = keptMap, clusterKey = if (clusteredAs.nonEmpty) clusteredAs else b.clusterKey)
     expected match {
-      case Some(v) =>
-        if (!tryCommit(m, v + 1))
-          throw new ConcurrentWriteException(
-            s"$op computed against version $v of $root, but a concurrent " +
-              s"writer committed v${v + 1} first — recompute and retry")
+      case Some(v) => commit.pinned(op, v, cur.get, cdfDir, txn)(replaced)
       case None =>
-        commitWithRetry { () =>
-          if (exists) {
-            // re-derive table metadata from the THEN-CURRENT manifest: a
-            // constraint or generated column added after our pre-write
-            // snapshot must survive this overwrite (not be clobbered by the
-            // stale copy) and be enforced on the data we are publishing
-            val v = currentVersion
-            val c = readManifest(v)
-            val unvalidated = c.constraints.filterNot(validatedConstraints)
-            if (op == "overwrite" && unvalidated.nonEmpty)
-              enforceConstraints(df1, unvalidated)
-            // carry the THEN-CURRENT ledger: an idempotent append committed
-            // after our pre-write snapshot must not lose its txn entry
-            (m.copy(cdfEnabled = c.cdfEnabled, constraints = c.constraints,
-              generated = c.generated, bloomCols = c.bloomCols,
-              txns = withTxnLedger(c.txns, txn), props = c.props), v + 1)
-          } else (m, 0L)
+        // table metadata comes from the THEN-CURRENT manifest: a constraint
+        // or generated column added after our pre-write snapshot must
+        // survive this overwrite (not be clobbered by the stale copy) and be
+        // enforced on the data we are publishing; its ledger carries an
+        // idempotent append committed after our pre-write snapshot
+        commit.latest(op, txn, create = true) { c =>
+          val unvalidated = c.constraints.filterNot(validatedConstraints)
+          if (unvalidated.nonEmpty) enforceConstraints(df1, unvalidated)
+          replaced(c)
         }
     }
   }
@@ -2811,8 +2351,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       "WHEN MATCHED can DELETE or UPDATE, not both")
     require(!(matchedDelete && matchedDeleteWhen.nonEmpty),
       "matchedDelete (sole clause) and matchedDeleteWhen (second clause) are exclusive")
-    val v0 = currentVersion
-    val m = readManifest(v0) // merge computes against THIS snapshot
+    val (v0, m) = commit.pin() // merge computes against THIS snapshot
     // idempotent merge (Delta's txnAppId/txnVersion on MERGE): the ledger
     // entry commits ATOMICALLY with the merged data, so a replayed
     // (appId, txnVersion) — crash-retry, orchestrator re-run — is a no-op.
@@ -3134,42 +2673,36 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       mm.entries.flatMap(e => e.owned.getOrElse(Nil)
         .filter(v => partitions.exists(_(v))).map(v => (e.dir, v))).toSet
     def rebasable(mN: Manifest): Boolean =
-      partitions.nonEmpty && schema1 == m.schema && mN.schema == m.schema &&
+      schema1 == m.schema && mN.schema == m.schema &&
         mN.pcol == m.pcol && mN.cdfEnabled == m.cdfEnabled &&
         mN.statsCols == m.statsCols && mN.bloomCols == m.bloomCols &&
         mN.colMap == m.colMap && mN.droppedCols == m.droppedCols &&
         mN.constraints == m.constraints && mN.generated == m.generated &&
         mN.props == m.props && mN.deleteVectors == m.deleteVectors &&
         mN.txns == m.txns && ownTouched(mN) == ownTouched(m)
-    @scala.annotation.tailrec
-    def commit(base: Manifest, baseV: Long): Boolean = {
+    val committed = commit.pinned(op, v0, m, chDir, txn,
+        rebase = Option.when(partitions.nonEmpty)(rebasable)) { base =>
       val stats = scala.collection.mutable.ArrayBuffer.empty[FileStat]
       val kept = withoutFiles(base.copy(fileStats = statsUnder(base, schema1)),
         touched, stats)
       val whole = kept.isEmpty && partitions.isEmpty
-      if (tryCommit(Manifest(schema1, base.pcol, kept :+ DirEntry(dir, owned), op,
-          base.cdfEnabled, chDir, statsCols = base.statsCols,
-          fileStats = stats.toSeq ++ fstats, txns = withTxnLedger(base.txns, txn),
-          droppedCols = if (whole) Nil else base.droppedCols,
-          constraints = base.constraints, generated = base.generated,
-          deleteVectors = if (whole) Nil else base.deleteVectors,
-          bloomCols = base.bloomCols, colMap = base.colMap, props = base.props,
-          clusterKey = base.clusterKey), baseV + 1)) true
-      else {
-        val vN = currentVersion
-        val mN = readManifest(vN)
-        if (partitions.nonEmpty && txnAppliedIn(mN, txn)) {
-          // the unreferenced data dir is reclaimed at once
-          deleteRecursively(Paths.get(root, dir))
-          Files.deleteIfExists(bloomIndexFile(dir))
-          false
-        } else if (rebasable(mN)) commit(mN, vN)
-        else throw new ConcurrentWriteException(
-          s"$op computed against version $v0 of $root, but a concurrent " +
-            s"writer committed v${baseV + 1} first — recompute and retry")
-      }
+      base.copy(schema = schema1, entries = kept :+ DirEntry(dir, owned),
+        fileStats = stats.toSeq ++ fstats,
+        droppedCols = if (whole) Nil else base.droppedCols,
+        deleteVectors = if (whole) Nil else base.deleteVectors)
     }
-    commit(m, v0)
+    if (!committed) {
+      // a concurrent replay of the same txn won: the unreferenced data dir
+      // is reclaimed at once
+      reclaimDir(dir)
+    }
+    committed
+  }
+
+  /** Delete a data dir no manifest references, with its bloom sidecar. */
+  private def reclaimDir(dir: String): Unit = {
+    deleteRecursively(Paths.get(root, dir))
+    Files.deleteIfExists(bloomIndexFile(dir))
   }
 
   /** `m`'s entries with the `touched` files taken out, each by the cheapest
@@ -3262,9 +2795,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * materializes the deletes and clears the vectors.
    */
   def deleteWhere(condition: String): Long = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     deleteRows(m, v0, coalesce(expr(condition), lit(false)))
   }
 
@@ -3287,8 +2818,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     preds.foreach(p => require(p.lo.isDefined || p.hi.isDefined,
       s"predicate on ${p.col} has neither a lower nor an upper bound — " +
         "an unbounded ZonePred matches every row (use delete() for a full rewrite)"))
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
       s"unknown predicate column ${p.col}"))
     deleteRows(m, v0, zonePredCondition(m, preds))
@@ -3332,6 +2862,11 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     d
   }
 
+  /** On a change-feed table, write a commit's change `images` on their own
+   *  thread ([[inParallel]]); the thunk joins it (None without the feed). */
+  private def changesAside(m: Manifest)(images: => DataFrame): () => Option[String] =
+    if (m.cdfEnabled) inParallel(Some(writeChanges(m, images))) else () => None
+
   /** Write the row-id coordinates of `matches` as a fresh deletion-vector
    *  dir. Returns the root-relative dir. */
   private def writeDeleteVector(matches: DataFrame): String = {
@@ -3357,11 +2892,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       // the delete images and the DV coordinates are independent projections
       // of the pinned matches: write the images on their own thread so the
       // two jobs overlap (both dirs are vacuumable orphans if either fails)
-      val chDirF: () => Option[String] =
-        if (m.cdfEnabled) inParallel {
-          Some(writeChanges(m, matches.select(m.schema.fieldNames.map(col).toSeq: _*)
-            .withColumn(ChangeTypeCol, lit("delete"))))
-        } else () => None
+      val chDirF = changesAside(m)(matches.select(m.schema.fieldNames.map(col).toSeq: _*)
+        .withColumn(ChangeTypeCol, lit("delete")))
       val dvDir = writeDeleteVector(matches)
       val matched = deleteVectorRows(dvDir)
       if (matched == 0) {
@@ -3370,11 +2902,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         return 0L
       }
       val chDir = chDirF()
-      if (!tryCommit(m.copy(op = "delete", cdfDir = chDir, commitTsMs = None,
-          deleteVectors = m.deleteVectors :+ dvDir), v0 + 1))
-        throw new ConcurrentWriteException(
-          s"delete computed against version $v0 of $root, but a concurrent " +
-            s"writer committed v${v0 + 1} first — recompute and retry")
+      commit.pinned("delete", v0, m, chDir)(b =>
+        b.copy(deleteVectors = b.deleteVectors :+ dvDir))
       matched
     } finally { matches.unpersist(); () }
   }
@@ -3399,9 +2928,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * it transfers manifest ownership without scanning any existing data.
    */
   def overwriteWhere(condition: String, df0: DataFrame): Long = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     val cols = m.schema.fieldNames.toSeq
     val df = materializeGenerated(df0, m)
     require(df.columns.toSet == cols.toSet,
@@ -3419,12 +2946,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       try {
         // three independent consumers of the two pinned frames — DV
         // coordinates, change images, new data — overlap all three writes
-        val chDirF: () => Option[String] =
-          if (m.cdfEnabled) inParallel {
-            Some(writeChanges(m, matches.select(cols.map(col): _*)
-              .withColumn(ChangeTypeCol, lit("delete"))
-              .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
-          } else () => None
+        val chDirF = changesAside(m)(matches.select(cols.map(col): _*)
+          .withColumn(ChangeTypeCol, lit("delete"))
+          .unionByName(data.withColumn(ChangeTypeCol, lit("insert"))))
         val dvF = inParallel { writeDeleteVector(matches) }
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
@@ -3432,13 +2956,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         val dvDir = dvF()
         val replaced = deleteVectorRows(dvDir)
         val chDir = chDirF()
-        if (!tryCommit(m.copy(op = "replace", cdfDir = chDir, commitTsMs = None,
-            entries = m.entries :+ DirEntry(dir, owned),
-            fileStats = m.fileStats ++ fstats,
-            deleteVectors = m.deleteVectors :+ dvDir), v0 + 1))
-          throw new ConcurrentWriteException(
-            s"replace computed against version $v0 of $root, but a concurrent " +
-              s"writer committed v${v0 + 1} first — recompute and retry")
+        commit.pinned("replace", v0, m, chDir)(b => b.copy(
+          entries = b.entries :+ DirEntry(dir, owned), fileStats = b.fileStats ++ fstats,
+          deleteVectors = b.deleteVectors :+ dvDir))
         replaced
       } finally { matches.unpersist(); () }
     } finally { data.unpersist(); () }
@@ -3459,9 +2979,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def overwritePartitions(preds: Seq[ZonePred], df0: DataFrame): Unit =
     synchronized {
-      require(exists, s"LakeTable at $root does not exist")
-      val v0 = currentVersion
-      val m = readManifest(v0)
+      val (v0, m) = commit.pin()
       val p = m.pcol.getOrElse(throw new IllegalArgumentException(
         "overwritePartitions needs a partitioned table — use overwriteWhere"))
       require(preds.nonEmpty, "overwritePartitions with no predicate")
@@ -3485,13 +3003,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
         val replaced = partitionInRange(m, preds)
-        val keptEntries = m.entries.flatMap { e =>
-          val rest = e.owned.map(_.filterNot(replaced))
-          if (rest.exists(_.isEmpty)) None else Some(e.copy(owned = rest))
-        }
-        val keptDirs = keptEntries.map(_.dir).toSet
-        val keptStats = m.fileStats
-          .filter(fs => keptDirs.exists(d => fs.path.startsWith(d + "/")))
         val chDir =
           if (m.cdfEnabled) {
             // CDF needs the replaced rows' delete images: read ONLY the
@@ -3503,17 +3014,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
               .withColumn(ChangeTypeCol, lit("delete"))
               .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else None
-        if (!tryCommit(Manifest(m.schema, m.pcol,
-            keptEntries :+ DirEntry(dir, owned), "replace", m.cdfEnabled, chDir,
-            m.statsCols, keptStats ++ fstats, txns = m.txns,
-            droppedCols = m.droppedCols,
-            constraints = m.constraints,
-            generated = m.generated, deleteVectors = m.deleteVectors,
-            bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-            clusterKey = m.clusterKey), v0 + 1))
-          throw new ConcurrentWriteException(
-            s"replace computed against version $v0 of $root, but a concurrent " +
-              s"writer committed v${v0 + 1} first — recompute and retry")
+        commit.pinned("replace", v0, m, chDir)(
+          transferPartitions(_, replaced, DirEntry(dir, owned), fstats))
       } finally { data.unpersist(); () }
     }
 
@@ -3530,8 +3032,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   private def mutateWhere(preds: Seq[ZonePred],
       set: Option[Map[String, Column]]): Long = synchronized {
     require(preds.nonEmpty, "refusing a whole-table mutation with no predicate")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     val opName = if (set.isEmpty) "delete" else "update"
     // CoW rewrites read raw files and re-link untouched ones under new dirs —
     // both would resurrect rows a live deletion vector has removed. Delta
@@ -3599,10 +3100,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * Returns the number of rows updated.
    */
   def updateWhere(condition: String, set: Map[String, Column]): Long = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(set.nonEmpty, "UPDATE with no SET assignments")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     set.keys.foreach { c =>
       require(m.schema.fieldNames.contains(c), s"unknown update column $c")
       require(!m.generated.exists(_._1 == c),
@@ -3628,23 +3127,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       enforceConstraints(updated, m.constraints)
       // pre/post images derive from the SAME pinned matches as the updated
       // data: write them on their own thread, overlapping the data write
-      val chDirF: () => Option[String] =
-        if (m.cdfEnabled) inParallel {
-          Some(writeChanges(m, matches.select(cols.map(col): _*)
-            .withColumn(ChangeTypeCol, lit("update_preimage"))
-            .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage")))))
-        } else () => None
+      val chDirF = changesAside(m)(matches.select(cols.map(col): _*)
+        .withColumn(ChangeTypeCol, lit("update_preimage"))
+        .unionByName(updated.withColumn(ChangeTypeCol, lit("update_postimage"))))
       val (dir, owned, fstats) =
         writeData(updated, m.pcol, m.statsCols, bloomCols = m.bloomCols,
           colMap = m.colMap)
       val chDir = chDirF()
-      if (!tryCommit(m.copy(op = "update", cdfDir = chDir, commitTsMs = None,
-          entries = m.entries :+ DirEntry(dir, owned),
-          fileStats = m.fileStats ++ fstats,
-          deleteVectors = m.deleteVectors :+ dvDir), v0 + 1))
-        throw new ConcurrentWriteException(
-          s"update computed against version $v0 of $root, but a concurrent " +
-            s"writer committed v${v0 + 1} first — recompute and retry")
+      commit.pinned("update", v0, m, chDir)(b => b.copy(
+        entries = b.entries :+ DirEntry(dir, owned), fileStats = b.fileStats ++ fstats,
+        deleteVectors = b.deleteVectors :+ dvDir))
       matched
     } finally { matches.unpersist(); () }
   }
@@ -3664,9 +3156,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   private def retainedByVersions(keepVersions: Int): Seq[Manifest] = {
     val cur = currentVersion
-    (math.max(0L, cur - keepVersions + 1) to cur)
-      .filter(v => Files.exists(manifestFile(v)))
-      .map(readManifest)
+    (math.max(0L, cur - keepVersions + 1) to cur).filter(commit.has).map(readManifest)
   }
 
   /**
@@ -3703,10 +3193,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         "pass force = true to override")
     val cutoffMs = clock() - (hours * 3600 * 1000).toLong
     val cur = currentVersion
-    (0L to cur)
-      .filter(v => Files.exists(manifestFile(v)))
-      .filter(v => v == cur || manifestHeader(v)._2.forall(_ >= cutoffMs))
-      .map(readManifest)
+    historyDetail.collect {
+      case (v, _, ts) if v == cur || ts.forall(_ >= cutoffMs) => readManifest(v)
+    }
   }
 
   /** Reclaim every data/change/DV dir and bloom sidecar not referenced by
@@ -3739,8 +3228,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   /** Rewrite the whole table into a single dir (small-file compaction for
    *  tables that accumulated many append/merge dirs). */
   def compact(): Unit = synchronized {
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     replaceAll(snapshot(m), m.pcol, "compact", Some(v0))
   }
 
@@ -3795,9 +3283,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   def optimizeCompact(targetFileBytes: Long = 128L * 1024 * 1024): OptimizeStats =
     synchronized {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
-    require(exists, s"LakeTable at $root does not exist")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     val minSize = targetFileBytes / 2
     val dvFiles: Set[String] =
       if (m.deleteVectors.isEmpty) Set.empty
@@ -3838,15 +3324,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val owned = m.pcol.map(_ => m.entries.flatMap(_.owned.getOrElse(Nil)).distinct)
     writeBloomIndex(newDir, physSchema(m), m.pcol.map(physName(m, _)),
       m.bloomCols.map(physName(m, _)))
-    if (!tryCommit(Manifest(m.schema, m.pcol, Seq(DirEntry(newDir, owned)),
-        "optimize", m.cdfEnabled, None, m.statsCols, newStats.toSeq,
-        txns = m.txns, droppedCols = m.droppedCols,
-        constraints = m.constraints, generated = m.generated,
-        bloomCols = m.bloomCols, colMap = m.colMap, props = m.props,
-        clusterKey = m.clusterKey), v0 + 1))
-      throw new ConcurrentWriteException(
-        s"optimize computed against version $v0 of $root, but a concurrent " +
-          s"writer committed v${v0 + 1} first — recompute and retry")
+    commit.pinned("optimize", v0, m)(_.copy(entries = Seq(DirEntry(newDir, owned)),
+      fileStats = newStats.toSeq, deleteVectors = Nil))
     OptimizeStats(rewrittenCount, keep.size, rewriteBytes)
   }
 
@@ -3944,8 +3423,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * timestamp, or date.
    */
   def compactZOrder(zcols: Seq[String], targetFiles: Int = 16): Unit = synchronized {
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     val (clustered, release) =
       zorderClustered(snapshot(m), m, zcols, targetFiles)
     try replaceAll(clustered, m.pcol, "compact", Some(v0),
@@ -3962,8 +3440,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  LEADING columns (lexicographic), where the z-curve spreads locality
    *  evenly; pick the order accordingly. */
   def compactSort(cols: Seq[String], targetFiles: Int = 16): Unit = synchronized {
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     require(cols.nonEmpty && cols.size <= 4, "1..4 sort-cluster columns")
     cols.foreach { c =>
       require(m.schema.fieldNames.contains(c), s"unknown cluster column $c")
@@ -4004,10 +3481,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def optimizeClustered(cols: Seq[String],
       targetFileBytes: Long = 128L * 1024 * 1024): OptimizeStats = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
     require(cols.nonEmpty, "optimizeClustered needs clustering columns")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     require(m.pcol.isEmpty,
       "liquid clustering applies to unpartitioned tables only")
     val keyMatches = m.clusterKey == cols
@@ -4028,8 +3503,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     try {
       val (dir, _, fstats) = writeData(clustered, None, m.statsCols,
         preclustered = true, bloomCols = m.bloomCols, colMap = m.colMap)
-      val keptStats =
-        m.fileStats.filter(fs => keptDirs.exists(d => fs.path.startsWith(d + "/")))
       // DRAIN stale deletion vectors: the rewritten dirs' dead rows just
       // materialized away, so any DV dir whose coordinates all address
       // rewritten (now-unreferenced) files is dead weight — on a clustered
@@ -4058,16 +3531,10 @@ final class LakeTable private (val spark: SparkSession, val root: String,
             .collect().map(_.getString(0)).toSet
           m.deleteVectors.filter(liveDirs)
         }
-      if (!tryCommit(Manifest(m.schema, m.pcol,
-          kept :+ DirEntry(dir, None, clustered = true), "optimize",
-          m.cdfEnabled, None, m.statsCols, keptStats ++ fstats,
-          txns = m.txns, droppedCols = m.droppedCols,
-          constraints = m.constraints, generated = m.generated,
-          deleteVectors = keptDvs, bloomCols = m.bloomCols,
-          colMap = m.colMap, props = m.props, clusterKey = cols), v0 + 1))
-        throw new ConcurrentWriteException(
-          s"optimize computed against version $v0 of $root, but a concurrent " +
-            s"writer committed v${v0 + 1} first — recompute and retry")
+      commit.pinned("optimize", v0, m)(_.copy(
+        entries = kept :+ DirEntry(dir, None, clustered = true),
+        fileStats = statsOfDirs(m, kept.map(_.dir)) ++ fstats, deleteVectors = keptDvs,
+        clusterKey = cols))
       OptimizeStats(listParquet(Paths.get(root, dir)).size, keptFiles.size, bytes)
     } finally release()
   }
@@ -4191,9 +3658,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def optimizeWhere(preds: Seq[ZonePred], zcols: Seq[String] = Nil,
       targetFiles: Int = 16): OptimizeStats = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    val v0 = currentVersion
-    val m = readManifest(v0)
+    val (v0, m) = commit.pin()
     val p = m.pcol.getOrElse(throw new IllegalArgumentException(
       "OPTIMIZE ... WHERE needs a partitioned table — use optimizeCompact()/" +
         "compactZOrder() for whole-table maintenance"))
@@ -4222,25 +3687,26 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       try writeData(df, m.pcol, m.statsCols, preclustered = true,
         bloomCols = m.bloomCols, colMap = m.colMap)
       finally release()
-    val keptEntries = m.entries.flatMap { e =>
-      val rest = e.owned.map(_.filterNot(scopeSet))
-      if (rest.exists(_.isEmpty)) None else Some(e.copy(owned = rest))
-    }
-    val keptDirs = keptEntries.map(_.dir).toSet
-    val keptStats =
-      m.fileStats.filter(fs => keptDirs.exists(d => fs.path.startsWith(d + "/")))
-    if (!tryCommit(Manifest(m.schema, m.pcol, keptEntries :+ DirEntry(dir, owned),
-        "optimize", m.cdfEnabled, None, m.statsCols, keptStats ++ fstats,
-        txns = m.txns, droppedCols = m.droppedCols,
-        constraints = m.constraints, generated = m.generated,
-        deleteVectors = m.deleteVectors, bloomCols = m.bloomCols,
-        colMap = m.colMap, props = m.props,
-        clusterKey = m.clusterKey), v0 + 1))
-      throw new ConcurrentWriteException(
-        s"optimize computed against version $v0 of $root, but a concurrent " +
-          s"writer committed v${v0 + 1} first — recompute and retry")
+    commit.pinned("optimize", v0, m)(
+      transferPartitions(_, scopeSet, DirEntry(dir, owned), fstats))
     OptimizeStats(listParquet(Paths.get(root, dir)).size, keptFiles, scopedBytes)
   }
+
+  /** `b` with the partition values `moved` owned by the freshly written
+   *  `to` (stats `toStats`) instead: every other entry is carried as it is,
+   *  and an entry left owning nothing leaves with its stats. */
+  private def transferPartitions(b: Manifest, moved: String => Boolean, to: DirEntry,
+      toStats: Seq[FileStat]): Manifest = {
+    val kept = b.entries.flatMap { e =>
+      val rest = e.owned.map(_.filterNot(moved))
+      if (rest.exists(_.isEmpty)) None else Some(e.copy(owned = rest))
+    }
+    b.copy(entries = kept :+ to, fileStats = statsOfDirs(b, kept.map(_.dir)) ++ toStats)
+  }
+
+  /** The zone stats of the files under `dirs`. */
+  private def statsOfDirs(m: Manifest, dirs: Seq[String]): Seq[FileStat] =
+    m.fileStats.filter(fs => dirs.exists(d => fs.path.startsWith(d + "/")))
 }
 
 object LakeTable {
@@ -4392,87 +3858,6 @@ object LakeTable {
       org.apache.spark.sql.types.StringType, nullable = false),
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** One data directory of a snapshot. `owned` scopes partitioned dirs to
-   *  the partition values this entry still owns; `clustered` marks dirs
-   *  whose files were WRITTEN BY a clustering pass on the manifest's
-   *  [[Manifest.clusterKey]] — incremental `OPTIMIZE` on a liquid-clustered
-   *  table rewrites only the unflagged dirs (Delta's incremental
-   *  clustering). The flag rides the entry wherever entries are carried,
-   *  so appends/merges/DML never have to know about it; any rewrite that
-   *  produces a fresh entry defaults to unclustered, which can only cost a
-   *  re-cluster, never correctness. */
-  private case class DirEntry(dir: String, owned: Option[Seq[String]],
-      clustered: Boolean = false)
-  /** Zone map for one data file: root-relative path → per-column (min, max)
-   *  as Spark CAST-to-STRING renderings (UTC session). Columns whose min or
-   *  max is NULL in the file are absent — absent stats never prune. */
-  private case class FileStat(path: String, minMax: Map[String, (String, String)])
-  private case class Manifest(schema: StructType, pcol: Option[String],
-      entries: Seq[DirEntry], op: String,
-      cdfEnabled: Boolean = false, cdfDir: Option[String] = None,
-      statsCols: Seq[String] = Nil, fileStats: Seq[FileStat] = Nil,
-      /** Commit wall-clock (epoch ms), stamped at publish time by
-       *  [[LakeTable.tryCommit]] — never set by manifest constructors.
-       *  None for manifests written before the field existed. */
-      commitTsMs: Option[Long] = None,
-      /** CHECK constraints (name → SQL boolean expr), enforced on every
-       *  incoming batch. Name-ordered for deterministic manifests. */
-      constraints: Seq[(String, String)] = Nil,
-      /** GENERATED columns (col → SQL expr): computed when a batch omits
-       *  them, validated when it supplies them. Fixed at create time. */
-      generated: Seq[(String, String)] = Nil,
-      /** DELETION VECTORS (merge-on-read DELETE): root-relative dirs of
-       *  parquet (file STRING root-relative, pos BIGINT row index) naming
-       *  rows that are logically deleted. Reads anti-join them out; data
-       *  files are NEVER rewritten by the delete. Entries referencing files
-       *  no longer in `entries` are stale and harmless (the anti-join
-       *  cannot match). Full-rewrite commits (overwrite/compact/merge-all)
-       *  read through the vectors and clear them. */
-      deleteVectors: Seq[String] = Nil,
-      /** BLOOM-FILTER INDEX columns (Delta bloom filter index): per-file
-       *  blooms built at write time into `_bloom/<dir-uuid>.idx` sidecars;
-       *  equality predicates on these columns prune files zone maps cannot
-       *  (high-cardinality, unclustered keys). Missing sidecars (pre-index
-       *  dirs, hard-link relinks) simply never prune. */
-      bloomCols: Seq[String] = Nil,
-      /** TRANSACTION LEDGER (Delta `txnAppId`/`txnVersion` idempotent
-       *  writes): highest committed application version per writer id.
-       *  [[LakeTable.appendIdempotent]] consults it to make retried job
-       *  writes exactly-once. Carried verbatim across every commit kind.
-       *  A merge or overwrite stamping a [[LakeTable.DimLedgerFamily]]
-       *  appId replaces the family's previous entry. */
-      txns: Seq[(String, Long)] = Nil,
-      /** TOMBSTONES of metadata-only [[LakeTable.dropColumn]]s: old data
-       *  files still physically carry these columns (under their PHYSICAL
-       *  names), so re-adding one via schema evolution would RESURRECT
-       *  stale values — evolution rejects tombstoned names. Cleared by full
-       *  rewrites (overwrite/compact), which physically shed the dropped
-       *  bytes. */
-      droppedCols: Seq[String] = Nil,
-      /** COLUMN MAPPING (Delta `columnMapping.mode = name`): logical →
-       *  physical name, recorded only where they differ. A column's
-       *  physical name is fixed at creation; [[LakeTable.renameColumn]]
-       *  changes ONLY the logical name — no data file is ever rewritten.
-       *  The manifest schema, partition column, stats/bloom registrations,
-       *  constraints and generated expressions all live in LOGICAL space;
-       *  translation happens exactly at the parquet read/write boundary
-       *  (and in per-file stats/bloom/partition-dir naming, which describe
-       *  physical files and therefore stay keyed physical forever). */
-      colMap: Seq[(String, String)] = Nil,
-      /** TBLPROPERTIES (Delta table properties): free-form key → value,
-       *  name-ordered for deterministic manifests. `enableChangeFeed` is
-       *  recognized and routed to [[Manifest.cdfEnabled]] rather than
-       *  stored here. */
-      props: Seq[(String, String)] = Nil,
-      /** The clustering key the entry-level `clustered` flags refer to
-       *  (set by clustering rewrites). When the DECLARED key (the
-       *  [[LakeTable.ClusterByProp]] property) differs — e.g. after
-       *  `ALTER TABLE … CLUSTER BY` changed it — the flags are simply
-       *  ignored and the next OPTIMIZE re-clusters everything on the new
-       *  key. O(1) metadata; a constructor that forgets to carry it only
-       *  costs one extra full re-cluster. */
-      clusterKey: Seq[String] = Nil)
 
   /** DESCRIBE DETAIL row (Delta parity): current-snapshot facts. */
   final case class TableDetail(

@@ -236,7 +236,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  ledgers exist and this is metadata-read-only, zero commits. */
   private def retireMvLedgers(name: String, t: LakeTable): Unit = {
     val appId = s"graft.aggmv.$name"
-    t.clearTxnFamily(appId)
+    t.clearTxn(appId, family = true)
     val pinKeys = t.tableProperties.keys
       .filter(_.startsWith("graft.aggmv.dimpin.")).toSeq
     if (pinKeys.nonEmpty) t.unsetTableProperties(pinKeys)
@@ -2924,7 +2924,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // metadata commit, paid only when a rewind is provable.
       else if (branches.zip(curs).exists { case ((lid, _, _, _), v) =>
           t.lastTxnVersion(lid).exists(_ > v) })
-        t.clearTxnFamily(appId)
+        t.clearTxn(appId, family = true)
       // ledger rides the overwrite commit (replay re-bootstraps — same rows)
       t.overwrite(base, txn = Some(appId -> cur))
       // extra union branches' ledgers land metadata-only AFTER the
@@ -2932,7 +2932,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       // the next run re-bootstraps (one extra recompute, never a window
       // applied against the wrong base)
       branches.drop(1).zip(curs.drop(1)).foreach { case ((lid, _, _, _), v) =>
-        t.stampTxn(lid, v); () }
+        t.recordTxn(lid, v); () }
       // dim pins land in a FOLLOW-UP metadata commit: a crash in between
       // leaves stale pins, which only ever costs one extra recompute.
       // Zone-sensitive MVs additionally pin the SESSION TIMEZONE they

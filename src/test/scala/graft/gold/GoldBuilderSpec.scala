@@ -300,4 +300,33 @@ class GoldBuilderSpec extends SparkSpec {
       Seq((1L, "x", ts("2024-01-02 00:00:00"))).toDF("k", "attr", "cdc")))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
+
+  test("a restored dimension builds again over the source its restored version consumed") {
+    val (src, cfg) = lakeSource("gb_restore")
+    val gb = GoldBuilder.fixed(spark, t1)
+    val dim = LakeTable(spark, cfg.targetPath)
+    gb.buildDim(cfg, src.read)
+    src.append(Seq((3L, "c", "z", ts("2024-01-03 00:00:00"))).toDF("k", "attr", "note", "cdc"))
+    gb.buildDim(cfg, src.read)
+    assert(dim.read.count() == 3)
+    dim.restore(0)
+    assert(dim.read.count() == 2)
+    // the restored version's record names the 2-row source: the 3-row
+    // source is new input
+    assert(commits(dim)(gb.buildDim(cfg, src.read)))
+    assert(dim.read.count() == 3)
+    assert(!commits(dim)(gb.buildDim(cfg, src.read)))
+  }
+
+  test("an optimizeCompact of the dimension keeps its record: one build in all") {
+    val (src, cfg) = lakeSource("gb_optimize")
+    val gb = GoldBuilder.fixed(spark, t1)
+    val dim = LakeTable(spark, cfg.targetPath)
+    gb.buildDim(cfg, src.read)
+    assert(dim.currentVersion == 0)
+    dim.optimizeCompact()
+    assert(dim.history.last._2 == "optimize")
+    assert(jobsIn(assert(!commits(dim)(gb.buildDim(cfg, src.read)))) == 0)
+    assert(dim.read.count() == 2)
+  }
 }

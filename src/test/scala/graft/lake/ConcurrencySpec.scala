@@ -1,12 +1,13 @@
 package graft.lake
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger, AtomicReference}
 
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.SparkSpec
 
@@ -168,15 +169,18 @@ class ConcurrencySpec extends SparkSpec {
     df.select(input_file_name()).distinct().as[String].collect().toSet
 
   /** Three single-file appends of 50 ids each (1.., 1001.., 2001..) with
-    * zone maps on `id`. */
-  private def threeFiles(root: String): LakeTable = {
+    * zone maps on `id`, tagged b0, b1, b2 — the partitions of the table
+    * when `partitioned`. */
+  private def threeFiles(root: String, partitioned: Boolean = false): LakeTable = {
     val t = LakeTable(spark, root)
     t.create(Seq((0L, "", 0L)).toDF("id", "tag", "n").schema,
-      statsColumns = Seq("id"))
+      partitionBy = Option.when(partitioned)("tag"), statsColumns = Seq("id"))
     Seq(0, 1, 2).foreach(b => t.append((1 to 50)
       .map(i => (b * 1000L + i, s"b$b", 0L)).toDF("id", "tag", "n").coalesce(1)))
     t
   }
+
+  private def winnerRow: DataFrame = Seq((5000L, "winner", 0L)).toDF("id", "tag", "n")
 
   /** Run `loser` here while `winner` commits from another thread exactly
     * when the loser's first row passes [[CasGate]] — inside a Spark task,
@@ -201,10 +205,37 @@ class ConcurrencySpec extends SparkSpec {
     * snapshot is exactly the winner's (no file the loser wrote or
     * re-linked is in it), and a retry converges. */
   private def assertLostThenConverges[A](root: String, winnerRows: DataFrame)(
-      loser: => A)(retry: LakeTable => Unit): LakeTable = {
+      loser: => A)(retry: LakeTable => Unit): LakeTable =
+    assertLost(root)(loseRace(LakeTable(spark, root).append(winnerRows))(loser))(retry)
+
+  /** [[assertLostThenConverges]] for writes no user expression reaches:
+    * `loser` writes through an instance whose commit clock, on its first
+    * reading, lets a concurrent append of [[winnerRow]] commit. The clock
+    * is read inside each publish attempt, before the CAS, so the loser's
+    * first CAS targets the version the winner just took. */
+  private def assertClockLostThenConverges[A](root: String)(loser: LakeTable => A)(
+      retry: LakeTable => Unit): LakeTable = {
+    val (racer, fired) = racedByAppend(root)
+    val t = assertLost(root)(Try(loser(racer)))(retry)
+    assert(fired.get, "the loser never reached its publish")
+    t
+  }
+
+  /** An instance over `root` whose commit clock appends [[winnerRow]]
+    * through another instance on its first reading, and the flag that
+    * reading sets. */
+  private def racedByAppend(root: String): (LakeTable, AtomicBoolean) = {
+    val fired = new AtomicBoolean(false)
+    (LakeTable.withClock(spark, root, () => {
+      if (fired.compareAndSet(false, true)) LakeTable(spark, root).append(winnerRow)
+      System.currentTimeMillis()
+    }), fired)
+  }
+
+  private def assertLost(root: String)(race: => Try[_])(retry: LakeTable => Unit): LakeTable = {
     val t = LakeTable(spark, root)
     val before = liveFiles(t.read)
-    val lost = loseRace(LakeTable(spark, root).append(winnerRows))(loser)
+    val lost = race
     assert(lost.failed.toOption.exists(_.isInstanceOf[ConcurrentWriteException]),
       lost.toString)
     val winnerFiles = liveFiles(t.read.filter(col("tag") === "winner"))
@@ -248,6 +279,110 @@ class ConcurrencySpec extends SparkSpec {
     assert(t.read.filter(col("n") === 1).count() == 21)
     assert(t.read.filter(col("id").between(40, 1010) && col("n") =!= 1).count() == 0)
     assert(t.read.count() == 151)
+  }
+
+  // Every write computed against a snapshot (pinned): a lost CAS throws
+  // ConcurrentWriteException, leaves the winner's snapshot and converges.
+
+  test("a merge-on-read deleteWhere that loses its CAS throws, leaves the " +
+      "winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_dv_delete")}/t"
+    threeFiles(root)
+    val t = assertClockLostThenConverges(root)(_.deleteWhere("id <= 10"))(
+      t => assert(t.deleteWhere("id <= 10") == 10))
+    assert(t.read.count() == 141)
+    assert(t.read.filter(col("id") <= 10).count() == 0)
+  }
+
+  test("a merge-on-read updateWhere that loses its CAS throws, leaves the " +
+      "winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_dv_update")}/t"
+    threeFiles(root)
+    val t = assertClockLostThenConverges(root)(
+      _.updateWhere("id <= 10", Map("n" -> lit(1L))))(
+      t => assert(t.updateWhere("id <= 10", Map("n" -> lit(1L))) == 10))
+    assert(t.read.count() == 151)
+    assert(t.read.filter(col("n") === 1).count() == 10)
+  }
+
+  test("an overwriteWhere that loses its CAS throws, leaves the winner's " +
+      "snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_replace")}/t"
+    threeFiles(root)
+    val rows = (1 to 10).map(i => (i.toLong, "upd", 0L)).toDF("id", "tag", "n")
+    val t = assertClockLostThenConverges(root)(_.overwriteWhere("id <= 10", rows))(
+      t => assert(t.overwriteWhere("id <= 10", rows) == 10))
+    assert(t.read.count() == 151)
+    assert(t.read.filter(col("tag") === "upd").count() == 10)
+  }
+
+  test("an overwritePartitions that loses its CAS throws, leaves the " +
+      "winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_part_replace")}/t"
+    threeFiles(root, partitioned = true)
+    val b1 = Seq(LakeTable.ZonePred.eq("tag", "b1"))
+    val rows = (1 to 10).map(i => (1000L + i, "b1", 1L)).toDF("id", "tag", "n")
+    val t = assertClockLostThenConverges(root)(_.overwritePartitions(b1, rows))(
+      _.overwritePartitions(b1, rows))
+    assert(t.read.count() == 111)
+    assert(t.read.filter(col("tag") === "b1").agg(min("n"), count("*")).head() ==
+      org.apache.spark.sql.Row(1L, 10L))
+  }
+
+  test("an optimizeCompact that loses its CAS throws, leaves the winner's " +
+      "snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_opt_compact")}/t"
+    threeFiles(root)
+    val t = assertClockLostThenConverges(root)(_.optimizeCompact())(
+      t => assert(t.optimizeCompact().filesRewritten == 1))
+    assert(t.read.count() == 151)
+    assert(liveFiles(t.read).size == 1)
+  }
+
+  test("a partition-scoped optimizeWhere that loses its CAS throws, leaves " +
+      "the winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_opt_where")}/t"
+    threeFiles(root, partitioned = true)
+    val b1 = Seq(LakeTable.ZonePred.eq("tag", "b1"))
+    val b1Files = liveFiles(LakeTable(spark, root).read.filter(col("tag") === "b1"))
+    val t = assertClockLostThenConverges(root)(_.optimizeWhere(b1))(
+      t => assert(t.optimizeWhere(b1).filesRewritten == 1))
+    assert(t.read.count() == 151)
+    assert((liveFiles(t.read.filter(col("tag") === "b1")) & b1Files).isEmpty)
+  }
+
+  test("a clustered OPTIMIZE that loses its CAS throws, leaves the winner's " +
+      "snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_opt_clustered")}/t"
+    threeFiles(root)
+    val t = assertClockLostThenConverges(root)(_.optimizeClustered(Seq("id")))(
+      t => assert(t.optimizeClustered(Seq("id")).filesRewritten == 1))
+    assert(t.read.count() == 151)
+    assert(liveFiles(t.read).size == 1)
+  }
+
+  test("an overwrite pinned to its version (compact) that loses its CAS " +
+      "throws, leaves the winner's snapshot and converges on retry") {
+    val root = s"${tmpDir("conc_compact")}/t"
+    threeFiles(root)
+    val t = assertClockLostThenConverges(root)(_.compact())(_.compact())
+    assert(t.read.count() == 151)
+    assert(t.read.filter(col("tag") === "winner").count() == 1)
+    assert(t.history.last._2 == "compact")
+  }
+
+  test("a DDL commit that loses its CAS re-derives and lands on top of the winner") {
+    val root = s"${tmpDir("conc_ddl")}/t"
+    val t = threeFiles(root)
+    val v0 = t.currentVersion
+    val (racer, fired) = racedByAppend(root)
+    racer.addColumns(Seq("extra" -> StringType))
+    assert(fired.get)
+    assert(t.currentVersion == v0 + 2)
+    assert(t.history.takeRight(2).map(_._2) == Seq("append", "alter"))
+    assert(t.schema.fieldNames.toSeq == Seq("id", "tag", "n", "extra"))
+    assert(t.read.count() == 151)
+    assert(t.read.filter(col("tag") === "winner" && col("extra").isNull).count() == 1)
   }
 }
 

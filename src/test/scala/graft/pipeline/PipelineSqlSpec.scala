@@ -2926,7 +2926,7 @@ class PipelineSqlSpec extends SparkSpec {
     val ext = LakeTable(spark, s"$root/pipe/panel__ext_mx")
     val mvLast = p.read("panel").count() // force materialization
     src.append(Seq((3L, "a", 9.0)).toDF("k", "g", "v"))
-    ext.stampTxn("graft.aggmv.panel.ext.mx", src.currentVersion)
+    ext.recordTxn("graft.aggmv.panel.ext.mx", src.currentVersion)
     p.run()
     def ev = p.eventLog.filter(col("dataset") === "panel")
       .orderBy("run_id").select("message").as[String].collect().toSeq

@@ -31,7 +31,9 @@ import graft.lake.LakeTable
  * the target would be key-partitioned so only touched partitions rewrite.
  */
 final class Pipeline(val spark: SparkSession, storageRoot: String) {
-  import Pipeline.{AppendFlow, CdcFlow, SnapshotFlow}
+  import Pipeline.{AppendFlow, AppendOnly, CdcFlow, SnapshotFlow, StreamWindow,
+    Upsert, WindowTake}
+  import Pipeline.StreamWindow.{Bootstrap, Delta, Snapshot, Unreadable, UpToDate}
 
   private val views = mutable.LinkedHashMap[String, () => DataFrame]()
   private val tables = mutable.LinkedHashMap[String, LakeTable]()
@@ -277,39 +279,29 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  run modes — an external destination has no snapshot-re-land shape. */
   private def drainRawSink(af: Pipeline.AppendFlow, sk: SinkSpec,
       events: mutable.ArrayBuffer[(String, String, Long, String)]): Unit = {
-    val rooted = af.stream.flatMap { case (src, fn) =>
-      resolveStreamRoot(src).map { case (root, g) => (root, g.andThen(fn)) } }
+    val rooted = flowRoot(af)
     require(rooted.isDefined,
       s"sink ${af.target} needs a STREAM-resolvable source (sinks drain " +
         "append-only windows; a view flow would re-land every run)")
-    val (root, fn) = rooted.get
-    if (!root.exists) {
-      events += (("flow_progress", af.name, 0L,
-        s"sink ${af.target} (source not materialized)"))
-      return
-    }
     val appId = s"graft.sinkflow.${af.name}"
-    val last = sinkState.lastTxnVersion(appId).getOrElse(-1L)
-    val cur = root.currentVersion
-    if (cur <= last) {
-      events += (("flow_progress", af.name, 0L,
-        s"sink ${af.target} (up-to-date)"))
-      return
-    }
-    val (raw, done) =
-      if (last < 0) (root.readVersion(cur), () => ())
-      else appendOnlyWindow(root, last + 1, cur, s"sink flow ${af.name}")
-    try {
-      val (out, rows) = Pipeline.observeRows(gate(af.target, fn(raw)))
-      val w = out.write.mode("append")
-      sk.format match {
-        case "jsonl" => w.json(sk.path)
-        case _ => w.parquet(sk.path)
+    streamWindow(rooted, sinkState, appId, incremental = true,
+        AppendOnly(s"sink flow ${af.name}", recomputes = false)) match {
+      case None => events += (("flow_progress", af.name, 0L,
+        s"sink ${af.target} (source not materialized)"))
+      case Some(win) if win.state == UpToDate => events += (("flow_progress",
+        af.name, 0L, s"sink ${af.target} (up-to-date)"))
+      case Some(win) => win.read { raw =>
+        val (out, rows) = Pipeline.observeRows(gate(af.target, raw))
+        val w = out.write.mode("append")
+        sk.format match {
+          case "jsonl" => w.json(sk.path)
+          case _ => w.parquet(sk.path)
+        }
+        sinkState.recordTxn(appId, win.cur)
+        events += (("flow_progress", af.name, rows(),
+          s"sink append into ${af.target} (${win.span}, at-least-once)"))
       }
-      sinkState.recordTxn(appId, cur)
-      events += (("flow_progress", af.name, rows(),
-        s"sink append into ${af.target} (v${last + 1}..v$cur, at-least-once)"))
-    } finally done()
+    }
   }
 
   /** Whether `name` is a TABLE-BACKED dataset an auto-maintained MV may
@@ -993,8 +985,10 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
 
   /** Drain one batch through every CDC flow, in dependency order; then
    *  enforce Fail-policy expectation gates (`expect_all_or_fail`). Each
-   *  flow re-reads its source's CURRENT contents (snapshot execution);
-   *  see [[runIncremental]] for the O(new rows) mode. */
+   *  flow re-reads its source's CURRENT contents (snapshot execution) —
+   *  pinned at the root's version and stamped on the flow's ledger when
+   *  the source has a stream root, so a later [[runIncremental]] (the
+   *  O(new rows) mode) resumes after what this run read. */
   def run(): Unit = runImpl(incremental = false)
 
   /**
@@ -1119,7 +1113,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  refresh), falls back to the raw delta + the flow's declared tiebreak. */
   private def collapsedDelta(root: LakeTable, from: Long, to: Long,
       keys: Seq[String], seqCols: Seq[String], declaredTiebreak: Seq[String],
-      gb: GoldBuilder, downstream: DataFrame => DataFrame): DataFrame = {
+      downstream: DataFrame => DataFrame): DataFrame = {
     val fd = feedDelta(root, from, to, keepCommitVersion = true)
     if ((keys ++ seqCols).forall(fd.columns.contains) &&
         preservesColumns(downstream, root.schema, keys ++ seqCols)) {
@@ -1128,7 +1122,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         if (declaredTb.nonEmpty) declaredTb
         else fd.columns.toSeq.filterNot(c => keys.contains(c) ||
           seqCols.contains(c) || c == graft.lake.LakeTable.CommitVersionCol)
-      gb.latestPerKey(fd, keys ++ seqCols,
+      GoldBuilder(spark).latestPerKey(fd, keys ++ seqCols,
         graft.lake.LakeTable.CommitVersionCol, valueTb)
         .drop(graft.lake.LakeTable.CommitVersionCol)
     } else fd.drop(graft.lake.LakeTable.CommitVersionCol)
@@ -1201,6 +1195,81 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       () => { win.unpersist(); () })
   }
 
+  /** THE STREAM WINDOW of one change-feed consumer (CDC flows, join
+   *  tables, select tables, append flows, sinks): the offset range one
+   *  trigger consumes, classified here once for all of them. From the
+   *  consumer's resolved stream root and the ledger entry `appId` on
+   *  `ledger`, it reads the ledger's `last` and the root's `cur`; under
+   *  incremental execution the window is then in one of four states:
+   *   - `UpToDate` — `cur <= last`: nothing to read;
+   *   - `Bootstrap` — no ledger yet (`last < 0`): the snapshot pinned at
+   *     `cur`, immune to vacuumed early history and free of the dead
+   *     intermediate images a merge-maintained source's feed carries;
+   *   - `Unreadable` — [[graft.lake.LakeTable.feedReadable]] refuses
+   *     `[last+1, cur]` (a full-rewrite commit, or dirs vacuumed under a
+   *     lagging consumer): the snapshot pinned at `cur`;
+   *   - `Delta` — the feed since `last`, collapsed latest per key for an
+   *     [[Pipeline.Upsert]] consumer ([[collapsedDelta]]) and insert-only
+   *     for an [[Pipeline.AppendOnly]] one ([[appendOnlyWindow]]).
+   *  An upsert consumer RE-PINS an unreadable window: its guarded
+   *  latest-wins merge makes replaying every current row a no-op-or-update.
+   *  An append-only consumer cannot — appending the current rows again
+   *  duplicates every row it already landed — so append flows and sinks
+   *  hand the window to [[appendOnlyWindow]], which refuses it, and only a
+   *  select table (which can recompute by overwrite) asks for the state.
+   *  An upsert window's frame is persisted: its emptiness probe, gate
+   *  counters and merge joins share one pass over the change dirs.
+   *
+   *  Under snapshot execution the window is `Snapshot`: the snapshot
+   *  pinned at `cur`, with ONE stamp rule ([[Pipeline.StreamWindow.stamp]])
+   *  — stamp `cur` on the consumer's own write unless the ledger is
+   *  already at or past it, so the next incremental run resumes exactly
+   *  after what this read; a snapshot re-run still applies, unstamped.
+   *
+   *  None when the source has no materialized stream root: the consumer
+   *  reads it unpinned. `ledger` is touched only once a root exists. */
+  private def streamWindow(rooted: Option[(LakeTable, DataFrame => DataFrame)],
+      ledger: => LakeTable, appId: String, incremental: Boolean,
+      take: WindowTake): Option[StreamWindow] =
+    rooted.filter(_._1.exists).map { case (root, g) =>
+      val last = ledger.lastTxnVersion(appId).getOrElse(-1L)
+      val cur = root.currentVersion
+      val pinned = () => (g(root.readVersion(cur)), () => ())
+      val (state, open) =
+        if (!incremental) (Snapshot, pinned)
+        else if (cur <= last) (UpToDate, pinned)
+        else take match {
+          case Upsert(keys, seqCols, tiebreak) =>
+            val (st, raw) =
+              if (last < 0) (Bootstrap, () => root.readVersion(cur))
+              else if (!root.feedReadable(last + 1, cur))
+                (Unreadable, () => root.readVersion(cur))
+              else (Delta, () =>
+                collapsedDelta(root, last + 1, cur, keys, seqCols, tiebreak, g))
+            (st, () => {
+              val delta = g(raw())
+                .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+              (delta, () => { delta.unpersist(); () })
+            })
+          case AppendOnly(consumer, recomputes) =>
+            if (last < 0) (Bootstrap, pinned)
+            else if (recomputes && !root.feedReadable(last + 1, cur))
+              (Unreadable, pinned)
+            else (Delta, () => {
+              val (df, release) = appendOnlyWindow(root, last + 1, cur, consumer)
+              (g(df), release)
+            })
+        }
+      new StreamWindow(state, last, cur, open)
+    }
+
+  /** A stream-registered append flow's root: its source's stream root,
+   *  with the flow's own per-row transform composed after the chain's. */
+  private def flowRoot(af: AppendFlow): Option[(LakeTable, DataFrame => DataFrame)] =
+    af.stream.flatMap { case (src, fn) =>
+      resolveStreamRoot(src).map { case (root, g) => (root, g.andThen(fn)) }
+    }
+
   /** Longest `streamingView` chain from `name` down to a FEED-READABLE
    *  root table, composing the per-row transforms along the way. Returns
    *  (root, composed transform). Declared streaming tables qualify only
@@ -1209,8 +1278,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  semantics instead of erroring mid-run; [[inputTable]] roots are the
    *  append-only bronze contract (their appends derive feed inserts for
    *  free). A select-table root refreshed in SNAPSHOT mode commits a full
-   *  rewrite — consumers probe [[graft.lake.LakeTable.feedReadable]] per
-   *  window and fall back (re-pin / snapshot-refresh / re-bootstrap)
+   *  rewrite — [[streamWindow]] probes [[graft.lake.LakeTable.feedReadable]]
+   *  per window and the consumers fall back (re-pin / snapshot-refresh)
    *  instead of wedging. */
   private def resolveStreamRoot(name: String, depth: Int = 0)
       : Option[(LakeTable, DataFrame => DataFrame)] =
@@ -1236,7 +1305,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         .filter(t => cdfTables.contains(name) ||
           (t.exists && t.tableProperties.contains(
             graft.lake.LakeTable.ChangeFeedProp)))
-        .map(t => (t, identity[DataFrame] _)))
+        // an auto MV that opted in is read through its presentation, as
+        // read() serves it: the backing table's engine columns stay hidden
+        .map(t => (t, presentations.getOrElse(name, identity[DataFrame] _))))
       .orElse(tables.get(name).filter(_ => selectTables.contains(name))
         // a streaming-select table is APPEND-ONLY by construction — its
         // feed serves inserts without CDF
@@ -1350,63 +1421,35 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
 
 
   /** Apply ONE event-fed CDC flow — the body of [[runImpl]]'s CDC phase,
-   *  extracted so [[runWaves]] can run independent flows concurrently. */
+   *  extracted so [[runWaves]] can run independent flows concurrently. A
+   *  source with a stream root is read through its [[streamWindow]] in
+   *  both run modes; any other source is read unpinned. */
   private def runCdcFlow(f: CdcFlow, gb: GoldBuilder, incremental: Boolean,
       events: EventBuf): Unit = {
-    def observe(df: DataFrame): (DataFrame, () => Long) = Pipeline.observeRows(df)
-    val stream = if (incremental) resolveStreamRoot(f.source) else None
-    stream match {
-      case Some((src, fn)) if src.exists =>
-        import org.apache.spark.sql.functions.col
-        val appId = s"graft.flow.${f.target}"
-        val t = tables(f.target)
-        val last = t.lastTxnVersion(appId).getOrElse(-1L)
-        val cur = src.currentVersion
-        if (cur > last) {
-          // first window BOOTSTRAPS from the CURRENT snapshot pinned at
-          // `cur` (every live row is an upsert event) instead of
-          // replaying the feed from v0 — immune to vacuumed early
-          // history, and it never drags dead intermediate images of a
-          // merge-maintained source through the transforms. A window
-          // spanning a FULL-REWRITE commit (an upstream table refreshed
-          // in snapshot mode) also RE-PINS at cur instead of failing:
-          // the guarded latest-wins merge makes re-processing every
-          // current row a sound no-op-or-update, so the flow rides
-          // through instead of wedging permanently.
-          val raw =
-            if (last < 0 || !src.feedReadable(last + 1, cur))
-              src.readVersion(cur)
-            else collapsedDelta(src, last + 1, cur, f.keys,
-              f.sequenceBy +: f.sequenceAlso, f.tiebreak, gb, fn)
-          // pinned: the emptiness probe, the gate counters, and the SCD
-          // apply's own joins all consume the delta — one pass over the
-          // change dirs instead of three
-          val delta = fn(raw)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            if (delta.isEmpty) {
-              // metadata-only window: advance the ledger, skip the apply
-              if (t.exists) { t.recordTxn(appId, cur); () }
-              events += (("flow_progress", f.target, 0L,
-                s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}, " +
-                  s"incremental v${last + 1}..v$cur empty)"))
-            } else {
-              val (batch, flowRows) = observe(gate(f.target, delta))
-              applyCdcFlow(f, batch, gb, txn = Some(appId -> cur))
-              events += (("flow_progress", f.target, flowRows(),
-                s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}, " +
-                  s"incremental v${last + 1}..v$cur)"))
-            }
-          } finally { delta.unpersist(); () }
-        } else events += (("flow_progress", f.target, 0L,
-          s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}, " +
-            "incremental up-to-date)"))
-      case _ =>
-        val (batch, flowRows) =
-          observe(gate(f.target, views.getOrElse(f.source, () => read(f.source))()))
-        applyCdcFlow(f, batch, gb)
-        events += (("flow_progress", f.target, flowRows(),
-          s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType})"))
+    val appId = s"graft.flow.${f.target}"
+    val t = tables(f.target)
+    def progress(rows: Long, mode: String): Unit =
+      events += (("flow_progress", f.target, rows,
+        s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}$mode)"))
+    def apply(batch0: DataFrame, txn: Option[Long], mode: String): Unit = {
+      val (batch, rows) = Pipeline.observeRows(gate(f.target, batch0))
+      applyCdcFlow(f, batch, gb, txn.map(appId -> _))
+      progress(rows(), mode)
+    }
+    streamWindow(resolveStreamRoot(f.source), t, appId, incremental,
+        Upsert(f.keys, f.sequenceBy +: f.sequenceAlso, f.tiebreak)) match {
+      case None => apply(views.getOrElse(f.source, () => read(f.source))(), None, "")
+      case Some(w) => w.state match {
+        case UpToDate => progress(0L, ", incremental up-to-date")
+        case Snapshot => w.read(apply(_, w.stamp, ""))
+        case _ => w.read { delta =>
+          if (delta.isEmpty) {
+            // metadata-only window: advance the ledger, skip the apply
+            if (t.exists) { t.recordTxn(appId, w.cur); () }
+            progress(0L, s", incremental ${w.span} empty")
+          } else apply(delta, Some(w.cur), s", incremental ${w.span}")
+        }
+      }
     }
   }
 
@@ -1459,95 +1502,58 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // run mode. Snapshot execution's re-land branch would append the full
     // source snapshot onto the surviving rows (silent doubling), so the
     // protected flow always drains incrementally instead.
-    val streamRoot =
-      if (incremental || resetDisallowed(af.target))
-        af.stream.flatMap { case (src, fn) =>
-          resolveStreamRoot(src).map { case (root, g) =>
-            (root, g.andThen(fn)) }
+    val appId = s"graft.appendflow.${af.name}"
+    val once = if (af.once) " (once)" else ""
+    def progress(rows: Long, desc: String): Unit =
+      events += (("flow_progress", af.name, rows, desc))
+    streamWindow(flowRoot(af), t, appId,
+        incremental || resetDisallowed(af.target),
+        AppendOnly(s"append flow ${af.name}", recomputes = false)) match {
+      case None if sinkSpec.isDefined =>
+        // a plain view flow RE-LANDS its full view every run — fine
+        // for a pipeline-owned streaming table (full refresh resets
+        // it), unrecoverable for an external sink
+        require(af.stream.isDefined,
+          s"sink ${af.target} needs a STREAM-resolvable source " +
+            "(view flows re-land every run — duplicates a sink " +
+            "could never shed)")
+        progress(0L, s"sink ${af.target} (source not materialized)")
+      case None =>
+        val (aligned, rows) = align(gate(af.target, af.fn()))
+        t.append(aligned)
+        progress(rows(), s"append into ${af.target}$once")
+      case Some(w) => w.state match {
+        case UpToDate =>
+          progress(0L, s"append into ${af.target} (incremental up-to-date)")
+        case Snapshot if sinkSpec.isDefined && w.stamp.isEmpty =>
+          // a SINK never intentionally re-lands: an unchanged source
+          // under snapshot execution is simply up-to-date (delivery
+          // to an external destination must stay exactly-once)
+          progress(0L, s"sink ${af.target} (snapshot up-to-date)")
+        case Snapshot => w.read { df =>
+          // snapshot re-land, pinned at an exact source version and
+          // RECORDED: without the stamp, the next incremental run would
+          // re-append rows this full view already landed. The stamp rides
+          // the append COMMIT itself (the txn-carrying append) — a
+          // separate commit would leave a crash window where the rows
+          // landed but the ledger lags. Without a stamp (the ledger is
+          // already at/past the pin) the re-land is INTENTIONAL snapshot
+          // semantics — plain append.
+          val (aligned, rows) = align(gate(af.target, df))
+          w.stamp match {
+            case Some(v) => t.appendIdempotent(appId, v, aligned)
+            case None => t.append(aligned)
+          }
+          progress(rows(), s"append into ${af.target} (snapshot @ v${w.cur})$once")
         }
-      else None
-    streamRoot match {
-      case Some((root, fn)) if root.exists =>
-        // TRUE streaming append: only the source rows committed since
-        // this flow's last run; the per-flow ledger rides the target's
-        // transaction log via the idempotent append (atomic, replay-safe)
-        import org.apache.spark.sql.functions.col
-        val appId = s"graft.appendflow.${af.name}"
-        val last = t.lastTxnVersion(appId).getOrElse(-1L)
-        val cur = root.currentVersion
-        if (cur > last) {
-          // bootstrap = the current snapshot pinned at cur (vacuumed
-          // early history can't wedge a first run); later windows must
-          // be APPEND-ONLY — re-landing an updated row would duplicate
-          val (raw, done) =
-            if (last < 0) (root.readVersion(cur), () => ())
-            else appendOnlyWindow(root, last + 1, cur,
-              s"append flow ${af.name}")
-          try {
-            val (aligned, rows) = align(gate(af.target, fn(raw)))
-            if (t.appendIdempotent(appId, cur, aligned))
-              events += (("flow_progress", af.name, rows(),
-                s"append into ${af.target} (incremental v${last + 1}..v$cur)"))
-          } finally done()
-        } else events += (("flow_progress", af.name, 0L,
-          s"append into ${af.target} (incremental up-to-date)"))
-      case _ =>
-        // snapshot re-land. A STREAM-registered flow with a resolvable
-        // root pins the read at an exact source version and RECORDS it:
-        // without the stamp, the next incremental run would re-append
-        // rows this full view already landed (duplicates a full refresh
-        // could never shed); pinning makes the stamp exact under
-        // concurrent source commits.
-        val rootSnap = af.stream.flatMap { case (src, fn2) =>
-          resolveStreamRoot(src).filter(_._1.exists)
-            .map { case (root, g) => (root, g.andThen(fn2)) }
+        case _ => w.read { df =>
+          // TRUE streaming append: the ledger rides the target's
+          // transaction log via the idempotent append (atomic, replay-safe)
+          val (aligned, rows) = align(gate(af.target, df))
+          if (t.appendIdempotent(appId, w.cur, aligned))
+            progress(rows(), s"append into ${af.target} (incremental ${w.span})")
         }
-        rootSnap match {
-          case Some((root, fn2))
-              if sinkSpec.isDefined && sinkSpec.get.table.exists &&
-                sinkSpec.get.table
-                  .lastTxnVersion(s"graft.appendflow.${af.name}")
-                  .exists(_ >= root.currentVersion) =>
-            // a SINK never intentionally re-lands: an unchanged source
-            // under snapshot execution is simply up-to-date (delivery
-            // to an external destination must stay exactly-once)
-            events += (("flow_progress", af.name, 0L,
-              s"sink ${af.target} (snapshot up-to-date)"))
-          case Some((root, fn2)) =>
-            val cur = root.currentVersion
-            val (aligned, rows) =
-              align(gate(af.target, fn2(root.readVersion(cur))))
-            val appId = s"graft.appendflow.${af.name}"
-            // the ledger stamp rides the append COMMIT itself (the
-            // txn-carrying append): stamping in a separate commit
-            // leaves a crash window where the rows landed but the
-            // ledger lags, and the next incremental run re-appends the
-            // already-landed window as duplicates. When the ledger is
-            // already at/past `cur` (snapshot re-run at an unchanged
-            // source), the re-land is INTENTIONAL snapshot semantics —
-            // plain append, nothing to stamp.
-            if (t.lastTxnVersion(appId).forall(_ < cur)) {
-              t.appendIdempotent(appId, cur, aligned); ()
-            } else t.append(aligned)
-            events += (("flow_progress", af.name, rows(),
-              s"append into ${af.target} (snapshot @ v$cur)" +
-                (if (af.once) " (once)" else "")))
-          case None if sinkSpec.isDefined =>
-            // a plain view flow RE-LANDS its full view every run — fine
-            // for a pipeline-owned streaming table (full refresh resets
-            // it), unrecoverable for an external sink
-            require(af.stream.isDefined,
-              s"sink ${af.target} needs a STREAM-resolvable source " +
-                "(view flows re-land every run — duplicates a sink " +
-                "could never shed)")
-            events += (("flow_progress", af.name, 0L,
-              s"sink ${af.target} (source not materialized)"))
-          case None =>
-            val (aligned, rows) = align(gate(af.target, af.fn()))
-            t.append(aligned)
-            events += (("flow_progress", af.name, rows(),
-              s"append into ${af.target}" + (if (af.once) " (once)" else "")))
-        }
+      }
     }
     if (af.once) onceFlowsDone.synchronized { onceFlowsDone += af.name; () }
   }
@@ -1830,69 +1836,40 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
   private def refreshSelectTable(name: String, source: String,
       fn: DataFrame => DataFrame, incremental: Boolean,
       events: mutable.ArrayBuffer[(String, String, Long, String)]): Unit = {
-      def observe(df: DataFrame): (DataFrame, () => Long) = Pipeline.observeRows(df)
-      val t = tables(name)
-      val appId = s"graft.sttable.$name"
-      val stream =
-        if (incremental) resolveStreamRoot(source).filter(_._1.exists) else None
-      stream match {
-        case Some((root, g)) =>
-          val last = t.lastTxnVersion(appId).getOrElse(-1L)
-          val cur = root.currentVersion
-          if (cur > last && last >= 0 && !root.feedReadable(last + 1, cur)) {
-            // the source was refreshed by FULL REWRITE inside this window
-            // (e.g. an upstream select table run in snapshot mode) — its
-            // feed cannot serve the delta. Fall back to this table's own
-            // snapshot refresh (recompute pinned at cur, ledger stamped on
-            // the overwrite) instead of failing every subsequent run: the
-            // two execution modes interleave freely, so the fallback IS
-            // the documented snapshot shape, and the next incremental run
-            // resumes from cur.
-            val (df, rows) = observe(gate(name, fn(g(root.readVersion(cur)))))
-            if (!t.exists) createTarget(name, df.schema)
-            t.overwrite(df, txn = Some(appId -> cur))
-            events += (("flow_progress", name, rows(),
-              s"select-table refresh (recompute @ v$cur — source window " +
-                s"v${last + 1}..v$cur spans a full rewrite)"))
-          } else if (cur > last) {
-            // bootstrap from the pinned snapshot; later windows must be
-            // append-only (an updated source row can't be re-appended)
-            val (raw, done) =
-              if (last < 0) (root.readVersion(cur), () => ())
-              else appendOnlyWindow(root, last + 1, cur,
-                s"streaming-select table $name")
-            try {
-              val (out, rows) = observe(gate(name, fn(g(raw))))
-              if (!t.exists) createTarget(name, out.schema)
-              if (t.appendIdempotent(appId, cur, out))
-                events += (("flow_progress", name, rows(),
-                  s"select-table append from $source " +
-                    s"(incremental v${last + 1}..v$cur)"))
-            } finally done()
-          } else events += (("flow_progress", name, 0L,
-            s"select-table from $source (incremental up-to-date)"))
-        case None =>
-          resolveStreamRoot(source).filter(_._1.exists) match {
-            case Some((root, g)) =>
-              // recompute PINNED at an exact source version: reading the
-              // live snapshot and probing currentVersion separately would
-              // race a concurrent source commit — stamping a version the
-              // recompute didn't (or did) include silently skips (or
-              // doubles) that window on the next incremental run
-              val cur = root.currentVersion
-              val (df, rows) = observe(gate(name, fn(g(root.readVersion(cur)))))
-              if (!t.exists) createTarget(name, df.schema)
-              t.overwrite(df, txn = Some(appId -> cur))
-              events += (("flow_progress", name, rows(),
-                s"select-table refresh (recompute @ v$cur)"))
-            case None =>
-              val (df, rows) = observe(gate(name, fn(read(source))))
-              if (!t.exists) createTarget(name, df.schema)
-              t.overwrite(df)
-              events += (("flow_progress", name, rows(),
-                "select-table refresh (recompute)"))
-          }
+    val t = tables(name)
+    val appId = s"graft.sttable.$name"
+    def progress(rows: Long, desc: String): Unit =
+      events += (("flow_progress", name, rows, desc))
+    def recompute(src: DataFrame, stamp: Option[Long], desc: String): Unit = {
+      val (df, rows) = Pipeline.observeRows(gate(name, fn(src)))
+      if (!t.exists) createTarget(name, df.schema)
+      t.overwrite(df, txn = stamp.map(appId -> _))
+      progress(rows(), desc)
+    }
+    streamWindow(resolveStreamRoot(source), t, appId, incremental,
+        AppendOnly(s"streaming-select table $name", recomputes = true)) match {
+      case None => recompute(read(source), None, "select-table refresh (recompute)")
+      case Some(w) => w.state match {
+        case UpToDate =>
+          progress(0L, s"select-table from $source (incremental up-to-date)")
+        case st @ (Snapshot | Unreadable) =>
+          // a window over a FULL REWRITE (e.g. an upstream select table run
+          // in snapshot mode) falls back to this table's own snapshot
+          // refresh instead of failing every later run: the two execution
+          // modes interleave freely, so the fallback IS the documented
+          // snapshot shape, and the next incremental run resumes from cur
+          val why = if (st == Unreadable)
+            s" — source window ${w.span} spans a full rewrite" else ""
+          w.read(recompute(_, w.stamp,
+            s"select-table refresh (recompute @ v${w.cur}$why)"))
+        case _ => w.read { df =>
+          val (out, rows) = Pipeline.observeRows(gate(name, fn(df)))
+          if (!t.exists) createTarget(name, out.schema)
+          if (t.appendIdempotent(appId, w.cur, out))
+            progress(rows(), s"select-table append from $source (incremental ${w.span})")
+        }
       }
+    }
   }
 
   /** Post-flow stages shared by [[run]] and [[runIncremental]]: MV
@@ -1938,59 +1915,26 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         t.merge(latest, jt.keys,
           Some(s"s.${jt.sequenceBy} >= t.${jt.sequenceBy}"),
           txn = pinned.map(v => appId -> v))
-        events += (("flow_progress", name, rows(), desc))
+        events += (("flow_progress", name, rows(),
+          s"join-table merge from ${jt.source} $desc"))
       }
-      val stream =
-        if (incremental) resolveStreamRoot(jt.source).filter(_._1.exists)
-        else None
-      stream match {
-        case Some((root, g)) =>
-          val last = t.lastTxnVersion(appId).getOrElse(-1L)
-          val cur = root.currentVersion
-          if (cur > last) {
-            // bootstrap / full-rewrite windows re-pin at the current
-            // snapshot (guarded merge makes the replay idempotent);
-            // otherwise enrich ONLY the delta — O(new fact rows)
-            val raw =
-              if (last < 0 || !root.feedReadable(last + 1, cur))
-                root.readVersion(cur)
-              else collapsedDelta(root, last + 1, cur, jt.keys,
-                Seq(jt.sequenceBy), jt.tiebreak, gb, g)
-            val delta = g(raw)
-              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            try {
-              if (delta.isEmpty) {
-                if (t.exists) { t.recordTxn(appId, cur); () }
-                events += (("flow_progress", name, 0L,
-                  s"join-table from ${jt.source} (incremental " +
-                    s"v${last + 1}..v$cur empty)"))
-              } else applyBatch(delta, Some(cur),
-                s"join-table merge from ${jt.source} (incremental " +
-                  s"v${last + 1}..v$cur)")
-            } finally { delta.unpersist(); () }
-          } else events += (("flow_progress", name, 0L,
-            s"join-table from ${jt.source} (incremental up-to-date)"))
-        case None =>
-          // snapshot semantics: enrich the fact's FULL current contents,
-          // pinned at an exact version and stamped when the source roots
-          // at a table — the two modes interleave without gaps or doubles.
-          // A ledger already at/past the pin means the STAMP would be
-          // refused (txn-applied short-circuits the whole merge) — merge
-          // WITHOUT the txn instead: the snapshot re-enrich must still
-          // apply (current dim state refreshes the rows), and the guarded
-          // latest-wins merge makes the replay idempotent.
-          resolveStreamRoot(jt.source).filter(_._1.exists) match {
-            case Some((root, g)) =>
-              val cur = root.currentVersion
-              val stamp =
-                if (t.exists && t.lastTxnVersion(appId).exists(_ >= cur)) None
-                else Some(cur)
-              applyBatch(g(root.readVersion(cur)), stamp,
-                s"join-table merge from ${jt.source} (snapshot @ v$cur)")
-            case None =>
-              applyBatch(read(jt.source), None,
-                s"join-table merge from ${jt.source} (snapshot)")
+      def idle(desc: String): Unit = events += (("flow_progress", name, 0L,
+        s"join-table from ${jt.source} $desc"))
+      // snapshot semantics enrich the fact's FULL current contents: pinned
+      // and stamped when the source roots at a table, unpinned otherwise
+      streamWindow(resolveStreamRoot(jt.source), t, appId, incremental,
+          Upsert(jt.keys, Seq(jt.sequenceBy), jt.tiebreak)) match {
+        case None => applyBatch(read(jt.source), None, "(snapshot)")
+        case Some(w) => w.state match {
+          case UpToDate => idle("(incremental up-to-date)")
+          case Snapshot => w.read(applyBatch(_, w.stamp, s"(snapshot @ v${w.cur})"))
+          case _ => w.read { delta =>
+            if (delta.isEmpty) {
+              if (t.exists) { t.recordTxn(appId, w.cur); () }
+              idle(s"(incremental ${w.span} empty)")
+            } else applyBatch(delta, Some(w.cur), s"(incremental ${w.span})")
           }
+        }
       }
     }
     // streaming-select tables not already refreshed before the flows or
@@ -3989,4 +3933,38 @@ object Pipeline {
      *  its table). */
     def flowName: String = if (name.nonEmpty) name else target
   }
+
+  /** One consumer's window over its stream root — see
+   *  [[Pipeline.streamWindow]]. `last` is the ledger's version (-1 before
+   *  any stamp), `cur` the root's; `open` reads the frame. */
+  private final class StreamWindow(val state: StreamWindow.State,
+      val last: Long, val cur: Long, open: () => (DataFrame, () => Unit)) {
+    /** The `v{last+1}..v{cur}` span the event text prints. */
+    def span: String = s"v${last + 1}..v$cur"
+    /** The ledger stamp: `cur`, unless the ledger is at or past it. */
+    def stamp: Option[Long] = if (last >= cur) None else Some(cur)
+    /** `body` over the frame, then release what the read pinned. */
+    def read[A](body: DataFrame => A): A = {
+      val (df, release) = open()
+      try body(df) finally release()
+    }
+  }
+
+  private object StreamWindow {
+    sealed trait State
+    case object UpToDate extends State
+    case object Bootstrap extends State
+    case object Unreadable extends State
+    case object Delta extends State
+    case object Snapshot extends State
+  }
+
+  /** How a consumer takes its window's delta: collapsed latest per key
+   *  (CDC flows, join tables), or append-only (append flows, sinks, and
+   *  select tables, which `recomputes` an unreadable window). */
+  private sealed trait WindowTake
+  private final case class Upsert(keys: Seq[String], seqCols: Seq[String],
+      tiebreak: Seq[String]) extends WindowTake
+  private final case class AppendOnly(consumer: String, recomputes: Boolean)
+    extends WindowTake
 }

@@ -2072,4 +2072,258 @@ class PipelineSpec extends SparkSpec {
     intercept[IllegalArgumentException] { p.sink("bronze", s"$root/x") }
     intercept[IllegalArgumentException] { p.sink("k", s"$root/x", "kafka") }
   }
+
+  test("every change-feed consumer reads its stream window by one rule: " +
+      "bootstrap, delta, up-to-date, empty, full-rewrite and vacuumed " +
+      "windows for CDC flows, join tables, select tables, append flows, " +
+      "lake sinks and raw sinks") {
+    import graft.lake.LakeTable
+    type Row3 = (Long, String, Long)
+    def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[Row3] =
+      df.select("k", "v", "seq").as[(Long, String, Long)].collect().toSeq.sorted
+    /** One consumer of the input `bronze` under `<root>/pipe`: its
+     *  declaration, its event-log dataset, its rows and its ledger. */
+    final case class Consumer(kind: String, dataset: String,
+        declare: (Pipeline, String) => Unit,
+        rows: (Pipeline, String) => Seq[Row3],
+        ledger: (Pipeline, String) => Option[Long])
+    val consumers = Seq(
+      Consumer("cdc flow", "cdc",
+        (p, _) => {
+          p.streamingTable("cdc"); p.autoCdcFlow("cdc", "bronze", Seq("k"), "seq"); ()
+        },
+        (p, _) => rowsOf(p.read("cdc")),
+        (p, _) => p.table("cdc").lastTxnVersion("graft.flow.cdc")),
+      Consumer("join table", "joined",
+        (p, _) => {
+          p.streamingJoinTable("joined", "bronze", Seq("k"), "seq")(identity); ()
+        },
+        (p, _) => rowsOf(p.read("joined")),
+        (p, _) => p.table("joined").lastTxnVersion("graft.jointable.joined")),
+      Consumer("select table", "sel",
+        (p, _) => { p.streamingSelectTable("sel", "bronze")(identity); () },
+        (p, _) => rowsOf(p.read("sel")),
+        (p, _) => p.table("sel").lastTxnVersion("graft.sttable.sel")),
+      Consumer("append flow", "land",
+        (p, _) => {
+          p.streamingTable("landed")
+          p.appendFlowStream("landed", "bronze", name = "land")(); ()
+        },
+        (p, _) => rowsOf(p.read("landed")),
+        (p, _) => p.table("landed").lastTxnVersion("graft.appendflow.land")),
+      Consumer("lake sink", "tolake",
+        (p, root) => {
+          p.sink("lsink", s"$root/lsink")
+          p.appendFlowStream("lsink", "bronze", name = "tolake")(); ()
+        },
+        (_, root) => rowsOf(LakeTable(spark, s"$root/lsink").read),
+        (_, root) =>
+          LakeTable(spark, s"$root/lsink").lastTxnVersion("graft.appendflow.tolake")),
+      Consumer("raw sink", "toraw",
+        (p, root) => {
+          p.sink("rsink", s"$root/rsink", "parquet")
+          p.appendFlowStream("rsink", "bronze", name = "toraw")(); ()
+        },
+        (_, root) => rowsOf(spark.read.parquet(s"$root/rsink")),
+        (_, root) => LakeTable(spark, s"$root/pipe/__sinkstate")
+          .lastTxnVersion("graft.sinkflow.toraw")))
+
+    /** A run's outcome: the consumer's rows, its ledger, and its one event
+     *  message — or a refusal (the message's prefix; a vacuumed dir name
+     *  follows it) that leaves rows and ledger as they were. */
+    sealed trait Outcome
+    final case class Ran(rows: Seq[Row3], ledger: Long, message: String)
+      extends Outcome
+    final case class Refused(message: String, rows: Seq[Row3], ledger: Long)
+      extends Outcome
+
+    val b0 = Seq((1L, "a", 1L), (2L, "b", 1L))
+    val upsert1 = Seq((1L, "a2", 2L), (2L, "b", 1L), (3L, "c", 1L))
+    val append1 = (b0 ++ Seq((1L, "a2", 2L), (3L, "c", 1L))).sorted
+    val upsert3 = Seq((1L, "a2", 2L), (2L, "b2", 2L), (3L, "c", 1L), (4L, "d", 1L))
+    val rewritten = Seq((2L, "b2", 2L), (4L, "d", 1L))
+    val all4 = b0 ++ Seq((3L, "c", 1L), (4L, "d", 1L))
+    def cdc(span: String) = s"cdc flow cdc from bronze (scd1, incremental $span)"
+    def rewriteRefusal(consumer: String) = s"requirement failed: $consumer " +
+      "consumes an append-only stream, but versions [3, 3] of its source span " +
+      "a full-rewrite commit — an append-only consumer cannot replay a " +
+      "rewritten source without duplicating (full-refresh this pipeline, or " +
+      "keep the source append-only)"
+    val vacuumed = "requirement failed: change feed for v1 has been vacuumed ("
+
+    // (state, what the source commits before the run) in run order; every
+    // scenario starts from `b0` at v0 and a bootstrap run
+    val steady: Seq[(String, LakeTable => Unit)] = Seq(
+      "bootstrap" -> (_ => ()),
+      "delta" ->
+        (b => b.append(Seq((3L, "c", 1L), (1L, "a2", 2L)).toDF("k", "v", "seq"))),
+      "up-to-date" -> (_ => ()),
+      "empty" -> (b => b.setTableProperties(Map("note" -> "metadata only"))),
+      "full rewrite" ->
+        (b => b.overwrite(Seq((4L, "d", 1L), (2L, "b2", 2L)).toDF("k", "v", "seq"))))
+    val vacuum: Seq[(String, LakeTable => Unit)] = Seq(
+      "bootstrap" -> (_ => ()),
+      "vacuumed" -> { b =>
+        b.append(Seq((3L, "c", 1L)).toDF("k", "v", "seq"))
+        b.append(Seq((4L, "d", 1L)).toDF("k", "v", "seq"))
+        b.optimizeCompact()
+        b.vacuum(1)
+        assert(!b.feedReadable(1, b.currentVersion))
+      })
+    // expected outcomes per consumer, aligned with `steady` ++ `vacuum`
+    val expected: Map[String, Seq[Outcome]] = Map(
+      "cdc flow" -> Seq(
+        Ran(b0, 0, cdc("v0..v0")), Ran(upsert1, 1, cdc("v1..v1")),
+        Ran(upsert1, 1, cdc("up-to-date")), Ran(upsert1, 2, cdc("v2..v2 empty")),
+        Ran(upsert3, 3, cdc("v3..v3")),
+        Ran(b0, 0, cdc("v0..v0")), Ran(all4, 3, cdc("v1..v3"))),
+      "join table" -> Seq(
+        Ran(b0, 0, "join-table merge from bronze (incremental v0..v0)"),
+        Ran(upsert1, 1, "join-table merge from bronze (incremental v1..v1)"),
+        Ran(upsert1, 1, "join-table from bronze (incremental up-to-date)"),
+        Ran(upsert1, 2, "join-table from bronze (incremental v2..v2 empty)"),
+        Ran(upsert3, 3, "join-table merge from bronze (incremental v3..v3)"),
+        Ran(b0, 0, "join-table merge from bronze (incremental v0..v0)"),
+        Ran(all4, 3, "join-table merge from bronze (incremental v1..v3)")),
+      "select table" -> Seq(
+        Ran(b0, 0, "select-table append from bronze (incremental v0..v0)"),
+        Ran(append1, 1, "select-table append from bronze (incremental v1..v1)"),
+        Ran(append1, 1, "select-table from bronze (incremental up-to-date)"),
+        Ran(append1, 2, "select-table append from bronze (incremental v2..v2)"),
+        Ran(rewritten, 3, "select-table refresh (recompute @ v3 — source " +
+          "window v3..v3 spans a full rewrite)"),
+        Ran(b0, 0, "select-table append from bronze (incremental v0..v0)"),
+        Ran(all4, 3, "select-table refresh (recompute @ v3 — source window " +
+          "v1..v3 spans a full rewrite)")),
+      "append flow" -> Seq(
+        Ran(b0, 0, "append into landed (incremental v0..v0)"),
+        Ran(append1, 1, "append into landed (incremental v1..v1)"),
+        Ran(append1, 1, "append into landed (incremental up-to-date)"),
+        Ran(append1, 2, "append into landed (incremental v2..v2)"),
+        Refused(rewriteRefusal("append flow land"), append1, 2),
+        Ran(b0, 0, "append into landed (incremental v0..v0)"),
+        Refused(vacuumed, b0, 0)),
+      "lake sink" -> Seq(
+        Ran(b0, 0, "append into lsink (incremental v0..v0)"),
+        Ran(append1, 1, "append into lsink (incremental v1..v1)"),
+        Ran(append1, 1, "append into lsink (incremental up-to-date)"),
+        Ran(append1, 2, "append into lsink (incremental v2..v2)"),
+        Refused(rewriteRefusal("append flow tolake"), append1, 2),
+        Ran(b0, 0, "append into lsink (incremental v0..v0)"),
+        Refused(vacuumed, b0, 0)),
+      "raw sink" -> Seq(
+        Ran(b0, 0, "sink append into rsink (v0..v0, at-least-once)"),
+        Ran(append1, 1, "sink append into rsink (v1..v1, at-least-once)"),
+        Ran(append1, 1, "sink rsink (up-to-date)"),
+        Ran(append1, 2, "sink append into rsink (v2..v2, at-least-once)"),
+        Refused(rewriteRefusal("sink flow toraw"), append1, 2),
+        Ran(b0, 0, "sink append into rsink (v0..v0, at-least-once)"),
+        Refused(vacuumed, b0, 0)))
+
+    def lastMessages(p: Pipeline, dataset: String): Seq[String] = {
+      val log = p.eventLog
+      val run = log.agg(max("run_id")).head().getLong(0)
+      log.filter(col("run_id") === run && col("dataset") === dataset)
+        .select("message").as[String].collect().toSeq
+    }
+    for (c <- consumers;
+         (scenario, states) <- Seq("steady" -> steady, "vacuum" -> vacuum)) {
+      val root = tmpDir(s"pl_window_${c.dataset}_$scenario")
+      val bronze = LakeTable(spark, s"$root/bronze")
+      bronze.append(b0.toDF("k", "v", "seq"))
+      val p = new Pipeline(spark, s"$root/pipe")
+      p.inputTable("bronze", bronze)
+      c.declare(p, root)
+      val outcomes =
+        expected(c.kind).drop(if (scenario == "steady") 0 else steady.size)
+      states.zip(outcomes).foreach { case ((state, commit), outcome) =>
+        commit(bronze)
+        val cell = s"${c.kind} / $state"
+        outcome match {
+          case Ran(rows, ledger, message) =>
+            p.runIncremental()
+            assert(lastMessages(p, c.dataset) == Seq(message), cell)
+            assert(c.rows(p, root) == rows, cell)
+            assert(c.ledger(p, root).contains(ledger), cell)
+          case Refused(message, rows, ledger) =>
+            val e = intercept[IllegalArgumentException](p.runIncremental())
+            assert(e.getMessage.startsWith(message), s"$cell: ${e.getMessage}")
+            assert(c.rows(p, root) == rows, cell)
+            assert(c.ledger(p, root).contains(ledger), cell)
+        }
+      }
+    }
+  }
+
+  test("a snapshot run pins and stamps a CDC flow's read: runIncremental " +
+      "after run() with no source commit in between commits nothing, while " +
+      "run() after run() still re-applies") {
+    import graft.lake.LakeTable
+    val root = tmpDir("pl_cdc_stamp")
+    val bronze = LakeTable(spark, s"$root/bronze")
+    bronze.append(Seq((1L, "a", 1L), (2L, "b", 1L)).toDF("k", "v", "seq"))
+    val p = new Pipeline(spark, s"$root/pipe")
+    p.inputTable("bronze", bronze)
+    p.streamingTable("silver")
+    p.autoCdcFlow("silver", "bronze", Seq("k"), "seq")
+    val silver = p.table("silver")
+    def lastMessage(): String = p.eventLog
+      .filter(col("dataset") === "silver").orderBy(col("run_id").desc)
+      .select("message").as[String].head()
+    // a fresh pipeline: the snapshot run stamps the source version it read
+    p.run()
+    val v1 = silver.currentVersion
+    p.runIncremental()
+    assert(silver.currentVersion == v1)
+    assert(lastMessage() == "cdc flow silver from bronze (scd1, incremental up-to-date)")
+    assert(silver.lastTxnVersion("graft.flow.silver").contains(0L))
+    // a source commit consumed by a snapshot run is not merged again
+    bronze.append(Seq((3L, "c", 1L), (1L, "a2", 2L)).toDF("k", "v", "seq"))
+    p.run()
+    val v2 = silver.currentVersion
+    p.runIncremental()
+    assert(silver.currentVersion == v2)
+    assert(lastMessage() == "cdc flow silver from bronze (scd1, incremental up-to-date)")
+    assert(silver.lastTxnVersion("graft.flow.silver").contains(1L))
+    // run() after run(): the ledger is already at the source version, so
+    // the snapshot merge re-applies without a stamp
+    p.run()
+    assert(silver.currentVersion == v2 + 1)
+    assert(lastMessage() == "cdc flow silver from bronze (scd1)")
+    assert(silver.lastTxnVersion("graft.flow.silver").contains(1L))
+    assert(p.read("silver").orderBy("k").as[(Long, String, Long)].collect().toSeq ==
+      Seq((1L, "a2", 2L), (2L, "b", 1L), (3L, "c", 1L)))
+  }
+
+  test("a CDC flow over an auto-maintained MV that declares a change feed " +
+      "reads the MV's presentation in both run modes: the columns and rows " +
+      "read(source) returns") {
+    import graft.lake.LakeTable
+    val root = tmpDir("pl_cdc_automv")
+    val bronze = LakeTable(spark, s"$root/bronze")
+    bronze.append(Seq(("a", 1L), ("a", 2L), ("b", 5L)).toDF("g", "x"))
+    val p = new Pipeline(spark, s"$root/pipe")
+    p.inputTable("bronze", bronze)
+    p.streamingTable("panel", enableChangeFeed = true)
+    p.incrementalAggMv("panel", "bronze", Seq("g"), Seq("x"))
+    p.streamingTable("mirror")
+    p.autoCdcFlow("mirror", "panel", Seq("g"), "cnt")
+    def same(): Unit = {
+      val want = p.read("panel")
+      val got = p.read("mirror")
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.orderBy("g").collect().toSeq == want.orderBy("g").collect().toSeq)
+    }
+    p.run() // the panel materializes after the flow has read it
+    p.run() // the flow reads the materialized panel, pinned
+    same()
+    bronze.append(Seq(("b", 1L), ("c", 7L)).toDF("g", "x"))
+    p.runIncremental() // the panel takes the commit after the flow
+    p.runIncremental() // the flow takes the panel's window
+    same()
+    bronze.append(Seq(("c", 1L)).toDF("g", "x"))
+    p.runIncremental()
+    p.run()
+    same()
+  }
 }

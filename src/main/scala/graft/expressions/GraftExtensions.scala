@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /**
  * SparkSessionExtensions hook (SURVEY §7 extension ladder, step c):
  * registers the engine's native expressions in the SQL function registry so
- * plain SQL text can call them:
+ * plain SQL text can call them, and makes `spark.sql` the one SQL door to
+ * `LakeSql`-registered lake tables:
  *
  * {{{
  *   SparkSession.builder()
@@ -24,9 +25,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction(GraftExtensions.simhashDescriptor)
     ext.injectFunction(GraftExtensions.shingleHashSetDescriptor)
     ext.injectFunction(GraftExtensions.jaccardSortedDescriptor)
-    // LakeSql-registered tables resolve inside plain spark.sql text
-    // (SELECT/time travel) — see ResolveLakeRelations; `table_changes` is a
-    // table function, which Spark resolves before any extension rule runs
+    // lake statements (DML, DDL, maintenance) run through the session's
+    // parser — see LakeSqlParser; LakeSql-registered tables resolve inside
+    // queries (SELECT/time travel) — see ResolveLakeRelations;
+    // `table_changes` is a table function, which Spark resolves before any
+    // extension rule runs
+    ext.injectParser((session, delegate) => new graft.lake.LakeSqlParser(session, delegate))
     ext.injectResolutionRule(session => new graft.lake.ResolveLakeRelations(session))
     ext.injectTableFunction(GraftExtensions.tableChangesDescriptor)
   }

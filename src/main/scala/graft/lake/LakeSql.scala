@@ -3,16 +3,18 @@ package graft.lake
 import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView, UnresolvedTableValuedFunction}
+import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
 import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.{ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteFromTable, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeIntoTable, OverwriteByExpression, SubqueryAlias, UnresolvedTableSpec, UpdateStarAction, UpdateTable}
+import org.apache.spark.sql.catalyst.parser.ParseException
+import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, AlterTableClusterBy, ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DescribeColumn, DescribeRelation, DropColumns, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, OverwriteByExpression, RenameColumn, SetTableProperties, ShowColumns, ShowPartitions, ShowTableProperties, SubqueryAlias, UnresolvedTableSpec, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
 
 /**
- * SQL-TEXT surface for lake tables: SELECT (incl. `VERSION/TIMESTAMP AS
- * OF` time travel and the `table_changes('t', from[, to])` CDF
+ * SQL-TEXT surface for lake tables, reached through plain `spark.sql` on a
+ * session built with [[graft.expressions.GraftExtensions]]: SELECT (incl.
+ * `VERSION/TIMESTAMP AS OF` time travel, resolved by
+ * [[ResolveLakeRelations]], and the `table_changes('t', from[, to])` CDF
  * table-valued function), CREATE TABLE [IF NOT EXISTS] [PARTITIONED BY]
  * LOCATION [AS SELECT], MERGE INTO, DELETE FROM, UPDATE (zone-pruned CoW
  * or arbitrary-predicate MoR), INSERT INTO/OVERWRITE, INSERT INTO ...
@@ -25,6 +27,7 @@ import org.apache.spark.sql.types.TimestampType
  * registered [[LakeTable]]s — the statement forms the reference drives
  * through `spark.sql` (`DIM_Gold_layer.py:176-195` for MERGE;
  * `Setup.py:39-75`, `README.md:106-110` for DDL/DML/validation text).
+ * [[LakeSqlParser]] sends each statement here ([[LakeSql.dispatch]]).
  *
  * Spark's OWN parser produces the `MergeIntoTable` logical plan; this layer
  * only WALKS it — target name → registry lookup, `USING` plan → analyzed
@@ -58,10 +61,9 @@ object LakeSql {
   def unregister(name: String): Unit = { tables.remove(norm(name)); () }
 
   /** READ-ONLY relation registry: `name` → a thunk producing the CURRENT
-   *  frame, re-evaluated per query (never stale). The SELECT surfaces
-   *  (`LakeSql.sql`/`select` and native `spark.sql` via
-   *  [[ResolveLakeRelations]]) resolve these exactly like registered
-   *  tables; DML / MERGE / OPTIMIZE / time travel / `table_changes`
+   *  frame, re-evaluated per query (never stale). `spark.sql` queries
+   *  resolve these through [[ResolveLakeRelations]] exactly like
+   *  registered tables; DML / MERGE / OPTIMIZE / time travel / `table_changes`
    *  refuse by construction (the statement paths look up `tables` only) —
    *  the shape for PRESENTED datasets like an auto-maintained MV, whose
    *  backing table carries hidden maintenance columns a SQL reader must
@@ -74,19 +76,14 @@ object LakeSql {
 
   def unregisterRelation(name: String): Unit = { relations.remove(norm(name)); () }
 
-  /** Parse and execute a `MERGE INTO` statement against registered lake
-   *  tables. Returns the target table (for chaining reads). */
-  def merge(spark: SparkSession, sqlText: String): LakeTable = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
-    val m = plan match {
-      case mit: MergeIntoTable => mit
-      case other => throw new IllegalArgumentException(
-        s"LakeSql.merge expects a MERGE INTO statement, got ${other.nodeName}")
-    }
-    val (targetName, targetAlias) = relationOf(m.targetTable, "target")
-    val target = tables.getOrElse(norm(targetName), throw new IllegalArgumentException(
-      s"no lake table registered as '$targetName' — LakeSql.register it first"))
-    val (sourceDf, sourceAlias) = sourceOf(spark, m.sourceTable)
+  /** Execute the `MERGE INTO` plan Spark parsed against `target`, the
+   *  registered lake table it names. */
+  private def merge(spark: SparkSession, m: MergeIntoTable, target: LakeTable): Unit = {
+    val targetAlias = aliasOf(m.targetTable, "MERGE target")
+    // the USING side — a named view/table or an aliased subquery — is
+    // analyzed by Spark itself
+    val sourceAlias = aliasOf(m.sourceTable, "MERGE source")
+    val sourceDf = GraftColumnBridge.dataset(spark, m.sourceTable)
     require(norm(targetAlias) != norm(sourceAlias),
       s"target and source aliases must differ (both are '$targetAlias') — " +
         "equiKeys cannot tell the sides apart and guard requalification would misbind")
@@ -98,19 +95,18 @@ object LakeSql {
     // examined; the engine takes the full-rewrite path)
     val deleteUnmatched = m.notMatchedBySourceActions match {
       case Nil => None
-      case Seq(org.apache.spark.sql.catalyst.plans.logical.DeleteAction(cond)) =>
+      case Seq(DeleteAction(cond)) =>
         Some(cond.map(c => requalify(c, targetAlias, sourceAlias).sql)
           .getOrElse("true"))
       case other => throw new IllegalArgumentException(
         "WHEN NOT MATCHED BY SOURCE supports only THEN DELETE, got: " +
           other.map(_.getClass.getSimpleName).mkString(", "))
     }
-    def updateClauseOf(a: org.apache.spark.sql.catalyst.plans.logical.MergeAction)
+    def updateClauseOf(a: MergeAction)
         : Option[(Option[String], Option[Map[String, String]])] = a match {
       case UpdateStarAction(cond) =>
         Some((cond.map(c => requalify(c, targetAlias, sourceAlias).sql), None))
-      case org.apache.spark.sql.catalyst.plans.logical.UpdateAction(
-          cond, assignments, _) =>
+      case UpdateAction(cond, assignments, _) =>
         val as = assignments.map { x =>
           val k = x.key match {
             case attr: UnresolvedAttribute => attr.nameParts.last
@@ -124,9 +120,8 @@ object LakeSql {
         Some((cond.map(c => requalify(c, targetAlias, sourceAlias).sql), Some(as)))
       case _ => None
     }
-    def deleteCondOf(a: org.apache.spark.sql.catalyst.plans.logical.MergeAction)
-        : Option[Option[String]] = a match {
-      case org.apache.spark.sql.catalyst.plans.logical.DeleteAction(cond) =>
+    def deleteCondOf(a: MergeAction): Option[Option[String]] = a match {
+      case DeleteAction(cond) =>
         Some(cond.map(c => requalify(c, targetAlias, sourceAlias).sql))
       case _ => None
     }
@@ -160,8 +155,7 @@ object LakeSql {
     val (insertAll, insertGuard, insertSet) = m.notMatchedActions match {
       case Seq(InsertStarAction(cond)) => // WHEN NOT MATCHED [AND c] THEN INSERT *
         (true, cond.map(c => requalify(c, targetAlias, sourceAlias).sql), None)
-      case Seq(org.apache.spark.sql.catalyst.plans.logical.InsertAction(
-          cond, assignments)) =>
+      case Seq(InsertAction(cond, assignments)) =>
         // WHEN NOT MATCHED [AND c] THEN INSERT (cols) VALUES (<exprs over s>)
         val as = assignments.map { a =>
           val k = a.key match {
@@ -190,28 +184,15 @@ object LakeSql {
       matchedDeleteWhen = matchedDeleteWhen,
       deleteUnmatchedTarget = deleteUnmatched, insertAll = insertAll,
       insertGuard = insertGuard, insertSet = insertSet)
-    target
   }
 
-  /** Relation name + alias (alias defaults to the last name part). */
-  private def relationOf(plan: LogicalPlan, side: String): (String, String) = plan match {
-    case SubqueryAlias(ident, UnresolvedRelation(parts, _, _)) =>
-      (parts.mkString("."), ident.name)
-    case UnresolvedRelation(parts, _, _) => (parts.mkString("."), parts.last)
+  /** The alias that qualifies a statement side's column references: its
+   *  `AS` alias, else the last part of its table or view name. */
+  private def aliasOf(plan: LogicalPlan, side: String): String = plan match {
+    case SubqueryAlias(ident, _) => ident.name
+    case UnresolvedRelation(parts, _, _) => parts.last
     case other => throw new IllegalArgumentException(
-      s"MERGE $side must be a named table, got ${other.nodeName}")
-  }
-
-  /** The USING side: a named view/table or an aliased subquery, analyzed by
-   *  Spark itself. The alias (or the bare view name) qualifies guard refs. */
-  private def sourceOf(spark: SparkSession, plan: LogicalPlan): (DataFrame, String) = {
-    val alias = plan match {
-      case SubqueryAlias(ident, _) => ident.name
-      case UnresolvedRelation(parts, _, _) => parts.last
-      case other => throw new IllegalArgumentException(
-        s"MERGE source must be a named table/view or an aliased subquery, got ${other.nodeName}")
-    }
-    (GraftColumnBridge.dataset(spark, plan), alias)
+      s"$side must be a named table/view or an aliased subquery, got ${other.nodeName}")
   }
 
   /** ON must be a conjunction of same-named `t.k = s.k` equalities — the
@@ -256,29 +237,24 @@ object LakeSql {
         s"qualify '${a.name}' with the source or target alias in the matched guard")
     }
 
-  // ---- DELETE / UPDATE / OPTIMIZE / DESCRIBE DETAIL -----------------------
+  // ---- the session parser's dispatch --------------------------------------
   //
   // The reference drives its whole DML surface through spark.sql(...) text
-  // (Setup.py:39-50, README.md:106-110). DELETE and UPDATE parse through
-  // Spark's own parser to DeleteFromTable/UpdateTable plans this layer
-  // walks; OPTIMIZE and DESCRIBE DETAIL are Delta grammar extensions Spark's
-  // parser rejects, so they get a token-level pre-dispatch. Everything lands
-  // on the existing LakeTable APIs; unsupported shapes fail loudly.
+  // (Setup.py:39-50, README.md:106-110). [[LakeSqlParser]] hands every
+  // statement to Spark's parser first: MERGE, DELETE, UPDATE, INSERT, the
+  // DDL and DESCRIBE/SHOW arrive as Spark's own plans, which `statement`
+  // walks. OPTIMIZE, VACUUM, RESTORE, CONVERT TO LAKE and CLONE are Delta
+  // grammar Spark's parser refuses; `lakeOnly` matches their text. Both
+  // land on the existing LakeTable APIs; unsupported shapes fail loudly.
 
   private val OptimizeRe =
     """(?is)\s*OPTIMIZE\s+([\w.]+)(\s+FULL)?(?:\s+WHERE\s+(.+?))?(?:\s+ZORDER\s+BY\s*\(([^)]+)\))?\s*;?\s*""".r
-  private val DescribeDetailRe =
-    """(?is)\s*DESCRIBE\s+DETAIL\s+([\w.]+)\s*;?\s*""".r
-  private val DescribeHistoryRe =
-    """(?is)\s*DESCRIBE\s+HISTORY\s+([\w.]+)\s*;?\s*""".r
   private val VacuumRe =
     """(?is)\s*VACUUM\s+([\w.]+)(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+(VERSIONS|HOURS))?(\s+DRY\s+RUN)?\s*;?\s*""".r
   private val RestoreRe =
     """(?is)\s*RESTORE\s+TABLE\s+([\w.]+)\s+TO\s+VERSION\s+AS\s+OF\s+(\d+)\s*;?\s*""".r
   private val RestoreTsRe =
     """(?is)\s*RESTORE\s+TABLE\s+([\w.]+)\s+TO\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'\s*;?\s*""".r
-  private val ShowPartitionsRe =
-    """(?is)\s*SHOW\s+PARTITIONS\s+([\w.]+)\s*;?\s*""".r
   private val ConvertRe =
     ("""(?is)\s*CONVERT\s+TO\s+LAKE\s+parquet\.`([^`]+)`\s+AS\s+([\w.]+)\s+""" +
       """LOCATION\s+'([^']+)'(?:\s+PARTITIONED\s+BY\s*\(\s*([\w]+)\s*\))?""" +
@@ -287,17 +263,72 @@ object LakeSql {
     """(?is)\s*CREATE\s+TABLE\s+([\w.]+)\s+(SHALLOW|DEEP)\s+CLONE\s+([\w.]+)\s+LOCATION\s+'([^']+)'\s*;?\s*""".r
 
   /**
-   * Parse and execute ONE SQL statement against registered lake tables:
-   * MERGE INTO, DELETE FROM, UPDATE, OPTIMIZE [ZORDER BY (...)],
-   * VACUUM [RETAIN n VERSIONS], RESTORE TABLE ... TO VERSION AS OF n,
-   * DESCRIBE DETAIL, DESCRIBE HISTORY. Returns Delta-style result rows:
-   * affected-row counts for DML, rewrite stats for OPTIMIZE, the table
-   * facts row for DESCRIBE DETAIL, the commit log for DESCRIBE HISTORY,
-   * and the post-merge snapshot for MERGE.
+   * `spark.sql(sqlText)`. On a session built with
+   * [[graft.expressions.GraftExtensions]] that one call runs every lake
+   * statement (see [[dispatch]]). Kept for the benchmark harness
+   * (`perfbench/`), which calls it.
    */
-  def sql(spark: SparkSession, sqlText: String): DataFrame = {
+  def sql(spark: SparkSession, sqlText: String): DataFrame = spark.sql(sqlText)
+
+  /**
+   * The one SQL front door, called by [[LakeSqlParser]] for every plan
+   * `spark.sql` parses. `parse` is Spark's own parser; its plan runs here,
+   * at parse time, when [[lakeTarget]] says it names the lake — the returned
+   * plan is then the statement's result frame: affected-row counts for
+   * DML, rewrite stats for OPTIMIZE, the table facts row for DESCRIBE
+   * DETAIL, the commit log for DESCRIBE HISTORY, and the post-merge
+   * snapshot for MERGE. Text Spark refuses gets one more try against the
+   * lake-only grammar ([[lakeOnly]]); if that fails too, Spark's
+   * `ParseException` propagates. Every other plan — queries included,
+   * whose lake relations [[ResolveLakeRelations]] resolves — goes back to
+   * Spark untouched, so nothing Spark analyzes or EXPLAINs ever commits.
+   */
+  private[lake] def dispatch(spark: SparkSession, sqlText: String,
+      parse: => LogicalPlan): LogicalPlan =
+    (try Right(parse) catch { case e: ParseException => Left(e) }) match {
+      case Left(e) =>
+        GraftColumnBridge.logicalPlan(lakeOnly(spark, sqlText).getOrElse(throw e))
+      case Right(plan) => lakeTarget(spark, plan).fold(plan)(name =>
+        GraftColumnBridge.logicalPlan(statement(spark, plan, name)))
+    }
+
+  /** The lake table a plan Spark parsed names, when the lake runs it: a
+   *  CREATE TABLE [AS SELECT] that names no `USING` provider; `DESCRIBE
+   *  DETAIL|HISTORY t`, which Spark reads as DESCRIBE of column `t` in a
+   *  table named DETAIL or HISTORY, unless Spark has such a table; and a
+   *  DML, ALTER, DESCRIBE or SHOW statement whose target is a registered
+   *  lake table or a name Spark cannot resolve (so the lake's "no lake
+   *  table registered" error speaks for a read-only relation or a typo). */
+  private def lakeTarget(spark: SparkSession, plan: LogicalPlan): Option[String] =
+    plan match {
+      case c: CreateTable if c.tableSpec.provider.isEmpty =>
+        Some(identifierOf(c.name, "CREATE TABLE"))
+      case c: CreateTableAsSelect if c.tableSpec.provider.isEmpty =>
+        Some(identifierOf(c.name, "CREATE TABLE"))
+      case DescribeColumn(UnresolvedTableOrView(Seq(kw), _, _), c: UnresolvedAttribute, _, _)
+          if Set("detail", "history")(norm(kw)) && !sparkKnows(spark, kw) =>
+        Some(c.nameParts.mkString("."))
+      case _ => (plan match {
+        case m: MergeIntoTable => nameIn(m.targetTable)
+        case i: InsertIntoStatement => nameIn(i.table)
+        case o: OverwriteByExpression => nameIn(o.table)
+        case _: DeleteFromTable | _: UpdateTable | _: AddCheckConstraint |
+             _: AddColumns | _: DropColumns | _: RenameColumn | _: AlterColumns |
+             _: AlterTableClusterBy | _: SetTableProperties |
+             _: UnsetTableProperties | _: ShowTableProperties | _: ShowColumns |
+             _: ShowPartitions | _: DescribeRelation => nameIn(plan)
+        case _ => None
+      }).filter(n => tables.contains(norm(n)) || !sparkKnows(spark, n))
+    }
+
+  /** Whether Spark's catalog (temp views included) resolves `name`. */
+  private def sparkKnows(spark: SparkSession, name: String): Boolean =
+    scala.util.Try(spark.catalog.tableExists(name)).getOrElse(false)
+
+  /** The lake-only grammar: statements Spark's parser refuses. */
+  private def lakeOnly(spark: SparkSession, sqlText: String): Option[DataFrame] = {
     import spark.implicits._
-    sqlText match {
+    Some(sqlText).collect {
       case OptimizeRe(name, full, where, zcols) =>
         val tbl = lookup(name)
         val zc = Option(zcols)
@@ -360,10 +391,6 @@ object LakeSql {
             Seq((cols.mkString(","), tbl.detail.numFiles))
               .toDF("zorder_by", "num_files")
         }
-      case DescribeHistoryRe(name) =>
-        lookup(name).historyDetail
-          .map { case (v, op, ts) => (v, op, ts.map(new java.sql.Timestamp(_))) }
-          .toDF("version", "operation", "timestamp")
       case VacuumRe(name, keep, unit, dry) =>
         val tbl = lookup(name)
         val hours = keep != null && unit.toUpperCase(Locale.ROOT) == "HOURS"
@@ -413,13 +440,6 @@ object LakeSql {
         register(name, cloned)
         Seq((norm(name), cloned.currentVersion, cloned.detail.numFiles))
           .toDF("table", "version", "num_files")
-      case ShowPartitionsRe(name) =>
-        // Delta/Hive `SHOW PARTITIONS t`: the manifest's owned partition
-        // values — O(manifest), no data listing or scan
-        val tbl = lookup(name)
-        val p = tbl.partitionColumn.getOrElse(throw new IllegalArgumentException(
-          s"SHOW PARTITIONS $name: table is not partitioned"))
-        tbl.ownedPartitionValues.sorted.map(v => s"$p=$v").toDF("partition")
       case RestoreTsRe(name, ts) =>
         // Delta `RESTORE TABLE t TO TIMESTAMP AS OF '...'`: resolve the
         // timestamp to a version by the read-path rule (latest commit at or
@@ -429,8 +449,225 @@ object LakeSql {
           spark.sessionState.sqlParser.parseExpression(s"TIMESTAMP '$ts'")))
         tbl.restore(v)
         Seq((v, tbl.currentVersion)).toDF("restored_version", "current_version")
-      case DescribeDetailRe(name) =>
-        val d = lookup(name).detail
+    }
+  }
+
+  /** Run a plan Spark parsed that names the lake table `name`
+   *  ([[lakeTarget]]). */
+  private def statement(spark: SparkSession, plan: LogicalPlan,
+      name: String): DataFrame = {
+    import spark.implicits._
+    lazy val tbl = lookup(name)
+    def versionRow = Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
+    plan match {
+      case m: MergeIntoTable => merge(spark, m, tbl); tbl.read
+      case ac: AddCheckConstraint =>
+        val cc = ac.checkConstraint
+        val cname = Option(cc.userProvidedName).getOrElse(
+          throw new IllegalArgumentException(
+            "name the constraint: ALTER TABLE t ADD CONSTRAINT <name> CHECK (...)"))
+        tbl.addCheckConstraint(cname, cc.condition)
+        Seq((cname, cc.condition)).toDF("constraint", "expression")
+      case ac: AddColumns =>
+        // metadata-only ADD COLUMNS — O(manifest); existing files serve
+        // NULL for the new columns (see LakeTable.addColumns)
+        val cols = ac.columnsToAdd.map { q =>
+          require(q.path.isEmpty,
+            s"nested column ${q.name.mkString(".")} is not supported")
+          require(q.position.isEmpty,
+            s"column position (FIRST/AFTER) is not supported for ${q.colName}")
+          require(q.default.isEmpty,
+            s"DEFAULT is not supported for added column ${q.colName} — " +
+              "existing rows serve NULL")
+          q.colName -> q.dataType
+        }
+        tbl.addColumns(cols)
+        versionRow
+      case dc: DropColumns =>
+        // metadata-only DROP COLUMN — O(manifest); tombstoned against
+        // resurrection (see LakeTable.dropColumn)
+        dc.columnsToDrop.foreach { fn =>
+          val c = fn.name.mkString(".")
+          if (!(dc.ifExists &&
+              !tbl.schema.fieldNames.exists(_.equalsIgnoreCase(c))))
+            tbl.dropColumn(c)
+        }
+        versionRow
+      case dr: DescribeRelation =>
+        // `DESCRIBE [TABLE] t`: column name/type/nullability under the
+        // CURRENT logical names, plus partition-column and generated/
+        // constraint annotations — schema facts only (DESCRIBE DETAIL
+        // carries the snapshot facts)
+        val gen = tbl.generatedColumns
+        tbl.schema.fields.toSeq.map { f =>
+          val notes = Seq(
+            if (tbl.partitionColumn.contains(f.name)) Some("partition") else None,
+            gen.get(f.name).map(e => s"generated as ($e)")).flatten
+          (f.name, f.dataType.simpleString, f.nullable, notes.mkString("; "))
+        }.toDF("col_name", "data_type", "nullable", "comment")
+      case sc: ShowColumns =>
+        tbl.schema.fieldNames.toSeq.toDF("col_name")
+      case rc: RenameColumn =>
+        // metadata-only RENAME COLUMN (column mapping) — O(manifest);
+        // no data file is touched (see LakeTable.renameColumn)
+        require(rc.column.name.length == 1,
+          s"nested column ${rc.column.name.mkString(".")} is not supported")
+        tbl.renameColumn(rc.column.name.head, rc.newName)
+        versionRow
+      case ac: AlterColumns =>
+        // `ALTER TABLE t ALTER COLUMN c SET DEFAULT <expr> | DROP
+        // DEFAULT` — metadata-only default management — and
+        // `ALTER COLUMN c TYPE <wider>` — metadata-only TYPE WIDENING
+        // (needs `delta.enableTypeWidening`; see
+        // LakeTable.alterColumnType). Other ALTER COLUMN forms
+        // (nullability/comment/position) are rejected loudly.
+        ac.specs.foreach { sp =>
+          require(sp.column.name.length == 1,
+            s"nested column ${sp.column.name.mkString(".")} is not supported")
+          val c = sp.column.name.head
+          require(sp.newNullability.isEmpty &&
+            sp.newComment.isEmpty && sp.newPosition.isEmpty,
+            "ALTER COLUMN supports SET DEFAULT / DROP DEFAULT / TYPE only")
+          sp.newDataType match {
+            case Some(dt) =>
+              require(sp.newDefaultExpression.isEmpty && !sp.dropDefault,
+                s"ALTER COLUMN $c: TYPE does not compose with DEFAULT")
+              tbl.alterColumnType(c, dt)
+            case None =>
+              if (sp.dropDefault) tbl.dropDefaultValue(c)
+              else tbl.setDefaultValue(c, sp.newDefaultExpression.getOrElse(
+                throw new IllegalArgumentException(
+                  s"ALTER COLUMN $c: nothing to alter")).originalSQL)
+          }
+        }
+        versionRow
+      case cb: AlterTableClusterBy =>
+        // `ALTER TABLE t CLUSTER BY (c, …)` / `CLUSTER BY NONE` —
+        // liquid clustering: metadata-only key change, the layout
+        // follows at the next OPTIMIZE (see LakeTable.setClusterBy)
+        val cols = cb.clusterBySpec.toSeq.flatMap(_.columnNames).map { r =>
+          require(r.fieldNames.length == 1,
+            s"nested clustering column ${r.fieldNames.mkString(".")} is not supported")
+          r.fieldNames.head
+        }
+        tbl.setClusterBy(cols)
+        Seq((norm(name), cols.mkString(","), tbl.currentVersion))
+          .toDF("table", "cluster_by", "version")
+      case sp: SetTableProperties =>
+        tbl.setTableProperties(sp.properties)
+        versionRow
+      case up: UnsetTableProperties =>
+        tbl.unsetTableProperties(up.propertyKeys)
+        versionRow
+      case st: ShowTableProperties =>
+        val all = tbl.tableProperties
+        val shown = st.propertyKey match {
+          case Some(k) => all.get(k).map(k -> _).toSeq
+          case None => all.toSeq.sortBy(_._1)
+        }
+        shown.toDF("key", "value")
+      case DeleteFromTable(target, condition) =>
+        val alias = aliasOf(target, "DELETE target")
+        // merge-on-read: arbitrary conditions, O(matched rows), valid
+        // with or without live deletion vectors (Delta's DV default)
+        Seq(tbl.deleteWhere(
+            stripTableQualifiers(condition, name, alias).sql))
+          .toDF("deleted_rows")
+      case UpdateTable(target, assignments, condition) =>
+        val alias = aliasOf(target, "UPDATE target")
+        val cond = condition.getOrElse(throw new IllegalArgumentException(
+          "UPDATE without WHERE would rewrite the whole table — add a predicate"))
+        val stripped = stripTableQualifiers(cond, name, alias)
+        val set = assignments.map { a =>
+          val k = a.key match {
+            case attr: UnresolvedAttribute => attr.nameParts.last
+            case other => throw new IllegalArgumentException(
+              s"SET target must be a column, got ${other.sql}")
+          }
+          k -> GraftColumnBridge.column(stripTableQualifiers(a.value, name, alias))
+        }.toMap
+        // zone-expressible bounds take the file-skipping copy-on-write
+        // path (prunes to the files that can hold a match); anything
+        // else — and any table with live deletion vectors — takes the
+        // merge-on-read path: DV the old images, append the new, one
+        // commit, O(matched rows) at any table size
+        val n = zonePreds(stripped) match {
+          case Some(preds) if tbl.deleteVectorDirs.isEmpty =>
+            tbl.update(preds, set)
+          case _ => tbl.updateWhere(stripped.sql, set)
+        }
+        Seq(n).toDF("updated_rows")
+      case ctas: CreateTableAsSelect =>
+        // CREATE TABLE name [PARTITIONED BY (col)] LOCATION 'path'
+        // AS SELECT ... — stand up a lake table purely in SQL (the
+        // reference's Setup.py shape). The engine is path-addressed, so
+        // LOCATION is required; the created table is auto-registered
+        // under its SQL name.
+        createDispatch(spark, name, ctas.tableSpec, ctas.partitioning,
+          ctas.ignoreIfExists) { (tbl, pcol) =>
+          val df = GraftColumnBridge.dataset(spark, ctas.query)
+          tbl.create(df.schema, partitionBy = pcol)
+          tbl.append(df)
+        }
+      case ct: CreateTable =>
+        createDispatch(spark, name, ct.tableSpec, ct.partitioning,
+          ct.ignoreIfExists) { (tbl, pcol) =>
+          val schema = StructType(ct.columns.map((c: ColumnDefinition) =>
+            org.apache.spark.sql.types.StructField(c.name, c.dataType, c.nullable)))
+          // GENERATED ALWAYS AS IDENTITY [(START WITH s STEP BY t)]
+          val idents = ct.columns.flatMap { c =>
+            c.identityColumnSpec.map { sp =>
+              require(!sp.isAllowExplicitInsert,
+                s"${c.name}: GENERATED BY DEFAULT AS IDENTITY is not " +
+                  "supported — use GENERATED ALWAYS")
+              c.name -> (sp.getStart, sp.getStep)
+            }
+          }.toMap
+          // column DEFAULT <expr> — applied when a named-column INSERT
+          // omits the column
+          val defaults = ct.columns.flatMap(c =>
+            c.defaultValue.map(dv => c.name -> dv.originalSQL)).toMap
+          tbl.create(schema, partitionBy = pcol, identityColumns = idents,
+            defaultValues = defaults)
+          ()
+        }
+      case o: OverwriteByExpression =>
+        // `INSERT INTO t REPLACE WHERE <cond> <query>` (Delta's
+        // replaceWhere): atomic delete-matching + insert in ONE commit.
+        // A predicate over the partition column takes the zero-scan
+        // ownership-transfer path (nightly partition reload); anything
+        // else the merge-on-read path (matched rows deletion-vectored)
+        val alias = aliasOf(o.table, "INSERT REPLACE WHERE target")
+        val incoming = GraftColumnBridge.dataset(spark, o.query)
+        val df = insertShape(tbl, incoming, Nil, byName = false)
+        val stripped = stripTableQualifiers(o.deleteExpr, name, alias)
+        zonePreds(stripped) match {
+          case Some(preds)
+              if tbl.partitionColumn.exists(p => preds.forall(_.col == p)) =>
+            tbl.overwritePartitions(preds, df)
+            Seq(-1L).toDF("replaced_rows") // zero-scan: count not known
+          case _ =>
+            Seq(tbl.overwriteWhere(stripped.sql, df)).toDF("replaced_rows")
+        }
+      case InsertIntoStatement(target, partitionSpec, userCols, query,
+          overwrite, _, byName) =>
+        require(partitionSpec.isEmpty,
+          "static PARTITION specs are not supported — put the partition " +
+            "column in the inserted data")
+        // the source query may itself read lake relations
+        // (INSERT INTO t SELECT ... FROM other_lake_table): the session's
+        // ResolveLakeRelations rule resolves them
+        val incoming = GraftColumnBridge.dataset(spark, query)
+        val df = insertShape(tbl, incoming, userCols, byName)
+        if (overwrite) tbl.overwrite(df) else tbl.append(df)
+        versionRow
+      case DescribeColumn(UnresolvedTableOrView(Seq(kw), _, _), c: UnresolvedAttribute, _, _)
+          if norm(kw) == "history" =>
+        lookup(c.nameParts.mkString(".")).historyDetail
+          .map { case (v, op, ts) => (v, op, ts.map(new java.sql.Timestamp(_))) }
+          .toDF("version", "operation", "timestamp")
+      case _: DescribeColumn => // DESCRIBE DETAIL
+        val d = tbl.detail
         Seq((d.location, d.version, d.numFiles, d.sizeInBytes,
             d.partitionColumns.mkString(","), d.statsColumns.mkString(","),
             d.changeFeedEnabled, d.constraints.size, d.lastOperation,
@@ -440,281 +677,20 @@ object LakeSql {
             "partition_columns", "stats_columns", "change_feed_enabled",
             "num_constraints", "last_operation", "deletion_vectors",
             "bloom_filter_columns", "clustering_columns")
-      case _ =>
-        spark.sessionState.sqlParser.parsePlan(sqlText) match {
-          case _: MergeIntoTable =>
-            merge(spark, sqlText).read
-          case ac: org.apache.spark.sql.catalyst.plans.logical.AddCheckConstraint =>
-            // the parser wraps the target in a validation Filter — the named
-            // relation sits below it
-            val name = targetName(ac.child, "ALTER TABLE")
-            val cc = ac.checkConstraint
-            val cname = Option(cc.userProvidedName).getOrElse(
-              throw new IllegalArgumentException(
-                "name the constraint: ALTER TABLE t ADD CONSTRAINT <name> CHECK (...)"))
-            lookup(name).addCheckConstraint(cname, cc.condition)
-            Seq((cname, cc.condition)).toDF("constraint", "expression")
-          case ac: org.apache.spark.sql.catalyst.plans.logical.AddColumns =>
-            // metadata-only ADD COLUMNS — O(manifest); existing files serve
-            // NULL for the new columns (see LakeTable.addColumns)
-            val name = targetName(ac.table, "ALTER TABLE")
-            val cols = ac.columnsToAdd.map { q =>
-              require(q.path.isEmpty,
-                s"nested column ${q.name.mkString(".")} is not supported")
-              require(q.position.isEmpty,
-                s"column position (FIRST/AFTER) is not supported for ${q.colName}")
-              require(q.default.isEmpty,
-                s"DEFAULT is not supported for added column ${q.colName} — " +
-                  "existing rows serve NULL")
-              q.colName -> q.dataType
-            }
-            val tbl = lookup(name)
-            tbl.addColumns(cols)
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case dc: org.apache.spark.sql.catalyst.plans.logical.DropColumns =>
-            // metadata-only DROP COLUMN — O(manifest); tombstoned against
-            // resurrection (see LakeTable.dropColumn)
-            val name = targetName(dc.table, "ALTER TABLE")
-            val tbl = lookup(name)
-            dc.columnsToDrop.foreach { fn =>
-              val c = fn.name.mkString(".")
-              if (!(dc.ifExists &&
-                  !tbl.schema.fieldNames.exists(_.equalsIgnoreCase(c))))
-                tbl.dropColumn(c)
-            }
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case dr: org.apache.spark.sql.catalyst.plans.logical.DescribeRelation =>
-            // `DESCRIBE [TABLE] t`: column name/type/nullability under the
-            // CURRENT logical names, plus partition-column and generated/
-            // constraint annotations — schema facts only (DESCRIBE DETAIL
-            // carries the snapshot facts)
-            val name = targetName(dr.relation, "DESCRIBE")
-            val tbl = lookup(name)
-            val gen = tbl.generatedColumns
-            tbl.schema.fields.toSeq.map { f =>
-              val notes = Seq(
-                if (tbl.partitionColumn.contains(f.name)) Some("partition") else None,
-                gen.get(f.name).map(e => s"generated as ($e)")).flatten
-              (f.name, f.dataType.simpleString, f.nullable, notes.mkString("; "))
-            }.toDF("col_name", "data_type", "nullable", "comment")
-          case sc: org.apache.spark.sql.catalyst.plans.logical.ShowColumns =>
-            val name = targetName(sc.child, "SHOW COLUMNS")
-            lookup(name).schema.fieldNames.toSeq.toDF("col_name")
-          case rc: org.apache.spark.sql.catalyst.plans.logical.RenameColumn =>
-            // metadata-only RENAME COLUMN (column mapping) — O(manifest);
-            // no data file is touched (see LakeTable.renameColumn)
-            val name = targetName(rc.table, "ALTER TABLE")
-            require(rc.column.name.length == 1,
-              s"nested column ${rc.column.name.mkString(".")} is not supported")
-            val tbl = lookup(name)
-            tbl.renameColumn(rc.column.name.head, rc.newName)
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case ac: org.apache.spark.sql.catalyst.plans.logical.AlterColumns =>
-            // `ALTER TABLE t ALTER COLUMN c SET DEFAULT <expr> | DROP
-            // DEFAULT` — metadata-only default management — and
-            // `ALTER COLUMN c TYPE <wider>` — metadata-only TYPE WIDENING
-            // (needs `delta.enableTypeWidening`; see
-            // LakeTable.alterColumnType). Other ALTER COLUMN forms
-            // (nullability/comment/position) are rejected loudly.
-            val name = targetName(ac.table, "ALTER TABLE")
-            val tbl = lookup(name)
-            ac.specs.foreach { sp =>
-              require(sp.column.name.length == 1,
-                s"nested column ${sp.column.name.mkString(".")} is not supported")
-              val c = sp.column.name.head
-              require(sp.newNullability.isEmpty &&
-                sp.newComment.isEmpty && sp.newPosition.isEmpty,
-                "ALTER COLUMN supports SET DEFAULT / DROP DEFAULT / TYPE only")
-              sp.newDataType match {
-                case Some(dt) =>
-                  require(sp.newDefaultExpression.isEmpty && !sp.dropDefault,
-                    s"ALTER COLUMN $c: TYPE does not compose with DEFAULT")
-                  tbl.alterColumnType(c, dt)
-                case None =>
-                  if (sp.dropDefault) tbl.dropDefaultValue(c)
-                  else tbl.setDefaultValue(c, sp.newDefaultExpression.getOrElse(
-                    throw new IllegalArgumentException(
-                      s"ALTER COLUMN $c: nothing to alter")).originalSQL)
-              }
-            }
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case cb: org.apache.spark.sql.catalyst.plans.logical.AlterTableClusterBy =>
-            // `ALTER TABLE t CLUSTER BY (c, …)` / `CLUSTER BY NONE` —
-            // liquid clustering: metadata-only key change, the layout
-            // follows at the next OPTIMIZE (see LakeTable.setClusterBy)
-            val name = targetName(cb.table, "ALTER TABLE")
-            val cols = cb.clusterBySpec.toSeq.flatMap(_.columnNames).map { r =>
-              require(r.fieldNames.length == 1,
-                s"nested clustering column ${r.fieldNames.mkString(".")} is not supported")
-              r.fieldNames.head
-            }
-            val tbl = lookup(name)
-            tbl.setClusterBy(cols)
-            Seq((norm(name), cols.mkString(","), tbl.currentVersion))
-              .toDF("table", "cluster_by", "version")
-          case sp: org.apache.spark.sql.catalyst.plans.logical.SetTableProperties =>
-            val name = targetName(sp.table, "ALTER TABLE")
-            val tbl = lookup(name)
-            tbl.setTableProperties(sp.properties)
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case up: org.apache.spark.sql.catalyst.plans.logical.UnsetTableProperties =>
-            val name = targetName(up.table, "ALTER TABLE")
-            val tbl = lookup(name)
-            tbl.unsetTableProperties(up.propertyKeys)
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          case st: org.apache.spark.sql.catalyst.plans.logical.ShowTableProperties =>
-            val name = targetName(st.table, "SHOW TBLPROPERTIES")
-            val all = lookup(name).tableProperties
-            val shown = st.propertyKey match {
-              case Some(k) => all.get(k).map(k -> _).toSeq
-              case None => all.toSeq.sortBy(_._1)
-            }
-            shown.toDF("key", "value")
-          case DeleteFromTable(target, condition) =>
-            val (name, alias) = relationOf(target, "DELETE")
-            // merge-on-read: arbitrary conditions, O(matched rows), valid
-            // with or without live deletion vectors (Delta's DV default)
-            Seq(lookup(name).deleteWhere(
-                stripTableQualifiers(condition, name, alias).sql))
-              .toDF("deleted_rows")
-          case UpdateTable(target, assignments, condition) =>
-            val (name, alias) = relationOf(target, "UPDATE")
-            val cond = condition.getOrElse(throw new IllegalArgumentException(
-              "UPDATE without WHERE would rewrite the whole table — add a predicate"))
-            val stripped = stripTableQualifiers(cond, name, alias)
-            val set = assignments.map { a =>
-              val k = a.key match {
-                case attr: UnresolvedAttribute => attr.nameParts.last
-                case other => throw new IllegalArgumentException(
-                  s"SET target must be a column, got ${other.sql}")
-              }
-              k -> GraftColumnBridge.column(stripTableQualifiers(a.value, name, alias))
-            }.toMap
-            val tbl = lookup(name)
-            // zone-expressible bounds take the file-skipping copy-on-write
-            // path (prunes to the files that can hold a match); anything
-            // else — and any table with live deletion vectors — takes the
-            // merge-on-read path: DV the old images, append the new, one
-            // commit, O(matched rows) at any table size
-            val n = zonePreds(stripped) match {
-              case Some(preds) if tbl.deleteVectorDirs.isEmpty =>
-                tbl.update(preds, set)
-              case _ => tbl.updateWhere(stripped.sql, set)
-            }
-            Seq(n).toDF("updated_rows")
-          case ctas: CreateTableAsSelect =>
-            // CREATE TABLE name [PARTITIONED BY (col)] LOCATION 'path'
-            // AS SELECT ... — stand up a lake table purely in SQL (the
-            // reference's Setup.py shape). The engine is path-addressed, so
-            // LOCATION is required; the created table is auto-registered
-            // under its SQL name.
-            val name = identifierOf(ctas.name, "CREATE TABLE")
-            createDispatch(spark, name, ctas.tableSpec, ctas.partitioning,
-              ctas.ignoreIfExists) { (tbl, pcol) =>
-              val df = GraftColumnBridge.dataset(spark,
-                substituteLakeRelations(spark, ctas.query))
-              tbl.create(df.schema, partitionBy = pcol)
-              tbl.append(df)
-            }
-          case ct: CreateTable =>
-            val name = identifierOf(ct.name, "CREATE TABLE")
-            createDispatch(spark, name, ct.tableSpec, ct.partitioning,
-              ct.ignoreIfExists) { (tbl, pcol) =>
-              val schema = StructType(ct.columns.map((c: ColumnDefinition) =>
-                org.apache.spark.sql.types.StructField(c.name, c.dataType, c.nullable)))
-              // GENERATED ALWAYS AS IDENTITY [(START WITH s STEP BY t)]
-              val idents = ct.columns.flatMap { c =>
-                c.identityColumnSpec.map { sp =>
-                  require(!sp.isAllowExplicitInsert,
-                    s"${c.name}: GENERATED BY DEFAULT AS IDENTITY is not " +
-                      "supported — use GENERATED ALWAYS")
-                  c.name -> (sp.getStart, sp.getStep)
-                }
-              }.toMap
-              // column DEFAULT <expr> — applied when a named-column INSERT
-              // omits the column
-              val defaults = ct.columns.flatMap(c =>
-                c.defaultValue.map(dv => c.name -> dv.originalSQL)).toMap
-              tbl.create(schema, partitionBy = pcol, identityColumns = idents,
-                defaultValues = defaults)
-              ()
-            }
-          case o: OverwriteByExpression =>
-            // `INSERT INTO t REPLACE WHERE <cond> <query>` (Delta's
-            // replaceWhere): atomic delete-matching + insert in ONE commit.
-            // A predicate over the partition column takes the zero-scan
-            // ownership-transfer path (nightly partition reload); anything
-            // else the merge-on-read path (matched rows deletion-vectored)
-            val (name, alias) = relationOf(o.table, "INSERT REPLACE WHERE")
-            val tbl = lookup(name)
-            val incoming = GraftColumnBridge.dataset(spark,
-              substituteLakeRelations(spark, o.query))
-            val df = insertShape(tbl, incoming, Nil, byName = false)
-            val stripped = stripTableQualifiers(o.deleteExpr, name, alias)
-            zonePreds(stripped) match {
-              case Some(preds)
-                  if tbl.partitionColumn.exists(p => preds.forall(_.col == p)) =>
-                tbl.overwritePartitions(preds, df)
-                Seq(-1L).toDF("replaced_rows") // zero-scan: count not known
-              case _ =>
-                Seq(tbl.overwriteWhere(stripped.sql, df)).toDF("replaced_rows")
-            }
-          case InsertIntoStatement(target, partitionSpec, userCols, query,
-              overwrite, _, byName) =>
-            val (name, _) = relationOf(target, "INSERT")
-            require(partitionSpec.isEmpty,
-              "static PARTITION specs are not supported — put the partition " +
-                "column in the inserted data")
-            val tbl = lookup(name)
-            // the source query may itself read lake relations
-            // (INSERT INTO t SELECT ... FROM other_lake_table)
-            val incoming = GraftColumnBridge.dataset(spark,
-              substituteLakeRelations(spark, query))
-            val df = insertShape(tbl, incoming, userCols, byName)
-            if (overwrite) tbl.overwrite(df) else tbl.append(df)
-            Seq((norm(name), tbl.currentVersion)).toDF("table", "version")
-          // no containsPattern(UNRESOLVED_RELATION) fast-path here:
-          // RelationTimeTravel is a LEAF whose nodePatterns do NOT include
-          // it, so a pure time-travel SELECT would never dispatch
-          case other if collectLakeRelations(other).nonEmpty =>
-            // a query (SELECT, including time travel) over registered lake
-            // tables — splice snapshots in and let Spark's analyzer run it
-            GraftColumnBridge.dataset(spark, substituteLakeRelations(spark, other))
-          case other => throw new IllegalArgumentException(
-            s"LakeSql.sql supports SELECT / MERGE / DELETE / UPDATE / " +
-              s"INSERT INTO / OPTIMIZE / VACUUM / RESTORE / DESCRIBE DETAIL / " +
-              s"DESCRIBE HISTORY, got ${other.nodeName}")
-        }
+      case sp: ShowPartitions =>
+        // Delta/Hive `SHOW PARTITIONS t`: the manifest's owned partition
+        // values — O(manifest), no data listing or scan
+        val p = tbl.partitionColumn.getOrElse(throw new IllegalArgumentException(
+          s"SHOW PARTITIONS $name: table is not partitioned"))
+        tbl.ownedPartitionValues.sorted.map(v => s"$p=$v").toDF("partition")
     }
-  }
-
-  /**
-   * SQL-text SELECT over registered lake tables with FULL table semantics —
-   * deletion vectors filtered, evolved schema, generated/constraint
-   * metadata, and time travel: `SELECT ... FROM t VERSION AS OF 3` /
-   * `TIMESTAMP AS OF '...'` (Spark's own temporal-clause grammar). The
-   * parsed plan's lake relations are replaced by the CURRENT snapshot's
-   * logical plan at call time — there is no registered-view staleness: a
-   * SELECT issued after a commit sees that commit. Temp views, subqueries,
-   * joins against non-lake relations, and every SQL construct Spark's
-   * analyzer handles all compose (only the relation leaves are touched).
-   * Each snapshot is one scan over a [[ManifestFileIndex]], so a `WHERE`
-   * prunes files wherever Catalyst pushes it — directly on the relation,
-   * above a join or inside a subquery. This is the read path the reference
-   * drives through `spark.sql` (`Setup.py:58-75` count checks,
-   * `README.md:106-110` invariants).
-   */
-  def select(spark: SparkSession, sqlText: String): DataFrame = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sqlText)
-    require(collectLakeRelations(plan).nonEmpty,
-      s"no registered lake table referenced in: $sqlText")
-    GraftColumnBridge.dataset(spark, substituteLakeRelations(spark, plan))
   }
 
   /** Hook for [[graft.lake.ResolveLakeRelations]] (the analyzer rule the
    *  session extension injects): substitute registered lake relations —
-   *  plain, time-travelled, or `table_changes` — inside ANY plan Spark is
-   *  resolving, so `spark.sql("SELECT ... FROM lake_t")` works natively.
+   *  plain or time-travelled — inside ANY plan Spark is resolving, so
+   *  `spark.sql("SELECT ... FROM lake_t")` works natively (`table_changes`
+   *  is the table function the extension registers: [[tableChanges]]).
    *  No-op (and cheap) when the plan references no registered table. */
   private[lake] def resolveRelations(spark: SparkSession,
       plan: LogicalPlan): LogicalPlan =
@@ -733,27 +709,10 @@ object LakeSql {
             relations.contains(norm(parts.mkString("."))) => parts.mkString(".")
       case RelationTimeTravel(UnresolvedRelation(parts, _, _), _, _)
           if tables.contains(norm(parts.mkString("."))) => parts.mkString(".")
-      case tvf: UnresolvedTableValuedFunction
-          if tableChangesTarget(tvf).isDefined => tableChangesTarget(tvf).get
     }
 
-  /** `table_changes('t', from[, to])` (Delta's SQL CDF read): the target
-   *  table name when `tvf` is a table_changes call over a registered lake
-   *  table — the first argument must be a foldable string. */
-  private def tableChangesTarget(
-      tvf: UnresolvedTableValuedFunction): Option[String] =
-    tvf.name.map(_.toLowerCase(Locale.ROOT)) match {
-      case Seq("table_changes") => tvf.functionArgs.headOption.flatMap { e =>
-        if (!e.foldable) None
-        else Option(Cast(e, org.apache.spark.sql.types.StringType, Some("UTC"))
-          .eval(null)).map(_.toString).filter(n => tables.contains(norm(n)))
-      }
-      case _ => None
-    }
-
-  /** Replace registered lake relations (plain or time-travelled) and
-   *  `table_changes` calls with the corresponding snapshot's logical plan,
-   *  aliased under the table's last name part so qualified column
+  /** Replace registered lake relations (plain or time-travelled) with the
+   *  corresponding snapshot's logical plan, aliased under the table's last name part so qualified column
    *  references keep resolving. File skipping needs nothing here: each
    *  snapshot is one scan over a [[ManifestFileIndex]], which prunes with
    *  whatever filters Catalyst pushes down once the query is optimized. */
@@ -773,9 +732,6 @@ object LakeSql {
           "time travel needs exactly one of VERSION AS OF / TIMESTAMP AS OF")
       }
       SubqueryAlias(parts.last, GraftColumnBridge.logicalPlan(df))
-    case tvf: UnresolvedTableValuedFunction
-        if tableChangesTarget(tvf).isDefined =>
-      tableChanges(tvf.functionArgs)
     case UnresolvedRelation(parts, _, _)
         if tables.contains(norm(parts.mkString("."))) =>
       SubqueryAlias(parts.last,
@@ -788,10 +744,8 @@ object LakeSql {
   }
 
   /** Delta's `table_changes('t', from [, to])` over a registered lake
-   *  table: the change feed's logical plan. The one implementation behind
-   *  both the SQL-text arm above and the table function
-   *  [[graft.expressions.GraftExtensions]] registers for native
-   *  `spark.sql`. Bounds are foldable: an integer VERSION, or a TIMESTAMP
+   *  table: the change feed's logical plan, behind the table function
+   *  [[graft.expressions.GraftExtensions]] registers for `spark.sql`. Bounds are foldable: an integer VERSION, or a TIMESTAMP
    *  string — start resolves to the first commit AT OR AFTER it, end to
    *  the last commit at-or-before (DESCRIBE HISTORY's clock, versioned
    *  manifests). */
@@ -801,7 +755,7 @@ object LakeSql {
     require(args.head.foldable,
       s"table_changes table name must be a literal, got ${args.head.sql}")
     val tbl = lookup(String.valueOf(
-      Cast(args.head, org.apache.spark.sql.types.StringType, Some("UTC")).eval(null)))
+      Cast(args.head, StringType, Some("UTC")).eval(null)))
     def ver(e: Expression, what: String, isStart: Boolean): Long = {
       require(e.foldable, s"table_changes $what must be a literal, got ${e.sql}")
       val v = try Cast(e, org.apache.spark.sql.types.LongType, Some("UTC")).eval(null)
@@ -890,12 +844,11 @@ object LakeSql {
 
   /** The named table a DDL or utility statement targets, wherever the
    *  parser put it (ADD CONSTRAINT wraps it in a validation Filter). */
-  private def targetName(plan: LogicalPlan, what: String): String = plan.collectFirst {
+  private def nameIn(plan: LogicalPlan): Option[String] = plan.collectFirst {
     case UnresolvedRelation(parts, _, _) => parts.mkString(".")
     case ut: UnresolvedTable => ut.multipartIdentifier.mkString(".")
     case ut: UnresolvedTableOrView => ut.multipartIdentifier.mkString(".")
-  }.getOrElse(throw new IllegalArgumentException(
-    s"$what target must be a named table, got ${plan.nodeName}"))
+  }
 
   private def identifierOf(plan: LogicalPlan, what: String): String = plan match {
     case id: UnresolvedIdentifier => id.nameParts.mkString(".")
@@ -980,9 +933,7 @@ object LakeSql {
     import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual}
     def litStr(v: Expression): Option[String] =
       if (!v.foldable) None
-      else Option(org.apache.spark.sql.catalyst.expressions.Cast(
-        v, org.apache.spark.sql.types.StringType, Some("UTC")).eval(null))
-        .map(_.toString)
+      else Option(Cast(v, StringType, Some("UTC")).eval(null)).map(_.toString)
     e match {
       case And(l, r) => for { a <- zonePreds(l); b <- zonePreds(r) } yield a ++ b
       case EqualTo(a: UnresolvedAttribute, v) if litStr(v).isDefined =>

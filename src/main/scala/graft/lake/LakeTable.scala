@@ -752,34 +752,57 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  snapshot-refresh) instead of failing every subsequent run when an
    *  upstream table was refreshed by full rewrite — without it, a ledger
    *  window spanning the rewrite wedges the consumer permanently. */
-  def feedReadable(fromVersion: Long, toVersion: Long): Boolean = {
+  def feedReadable(fromVersion: Long, toVersion: Long): Boolean =
+    feedWindow(fromVersion, toVersion).readable
+
+  /** ONE walk over the manifests of `[fromVersion, toVersion]` answering
+   *  both questions a change-feed consumer asks: can the feed serve the
+   *  window ([[feedReadable]]), and is every commit in it STRUCTURALLY
+   *  append-only (append/convert plus metadata-only and rowset-preserving
+   *  maintenance commits), so its feed carries only insert images and an
+   *  append-only consumer skips the update/delete data probe. The common
+   *  100 TB shape (bronze ingest windows) is `AppendOnly` every run; only
+   *  windows with row-mutating commits (merge/delete/update/replace —
+   *  which MAY still be all-insert) are `Mutating`. The walk stops at the
+   *  first commit the feed cannot serve. Metadata only: O(window) manifest
+   *  reads + dir-existence stats, no data touched. */
+  def feedWindow(fromVersion: Long, toVersion: Long): LakeTable.FeedWindow = {
+    import LakeTable.FeedWindow._
     require(exists, s"LakeTable at $root does not exist")
-    fromVersion >= 0 && toVersion <= currentVersion &&
-      (fromVersion to toVersion).forall { v =>
-        val mv = readManifest(v)
-        mv.op match {
-          case "create" | "constraint" | "index" | "alter" | "rename" |
-               "properties" | "optimize" | "compact" =>
-            true
-          case "append" | "convert" =>
-            // VACUUM may have reclaimed this window's added dirs (a lagging
-            // consumer under an aggressive retention): unreadable → the
-            // consumer falls back to re-bootstrap instead of wedging on
-            // readChangeFeed's vacuumed-range error every subsequent run
-            addedEntries(v, mv).forall(e => Files.isDirectory(Paths.get(root, e.dir)))
-          case "merge" | "delete" | "update" | "replace" =>
-            // mirror readChangeFeed: images recorded (and still on disk —
-            // same vacuum consideration), an all-insert commit served from
-            // its added data dirs, or a CDF-on delete/update that matched
-            // zero rows (legal empty part)
-            (if (mv.cdfDir.contains(LakeTable.CdfFromData))
-              addedEntries(v, mv).forall(e => Files.isDirectory(Paths.get(root, e.dir)))
-            else mv.cdfDir.exists(d => Files.isDirectory(Paths.get(root, d)))) ||
-              (mv.cdfDir.isEmpty && mv.cdfEnabled &&
-                (mv.op == "delete" || mv.op == "update"))
-          case _ => false // overwrite and any other full-rewrite op
-        }
+    def onDisk(dirs: Seq[String]) = dirs.forall(d => Files.isDirectory(Paths.get(root, d)))
+    def commit(v: Long): LakeTable.FeedWindow = {
+      val mv = readManifest(v)
+      // VACUUM may have reclaimed a commit's added or change dirs (a
+      // lagging consumer under an aggressive retention)
+      def kept(dirs: => Seq[String]) = if (onDisk(dirs)) Mutating else Vacuumed
+      mv.op match {
+        case "create" | "constraint" | "index" | "alter" | "rename" |
+             "properties" | "optimize" | "compact" =>
+          AppendOnly
+        case "append" | "convert" =>
+          if (onDisk(addedEntries(v, mv).map(_.dir))) AppendOnly else Vacuumed
+        case "merge" | "delete" | "update" | "replace" =>
+          // mirror readChangeFeed: images recorded, an all-insert commit
+          // served from its added data dirs, or a CDF-on delete/update that
+          // matched zero rows (legal empty part)
+          mv.cdfDir match {
+            case Some(LakeTable.CdfFromData) => kept(addedEntries(v, mv).map(_.dir))
+            case Some(d) => kept(Seq(d))
+            case None if mv.cdfEnabled && (mv.op == "delete" || mv.op == "update") =>
+              Mutating
+            case None => Rewritten
+          }
+        case _ => Rewritten // overwrite and any other full-rewrite op
       }
+    }
+    if (fromVersion < 0 || toVersion > currentVersion) return Rewritten
+    val commits = (fromVersion to toVersion).iterator.map(commit)
+    var window: LakeTable.FeedWindow = AppendOnly
+    while (commits.hasNext && window.readable) {
+      val c = commits.next()
+      if (c != AppendOnly) window = c
+    }
+    window
   }
 
   /** The data dirs version `v` (manifest `mv`) added over its parent. */
@@ -787,27 +810,6 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     val prev = if (v == 0) Set.empty[String]
       else readManifest(v - 1).entries.map(_.dir).toSet
     mv.entries.filterNot(e => prev(e.dir))
-  }
-
-  /** Whether every commit in `[fromVersion, toVersion]` is STRUCTURALLY
-   *  append-only (append/convert plus metadata-only and rowset-preserving
-   *  maintenance commits): such a window's change feed carries ONLY insert
-   *  images, so an append-only consumer can skip the update/delete data
-   *  probe entirely — a manifest-only check, zero data scanned. The common
-   *  100 TB shape (bronze ingest windows) takes this fast path every run;
-   *  only windows containing row-mutating commits (merge/delete/update/
-   *  replace — which MAY still be all-insert) need a data-level probe. */
-  def appendOnlyOps(fromVersion: Long, toVersion: Long): Boolean = {
-    require(exists, s"LakeTable at $root does not exist")
-    fromVersion >= 0 && toVersion <= currentVersion &&
-      (fromVersion to toVersion).forall { v =>
-        readManifest(v).op match {
-          case "create" | "constraint" | "index" | "alter" | "rename" |
-               "properties" | "optimize" | "compact" | "append" | "convert" =>
-            true
-          case _ => false
-        }
-      }
   }
 
   /** Partition-pruned read of only the given partition values. */
@@ -3858,6 +3860,24 @@ object LakeTable {
       org.apache.spark.sql.types.StringType, nullable = false),
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.LongType, nullable = false)))
+
+  /** What the change feed serves over a version window
+   *  ([[LakeTable.feedWindow]]). */
+  sealed trait FeedWindow {
+    /** Whether the feed can serve the window at all. */
+    def readable: Boolean = this == FeedWindow.AppendOnly || this == FeedWindow.Mutating
+  }
+  object FeedWindow {
+    /** Every commit structurally append-only: insert images only. */
+    case object AppendOnly extends FeedWindow
+    /** Readable; row-mutating commits may carry update/delete images. */
+    case object Mutating extends FeedWindow
+    /** A full-rewrite commit, or a row-mutating one that recorded no
+     *  images: no row-level delta exists. */
+    case object Rewritten extends FeedWindow
+    /** VACUUM reclaimed added or change dirs the window needs. */
+    case object Vacuumed extends FeedWindow
+  }
 
   /** DESCRIBE DETAIL row (Delta parity): current-snapshot facts. */
   final case class TableDetail(

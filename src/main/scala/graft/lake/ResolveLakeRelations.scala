@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
 /**
  * Analyzer RESOLUTION RULE (SURVEY §7 extension ladder, step c — injected by
  * [[graft.expressions.GraftExtensions]]): resolves [[LakeSql]]-registered
- * lake tables inside plain `spark.sql(...)` text, so a session built with
- * the extension queries lake tables natively — no `LakeSql.sql` wrapper:
+ * lake tables inside plain `spark.sql(...)` queries, so a session built
+ * with the extension reads lake tables natively (its statements run through
+ * [[LakeSqlParser]]):
  *
  * {{{
  *   SparkSession.builder()
@@ -18,11 +19,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
  *   spark.sql("SELECT count(*) FROM gold_fact VERSION AS OF 3")
  * }}}
  *
- * The substitution is the SAME one `LakeSql.sql`/`select` use — plain
- * relations and `VERSION/TIMESTAMP AS OF` time travel resolve to the
+ * Plain relations and `VERSION/TIMESTAMP AS OF` time travel resolve to the
  * CURRENT snapshot's logical plan (DV-filtered, schema-evolved, never
  * stale); the `table_changes('t', from[, to])` CDF function resolves
- * through the table function the extension registers, which calls the same
+ * through the table function the extension registers, which calls
  * [[LakeSql.tableChanges]]. Each snapshot is one scan over a
  * [[ManifestFileIndex]]: a `WHERE` prunes files wherever Catalyst pushes
  * it, with no rewrite here.

@@ -2512,7 +2512,7 @@ object CoreQueries {
       }
       LakeSql.register("user_latest", tbl)
       src.createOrReplaceTempView("user_updates")
-      try LakeSql.merge(s,
+      try s.sql(
         """MERGE INTO user_latest AS tgt
            USING user_updates AS upd
            ON tgt.user_id = upd.user_id
@@ -2600,11 +2600,11 @@ object CoreQueries {
       }
       LakeSql.register("s22_orders", tbl)
       try {
-        LakeSql.sql(s, """DELETE FROM s22_orders
+        s.sql("""DELETE FROM s22_orders
           WHERE o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
             AND o_orderdate <= TIMESTAMP '1996-12-31 23:59:59'""")
-        LakeSql.sql(s, "OPTIMIZE s22_orders")
-        LakeSql.sql(s, """UPDATE s22_orders SET o_totalprice = o_totalprice + 100000.0
+        s.sql("OPTIMIZE s22_orders")
+        s.sql("""UPDATE s22_orders SET o_totalprice = o_totalprice + 100000.0
           WHERE o_orderdate >= TIMESTAMP '1999-01-01 00:00:00'
             AND o_orderdate <= TIMESTAMP '1999-12-31 23:59:59'""")
       } finally LakeSql.unregister("s22_orders")
@@ -2660,8 +2660,8 @@ object CoreQueries {
       }
       LakeSql.register("s42_orders", tbl)
       try {
-        LakeSql.sql(s, "ALTER TABLE s42_orders CLUSTER BY (o_custkey, o_totalprice)")
-        LakeSql.sql(s, "OPTIMIZE s42_orders") // routes to the clustering key
+        s.sql("ALTER TABLE s42_orders CLUSTER BY (o_custkey, o_totalprice)")
+        s.sql("OPTIMIZE s42_orders") // routes to the clustering key
       } finally LakeSql.unregister("s42_orders")
       tbl.readWhere(Seq(LakeTable.ZonePred.between("o_custkey", "100", "300")))
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -2686,10 +2686,10 @@ object CoreQueries {
       }
       LakeSql.register("s48_orders", tbl)
       try {
-        LakeSql.sql(s, "ALTER TABLE s48_orders CLUSTER BY (o_custkey)")
-        LakeSql.sql(s, "OPTIMIZE s48_orders")       // pass 1: clusters all
+        s.sql("ALTER TABLE s48_orders CLUSTER BY (o_custkey)")
+        s.sql("OPTIMIZE s48_orders")       // pass 1: clusters all
         tbl.append(o.filter(col("o_orderkey") % 3 === 0).coalesce(1))
-        val st = LakeSql.sql(s, "OPTIMIZE s48_orders").collect().head
+        val st = s.sql("OPTIMIZE s48_orders").collect().head
         // the incremental contract, enforced in-query: pass 2 touched only
         // the trickle (pass 1's output rode untouched)
         require(st.getAs[Int]("files_untouched") >= 1 &&
@@ -2724,10 +2724,10 @@ object CoreQueries {
       }
       LakeSql.register("s49_t", tbl)
       try {
-        LakeSql.sql(s, "ALTER TABLE s49_t SET TBLPROPERTIES " +
+        s.sql("ALTER TABLE s49_t SET TBLPROPERTIES " +
           "('delta.enableTypeWidening' = 'true')")
-        LakeSql.sql(s, "ALTER TABLE s49_t ALTER COLUMN k TYPE BIGINT")
-        LakeSql.sql(s, "ALTER TABLE s49_t ALTER COLUMN price TYPE DOUBLE")
+        s.sql("ALTER TABLE s49_t ALTER COLUMN k TYPE BIGINT")
+        s.sql("ALTER TABLE s49_t ALTER COLUMN price TYPE DOUBLE")
         tbl.append(o.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey").as("k"),
             col("o_totalprice").as("price")))
@@ -2811,7 +2811,7 @@ object CoreQueries {
         pt.deleteWhere("o_orderkey % 10 = 3") // arbitrary predicate → live DVs
       }
       LakeSql.register("s25_orders", tbl)
-      try LakeSql.sql(s,
+      try s.sql(
         """SELECT o_orderkey, o_custkey, o_totalprice, o_discounted
            FROM s25_orders WHERE o_totalprice >= 1000.0
            ORDER BY o_orderkey""")
@@ -2841,7 +2841,7 @@ object CoreQueries {
           pt.append(oy.filter(col("o_orderkey") % 3 === r)))
       }
       LakeSql.register("s26_orders", tbl)
-      try LakeSql.sql(s,
+      try s.sql(
         "OPTIMIZE s26_orders WHERE o_year = 1997 ZORDER BY (o_custkey)")
       finally LakeSql.unregister("s26_orders")
       tbl.readWhere(Seq(LakeTable.ZonePred("o_year", Some("1997"), Some("1997")),
@@ -2869,7 +2869,7 @@ object CoreQueries {
       }
       LakeSql.register("s27_orders", tbl)
       val n =
-        try LakeSql.sql(s,
+        try s.sql(
           """UPDATE s27_orders SET o_totalprice = o_totalprice * 1.5
              WHERE o_orderkey % 7 = 0 AND o_totalprice < 150000.0""")
           .collect().head.getLong(0)
@@ -2915,7 +2915,7 @@ object CoreQueries {
       tbl.merge(base, Seq("user_id"))                      // v1: bootstrap
       tbl.merge(src, Seq("user_id"), Some("s.ts >= t.ts")) // v2: upsert
       LakeSql.register("s28_events", tbl)
-      try LakeSql.sql(s,
+      try s.sql(
         """SELECT user_id, ts, event_type, value,
                   _change_type, _commit_version, _commit_timestamp
            FROM table_changes('s28_events', 2)
@@ -2964,7 +2964,7 @@ object CoreQueries {
           pt.append(oy.filter(col("o_orderkey") % 3 === r)))
       }
       LakeSql.register("s29_orders", tbl)
-      try LakeSql.sql(s,
+      try s.sql(
         """INSERT INTO s29_orders REPLACE WHERE o_year = 1997
            SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice * 1.5,
                   o_orderdate, o_orderpriority, o_year
@@ -2997,7 +2997,7 @@ object CoreQueries {
           lit("web").as("o_channel"))
       LakeSql.register("s30_orders", tbl)
       src.createOrReplaceTempView("s30_updates")
-      try LakeSql.merge(s,
+      try s.sql(
         """MERGE WITH SCHEMA EVOLUTION INTO s30_orders AS t0
            USING s30_updates AS u ON t0.o_orderkey = u.o_orderkey
            WHEN MATCHED THEN UPDATE SET *
@@ -3028,7 +3028,7 @@ object CoreQueries {
         _.append(o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_custkey", "o_totalprice")))
       LakeSql.register("s31_orders", tbl)
-      try LakeSql.sql(s, "ALTER TABLE s31_orders ADD COLUMNS (o_margin DOUBLE)")
+      try s.sql("ALTER TABLE s31_orders ADD COLUMNS (o_margin DOUBLE)")
       finally LakeSql.unregister("s31_orders")
       tbl.append(o.filter(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
@@ -3052,10 +3052,10 @@ object CoreQueries {
       val root = tmp("graft_s32")
       o.write.parquet(s"$root/src") // the pre-existing corpus to migrate
       try {
-        LakeSql.sql(s, s"CONVERT TO LAKE parquet.`$root/src` AS s32_orders " +
+        s.sql(s"CONVERT TO LAKE parquet.`$root/src` AS s32_orders " +
           s"LOCATION '$root/t' STATS ON (o_totalprice)")
-        LakeSql.sql(s, "DELETE FROM s32_orders WHERE o_orderkey % 10 = 3")
-        LakeSql.sql(s,
+        s.sql("DELETE FROM s32_orders WHERE o_orderkey % 10 = 3")
+        s.sql(
           """SELECT o_orderkey, o_custkey, o_totalprice FROM s32_orders
              WHERE o_totalprice >= 1000.0 ORDER BY o_orderkey""")
       } finally LakeSql.unregister("s32_orders")
@@ -3110,12 +3110,12 @@ object CoreQueries {
       }
       LakeSql.register("s34_orders", tbl)
       try {
-        LakeSql.sql(s, "ALTER TABLE s34_orders RENAME COLUMN o_totalprice TO price")
+        s.sql("ALTER TABLE s34_orders RENAME COLUMN o_totalprice TO price")
         tbl.append(o.filter(col("o_orderkey") % 2 === 1)
           .select(col("o_orderkey"), col("o_custkey"),
             col("o_totalprice").as("price")))
-        LakeSql.sql(s, "DELETE FROM s34_orders WHERE o_orderkey % 10 = 3")
-        LakeSql.sql(s,
+        s.sql("DELETE FROM s34_orders WHERE o_orderkey % 10 = 3")
+        s.sql(
           """SELECT o_orderkey, o_custkey, price FROM s34_orders
              WHERE price >= 1000.0 ORDER BY o_orderkey""")
       } finally LakeSql.unregister("s34_orders")
@@ -3139,12 +3139,12 @@ object CoreQueries {
       tbl.append(o.filter(col("o_orderkey") % 2 === 0)) // v1
       LakeSql.register("s35_orders", tbl)
       try {
-        LakeSql.sql(s, "ALTER TABLE s35_orders SET TBLPROPERTIES " +
+        s.sql("ALTER TABLE s35_orders SET TBLPROPERTIES " +
           "('enableChangeFeed' = 'true', 'pipeline' = 'nightly')") // v2
-        LakeSql.sql(s, "UPDATE s35_orders SET o_totalprice = o_totalprice * 2.0 " +
+        s.sql("UPDATE s35_orders SET o_totalprice = o_totalprice * 2.0 " +
           "WHERE o_orderkey % 10 = 4") // v3: captured
-        val nprops = LakeSql.sql(s, "SHOW TBLPROPERTIES s35_orders").count()
-        LakeSql.sql(s, "SELECT * FROM table_changes('s35_orders', 3)")
+        val nprops = s.sql("SHOW TBLPROPERTIES s35_orders").count()
+        s.sql("SELECT * FROM table_changes('s35_orders', 3)")
           .withColumn("n_props", lit(nprops))
           .orderBy("o_orderkey", "_change_type")
       } finally LakeSql.unregister("s35_orders")
@@ -3168,7 +3168,7 @@ object CoreQueries {
     Q("s36_auto_compact", (s, d) => {
       val o = t(s, d, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
       val root = tmp("graft_s36")
-      LakeSql.sql(s,
+      s.sql(
         s"""CREATE TABLE s36_orders (o_orderkey BIGINT, o_custkey BIGINT,
             o_totalprice DOUBLE) LOCATION '$root/t'
             TBLPROPERTIES ('autoCompact' = 'true', 'autoCompact.minFiles' = '6')""")
@@ -3179,7 +3179,7 @@ object CoreQueries {
           o.filter(col("o_orderkey") % 8 === r).coalesce(1)))
         val compacted = tbl.history.map(_._2).contains("optimize")
         val packedToOne = tbl.detail.numFiles < 8L
-        LakeSql.sql(s,
+        s.sql(
           """SELECT o_orderkey, o_custkey, o_totalprice FROM s36_orders
              ORDER BY o_orderkey""")
           .withColumn("auto_compacted", lit(compacted))
@@ -3207,7 +3207,7 @@ object CoreQueries {
           col("o_totalprice"))
       LakeSql.register("s37_orders", tbl)
       src.createOrReplaceTempView("s37_updates")
-      try LakeSql.merge(s,
+      try s.sql(
         """MERGE INTO s37_orders AS t0
            USING s37_updates AS u ON t0.o_orderkey = u.o_orderkey
            WHEN MATCHED THEN UPDATE SET
@@ -3245,11 +3245,11 @@ object CoreQueries {
       LakeSql.register("s38_orders", tbl)
       src.createOrReplaceTempView("s38_updates")
       try {
-        LakeSql.merge(s,
+        s.sql(
           """MERGE INTO s38_orders AS t0
              USING s38_updates AS u ON t0.o_orderkey = u.o_orderkey
              WHEN MATCHED AND u.o_totalprice < 50000.0 THEN DELETE""")
-        LakeSql.merge(s,
+        s.sql(
           """MERGE INTO s38_orders AS t0
              USING s38_updates AS u ON t0.o_orderkey = u.o_orderkey
              WHEN MATCHED THEN UPDATE SET *
@@ -3290,7 +3290,7 @@ object CoreQueries {
             .otherwise(lit("I")).as("op"))
       LakeSql.register("s39_orders", tbl)
       cdc.createOrReplaceTempView("s39_cdc")
-      try LakeSql.merge(s,
+      try s.sql(
         """MERGE INTO s39_orders AS t0
            USING s39_cdc AS u ON t0.o_orderkey = u.o_orderkey
            WHEN MATCHED AND u.op = 'D' THEN DELETE
@@ -3634,7 +3634,7 @@ object CoreQueries {
       src.append(o.filter(col("o_orderkey") % 2 === 0))
       LakeSql.register("s44_src", src)
       try {
-        LakeSql.sql(s,
+        s.sql(
           s"CREATE TABLE s44_dst DEEP CLONE s44_src LOCATION '$root/dst'")
         val clone = LakeTable(s, s"$root/dst")
         clone.append(o.filter(col("o_orderkey") % 2 === 1)) // clone diverges

@@ -187,8 +187,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         else spec.source
       val how = if (mode == "incremental") s"incremental from $from"
         else s"$mode, from $from"
-      events += (("flow_progress", name, n,
-        s"materialized view refresh ($how)"))
+      flowProgress(events, name, n, s"materialized view refresh ($how)",
+        idle = mode == "up-to-date" && n == 0L)
     }
     asTable(spec.source) match {
       case _ if spec.union.nonEmpty =>
@@ -288,8 +288,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         AppendOnly(s"sink flow ${af.name}", recomputes = false)) match {
       case None => events += (("flow_progress", af.name, 0L,
         s"sink ${af.target} (source not materialized)"))
-      case Some(win) if win.state == UpToDate => events += (("flow_progress",
-        af.name, 0L, s"sink ${af.target} (up-to-date)"))
+      case Some(win) if win.state == UpToDate =>
+        flowProgress(events, af.name, 0L, s"sink ${af.target} (up-to-date)", idle = true)
       case Some(win) => win.read { raw =>
         val (out, rows) = Pipeline.observeRows(gate(af.target, raw))
         val w = out.write.mode("append")
@@ -1155,21 +1155,28 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
    *  streaming-select tables), enforcing the DLT-style restriction that
    *  the window carries no update/delete images — an updated source row
    *  cannot be "appended again" without silently duplicating (DLT fails a
-   *  streaming read over changes the same way). A window of structurally
-   *  append-only commits skips the probe entirely (manifest-only check);
+   *  streaming read over changes the same way). `feed` is the window's
+   *  [[graft.lake.LakeTable.feedWindow]]: a window the feed cannot serve is
+   *  refused with `consumer` named; a window of structurally append-only
+   *  commits skips the probe entirely (manifest-only check);
    *  a window containing row-mutating commits is PINNED so the guard and
    *  the consumer's own append are derived from the same cached pass over
    *  the change dirs (not two scans — at 100 TB a day's commit window is
    *  large). Returns the insert-only delta plus an unpersist handle the
    *  caller invokes AFTER its write. */
   private def appendOnlyWindow(root: LakeTable, from: Long, to: Long,
-      consumer: String): (DataFrame, () => Unit) = {
+      consumer: String, feed: LakeTable.FeedWindow): (DataFrame, () => Unit) = {
     // FAST PATH (the 100 TB shape — bronze ingest windows): every commit in
     // the window is structurally append-only, so the feed carries only
     // insert images BY CONSTRUCTION — no data probe, no pin, one scan total
-    if (root.appendOnlyOps(from, to))
+    if (feed == LakeTable.FeedWindow.AppendOnly)
       return (feedDelta(root, from, to), () => ())
-    require(root.feedReadable(from, to),
+    require(feed != LakeTable.FeedWindow.Vacuumed,
+      s"$consumer consumes an append-only stream, but VACUUM reclaimed the " +
+        s"change data of versions [$from, $to] of its source — an " +
+        "append-only consumer cannot re-read them (full-refresh this " +
+        "pipeline, or vacuum the source with a longer retention)")
+    require(feed == LakeTable.FeedWindow.Mutating,
       s"$consumer consumes an append-only stream, but versions " +
         s"[$from, $to] of its source span a full-rewrite commit — an " +
         "append-only consumer cannot replay a rewritten source without " +
@@ -1252,11 +1259,12 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
               (delta, () => { delta.unpersist(); () })
             })
           case AppendOnly(consumer, recomputes) =>
+            // one manifest walk answers both "readable?" and "append-only?"
+            lazy val feed = root.feedWindow(last + 1, cur)
             if (last < 0) (Bootstrap, pinned)
-            else if (recomputes && !root.feedReadable(last + 1, cur))
-              (Unreadable, pinned)
+            else if (recomputes && !feed.readable) (Unreadable, pinned)
             else (Delta, () => {
-              val (df, release) = appendOnlyWindow(root, last + 1, cur, consumer)
+              val (df, release) = appendOnlyWindow(root, last + 1, cur, consumer, feed)
               (g(df), release)
             })
         }
@@ -1345,6 +1353,21 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
 
   private type EventBuf = mutable.ArrayBuffer[(String, String, Long, String)]
 
+  /** This run's events logged by an IDLE window: up to date, or a delta
+   *  with no rows (the consumer only advanced its ledger). */
+  private val idleEvents =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, Long, String)]()
+
+  /** Log a `flow_progress` event; `idle` when the window it reports was
+   *  idle, so a continuous cycle can tell an idle poll from its state
+   *  ([[runTail]]), not from the event text. */
+  private def flowProgress(buf: EventBuf, dataset: String, rows: Long,
+      message: String, idle: Boolean = false): Unit = {
+    val e = ("flow_progress", dataset, rows, message)
+    if (idle) idleEvents.add(e)
+    buf += e
+  }
+
   /** Run `units` under [[parallelism]], honoring `dependsOn` (a unit runs
    *  only after every unit it depends on) and `barrier` units (run alone,
    *  original relative order). Each unit writes a PRIVATE event buffer;
@@ -1428,9 +1451,9 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       events: EventBuf): Unit = {
     val appId = s"graft.flow.${f.target}"
     val t = tables(f.target)
-    def progress(rows: Long, mode: String): Unit =
-      events += (("flow_progress", f.target, rows,
-        s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}$mode)"))
+    def progress(rows: Long, mode: String, idle: Boolean = false): Unit =
+      flowProgress(events, f.target, rows,
+        s"cdc flow ${f.flowName} from ${f.source} (scd${f.scdType}$mode)", idle)
     def apply(batch0: DataFrame, txn: Option[Long], mode: String): Unit = {
       val (batch, rows) = Pipeline.observeRows(gate(f.target, batch0))
       applyCdcFlow(f, batch, gb, txn.map(appId -> _))
@@ -1440,13 +1463,13 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         Upsert(f.keys, f.sequenceBy +: f.sequenceAlso, f.tiebreak)) match {
       case None => apply(views.getOrElse(f.source, () => read(f.source))(), None, "")
       case Some(w) => w.state match {
-        case UpToDate => progress(0L, ", incremental up-to-date")
+        case UpToDate => progress(0L, ", incremental up-to-date", idle = true)
         case Snapshot => w.read(apply(_, w.stamp, ""))
         case _ => w.read { delta =>
           if (delta.isEmpty) {
             // metadata-only window: advance the ledger, skip the apply
             if (t.exists) { t.recordTxn(appId, w.cur); () }
-            progress(0L, s", incremental ${w.span} empty")
+            progress(0L, s", incremental ${w.span} empty", idle = true)
           } else apply(delta, Some(w.cur), s", incremental ${w.span}")
         }
       }
@@ -1504,8 +1527,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // protected flow always drains incrementally instead.
     val appId = s"graft.appendflow.${af.name}"
     val once = if (af.once) " (once)" else ""
-    def progress(rows: Long, desc: String): Unit =
-      events += (("flow_progress", af.name, rows, desc))
+    def progress(rows: Long, desc: String, idle: Boolean = false): Unit =
+      flowProgress(events, af.name, rows, desc, idle)
     streamWindow(flowRoot(af), t, appId,
         incremental || resetDisallowed(af.target),
         AppendOnly(s"append flow ${af.name}", recomputes = false)) match {
@@ -1524,12 +1547,12 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         progress(rows(), s"append into ${af.target}$once")
       case Some(w) => w.state match {
         case UpToDate =>
-          progress(0L, s"append into ${af.target} (incremental up-to-date)")
+          progress(0L, s"append into ${af.target} (incremental up-to-date)", idle = true)
         case Snapshot if sinkSpec.isDefined && w.stamp.isEmpty =>
           // a SINK never intentionally re-lands: an unchanged source
           // under snapshot execution is simply up-to-date (delivery
           // to an external destination must stay exactly-once)
-          progress(0L, s"sink ${af.target} (snapshot up-to-date)")
+          progress(0L, s"sink ${af.target} (snapshot up-to-date)", idle = true)
         case Snapshot => w.read { df =>
           // snapshot re-land, pinned at an exact source version and
           // RECORDED: without the stamp, the next incremental run would
@@ -1562,6 +1585,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       quietIdle: Boolean = false): Unit = runLock.synchronized { try {
     val gb = GoldBuilder(spark)
     gates.clear() // this run's gates only (lastGate reads post-run state)
+    idleEvents.clear()
     val events = mutable.ArrayBuffer[(String, String, Long, String)]()
     // row counts ride the Observation metric channel on the flow's own
     // write action — no extra pass over any batch (DLT's flow_progress
@@ -1838,8 +1862,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       events: mutable.ArrayBuffer[(String, String, Long, String)]): Unit = {
     val t = tables(name)
     val appId = s"graft.sttable.$name"
-    def progress(rows: Long, desc: String): Unit =
-      events += (("flow_progress", name, rows, desc))
+    def progress(rows: Long, desc: String, idle: Boolean = false): Unit =
+      flowProgress(events, name, rows, desc, idle)
     def recompute(src: DataFrame, stamp: Option[Long], desc: String): Unit = {
       val (df, rows) = Pipeline.observeRows(gate(name, fn(src)))
       if (!t.exists) createTarget(name, df.schema)
@@ -1851,15 +1875,17 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
       case None => recompute(read(source), None, "select-table refresh (recompute)")
       case Some(w) => w.state match {
         case UpToDate =>
-          progress(0L, s"select-table from $source (incremental up-to-date)")
+          progress(0L, s"select-table from $source (incremental up-to-date)",
+            idle = true)
         case st @ (Snapshot | Unreadable) =>
-          // a window over a FULL REWRITE (e.g. an upstream select table run
-          // in snapshot mode) falls back to this table's own snapshot
-          // refresh instead of failing every later run: the two execution
-          // modes interleave freely, so the fallback IS the documented
-          // snapshot shape, and the next incremental run resumes from cur
+          // an unreadable window (a FULL REWRITE — e.g. an upstream select
+          // table run in snapshot mode — or vacuumed history) falls back to
+          // this table's own snapshot refresh instead of failing every later
+          // run: the two execution modes interleave freely, so the fallback
+          // IS the documented snapshot shape, and the next incremental run
+          // resumes from cur
           val why = if (st == Unreadable)
-            s" — source window ${w.span} spans a full rewrite" else ""
+            s" — source window ${w.span} is unreadable" else ""
           w.read(recompute(_, w.stamp,
             s"select-table refresh (recompute @ v${w.cur}$why)"))
         case _ => w.read { df =>
@@ -1918,8 +1944,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         events += (("flow_progress", name, rows(),
           s"join-table merge from ${jt.source} $desc"))
       }
-      def idle(desc: String): Unit = events += (("flow_progress", name, 0L,
-        s"join-table from ${jt.source} $desc"))
+      def idle(desc: String): Unit =
+        flowProgress(events, name, 0L, s"join-table from ${jt.source} $desc", idle = true)
       // snapshot semantics enrich the fact's FULL current contents: pinned
       // and stamped when the source roots at a table, unpinned otherwise
       streamWindow(resolveStreamRoot(jt.source), t, appId, incremental,
@@ -2008,16 +2034,12 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
         g.violations.toSeq.sortBy(_._1)
           .map { case (r, n) => s"$r=$n" }.mkString(",")))
     }
-    // under CONTINUOUS mode a fully idle cycle (every flow up-to-date,
-    // nothing landed, no gates evaluated) writes NO log commit — the
-    // updater polls every second, and one append per idle poll would grow
-    // __event_log without bound. Triggered runs always log (DLT records
-    // every requested update).
-    val idleOnly = quietIdle && events.forall { case (et, _, n, msg) =>
-      et == "flow_progress" && n == 0L &&
-        (msg.contains("up-to-date") || msg.endsWith("empty)"))
-    }
-    if (!idleOnly) writeEventLog(events.toSeq)
+    // under CONTINUOUS mode a fully idle cycle (every event logged by an
+    // idle window — see flowProgress — so nothing landed and no gates were
+    // evaluated) writes NO log commit — the updater polls every second, and
+    // one append per idle poll would grow __event_log without bound.
+    // Triggered runs always log (DLT records every requested update).
+    if (!(quietIdle && events.forall(idleEvents.contains))) writeEventLog(events.toSeq)
     gates.values.filter(_.policy == Expectations.Fail).foreach(_.assertClean())
   }
 
@@ -2256,7 +2278,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
   /** Publish the pipeline's datasets to [[graft.lake.LakeSql]] so plain
    *  SQL reads them by name — DLT's tables ARE catalog tables: with the
    *  `GraftExtensions` session extension, `spark.sql("SELECT … FROM
-   *  silver")` resolves natively (and `LakeSql.sql` without it). Plain
+   *  silver")` resolves natively. Plain
    *  table-backed datasets register as FULL lake tables — SELECT, time
    *  travel, `table_changes`, DML and OPTIMIZE all work; datasets served
    *  through a presentation projection (an auto-maintained MV whose

@@ -55,6 +55,8 @@ object SparkSpec {
       // the vector_dot nullability bug ran the whole IVF path interpreted
       // for five rounds without a single red test. Never again.
       .config("spark.sql.codegen.fallback", "false")
+      // `spark.sql` is the SQL door to lake tables (LakeSqlParser)
+      .withExtensions(new graft.expressions.GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -87,19 +87,19 @@ class ClusterIncrementalSpec extends SparkSpec {
     val t = mk("clinc_sql")
     LakeSql.register("clinc_sql_t", t)
     try {
-      LakeSql.sql(spark, "OPTIMIZE clinc_sql_t")
+      spark.sql("OPTIMIZE clinc_sql_t")
       val clusteredFiles = t.detail.numFiles
       t.append((20001L to 20100L).map(k => (k, k % 997, s"v$k"))
         .toDF("k", "b", "v").coalesce(1))
-      val inc = LakeSql.sql(spark, "OPTIMIZE clinc_sql_t").collect().head
+      val inc = spark.sql("OPTIMIZE clinc_sql_t").collect().head
       assert(inc.getAs[String]("clustered_by") == "k,b")
       assert(inc.getAs[Int]("files_untouched") == clusteredFiles, inc.toString)
       assert(inc.getAs[Int]("files_rewritten") >= 1, inc.toString)
       // FULL: one global rewrite, then plain OPTIMIZE has nothing to do
-      LakeSql.sql(spark, "OPTIMIZE clinc_sql_t FULL")
+      spark.sql("OPTIMIZE clinc_sql_t FULL")
       assert(t.read.count() == 20100)
       // and the FULL output is flagged: the next plain OPTIMIZE is a no-op
-      val idle = LakeSql.sql(spark, "OPTIMIZE clinc_sql_t").collect().head
+      val idle = spark.sql("OPTIMIZE clinc_sql_t").collect().head
       assert(idle.getAs[Int]("files_rewritten") == 0, idle.toString)
     } finally LakeSql.unregister("clinc_sql_t")
   }

@@ -101,14 +101,14 @@ class ConvertSpec extends SparkSpec {
     val src = s"$base/src"
     Seq((1L, 5.0), (2L, 11.0), (3L, 7.0)).toDF("k", "amount").write.parquet(src)
     try {
-      val res = LakeSql.sql(spark,
+      val res = spark.sql(
         s"CONVERT TO LAKE parquet.`$src` AS conv_t LOCATION '$base/t' " +
           "STATS ON (amount)")
       assert(res.columns.toSeq == Seq("table", "version", "num_files"))
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
           "SELECT count(*) AS n FROM conv_t WHERE amount > 6").as[Long].head() == 2L)
       // stats landed: the registered table prunes on amount
-      intercept[IllegalArgumentException](LakeSql.sql(spark,
+      intercept[IllegalArgumentException](spark.sql(
         s"CONVERT TO LAKE parquet.`$src` AS conv_t LOCATION '$base/t2'"))
     } finally LakeSql.unregister("conv_t")
   }

@@ -64,16 +64,16 @@ class IdentityColumnsSpec extends SparkSpec {
   test("SQL: CREATE TABLE ... GENERATED ALWAYS AS IDENTITY + INSERT " +
       "omitting the column mints ids; supplying it is refused") {
     val dir = tmpDir("ident_sql")
-    LakeSql.sql(spark,
+    spark.sql(
       "CREATE TABLE idt (id BIGINT GENERATED ALWAYS AS IDENTITY " +
         s"(START WITH 10 INCREMENT BY 2), v STRING) LOCATION '$dir/t'")
     try {
-      LakeSql.sql(spark, "INSERT INTO idt VALUES ('a'), ('b')")
-      val rows = LakeSql.sql(spark, "SELECT id, v FROM idt ORDER BY id")
+      spark.sql("INSERT INTO idt VALUES ('a'), ('b')")
+      val rows = spark.sql("SELECT id, v FROM idt ORDER BY id")
         .as[(Long, String)].collect().toSeq
       assert(rows == Seq((10L, "a"), (12L, "b")))
       intercept[Exception] {
-        LakeSql.sql(spark, "INSERT INTO idt (id, v) VALUES (99, 'x')")
+        spark.sql("INSERT INTO idt (id, v) VALUES (99, 'x')")
       }
     } finally LakeSql.unregister("idt")
   }
@@ -82,19 +82,19 @@ class IdentityColumnsSpec extends SparkSpec {
       "takes its declared default; supplied values win; omitting a " +
       "no-default column stays a loud error") {
     val dir = tmpDir("default_sql")
-    LakeSql.sql(spark,
+    spark.sql(
       "CREATE TABLE dft (k BIGINT, status STRING DEFAULT 'new', " +
         s"score DOUBLE DEFAULT 0.5, note STRING) LOCATION '$dir/t'")
     try {
-      LakeSql.sql(spark, "INSERT INTO dft (k, note) VALUES (1, 'a')")
-      LakeSql.sql(spark,
+      spark.sql("INSERT INTO dft (k, note) VALUES (1, 'a')")
+      spark.sql(
         "INSERT INTO dft (k, status, score, note) VALUES (2, 'done', 0.9, 'b')")
-      val rows = LakeSql.sql(spark,
+      val rows = spark.sql(
         "SELECT k, status, score, note FROM dft ORDER BY k")
         .as[(Long, String, Double, String)].collect().toSeq
       assert(rows == Seq((1L, "new", 0.5, "a"), (2L, "done", 0.9, "b")))
       intercept[IllegalArgumentException] {
-        LakeSql.sql(spark, "INSERT INTO dft (k) VALUES (3)") // omits `note`
+        spark.sql("INSERT INTO dft (k) VALUES (3)") // omits `note`
       }
     } finally LakeSql.unregister("dft")
   }
@@ -102,19 +102,19 @@ class IdentityColumnsSpec extends SparkSpec {
   test("ALTER COLUMN SET DEFAULT / DROP DEFAULT manage defaults " +
       "metadata-only; other ALTER COLUMN forms are rejected") {
     val dir = tmpDir("default_alter")
-    LakeSql.sql(spark,
+    spark.sql(
       s"CREATE TABLE adft (k BIGINT, status STRING) LOCATION '$dir/t'")
     try {
-      LakeSql.sql(spark, "ALTER TABLE adft ALTER COLUMN status SET DEFAULT 'new'")
-      LakeSql.sql(spark, "INSERT INTO adft (k) VALUES (1)")
-      LakeSql.sql(spark, "ALTER TABLE adft ALTER COLUMN status DROP DEFAULT")
+      spark.sql("ALTER TABLE adft ALTER COLUMN status SET DEFAULT 'new'")
+      spark.sql("INSERT INTO adft (k) VALUES (1)")
+      spark.sql("ALTER TABLE adft ALTER COLUMN status DROP DEFAULT")
       intercept[IllegalArgumentException] {
-        LakeSql.sql(spark, "INSERT INTO adft (k) VALUES (2)") // no default now
+        spark.sql("INSERT INTO adft (k) VALUES (2)") // no default now
       }
-      assert(LakeSql.sql(spark, "SELECT k, status FROM adft ORDER BY k")
+      assert(spark.sql("SELECT k, status FROM adft ORDER BY k")
         .as[(Long, String)].collect().toSeq == Seq((1L, "new")))
       intercept[IllegalArgumentException] {
-        LakeSql.sql(spark, "ALTER TABLE adft ALTER COLUMN status TYPE INT")
+        spark.sql("ALTER TABLE adft ALTER COLUMN status TYPE INT")
       }
     } finally LakeSql.unregister("adft")
   }

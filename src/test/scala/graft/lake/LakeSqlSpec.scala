@@ -51,7 +51,7 @@ class LakeSqlSpec extends SparkSpec {
     Seq((2L, "b2", 2), (3L, "c", 2), (1L, "stale", 0))
       .toDF("k", "v", "seq").createOrReplaceTempView("updates_v")
     try {
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO tgt_table AS t0
            USING updates_v AS u
            ON t0.k = u.k
@@ -72,7 +72,7 @@ class LakeSqlSpec extends SparkSpec {
     Seq((2L, "CLOBBER", 9), (4L, "d", 1)).toDF("k", "v", "seq")
       .createOrReplaceTempView("updates2")
     try {
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO tgt2
            USING (SELECT * FROM updates2 WHERE seq <= 9) AS u
            ON tgt2.k = u.k
@@ -91,7 +91,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("tgt3", t)
     Seq((9L, "z", 1)).toDF("k", "v", "seq").createOrReplaceTempView("updates3")
     def bad(sql: String, needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](LakeSql.merge(spark, sql))
+      val e = intercept[IllegalArgumentException](spark.sql(sql))
       assert(e.getMessage.toLowerCase.contains(needle), e.getMessage)
     }
     try {
@@ -130,7 +130,7 @@ class LakeSqlSpec extends SparkSpec {
       .createOrReplaceTempView("set_updates")
     try {
       val vBefore = t.currentVersion
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO set_t AS t0 USING set_updates AS u ON t0.k = u.k
            WHEN MATCHED AND u.seq >= t0.seq
              THEN UPDATE SET v = concat(u.v, '!'), seq = t0.seq + u.seq
@@ -146,7 +146,7 @@ class LakeSqlSpec extends SparkSpec {
         .select("k", "v", "seq").as[(Long, String, Int)].collect().toSeq
       assert(post == Seq((1L, "A1!", 4)))
       // assigning a merge key is refused loudly
-      val e = intercept[IllegalArgumentException](LakeSql.merge(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         """MERGE INTO set_t AS t0 USING set_updates AS u ON t0.k = u.k
            WHEN MATCHED THEN UPDATE SET k = u.k
            WHEN NOT MATCHED THEN INSERT *"""))
@@ -170,7 +170,7 @@ class LakeSqlSpec extends SparkSpec {
       // matched+guard (seq >= target) deletes k=1; k=2 guard-rejected kept;
       // no INSERT clause → the source-only world never lands
       val v0 = t.currentVersion
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO del_t AS t0 USING del_updates AS u ON t0.k = u.k
            WHEN MATCHED AND u.seq >= t0.seq THEN DELETE""")
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
@@ -180,7 +180,7 @@ class LakeSqlSpec extends SparkSpec {
         .select("k").as[Long].collect().toSeq == Seq(1L))
       // the sync form: rows with no source counterpart vanish (k=3),
       // matched rows update — one statement reconciles the table
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO del_t AS t0 USING del_updates AS u ON t0.k = u.k
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *
@@ -212,7 +212,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("delk_t", t)
     Seq(3L).toDF("k").createOrReplaceTempView("delk_keys")
     try {
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO delk_t AS t0 USING delk_keys AS u ON t0.k = u.k
            WHEN MATCHED THEN DELETE""")
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
@@ -248,14 +248,14 @@ class LakeSqlSpec extends SparkSpec {
       .toDF("k", "v", "seq").createOrReplaceTempView("ins_updates")
     try {
       // guard admits only seq >= 5 source-only rows
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO ins_t AS t0 USING ins_updates AS u ON t0.k = u.k
            WHEN NOT MATCHED AND u.seq >= 5 THEN INSERT *""")
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
         Seq((1L, "a", 1), (2L, "keep", 5), (4L, "cols", 7)))
       // column-level INSERT: v computed, seq omitted → NULL
-      LakeSql.sql(spark, "DELETE FROM ins_t WHERE k >= 2")
-      LakeSql.merge(spark,
+      spark.sql("DELETE FROM ins_t WHERE k >= 2")
+      spark.sql(
         """MERGE INTO ins_t AS t0 USING ins_updates AS u ON t0.k = u.k
            WHEN NOT MATCHED AND u.seq >= 5
              THEN INSERT (k, v) VALUES (u.k, concat(u.v, '?'))""")
@@ -275,24 +275,24 @@ class LakeSqlSpec extends SparkSpec {
     val t = fresh("sql_dml")
     LakeSql.register("dml_t", t)
     try {
-      val del = LakeSql.sql(spark, "DELETE FROM dml_t WHERE k = 1")
+      val del = spark.sql("DELETE FROM dml_t WHERE k = 1")
       assert(del.as[Long].head() == 1L)
       assert(t.read.as[(Long, String, Int)].collect().toSeq == Seq((2L, "b", 1)))
       // merge-on-read delete left a live vector; OPTIMIZE materializes it
       assert(t.deleteVectorDirs.nonEmpty)
-      val opt = LakeSql.sql(spark, "OPTIMIZE dml_t")
+      val opt = spark.sql("OPTIMIZE dml_t")
       assert(opt.columns.toSeq ==
         Seq("files_rewritten", "files_linked", "bytes_rewritten"))
       assert(t.deleteVectorDirs.isEmpty)
-      val upd = LakeSql.sql(spark,
+      val upd = spark.sql(
         "UPDATE dml_t SET v = concat(v, '!') WHERE k >= 2 AND k <= 9")
       assert(upd.as[Long].head() == 1L)
       assert(t.read.as[(Long, String, Int)].collect().toSeq == Seq((2L, "b!", 1)))
-      val det = LakeSql.sql(spark, "DESCRIBE DETAIL dml_t").collect().head
+      val det = spark.sql("DESCRIBE DETAIL dml_t").collect().head
       assert(det.getAs[String]("last_operation") == "update")
       assert(det.getAs[Long]("num_files") >= 1L)
       // ZORDER form routes to compactZOrder
-      val z = LakeSql.sql(spark, "OPTIMIZE dml_t ZORDER BY (k)")
+      val z = spark.sql("OPTIMIZE dml_t ZORDER BY (k)")
       assert(z.select("zorder_by").as[String].head() == "k")
       assert(t.read.as[(Long, String, Int)].collect().toSeq == Seq((2L, "b!", 1)))
     } finally LakeSql.unregister("dml_t")
@@ -303,10 +303,10 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("q_t", t)
     try {
       // CoW update first (a live deletion vector would refuse it), MoR delete after
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "UPDATE q_t SET v = upper(q_t.v) WHERE q_t.k >= 2 AND q_t.k <= 2")
         .as[Long].head() == 1L)
-      assert(LakeSql.sql(spark, "DELETE FROM q_t WHERE q_t.k = 1")
+      assert(spark.sql("DELETE FROM q_t WHERE q_t.k = 1")
         .as[Long].head() == 1L)
       assert(t.read.as[(Long, String, Int)].collect().toSeq == Seq((2L, "B", 1)))
     } finally LakeSql.unregister("q_t")
@@ -317,14 +317,14 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("lc_t", t)
     try {
       t.overwrite(Seq((9L, "z", 9)).toDF("k", "v", "seq")) // v1: bad overwrite
-      val hist = LakeSql.sql(spark, "DESCRIBE HISTORY lc_t").collect()
+      val hist = spark.sql("DESCRIBE HISTORY lc_t").collect()
       assert(hist.map(r => (r.getLong(0), r.getString(1))).toSeq ==
         Seq((0L, "append"), (1L, "overwrite")))
-      val res = LakeSql.sql(spark, "RESTORE TABLE lc_t TO VERSION AS OF 0")
+      val res = spark.sql("RESTORE TABLE lc_t TO VERSION AS OF 0")
       assert(res.as[(Long, Long)].head() == ((0L, 2L)))    // v2: the restore
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
         Seq((1L, "a", 1), (2L, "b", 1)))
-      LakeSql.sql(spark, "VACUUM lc_t RETAIN 1 VERSIONS")
+      spark.sql("VACUUM lc_t RETAIN 1 VERSIONS")
       // v1's overwrite-only data is reclaimed; the restored snapshot reads
       intercept[IllegalArgumentException](t.readVersion(1).collect())
       assert(t.read.count() == 2)
@@ -335,7 +335,7 @@ class LakeSqlSpec extends SparkSpec {
     val t = fresh("sql_constraint")
     LakeSql.register("con_t", t)
     try {
-      val res = LakeSql.sql(spark,
+      val res = spark.sql(
         "ALTER TABLE con_t ADD CONSTRAINT positive_seq CHECK (seq > 0)")
       assert(res.as[(String, String)].head() == (("positive_seq", "seq > 0")))
       assert(t.checkConstraints.contains("positive_seq"))
@@ -352,7 +352,7 @@ class LakeSqlSpec extends SparkSpec {
     val t = fresh("sql_dml_errors")
     LakeSql.register("dml_e", t)
     def bad(sql: String, needle: String): Unit = {
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark, sql))
+      val e = intercept[IllegalArgumentException](spark.sql(sql))
       assert(e.getMessage.toLowerCase.contains(needle), e.getMessage)
     }
     try {
@@ -363,8 +363,8 @@ class LakeSqlSpec extends SparkSpec {
       // unpartitioned table, and the predicate must be zone-expressible
       bad("OPTIMIZE dml_e WHERE k = 1", "partitioned table")
       bad("OPTIMIZE dml_e WHERE k > 1", "conjunction")
-      // a statement referencing no registered lake relation is not ours
-      bad("SELECT 1 AS one", "supports select / merge / delete / update")
+      // a statement referencing no registered lake relation is Spark's
+      assert(spark.sql("SELECT 1 AS one").as[Int].head() == 1)
       // identical target/source aliases cannot disambiguate guard refs
       Seq((9L, "z", 1)).toDF("k", "v", "seq").createOrReplaceTempView("dml_u")
       bad("""MERGE INTO dml_e AS x USING dml_u AS x ON x.k = x.k
@@ -378,30 +378,30 @@ class LakeSqlSpec extends SparkSpec {
     val t = fresh("sql_select")
     LakeSql.register("sel_t", t)
     try {
-      assert(LakeSql.sql(spark, "SELECT k, v FROM sel_t ORDER BY k")
+      assert(spark.sql("SELECT k, v FROM sel_t ORDER BY k")
         .as[(Long, String)].collect().toSeq == Seq((1L, "a"), (2L, "b")))
       // merge-on-read delete leaves a LIVE deletion vector — a naive
       // spark.read.parquet of the table dir would still see k=1; the SQL
       // read path must not
       t.deleteWhere("k = 1")
       assert(t.deleteVectorDirs.nonEmpty)
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM sel_t")
+      assert(spark.sql("SELECT count(*) AS n FROM sel_t")
         .as[Long].head() == 1L)
       // additive schema evolution: pre-evolution rows serve NULL
       t.append(Seq((3L, "c", 2, 9.5)).toDF("k", "v", "seq", "score"),
         mergeSchema = true)
-      assert(LakeSql.sql(spark, "SELECT k, score FROM sel_t ORDER BY k")
+      assert(spark.sql("SELECT k, score FROM sel_t ORDER BY k")
         .as[(Long, Option[Double])].collect().toSeq ==
         Seq((2L, None), (3L, Some(9.5))))
       // no registered-view staleness: a commit between two SELECTs is
       // visible to the second without any re-registration
       t.append(Seq((4L, "d", 2, 1.0)).toDF("k", "v", "seq", "score"))
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM sel_t")
+      assert(spark.sql("SELECT count(*) AS n FROM sel_t")
         .as[Long].head() == 3L)
       // lake relations compose with temp views and aggregation
       Seq((2L, "even"), (3L, "odd")).toDF("k", "parity")
         .createOrReplaceTempView("parity_v")
-      val joined = LakeSql.sql(spark,
+      val joined = spark.sql(
         """SELECT p.parity, count(*) AS n, sum(s.seq) AS seq_sum
            FROM sel_t s JOIN parity_v p ON s.k = p.k
            GROUP BY p.parity ORDER BY p.parity""")
@@ -421,20 +421,20 @@ class LakeSqlSpec extends SparkSpec {
     t.overwrite(Seq((9L, "z")).toDF("k", "v"))         // v2 @ t0+2s
     LakeSql.register("tt_t", t)
     try {
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT k FROM tt_t VERSION AS OF 1 ORDER BY k")
         .as[Long].collect().toSeq == Seq(1L, 2L))
       // Delta's rule: a timestamp BETWEEN commits resolves to the earlier
       // one — t0+1.5s is after v1, before v2
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT k FROM tt_t TIMESTAMP AS OF '2030-01-01 00:00:01.500' ORDER BY k")
         .as[Long].collect().toSeq == Seq(1L, 2L))
       // current and time-travelled snapshots compose in ONE statement
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         """SELECT (SELECT count(*) FROM tt_t) AS now_n,
                   (SELECT count(*) FROM tt_t VERSION AS OF 1) AS then_n""")
         .as[(Long, Long)].head() == ((1L, 2L)))
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         "SELECT * FROM tt_t VERSION AS OF 99"))
       assert(e.getMessage.contains("99"), e.getMessage)
     } finally LakeSql.unregister("tt_t")
@@ -444,25 +444,25 @@ class LakeSqlSpec extends SparkSpec {
     val t = fresh("sql_ins")
     LakeSql.register("ins_t", t)
     try {
-      val r = LakeSql.sql(spark, "INSERT INTO ins_t VALUES (3, 'c', 2)")
+      val r = spark.sql("INSERT INTO ins_t VALUES (3, 'c', 2)")
       assert(r.as[(String, Long)].head() == (("ins_t", 1L)))
       // a column list binds by NAME, any order; literals cast to the
       // declared column types (VALUES integers arrive narrower than LONG)
-      LakeSql.sql(spark, "INSERT INTO ins_t (seq, v, k) VALUES (3, 'd', 4)")
+      spark.sql("INSERT INTO ins_t (seq, v, k) VALUES (3, 'd', 4)")
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
         Seq((1L, "a", 1), (2L, "b", 1), (3L, "c", 2), (4L, "d", 3)))
       // INSERT runs through the same constraint gate as the API
       t.addCheckConstraint("seq_positive", "seq > 0")
-      assert(scala.util.Try(LakeSql.sql(spark,
+      assert(scala.util.Try(spark.sql(
         "INSERT INTO ins_t VALUES (5, 'bad', -1)")).isFailure)
       assert(t.read.count() == 4) // rejected atomically — nothing landed
       // INSERT ... SELECT over another registered lake relation
-      LakeSql.sql(spark,
+      spark.sql(
         "INSERT INTO ins_t SELECT k + 10, upper(v), seq FROM ins_t WHERE k <= 2")
       assert(t.read.count() == 6)
-      LakeSql.sql(spark, "INSERT OVERWRITE ins_t VALUES (9, 'z', 1)")
+      spark.sql("INSERT OVERWRITE ins_t VALUES (9, 'z', 1)")
       assert(t.read.as[(Long, String, Int)].collect().toSeq == Seq((9L, "z", 1)))
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         "INSERT INTO ins_t VALUES (1, 'x')"))
       assert(e.getMessage.contains("arity"), e.getMessage)
     } finally LakeSql.unregister("ins_t")
@@ -476,13 +476,13 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("gen_t", t)
     try {
       // positional arity = schema minus generated columns → computed
-      LakeSql.sql(spark, "INSERT INTO gen_t VALUES (1, 10.0)")
+      spark.sql("INSERT INTO gen_t VALUES (1, 10.0)")
       // full arity with a CORRECT generated value → validated, accepted
-      LakeSql.sql(spark, "INSERT INTO gen_t VALUES (2, 3.0, 6.0)")
+      spark.sql("INSERT INTO gen_t VALUES (2, 3.0, 6.0)")
       assert(t.read.orderBy("k").as[(Long, Double, Double)].collect().toSeq ==
         Seq((1L, 10.0, 20.0), (2L, 3.0, 6.0)))
       // a WRONG supplied generated value fails before anything lands
-      assert(scala.util.Try(LakeSql.sql(spark,
+      assert(scala.util.Try(spark.sql(
         "INSERT INTO gen_t VALUES (3, 5.0, 11.0)")).isFailure)
       assert(t.read.count() == 2)
     } finally LakeSql.unregister("gen_t")
@@ -498,7 +498,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("mor_t", t)
     try {
       // strict inequality + modulo: not zone-expressible → merge-on-read
-      val n = LakeSql.sql(spark,
+      val n = spark.sql(
         "UPDATE mor_t SET seq = seq + 100 WHERE k > 1 AND k % 2 = 1")
         .as[Long].head()
       assert(n == 1L)
@@ -511,13 +511,13 @@ class LakeSqlSpec extends SparkSpec {
       assert(ch == Seq((3L, 130, "update_postimage"), (3L, 30, "update_preimage")))
       // with a live DV even a zone-expressible UPDATE routes MoR (the CoW
       // path cannot see vectors) — it must still apply exactly once
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "UPDATE mor_t SET v = 'B' WHERE k = 2").as[Long].head() == 1L)
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
         Seq((1L, "a", 10), (2L, "B", 20), (3L, "c", 130)))
       // no match → version unchanged, 0 rows
       val v = t.currentVersion
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "UPDATE mor_t SET v = 'x' WHERE k = 99").as[Long].head() == 0L)
       assert(t.currentVersion == v)
     } finally LakeSql.unregister("mor_t")
@@ -534,12 +534,12 @@ class LakeSqlSpec extends SparkSpec {
     }
     LakeSql.register("opt_t", t)
     try {
-      val r = LakeSql.sql(spark, "OPTIMIZE opt_t WHERE pt = 'a'").collect().head
+      val r = spark.sql("OPTIMIZE opt_t WHERE pt = 'a'").collect().head
       assert(r.getAs[Int]("files_rewritten") >= 1)
       assert(r.getAs[Int]("files_untouched") >= 3)  // pt=b files untouched
       assert(t.read.count() == 6)
       // scoped Z-order form parses too
-      val z = LakeSql.sql(spark,
+      val z = spark.sql(
         "OPTIMIZE opt_t WHERE pt = 'b' ZORDER BY (k)").collect().head
       assert(z.getAs[Int]("files_rewritten") >= 1)
       assert(t.read.orderBy("k").as[(Long, String, String)].collect().map(_._1).toSeq ==
@@ -558,12 +558,12 @@ class LakeSqlSpec extends SparkSpec {
     try {
       // below the 168h floor → refused (SQL text cannot pass force=true)
       val e = intercept[IllegalArgumentException](
-        LakeSql.sql(spark, "VACUUM vac_t RETAIN 1 HOURS"))
+        spark.sql("VACUUM vac_t RETAIN 1 HOURS"))
       assert(e.getMessage.contains("safety"), e.getMessage)
       assert(t.readVersion(0).count() == 1) // nothing reclaimed
       // 200h later, RETAIN 168 HOURS reclaims v0's overwritten data
       now.set(t0 + 200L * 3600 * 1000)
-      LakeSql.sql(spark, "VACUUM vac_t RETAIN 168 HOURS")
+      spark.sql("VACUUM vac_t RETAIN 168 HOURS")
       intercept[IllegalArgumentException](t.readVersion(0).collect())
       assert(t.read.as[(Long, String)].head() == ((2L, "b")))
     } finally LakeSql.unregister("vac_t")
@@ -579,7 +579,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("cdf_t", t)
     try {
       // whole-range read ≡ the programmatic API
-      val sql = LakeSql.sql(spark,
+      val sql = spark.sql(
         "SELECT k, v, _change_type, _commit_version FROM table_changes('cdf_t', 1) " +
           "ORDER BY _commit_version, k, _change_type")
         .as[(Long, String, String, Long)].collect().toSeq
@@ -589,18 +589,18 @@ class LakeSqlSpec extends SparkSpec {
         .as[(Long, String, String, Long)].collect().toSeq
       assert(sql == api && sql.nonEmpty)
       // bounded range + aggregation over the TVF
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT count(*) AS n FROM table_changes('cdf_t', 2, 2) " +
           "WHERE _change_type LIKE 'update_%'").as[Long].head() == 2L)
       // a start timestamp after the last commit fails loudly, as does junk
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         "SELECT * FROM table_changes('cdf_t', '2099-01-01')"))
       assert(e.getMessage.contains("after the last commit"), e.getMessage)
-      val e2 = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e2 = intercept[IllegalArgumentException](spark.sql(
         "SELECT * FROM table_changes('cdf_t', 'not-a-bound')"))
       assert(e2.getMessage.contains("integer version or a timestamp"), e2.getMessage)
       // an unregistered name is not ours → no silent empty result
-      intercept[Exception](LakeSql.sql(spark,
+      intercept[Exception](spark.sql(
         "SELECT * FROM table_changes('nowhere', 1)").collect())
     } finally LakeSql.unregister("cdf_t")
   }
@@ -618,19 +618,19 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("ts_cdf_t", t)
     try {
       // start between v1 and v2 → feed begins at v2
-      val got = LakeSql.sql(spark,
+      val got = spark.sql(
         "SELECT k, _commit_version FROM " +
           "table_changes('ts_cdf_t', '2030-01-01 00:01:30') ORDER BY k")
         .as[(Long, Long)].collect().toSeq
       assert(got == Seq((2L, 2L), (3L, 3L)))
       // both bounds as timestamps: [at-or-after 00:01, at-or-before 00:02:30]
-      val ranged = LakeSql.sql(spark,
+      val ranged = spark.sql(
         "SELECT k FROM table_changes('ts_cdf_t', " +
           "'2030-01-01 00:00:30', '2030-01-01 00:02:30') ORDER BY k")
         .as[Long].collect().toSeq
       assert(ranged == Seq(1L, 2L))
       // mixed bound kinds compose
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT count(*) AS n FROM table_changes('ts_cdf_t', 1, " +
           "'2030-01-01 00:02:00')").as[Long].head() == 2L)
     } finally LakeSql.unregister("ts_cdf_t")
@@ -647,7 +647,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("rts_t", t)
     try {
       // t0+1.5s is between v1 and v2 → restores v1 (the earlier commit)
-      val r = LakeSql.sql(spark,
+      val r = spark.sql(
         "RESTORE TABLE rts_t TO TIMESTAMP AS OF '2030-01-01 00:00:01.500'")
       assert(r.as[(Long, Long)].head() == ((1L, 3L)))
       assert(t.read.orderBy("k").as[(Long, String)].collect().toSeq ==
@@ -661,13 +661,13 @@ class LakeSqlSpec extends SparkSpec {
     t.overwrite(Seq((8L, "y", 8)).toDF("k", "v", "seq")) // v2: orphans v1 soon
     LakeSql.register("dry_t", t)
     try {
-      val would = LakeSql.sql(spark, "VACUUM dry_t RETAIN 1 VERSIONS DRY RUN")
+      val would = spark.sql("VACUUM dry_t RETAIN 1 VERSIONS DRY RUN")
         .as[String].collect().toSeq
       assert(would.nonEmpty && would.forall(_.startsWith("data/")), would.toString)
       // dry run deleted nothing: every old version still reads
       assert(t.readVersion(0).count() == 2 && t.readVersion(1).count() == 1)
       // the real pass reclaims EXACTLY the listed dirs
-      LakeSql.sql(spark, "VACUUM dry_t RETAIN 1 VERSIONS")
+      spark.sql("VACUUM dry_t RETAIN 1 VERSIONS")
       would.foreach { d =>
         assert(!java.nio.file.Files.exists(
           java.nio.file.Paths.get(t.root, d)), s"$d not reclaimed")
@@ -685,7 +685,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("rep_t", t)
     try {
       // k > 1: not zone-expressible bounds-on-partition → merge-on-read
-      val n = LakeSql.sql(spark,
+      val n = spark.sql(
         "INSERT INTO rep_t REPLACE WHERE k > 1 VALUES (5, 'e', 50), (6, 'f', 60)")
         .as[Long].head()
       assert(n == 2L) // k=2,3 replaced
@@ -699,7 +699,7 @@ class LakeSqlSpec extends SparkSpec {
       // contract: an incoming row OUTSIDE the predicate region is rejected
       // atomically (k=0 fails k > 5)
       val v = t.currentVersion
-      assert(scala.util.Try(LakeSql.sql(spark,
+      assert(scala.util.Try(spark.sql(
         "INSERT INTO rep_t REPLACE WHERE k > 5 VALUES (0, 'x', 0)")).isFailure)
       assert(t.currentVersion == v && t.read.count() == 3)
     } finally LakeSql.unregister("rep_t")
@@ -721,7 +721,7 @@ class LakeSqlSpec extends SparkSpec {
     val bBefore = files("pt=b")
     LakeSql.register("rpp_t", t)
     try {
-      LakeSql.sql(spark,
+      spark.sql(
         "INSERT INTO rpp_t REPLACE WHERE pt = 'a' VALUES (3, 'a3', 'a')")
       // pt=a fully replaced, pt=b untouched — same paths, same inodes
       assert(t.read.orderBy("k").as[(Long, String, String)].collect().toSeq ==
@@ -731,7 +731,7 @@ class LakeSqlSpec extends SparkSpec {
         assert(bAfter.get(p).contains(key), s"$p was touched") }
       assert(t.history.last._2 == "replace")
       // contract: a row OUTSIDE the replaced partition is rejected
-      assert(scala.util.Try(LakeSql.sql(spark,
+      assert(scala.util.Try(spark.sql(
         "INSERT INTO rpp_t REPLACE WHERE pt = 'a' VALUES (9, 'zz', 'b')")).isFailure)
       assert(t.read.count() == 3)
     } finally LakeSql.unregister("rpp_t")
@@ -741,34 +741,34 @@ class LakeSqlSpec extends SparkSpec {
     val root = tmpDir("sql_create")
     try {
       // empty CREATE with a declared schema + partition column
-      val r = LakeSql.sql(spark,
+      val r = spark.sql(
         s"CREATE TABLE cr_t (k BIGINT, v STRING, pt STRING) " +
           s"PARTITIONED BY (pt) LOCATION '$root/t'")
       assert(r.as[(String, Long)].head() == (("cr_t", 0L)))
       // the created table is registered: INSERT and SELECT dispatch by name
-      LakeSql.sql(spark, "INSERT INTO cr_t VALUES (1, 'a', 'p0'), (2, 'b', 'p1')")
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM cr_t")
+      spark.sql("INSERT INTO cr_t VALUES (1, 'a', 'p0'), (2, 'b', 'p1')")
+      assert(spark.sql("SELECT count(*) AS n FROM cr_t")
         .as[Long].head() == 2L)
-      assert(LakeSql.sql(spark, "SHOW PARTITIONS cr_t")
+      assert(spark.sql("SHOW PARTITIONS cr_t")
         .as[String].collect().sorted.toSeq == Seq("pt=p0", "pt=p1"))
       // IF NOT EXISTS over an existing table: no-op, no error
-      LakeSql.sql(spark, s"CREATE TABLE IF NOT EXISTS cr_t (x INT) LOCATION '$root/t'")
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM cr_t").as[Long].head() == 2L)
-      intercept[IllegalArgumentException](LakeSql.sql(spark,
+      spark.sql(s"CREATE TABLE IF NOT EXISTS cr_t (x INT) LOCATION '$root/t'")
+      assert(spark.sql("SELECT count(*) AS n FROM cr_t").as[Long].head() == 2L)
+      intercept[IllegalArgumentException](spark.sql(
         s"CREATE TABLE cr_t (x INT) LOCATION '$root/t'"))
       // CTAS from another registered lake table
-      val r2 = LakeSql.sql(spark,
+      val r2 = spark.sql(
         s"CREATE TABLE cr_t2 LOCATION '$root/t2' AS SELECT k, v FROM cr_t WHERE k = 1")
       assert(r2.as[(String, Long)].head()._1 == "cr_t2")
-      assert(LakeSql.sql(spark, "SELECT k, v FROM cr_t2")
+      assert(spark.sql("SELECT k, v FROM cr_t2")
         .as[(Long, String)].head() == ((1L, "a")))
       // LOCATION is mandatory — the engine is path-addressed
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         "CREATE TABLE cr_t3 (x INT)"))
       assert(e.getMessage.contains("LOCATION"), e.getMessage)
       // SHOW PARTITIONS on an unpartitioned table fails loudly
       intercept[IllegalArgumentException](
-        LakeSql.sql(spark, "SHOW PARTITIONS cr_t2"))
+        spark.sql("SHOW PARTITIONS cr_t2"))
     } finally {
       LakeSql.unregister("cr_t"); LakeSql.unregister("cr_t2")
     }
@@ -781,12 +781,12 @@ class LakeSqlSpec extends SparkSpec {
       .toDF("k", "v", "seq", "channel").createOrReplaceTempView("ev_updates")
     try {
       // without evolution the additive column is a loud error
-      val e = intercept[IllegalArgumentException](LakeSql.merge(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         """MERGE INTO ev_t AS t0 USING ev_updates AS u ON t0.k = u.k
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *"""))
       assert(e.getMessage.contains("mergeSchema"), e.getMessage)
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE WITH SCHEMA EVOLUTION INTO ev_t AS t0
            USING ev_updates AS u ON t0.k = u.k
            WHEN MATCHED THEN UPDATE SET *
@@ -820,7 +820,7 @@ class LakeSqlSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       val bytesBefore = Files.walk(Paths.get(s"$root/t", "data"))
         .iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-      LakeSql.sql(spark, "ALTER TABLE drop_t DROP COLUMN score")
+      spark.sql("ALTER TABLE drop_t DROP COLUMN score")
       // reads project the column away; NO data file changed (metadata-only)
       assert(t.schema.fieldNames.toSeq == Seq("k", "v"))
       assert(t.read.orderBy("k").as[(Long, String)].collect().toSeq ==
@@ -841,7 +841,7 @@ class LakeSqlSpec extends SparkSpec {
       assert(t.read.count() == 3)
       // guarded shapes
       intercept[IllegalArgumentException](t.dropColumn("nope"))
-      LakeSql.sql(spark, "ALTER TABLE drop_t DROP COLUMN IF EXISTS nope") // no-op
+      spark.sql("ALTER TABLE drop_t DROP COLUMN IF EXISTS nope") // no-op
       t.addCheckConstraint("v_nonempty", "length(v) > 0")
       val e2 = intercept[IllegalArgumentException](t.dropColumn("v"))
       assert(e2.getMessage.contains("constraint"), e2.getMessage)
@@ -858,7 +858,7 @@ class LakeSqlSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       val bytesBefore = Files.walk(Paths.get(s"$root/t", "data"))
         .iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
-      LakeSql.sql(spark,
+      spark.sql(
         "ALTER TABLE add_t ADD COLUMNS (score DOUBLE, channel STRING)")
       assert(t.schema.fieldNames.toSeq == Seq("k", "v", "score", "channel"))
       // pre-alter files serve NULL for the new columns; nothing rewritten
@@ -879,11 +879,11 @@ class LakeSqlSpec extends SparkSpec {
         .contains("score"))
       // guards: duplicate of an existing name; tombstoned name
       val e = intercept[IllegalArgumentException](
-        LakeSql.sql(spark, "ALTER TABLE add_t ADD COLUMNS (v INT)"))
+        spark.sql("ALTER TABLE add_t ADD COLUMNS (v INT)"))
       assert(e.getMessage.contains("already exists"), e.getMessage)
       t.dropColumn("channel")
       val e2 = intercept[IllegalArgumentException](
-        LakeSql.sql(spark, "ALTER TABLE add_t ADD COLUMNS (channel STRING)"))
+        spark.sql("ALTER TABLE add_t ADD COLUMNS (channel STRING)"))
       assert(e2.getMessage.contains("resurrect"), e2.getMessage)
     } finally LakeSql.unregister("add_t")
   }
@@ -892,21 +892,21 @@ class LakeSqlSpec extends SparkSpec {
       "enableChangeFeed makes the very first merge feed-readable") {
     val root = tmpDir("sql_create_props")
     try {
-      LakeSql.sql(spark,
+      spark.sql(
         s"""CREATE TABLE cp_t (id BIGINT, v DOUBLE) LOCATION '$root/t'
             TBLPROPERTIES ('enableChangeFeed' = 'true', 'tier' = 'bronze')""")
-      val t = LakeSql.sql(spark, "SELECT * FROM cp_t") // resolves registration
+      val t = spark.sql("SELECT * FROM cp_t") // resolves registration
       assert(t.count() == 0)
-      LakeSql.sql(spark, s"INSERT INTO cp_t VALUES (1, 1.0)")
+      spark.sql(s"INSERT INTO cp_t VALUES (1, 1.0)")
       Seq((1L, 2.0)).toDF("id", "v").createOrReplaceTempView("cp_updates")
-      LakeSql.sql(spark,
+      spark.sql(
         """MERGE INTO cp_t AS t0 USING cp_updates AS u ON t0.id = u.id
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *""")
-      val shown = LakeSql.sql(spark, "SHOW TBLPROPERTIES cp_t")
+      val shown = spark.sql("SHOW TBLPROPERTIES cp_t")
         .as[(String, String)].collect().toMap
       assert(shown == Map("enableChangeFeed" -> "true", "tier" -> "bronze"))
-      val feed = LakeSql.sql(spark,
+      val feed = spark.sql(
         "SELECT * FROM table_changes('cp_t', 0)")
       assert(feed.filter($"_change_type" === "update_postimage").count() == 1)
     } finally {
@@ -922,21 +922,21 @@ class LakeSqlSpec extends SparkSpec {
     t.append(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v"))
     LakeSql.register("ren_t", t)
     try {
-      LakeSql.sql(spark, "ALTER TABLE ren_t RENAME COLUMN v TO score")
+      spark.sql("ALTER TABLE ren_t RENAME COLUMN v TO score")
       assert(t.schema.fieldNames.toSeq == Seq("id", "score"))
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT sum(score) AS s FROM ren_t").as[Double].head() == 30.0)
-      LakeSql.sql(spark, "UPDATE ren_t SET score = score + 1.0 WHERE id >= 2")
-      assert(LakeSql.sql(spark,
+      spark.sql("UPDATE ren_t SET score = score + 1.0 WHERE id >= 2")
+      assert(spark.sql(
         "SELECT score FROM ren_t WHERE id = 2").as[Double].head() == 21.0)
       Seq((3L, 30.0)).toDF("id", "score").createOrReplaceTempView("ren_updates")
-      LakeSql.sql(spark,
+      spark.sql(
         """MERGE INTO ren_t AS t0 USING ren_updates AS u ON t0.id = u.id
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *""")
       assert(t.read.count() == 3)
       val e = intercept[IllegalArgumentException](
-        LakeSql.sql(spark, "ALTER TABLE ren_t RENAME COLUMN id TO score"))
+        spark.sql("ALTER TABLE ren_t RENAME COLUMN id TO score"))
       assert(e.getMessage.contains("already exists"), e.getMessage)
     } finally {
       LakeSql.unregister("ren_t")
@@ -951,25 +951,25 @@ class LakeSqlSpec extends SparkSpec {
     t.append(Seq((1L, 1.0)).toDF("id", "v"))
     LakeSql.register("props_t", t)
     try {
-      LakeSql.sql(spark,
+      spark.sql(
         "ALTER TABLE props_t SET TBLPROPERTIES ('team' = 'gold', 'tier' = 'silver')")
-      val shown = LakeSql.sql(spark, "SHOW TBLPROPERTIES props_t")
+      val shown = spark.sql("SHOW TBLPROPERTIES props_t")
         .as[(String, String)].collect().toMap
       assert(shown == Map("team" -> "gold", "tier" -> "silver"))
-      assert(LakeSql.sql(spark, "SHOW TBLPROPERTIES props_t ('team')")
+      assert(spark.sql("SHOW TBLPROPERTIES props_t ('team')")
         .as[(String, String)].collect().toSeq == Seq("team" -> "gold"))
-      LakeSql.sql(spark, "ALTER TABLE props_t UNSET TBLPROPERTIES ('tier')")
+      spark.sql("ALTER TABLE props_t UNSET TBLPROPERTIES ('tier')")
       assert(t.tableProperties == Map("team" -> "gold"))
       // the recognized CDF switch, driven purely through SQL
-      LakeSql.sql(spark,
+      spark.sql(
         "ALTER TABLE props_t SET TBLPROPERTIES ('enableChangeFeed' = 'true')")
       val vOn = t.currentVersion
       Seq((1L, 2.0)).toDF("id", "v").createOrReplaceTempView("props_updates")
-      LakeSql.sql(spark,
+      spark.sql(
         """MERGE INTO props_t AS t0 USING props_updates AS u ON t0.id = u.id
            WHEN MATCHED THEN UPDATE SET *
            WHEN NOT MATCHED THEN INSERT *""")
-      val feed = LakeSql.sql(spark,
+      val feed = spark.sql(
         s"SELECT * FROM table_changes('props_t', $vOn)")
       assert(feed.filter($"_change_type" === "update_postimage").count() == 1)
     } finally {
@@ -983,19 +983,19 @@ class LakeSqlSpec extends SparkSpec {
     val t = skipTable("sql_skip")
     LakeSql.register("skip_t", t)
     try {
-      val pruned = LakeSql.sql(spark,
+      val pruned = spark.sql(
         "SELECT id, tag FROM skip_t WHERE id >= 150 AND id <= 160")
       assert(scannedFiles(pruned) == 1, "two of three files must be zone-skipped")
       assert(pruned.count() == 11)
-      val full = LakeSql.sql(spark, "SELECT id, tag FROM skip_t")
+      val full = spark.sql("SELECT id, tag FROM skip_t")
       assert(scannedFiles(full) == 3)
       // non-zone conjuncts stay exact through the residual filter
-      val mixed = LakeSql.sql(spark,
+      val mixed = spark.sql(
         "SELECT id FROM skip_t WHERE id >= 250 AND tag LIKE '%c%' AND id % 2 = 0")
       assert(scannedFiles(mixed) == 1)
       assert(mixed.count() == 26)
       // an aliased relation prunes too; a foreign qualifier never does
-      val aliased = LakeSql.sql(spark,
+      val aliased = spark.sql(
         "SELECT x.id FROM skip_t AS x WHERE x.id <= 50")
       assert(scannedFiles(aliased) == 1)
     } finally LakeSql.unregister("skip_t")
@@ -1006,7 +1006,7 @@ class LakeSqlSpec extends SparkSpec {
     Seq(("a", "alpha"), ("b", "beta"), ("c", "gamma")).toDF("tag", "name")
       .createOrReplaceTempView("join_dim")
     try {
-      val q = LakeSql.sql(spark, "SELECT f.id, d.name FROM join_fact f " +
+      val q = spark.sql("SELECT f.id, d.name FROM join_fact f " +
         "JOIN join_dim d ON f.tag = d.tag WHERE f.id >= 150 AND f.id <= 160")
       assert(scannedFiles(q) == 1, "the filter sits above the join, not the scan")
       assert(q.as[(Long, String)].collect().toSet ==
@@ -1020,7 +1020,7 @@ class LakeSqlSpec extends SparkSpec {
   test("strict < and > bounds prune") {
     LakeSql.register("strict_t", skipTable("sql_skip_strict"))
     try {
-      val q = LakeSql.sql(spark, "SELECT id FROM strict_t WHERE id > 100 AND id < 201")
+      val q = spark.sql("SELECT id FROM strict_t WHERE id > 100 AND id < 201")
       assert(scannedFiles(q) == 1, "file a tops out at 100, file c starts at 201")
       assert(q.as[Long].collect().toSet == (101L to 200L).toSet)
     } finally LakeSql.unregister("strict_t")
@@ -1049,7 +1049,7 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("ts_t", t)
     spark.conf.set(pruneKey, "1")
     try {
-      LakeSql.merge(spark, "MERGE INTO ts_t t USING ts_src s ON t.ts = s.ts " +
+      spark.sql("MERGE INTO ts_t t USING ts_src s ON t.ts = s.ts " +
         "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
     } finally {
       spark.conf.unset(pruneKey)
@@ -1069,18 +1069,18 @@ class LakeSqlSpec extends SparkSpec {
     t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     LakeSql.register("clone_src", t)
     try {
-      val res = LakeSql.sql(spark,
+      val res = spark.sql(
         s"CREATE TABLE clone_dst SHALLOW CLONE clone_src LOCATION '$dir/dst'")
       assert(res.columns.toSeq == Seq("table", "version", "num_files"))
       // the clone reads identically and then DIVERGES without touching src
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM clone_dst")
+      assert(spark.sql("SELECT count(*) AS n FROM clone_dst")
         .as[Long].head() == 2L)
-      LakeSql.sql(spark, "INSERT INTO clone_dst VALUES (3, 'c')")
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM clone_dst")
+      spark.sql("INSERT INTO clone_dst VALUES (3, 'c')")
+      assert(spark.sql("SELECT count(*) AS n FROM clone_dst")
         .as[Long].head() == 3L)
       assert(t.read.count() == 2)
       // a second clone under a taken name is refused
-      val e = intercept[IllegalArgumentException](LakeSql.sql(spark,
+      val e = intercept[IllegalArgumentException](spark.sql(
         s"CREATE TABLE clone_dst SHALLOW CLONE clone_src LOCATION '$dir/dst2'"))
       assert(e.getMessage.contains("already registered"), e.getMessage)
     } finally { LakeSql.unregister("clone_src"); LakeSql.unregister("clone_dst") }
@@ -1096,12 +1096,12 @@ class LakeSqlSpec extends SparkSpec {
     t.renameColumn("amt", "amount")
     LakeSql.register("desc_t", t)
     try {
-      val desc = LakeSql.sql(spark, "DESCRIBE TABLE desc_t")
+      val desc = spark.sql("DESCRIBE TABLE desc_t")
         .as[(String, String, Boolean, String)].collect().toSeq
       assert(desc.map(_._1) == Seq("k", "month", "amount"))
       assert(desc.find(_._1 == "month").get._4 == "partition")
       assert(desc.find(_._1 == "amount").get._2 == "double")
-      assert(LakeSql.sql(spark, "SHOW COLUMNS IN desc_t")
+      assert(spark.sql("SHOW COLUMNS IN desc_t")
         .as[String].collect().toSeq == Seq("k", "month", "amount"))
     } finally LakeSql.unregister("desc_t")
   }
@@ -1114,7 +1114,7 @@ class LakeSqlSpec extends SparkSpec {
     Seq((1L, "x", "new"), (2L, "z", "new")).toDF("k1", "k2", "v")
       .createOrReplaceTempView("comp_updates")
     try {
-      LakeSql.merge(spark,
+      spark.sql(
         """MERGE INTO comp AS t0
            USING comp_updates AS u
            ON t0.k1 = u.k1 AND u.k2 = t0.k2
@@ -1136,39 +1136,39 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("liq", t)
     try {
       val v0 = t.currentVersion
-      LakeSql.sql(spark, "ALTER TABLE liq CLUSTER BY (k, x)")
+      spark.sql("ALTER TABLE liq CLUSTER BY (k, x)")
       // metadata-only: one properties commit, no data rewrite
       assert(t.currentVersion == v0 + 1)
       assert(t.clusterBy == Seq("k", "x"))
-      assert(LakeSql.sql(spark, "SHOW TBLPROPERTIES liq ('clusteringColumns')")
+      assert(spark.sql("SHOW TBLPROPERTIES liq ('clusteringColumns')")
         .as[(String, String)].collect().toSeq ==
         Seq(("clusteringColumns", "k,x")))
 
       // plain OPTIMIZE routes to the clustering key
-      val opt = LakeSql.sql(spark, "OPTIMIZE liq").collect().head
+      val opt = spark.sql("OPTIMIZE liq").collect().head
       assert(opt.getString(0) == "k,x") // clustered_by
       assert(t.read.orderBy("k").as[(Long, String, Int)].collect().toSeq ==
         Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)))
 
       // clustering owns the layout: explicit ZORDER refused
       val e = intercept[IllegalArgumentException] {
-        LakeSql.sql(spark, "OPTIMIZE liq ZORDER BY (v)")
+        spark.sql("OPTIMIZE liq ZORDER BY (v)")
       }
       assert(e.getMessage.contains("liquid-clustered"))
 
       // OPTIMIZE FULL: valid only while clustered; DESCRIBE DETAIL names
       // the clustering key
-      val full = LakeSql.sql(spark, "OPTIMIZE liq FULL").collect().head
+      val full = spark.sql("OPTIMIZE liq FULL").collect().head
       assert(full.getString(0) == "k,x")
-      assert(LakeSql.sql(spark, "DESCRIBE DETAIL liq").collect().head
+      assert(spark.sql("DESCRIBE DETAIL liq").collect().head
         .getAs[String]("clustering_columns") == "k,x")
 
-      LakeSql.sql(spark, "ALTER TABLE liq CLUSTER BY NONE")
+      spark.sql("ALTER TABLE liq CLUSTER BY NONE")
       assert(t.clusterBy.isEmpty)
       intercept[IllegalArgumentException] {
-        LakeSql.sql(spark, "OPTIMIZE liq FULL") // no longer clustered
+        spark.sql("OPTIMIZE liq FULL") // no longer clustered
       }
-      LakeSql.sql(spark, "OPTIMIZE liq ZORDER BY (x)") // allowed again
+      spark.sql("OPTIMIZE liq ZORDER BY (x)") // allowed again
     } finally LakeSql.unregister("liq")
   }
 
@@ -1180,10 +1180,10 @@ class LakeSqlSpec extends SparkSpec {
     LakeSql.register("liqc", t)
     try {
       // user spells the column upper-case; the stored key is canonical
-      LakeSql.sql(spark, "ALTER TABLE liqc CLUSTER BY (O_CUSTKEY)")
+      spark.sql("ALTER TABLE liqc CLUSTER BY (O_CUSTKEY)")
       assert(t.clusterBy == Seq("o_custkey"))
       // the OPTIMIZE that used to throw 'unknown cluster column' now works
-      val opt = LakeSql.sql(spark, "OPTIMIZE liqc").collect().head
+      val opt = spark.sql("OPTIMIZE liqc").collect().head
       assert(opt.getString(0) == "o_custkey")
       assert(t.read.orderBy("o_custkey").as[(Long, Int)].collect().toSeq ==
         Seq((1L, 10), (2L, 20), (3L, 30)))
@@ -1201,15 +1201,15 @@ class LakeSqlSpec extends SparkSpec {
       intercept[IllegalArgumentException](
         t.unsetTableProperties(Seq("clusteringColumns")))
       intercept[IllegalArgumentException] {
-        LakeSql.sql(spark,
+        spark.sql(
           "ALTER TABLE liqc SET TBLPROPERTIES ('identity.x' = '1,1')")
       }
       // the dedicated DDL paths still work
-      LakeSql.sql(spark, "ALTER TABLE liqc ALTER COLUMN x SET DEFAULT 7")
+      spark.sql("ALTER TABLE liqc ALTER COLUMN x SET DEFAULT 7")
       assert(t.defaultValues == Map("x" -> "7"))
-      LakeSql.sql(spark, "ALTER TABLE liqc ALTER COLUMN x DROP DEFAULT")
+      spark.sql("ALTER TABLE liqc ALTER COLUMN x DROP DEFAULT")
       assert(t.defaultValues.isEmpty)
-      LakeSql.sql(spark, "ALTER TABLE liqc CLUSTER BY NONE")
+      spark.sql("ALTER TABLE liqc CLUSTER BY NONE")
       assert(t.clusterBy.isEmpty)
       // unrelated properties remain freely settable
       t.setTableProperties(Map("owner" -> "etl"))
@@ -1223,8 +1223,8 @@ class LakeSqlSpec extends SparkSpec {
     t.append(Seq((3L, "c"), (1L, "a"), (2L, "b")).toDF("k", "v"))
     LakeSql.register("liqs", t)
     try {
-      LakeSql.sql(spark, "ALTER TABLE liqs CLUSTER BY (v)")
-      val opt = LakeSql.sql(spark, "OPTIMIZE liqs").collect().head
+      spark.sql("ALTER TABLE liqs CLUSTER BY (v)")
+      val opt = spark.sql("OPTIMIZE liqs").collect().head
       assert(opt.getString(0) == "v")
       assert(t.read.orderBy("k").as[(Long, String)].collect().toSeq ==
         Seq((1L, "a"), (2L, "b"), (3L, "c")))
@@ -1235,15 +1235,15 @@ class LakeSqlSpec extends SparkSpec {
       "combining with PARTITIONED BY is refused") {
     val dir = tmpDir("sql_create_cluster")
     try {
-      LakeSql.sql(spark,
+      spark.sql(
         s"CREATE TABLE cb_t (k BIGINT, x INT) CLUSTER BY (k, x) LOCATION '$dir/t'")
-      val t = LakeSql.sql(spark, "SHOW TBLPROPERTIES cb_t ('clusteringColumns')")
+      val t = spark.sql("SHOW TBLPROPERTIES cb_t ('clusteringColumns')")
         .as[(String, String)].collect().toSeq
       assert(t == Seq(("clusteringColumns", "k,x")))
       // Spark's own parser already refuses the combination (our dispatch
       // keeps a belt-and-suspenders require for programmatic plans)
       intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
-        LakeSql.sql(spark, "CREATE TABLE cb_bad (k BIGINT, p STRING) " +
+        spark.sql("CREATE TABLE cb_bad (k BIGINT, p STRING) " +
           s"CLUSTER BY (k) PARTITIONED BY (p) LOCATION '$dir/bad'")
       }
     } finally LakeSql.unregister("cb_t")

@@ -180,7 +180,7 @@ class MergePruneSpec extends SparkSpec {
     assert(t.readWhere(Seq(LakeTable.ZonePred.eq("k", emoji)))
       .select("v").as[Int].collect().toSeq == Seq(2))
     LakeSql.register("utf8_keys", t)
-    try assert(LakeSql.sql(spark, s"SELECT v FROM utf8_keys WHERE k = '$emoji'")
+    try assert(spark.sql(s"SELECT v FROM utf8_keys WHERE k = '$emoji'")
       .as[Int].collect().toSeq == Seq(2))
     finally LakeSql.unregister("utf8_keys")
     val before = inodes(t)

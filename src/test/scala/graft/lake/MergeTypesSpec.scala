@@ -32,7 +32,7 @@ class MergeTypesSpec extends SparkSpec {
       if (viaSql) {
         LakeSql.register("mtypes_tgt", t)
         src.createOrReplaceTempView("mtypes_src")
-        try LakeSql.merge(spark,
+        try spark.sql(
           """MERGE INTO mtypes_tgt AS t0 USING mtypes_src AS s0 ON t0.id = s0.id
              WHEN MATCHED THEN UPDATE SET *
              WHEN NOT MATCHED THEN INSERT *""")

@@ -59,7 +59,7 @@ class OptimizeSpec extends SparkSpec {
     val window = Seq(LakeTable.ZonePred.between("d", "2024-03-01", "2024-03-10"))
     val (_, skippedBefore) = t.skippingStats(window)
     LakeSql.register("opt_zdate_t", t)
-    try LakeSql.sql(spark, "OPTIMIZE opt_zdate_t ZORDER BY (d)").collect()
+    try spark.sql("OPTIMIZE opt_zdate_t ZORDER BY (d)").collect()
     finally LakeSql.unregister("opt_zdate_t")
     assert(t.read.select("k", "d").collect().toSet == before)
     // each rewritten file covers a contiguous date span: a 10-day window

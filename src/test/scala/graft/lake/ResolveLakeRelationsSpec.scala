@@ -1,12 +1,12 @@
 package graft.lake
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
 /** The injected analyzer rule: LakeSql-registered tables resolve inside
- *  PLAIN `spark.sql` text on a session built with GraftExtensions. */
+ *  PLAIN `spark.sql` text on a session built with GraftExtensions — the
+ *  fixture session is one. */
 class ResolveLakeRelationsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -15,45 +15,28 @@ class ResolveLakeRelationsSpec extends SparkSpec {
     t.append(Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     t.deleteWhere("k = 1") // live DV: a naive path read would still see k=1
     LakeSql.register("native_t", t)
-    // a SECOND session on the same SparkContext, built WITH the extension
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val extended =
-      try SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.expressions.GraftExtensions)
-        .getOrCreate()
-      finally ()
     try {
-      assert(extended ne spark, "builder returned the fixture session — " +
-        "the extension would not be applied")
+      assert(spark.sessionState.sqlParser.isInstanceOf[LakeSqlParser],
+        "the fixture session lacks GraftExtensions — the extension would " +
+          "not be applied")
       // plain SELECT: DV-filtered snapshot
-      assert(extended.sql("SELECT count(*) AS n FROM native_t")
+      assert(spark.sql("SELECT count(*) AS n FROM native_t")
         .collect().head.getLong(0) == 1L)
       // time travel text resolves through the same rule
-      assert(extended.sql("SELECT count(*) AS n FROM native_t VERSION AS OF 0")
+      assert(spark.sql("SELECT count(*) AS n FROM native_t VERSION AS OF 0")
         .collect().head.getLong(0) == 2L)
       // freshness: a commit between two spark.sql calls is visible
       t.append(Seq((3L, "c")).toDF("k", "v"))
-      assert(extended.sql("SELECT count(*) AS n FROM native_t")
+      assert(spark.sql("SELECT count(*) AS n FROM native_t")
         .collect().head.getLong(0) == 2L)
       // a temp view with the same name wins (catalog precedence)
-      extended.range(5).createOrReplaceTempView("native_t")
-      assert(extended.sql("SELECT count(*) AS n FROM native_t")
+      spark.range(5).createOrReplaceTempView("native_t")
+      assert(spark.sql("SELECT count(*) AS n FROM native_t")
         .collect().head.getLong(0) == 5L)
-      extended.catalog.dropTempView("native_t")
+      spark.catalog.dropTempView("native_t")
       // unregistered names still fail with Spark's own error
-      intercept[Exception](extended.sql("SELECT * FROM not_a_table").collect())
-    } finally {
-      LakeSql.unregister("native_t")
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+      intercept[Exception](spark.sql("SELECT * FROM not_a_table").collect())
+    } finally LakeSql.unregister("native_t")
   }
 
   test("the rule is a no-op on plans without registered relations") {
@@ -68,28 +51,14 @@ class ResolveLakeRelationsSpec extends SparkSpec {
     t.merge(Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), Seq("k"))        // v2
     LakeSql.register("tvf_t", t)
     val q = "SELECT _change_type, COUNT(*) FROM table_changes('tvf_t', 1, 2) GROUP BY 1"
-    val viaLakeSql = LakeSql.sql(spark, q).collect().map(_.toString).sorted.toSeq
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val extended = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.expressions.GraftExtensions)
-      .getOrCreate()
+    val viaApi = t.readChangeFeed(1, Some(2)).groupBy(LakeTable.ChangeTypeCol)
+      .count().collect().map(_.toString).sorted.toSeq
     try {
-      assert(extended ne spark)
-      val native = extended.sql(q).collect().map(_.toString).sorted.toSeq
-      assert(native == viaLakeSql)
+      assert(spark.sessionState.sqlParser.isInstanceOf[LakeSqlParser])
+      val native = spark.sql(q).collect().map(_.toString).sorted.toSeq
+      assert(native == viaApi)
       assert(native == Seq("[insert,3]", "[update_postimage,1]",
         "[update_preimage,1]"), native.toString)
-    } finally {
-      LakeSql.unregister("tvf_t")
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(spark)
-      SparkSession.setActiveSession(spark)
-    }
+    } finally LakeSql.unregister("tvf_t")
   }
 }

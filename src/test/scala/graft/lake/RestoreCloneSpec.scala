@@ -147,7 +147,7 @@ class RestoreCloneSpec extends SparkSpec {
     src.append(Seq((1L, "a")).toDF("k", "v"))
     LakeSql.register("dc_src", src)
     try {
-      val r = LakeSql.sql(spark,
+      val r = spark.sql(
         s"CREATE TABLE dc_dst DEEP CLONE dc_src LOCATION '$root/dst'")
         .collect().head
       assert(r.getString(0) == "dc_dst")

@@ -198,14 +198,14 @@ class TypeWideningSpec extends SparkSpec {
     t.append(Seq((7, 1.25f)).toDF("k", "v"))
     LakeSql.register("widen_sql_t", t)
     try {
-      intercept[Exception](LakeSql.sql(spark,
+      intercept[Exception](spark.sql(
         "ALTER TABLE widen_sql_t ALTER COLUMN k TYPE BIGINT"))  // property off
-      LakeSql.sql(spark,
+      spark.sql(
         "ALTER TABLE widen_sql_t SET TBLPROPERTIES ('delta.enableTypeWidening' = 'true')")
-      LakeSql.sql(spark, "ALTER TABLE widen_sql_t ALTER COLUMN k TYPE BIGINT")
-      LakeSql.sql(spark, "ALTER TABLE widen_sql_t ALTER COLUMN v TYPE DOUBLE")
+      spark.sql("ALTER TABLE widen_sql_t ALTER COLUMN k TYPE BIGINT")
+      spark.sql("ALTER TABLE widen_sql_t ALTER COLUMN v TYPE DOUBLE")
       assert(t.schema("k").dataType == LongType)
-      assert(LakeSql.sql(spark, "SELECT k, v FROM widen_sql_t").head.getLong(0) == 7L)
+      assert(spark.sql("SELECT k, v FROM widen_sql_t").head.getLong(0) == 7L)
     } finally LakeSql.unregister("widen_sql_t")
   }
 }

@@ -630,6 +630,42 @@ class PipelineSpec extends SparkSpec {
     intercept[RuntimeException] { h3.stop() }
   }
 
+  test("idle runContinuous polls add no __event_log version: a cycle is " +
+      "idle by its windows' states, whatever its event text") {
+    import graft.lake.LakeTable
+    val root = tmpDir("pl_cont_idle")
+    val bronze = LakeTable(spark, s"$root/bronze")
+    bronze.append(Seq((1L, "a", 1L)).toDF("k", "v", "seq"))
+    val p = new Pipeline(spark, s"$root/pipe")
+    p.inputTable("bronze", bronze)
+    p.streamingTable("cdc")
+    p.autoCdcFlow("cdc", "bronze", Seq("k"), "seq")
+    p.streamingJoinTable("joined", "bronze", Seq("k"), "seq")(identity)
+    p.streamingSelectTable("sel", "bronze")(identity)
+    p.streamingTable("landed")
+    p.appendFlowStream("landed", "bronze", name = "land")()
+    p.streamingTable("panel")
+    p.incrementalAggMv("panel", "bronze", Seq("v"), Seq("seq"))
+    val log = LakeTable(spark, s"$root/pipe/__event_log")
+    val h = p.runContinuous(pollMs = 20L)
+    /** Await `n` more cycles; the event log's version after them. */
+    def settle(n: Long): Long = {
+      assert(h.awaitRuns(h.runsCompleted + n))
+      log.currentVersion
+    }
+    try {
+      val afterBootstrap = settle(2)
+      assert(settle(3) == afterBootstrap) // idle polls: no log commit
+      bronze.append(Seq((2L, "b", 1L)).toDF("k", "v", "seq"))
+      assert(h.awaitRuns(h.runsCompleted + 2))
+      val afterAppend = settle(2)
+      assert(afterAppend > afterBootstrap)
+      assert(Seq("cdc", "joined", "sel", "landed").forall(p.read(_).count() == 2L))
+      assert(settle(3) == afterAppend)
+    } finally h.stop()
+    assert(h.failed.isEmpty)
+  }
+
   test("cyclic flow declarations die loudly with the cycle named, not with " +
       "a StackOverflowError") {
     val p = new Pipeline(spark, tmpDir("pl_cycle"))
@@ -2129,8 +2165,8 @@ class PipelineSpec extends SparkSpec {
           .lastTxnVersion("graft.sinkflow.toraw")))
 
     /** A run's outcome: the consumer's rows, its ledger, and its one event
-     *  message — or a refusal (the message's prefix; a vacuumed dir name
-     *  follows it) that leaves rows and ledger as they were. */
+     *  message — or a refusal (the message's prefix) that leaves rows and
+     *  ledger as they were. */
     sealed trait Outcome
     final case class Ran(rows: Seq[Row3], ledger: Long, message: String)
       extends Outcome
@@ -2149,7 +2185,11 @@ class PipelineSpec extends SparkSpec {
       "a full-rewrite commit — an append-only consumer cannot replay a " +
       "rewritten source without duplicating (full-refresh this pipeline, or " +
       "keep the source append-only)"
-    val vacuumed = "requirement failed: change feed for v1 has been vacuumed ("
+    def vacuumRefusal(consumer: String) = s"requirement failed: $consumer " +
+      "consumes an append-only stream, but VACUUM reclaimed the change data " +
+      "of versions [1, 3] of its source — an append-only consumer cannot " +
+      "re-read them (full-refresh this pipeline, or vacuum the source with " +
+      "a longer retention)"
 
     // (state, what the source commits before the run) in run order; every
     // scenario starts from `b0` at v0 and a bootstrap run
@@ -2191,10 +2231,10 @@ class PipelineSpec extends SparkSpec {
         Ran(append1, 1, "select-table from bronze (incremental up-to-date)"),
         Ran(append1, 2, "select-table append from bronze (incremental v2..v2)"),
         Ran(rewritten, 3, "select-table refresh (recompute @ v3 — source " +
-          "window v3..v3 spans a full rewrite)"),
+          "window v3..v3 is unreadable)"),
         Ran(b0, 0, "select-table append from bronze (incremental v0..v0)"),
         Ran(all4, 3, "select-table refresh (recompute @ v3 — source window " +
-          "v1..v3 spans a full rewrite)")),
+          "v1..v3 is unreadable)")),
       "append flow" -> Seq(
         Ran(b0, 0, "append into landed (incremental v0..v0)"),
         Ran(append1, 1, "append into landed (incremental v1..v1)"),
@@ -2202,7 +2242,7 @@ class PipelineSpec extends SparkSpec {
         Ran(append1, 2, "append into landed (incremental v2..v2)"),
         Refused(rewriteRefusal("append flow land"), append1, 2),
         Ran(b0, 0, "append into landed (incremental v0..v0)"),
-        Refused(vacuumed, b0, 0)),
+        Refused(vacuumRefusal("append flow land"), b0, 0)),
       "lake sink" -> Seq(
         Ran(b0, 0, "append into lsink (incremental v0..v0)"),
         Ran(append1, 1, "append into lsink (incremental v1..v1)"),
@@ -2210,7 +2250,7 @@ class PipelineSpec extends SparkSpec {
         Ran(append1, 2, "append into lsink (incremental v2..v2)"),
         Refused(rewriteRefusal("append flow tolake"), append1, 2),
         Ran(b0, 0, "append into lsink (incremental v0..v0)"),
-        Refused(vacuumed, b0, 0)),
+        Refused(vacuumRefusal("append flow tolake"), b0, 0)),
       "raw sink" -> Seq(
         Ran(b0, 0, "sink append into rsink (v0..v0, at-least-once)"),
         Ran(append1, 1, "sink append into rsink (v1..v1, at-least-once)"),
@@ -2218,7 +2258,7 @@ class PipelineSpec extends SparkSpec {
         Ran(append1, 2, "sink append into rsink (v2..v2, at-least-once)"),
         Refused(rewriteRefusal("sink flow toraw"), append1, 2),
         Ran(b0, 0, "sink append into rsink (v0..v0, at-least-once)"),
-        Refused(vacuumed, b0, 0)))
+        Refused(vacuumRefusal("sink flow toraw"), b0, 0)))
 
     def lastMessages(p: Pipeline, dataset: String): Seq[String] = {
       val log = p.eventLog

@@ -2,11 +2,10 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.{LakeSql, LakeTable}
+import graft.lake.LakeTable
 
 /** `Pipeline.exposeSql`: pipeline datasets become SQL-addressable — plain
  *  tables as FULL lake tables (DML/time travel work), presented auto-MVs
@@ -36,10 +35,10 @@ class PipelineSqlCatalogSpec extends SparkSpec {
     p.exposeSql()
     try {
       // full table: SELECT, time travel, even DML through SQL
-      assert(LakeSql.sql(spark, "SELECT count(*) AS n FROM cat_silver")
+      assert(spark.sql("SELECT count(*) AS n FROM cat_silver")
         .head.getLong(0) == 3L)
       // presented MV: exactly the declared columns — no hidden counter
-      val panel = LakeSql.sql(spark,
+      val panel = spark.sql(
         "SELECT * FROM cat_panel ORDER BY g")
       assert(panel.columns.toSeq == Seq("g", "s"))
       assert(panel.as[(String, Long)].collect().toSeq ==
@@ -49,43 +48,27 @@ class PipelineSqlCatalogSpec extends SparkSpec {
       bronze.append(Seq((4L, "b", 5L, ts("2024-02-01 00:00:00")))
         .toDF("k", "g", "x", "seq"))
       p.runIncremental()
-      assert(LakeSql.sql(spark, "SELECT s FROM cat_panel WHERE g = 'b'")
+      assert(spark.sql("SELECT s FROM cat_panel WHERE g = 'b'")
         .head.getLong(0) == 35L)
       // read-only: DML against the presented MV refuses (it is not a
       // registered lake TABLE)
-      intercept[Exception](LakeSql.sql(spark,
+      intercept[Exception](spark.sql(
         "DELETE FROM cat_panel WHERE g = 'a'"))
       // joins compose across exposed datasets
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         """SELECT count(*) AS n FROM cat_silver t JOIN cat_panel m
            ON t.g = m.g""").head.getLong(0) == 4L)
       // DLT's event_log() surface: the pipeline's event log by name
-      assert(LakeSql.sql(spark,
+      assert(spark.sql(
         "SELECT count(*) AS n FROM event_log WHERE event_type = 'flow_progress'")
         .head.getLong(0) >= 2L)
-      // native spark.sql through the session extension
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      val extended = SparkSession.builder()
-        .master("local[4]")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .withExtensions(new graft.expressions.GraftExtensions)
-        .getOrCreate()
-      try {
-        if (extended ne spark) {
-          assert(extended.sql("SELECT s FROM cat_panel WHERE g = 'b'")
-            .collect().head.getLong(0) == 35L)
-        }
-      } finally {
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        SparkSession.setActiveSession(spark)
-        SparkSession.setDefaultSession(spark)
-      }
+      // native spark.sql through the session extension, on the fixture
+      // session itself
+      assert(spark.sessionState.sqlParser.isInstanceOf[graft.lake.LakeSqlParser])
+      assert(spark.sql("SELECT s FROM cat_panel WHERE g = 'b'")
+        .collect().head.getLong(0) == 35L)
     } finally p.unexposeSql()
     // after unexpose the names are gone
-    intercept[Exception](LakeSql.sql(spark, "SELECT * FROM cat_panel"))
+    intercept[Exception](spark.sql("SELECT * FROM cat_panel"))
   }
 }

@@ -201,9 +201,9 @@ final class GoldBuilder(spark: SparkSession, clock: () => Timestamp) {
         // partitioned fact: the partition value is monotone in cdcCol (see
         // FactConfig.partitionCol), so MAX(cdc) lives in the max partition —
         // a one-partition scan instead of O(table) per incremental run
-        val scope = cfg.partitionCol.flatMap { _ =>
+        val scope = cfg.partitionCol.flatMap { p =>
           val owned = table.ownedPartitionValues
-          if (owned.isEmpty) None else Some(table.readPartitions(Seq(owned.max)))
+          if (owned.isEmpty) None else Some(table.read.filter(col(p) === owned.max))
         }
         scope.getOrElse(table.read)
           .agg(max(col(cfg.cdcCol))).as[Option[Timestamp]].head()

@@ -4,7 +4,7 @@ import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedAttribute, UnresolvedIdentifier, UnresolvedRelation, UnresolvedTable, UnresolvedTableOrView}
-import org.apache.spark.sql.catalyst.expressions.{And, Cast, EqualTo, Expression}
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Cast, EqualTo, Expression}
 import org.apache.spark.sql.catalyst.parser.ParseException
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, AddColumns, AlterColumns, AlterTableClusterBy, ColumnDefinition, CreateTable, CreateTableAsSelect, DeleteAction, DeleteFromTable, DescribeColumn, DescribeRelation, DropColumns, InsertAction, InsertIntoStatement, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, OverwriteByExpression, RenameColumn, SetTableProperties, ShowColumns, ShowPartitions, ShowTableProperties, SubqueryAlias, UnresolvedTableSpec, UnsetTableProperties, UpdateAction, UpdateStarAction, UpdateTable}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -16,8 +16,8 @@ import org.apache.spark.sql.types.{StringType, StructType, TimestampType}
  * `VERSION/TIMESTAMP AS OF` time travel, resolved by
  * [[ResolveLakeRelations]], and the `table_changes('t', from[, to])` CDF
  * table-valued function), CREATE TABLE [IF NOT EXISTS] [PARTITIONED BY]
- * LOCATION [AS SELECT], MERGE INTO, DELETE FROM, UPDATE (zone-pruned CoW
- * or arbitrary-predicate MoR), INSERT INTO/OVERWRITE, INSERT INTO ...
+ * LOCATION [AS SELECT], MERGE INTO, DELETE FROM, UPDATE (file-pruned CoW
+ * on range bounds, MoR otherwise), INSERT INTO/OVERWRITE, INSERT INTO ...
  * REPLACE WHERE (atomic region swap; zero-scan on partition predicates),
  * OPTIMIZE [WHERE <partition pred>] [ZORDER BY], VACUUM
  * [RETAIN n VERSIONS|HOURS] [DRY RUN], RESTORE TABLE ... TO
@@ -348,14 +348,11 @@ object LakeSql {
         (Option(where), zc) match {
           case (Some(w), _) =>
             // partition-scoped maintenance (Delta `OPTIMIZE t WHERE ...`):
-            // the predicate must be zone-expressible bounds on the
-            // partition column — optimizeWhere enforces the column rule
-            val preds = zonePreds(stripTableQualifiers(
-              spark.sessionState.sqlParser.parseExpression(w), name)).getOrElse(
-              throw new IllegalArgumentException(
-                "OPTIMIZE WHERE must be a conjunction of <partition col> " +
-                  s"=/>=/<= <literal> bounds, got: $w"))
-            val st = tbl.optimizeWhere(preds, zc.getOrElse(Nil))
+            // any condition over the partition column alone —
+            // optimizeWhere enforces the column rule
+            val st = tbl.optimizeWhere(stripTableQualifiers(
+              spark.sessionState.sqlParser.parseExpression(w), name).sql,
+              zc.getOrElse(Nil))
             Seq((st.filesRewritten, st.filesLinked, st.bytesRewritten))
               .toDF("files_rewritten", "files_untouched", "bytes_rewritten")
           case (None, None) if tbl.clusterBy.nonEmpty && full != null =>
@@ -586,16 +583,15 @@ object LakeSql {
           }
           k -> GraftColumnBridge.column(stripTableQualifiers(a.value, name, alias))
         }.toMap
-        // zone-expressible bounds take the file-skipping copy-on-write
-        // path (prunes to the files that can hold a match); anything
-        // else — and any table with live deletion vectors — takes the
+        // range bounds take the file-skipping copy-on-write path
+        // (prunes to the files that can hold a match); anything else —
+        // and any table with live deletion vectors — takes the
         // merge-on-read path: DV the old images, append the new, one
         // commit, O(matched rows) at any table size
-        val n = zonePreds(stripped) match {
-          case Some(preds) if tbl.deleteVectorDirs.isEmpty =>
-            tbl.update(preds, set)
-          case _ => tbl.updateWhere(stripped.sql, set)
-        }
+        val n =
+          if (isBounds(stripped) && tbl.deleteVectorDirs.isEmpty)
+            tbl.update(stripped.sql, set)
+          else tbl.updateWhere(stripped.sql, set)
         Seq(n).toDF("updated_rows")
       case ctas: CreateTableAsSelect =>
         // CREATE TABLE name [PARTITIONED BY (col)] LOCATION 'path'
@@ -641,14 +637,12 @@ object LakeSql {
         val incoming = GraftColumnBridge.dataset(spark, o.query)
         val df = insertShape(tbl, incoming, Nil, byName = false)
         val stripped = stripTableQualifiers(o.deleteExpr, name, alias)
-        zonePreds(stripped) match {
-          case Some(preds)
-              if tbl.partitionColumn.exists(p => preds.forall(_.col == p)) =>
-            tbl.overwritePartitions(preds, df)
-            Seq(-1L).toDF("replaced_rows") // zero-scan: count not known
-          case _ =>
-            Seq(tbl.overwriteWhere(stripped.sql, df)).toDF("replaced_rows")
-        }
+        val onPartition = tbl.partitionColumn.exists(p => stripped.collect {
+          case a: UnresolvedAttribute => a.nameParts.last }.forall(_ == p))
+        if (isBounds(stripped) && onPartition) {
+          tbl.overwritePartitions(stripped.sql, df)
+          Seq(-1L).toDF("replaced_rows") // zero-scan: count not known
+        } else Seq(tbl.overwriteWhere(stripped.sql, df)).toDF("replaced_rows")
       case InsertIntoStatement(target, partitionSpec, userCols, query,
           overwrite, _, byName) =>
         require(partitionSpec.isEmpty,
@@ -926,29 +920,18 @@ object LakeSql {
     }
   }
 
-  /** WHERE → conjunctive [[LakeTable.ZonePred]] bounds when every conjunct
-   *  is `<col> = / >= / <= <foldable literal>` (inclusive bounds only — the
-   *  zone-map contract); None otherwise. */
-  private def zonePreds(e: Expression): Option[Seq[LakeTable.ZonePred]] = {
-    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual}
-    def litStr(v: Expression): Option[String] =
-      if (!v.foldable) None
-      else Option(Cast(v, StringType, Some("UTC")).eval(null)).map(_.toString)
-    e match {
-      case And(l, r) => for { a <- zonePreds(l); b <- zonePreds(r) } yield a ++ b
-      case EqualTo(a: UnresolvedAttribute, v) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, litStr(v), litStr(v))))
-      case EqualTo(v, a: UnresolvedAttribute) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, litStr(v), litStr(v))))
-      case GreaterThanOrEqual(a: UnresolvedAttribute, v) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, litStr(v), None)))
-      case GreaterThanOrEqual(v, a: UnresolvedAttribute) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, None, litStr(v))))
-      case LessThanOrEqual(a: UnresolvedAttribute, v) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, None, litStr(v))))
-      case LessThanOrEqual(v, a: UnresolvedAttribute) if litStr(v).isDefined =>
-        Some(Seq(LakeTable.ZonePred(a.nameParts.last, litStr(v), None)))
-      case _ => None
-    }
+  /** Whether WHERE is a conjunction of `<col> = / >= / <= <non-NULL
+   *  literal>` range bounds — the shape that picks the copy-on-write UPDATE
+   *  and the zero-scan REPLACE WHERE paths. */
+  private def isBounds(e: Expression): Boolean = e match {
+    case And(l, r) => isBounds(l) && isBounds(r)
+    case c: BinaryComparison if Set("=", ">=", "<=")(c.symbol) =>
+      def literal(v: Expression) = v.foldable && v.eval() != null
+      (c.left, c.right) match {
+        case (_: UnresolvedAttribute, v) => literal(v)
+        case (v, _: UnresolvedAttribute) => literal(v)
+        case _ => false
+      }
+    case _ => false
   }
 }

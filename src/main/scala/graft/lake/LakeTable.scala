@@ -8,10 +8,10 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, EvalMode, Expression, GreaterThanOrEqual, LessThanOrEqual, Literal, PythonFuncExpression, UserDefinedExpression, UserDefinedGenerator}
-import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, ObjectConsumer, ObjectProducer}
+import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal, PythonFuncExpression, UserDefinedExpression, UserDefinedGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, ObjectConsumer, ObjectProducer}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
-import org.apache.spark.sql.catalyst.types.PhysicalDataType
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
@@ -812,44 +812,36 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     mv.entries.filterNot(e => prev(e.dir))
   }
 
-  /** Partition-pruned read of only the given partition values. */
-  def readPartitions(values: Seq[String]): DataFrame =
-    snapshot(manifest, Some(values.toSet))
-
-  /**
-   * DATA-SKIPPING read (Delta's stats-based file pruning rebuilt on the
-   * manifest): the snapshot filtered by the conjunction of `preds`. The
-   * filter reaches the scan's [[ManifestFileIndex]] as a pushed-down data
-   * filter, so whole files whose zone map (or bloom sidecar) proves no row
-   * can match are never read — at 100 TB a narrow time/key range touches
-   * only the files that can hold it. The result equals `read.filter(...)`
-   * exactly: files without recorded stats (table created without
-   * `statsColumns`, or a column all-NULL in the file) are always read —
-   * skipping is only ever an optimization, never a filter.
-   */
-  def readWhere(preds: Seq[ZonePred], asOf: Option[Long] = None): DataFrame = {
-    val m = asOf.fold(manifest)(readManifest)
-    preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
-      s"unknown predicate column ${p.col}"))
-    snapshot(m).filter(zonePredCondition(m, preds))
-  }
-
-  /** Introspection for [[readWhere]]: (files read, files skipped) under the
-   *  given predicates, asked of the snapshot's file index — the
+  /** Introspection for file skipping: (files read, files skipped) when the
+   *  current snapshot is filtered by `condition` (a SQL boolean expression
+   *  over the table's columns), asked of the snapshot's file index — the
    *  observability hook specs and operators use to prove skipping actually
    *  happens. */
-  def skippingStats(preds: Seq[ZonePred]): (Int, Int) = {
+  def skippingStats(condition: String): (Int, Int) = {
     val m = manifest
-    val index = fileIndex(m, snapshotFiles(m))
-    val kept = index.filesMatching(zoneFilters(m, preds)).size
-    (kept, index.files.size - kept)
+    val files = snapshotFiles(m)
+    val kept = candidateFiles(m, files, expr(condition)).size
+    (kept, files.size - kept)
+  }
+
+  /** The ONE candidate-file function: the files among `files` of snapshot
+   *  `m` that may hold a row satisfying `cond` — what their
+   *  [[ManifestFileIndex]] keeps for the partition and data filters
+   *  Catalyst pushes from `cond` into the scan, exactly as a read of the
+   *  filtered snapshot prunes. Planning only: no Spark job runs. */
+  private def candidateFiles(m: Manifest, files: Seq[SnapshotFile],
+      cond: Column): Seq[SnapshotFile] = {
+    val pushed = scanFiles(m, files).filter(cond).queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec => s.partitionFilters ++ s.dataFilters
+    }.flatten
+    fileIndex(m, files).filesMatching(pushed)
   }
 
   /** Candidate files for a FILE-PRUNED unpartitioned merge, or None when
    *  the path doesn't apply. The source's per-key [min, max], aggregated in
-   *  the key's own type, becomes a `key BETWEEN min AND max` filter per
-   *  stats-carrying key, and the snapshot's file index names which files
-   *  may hold a matching row — the same prune function every read uses.
+   *  the key's own type, becomes a `key BETWEEN min AND max` condition per
+   *  stats-carrying key, and [[candidateFiles]] names which files may hold
+   *  a matching row — the same pruning every read gets.
    *  Gates:
    *   - at least one merge key must carry zone stats and have the SAME type
    *     in source and target: a mixed-type key matches through the join's
@@ -882,13 +874,12 @@ final class LakeTable private (val spark: SparkSession, val root: String,
       val lo = r.fieldIndex(s"__lo_$k"); val hi = r.fieldIndex(s"__hi_$k")
       if (r.isNullAt(lo) || r.isNullAt(hi)) None // empty/all-null source key
       else {
-        val a = AttributeReference(physName(m, k), m.schema(k).dataType)()
-        Some(And(GreaterThanOrEqual(a, Literal.create(r.get(lo), a.dataType)),
-          LessThanOrEqual(a, Literal.create(r.get(hi), a.dataType))))
+        def bound(i: Int) = GraftColumnBridge.column(Literal.create(r.get(i), m.schema(k).dataType))
+        Some(col(k) >= bound(lo) && col(k) <= bound(hi))
       }
     }
     if (bounds.isEmpty) return None
-    val kept = fileIndex(m, files).filesMatching(bounds)
+    val kept = candidateFiles(m, files, bounds.reduce(_ && _))
     if (kept.size >= files.size) None else Some(kept)
   }
 
@@ -1028,10 +1019,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     antiJoinDeleteVectors(scan, m).select((m.schema.fieldNames.toSeq ++ ids).map(col): _*)
   }
 
-  /** The snapshot of `m` (optionally partition-scoped), deletion vectors
-   *  applied. */
-  private def snapshot(m: Manifest, scope: Option[Set[String]] = None): DataFrame =
-    snapshot(m, snapshotFiles(m, scope), withRowIds = false, version = None)
+  /** The snapshot of `m`, deletion vectors applied. */
+  private def snapshot(m: Manifest): DataFrame =
+    snapshot(m, snapshotFiles(m), withRowIds = false, version = None)
 
   /** The whole snapshot of version `v`, its scan labelled with `v`. */
   private def snapshotAt(v: Long): DataFrame = {
@@ -1576,8 +1566,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   // zone-mapped-but-unclustered scan would read.
 
   /** Values hashed as their CAST-to-STRING rendering — the same canonical
-   *  form zone-map bounds and [[ZonePred]] literals use, so probe and build
-   *  agree for every column type. */
+   *  form zone-map bounds use; the file index renders a probe's literal
+   *  the same way, so probe and build agree for every column type. */
   private def writeBloomIndex(dir: String, schema: StructType,
       pcol: Option[String], bloomCols: Seq[String]): Unit = {
     val bcols = bloomCols.filter(c =>
@@ -2758,18 +2748,20 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /**
    * Copy-on-write DELETE (Delta `DELETE FROM ... WHERE`): remove the rows
-   * matching the conjunction of `preds`, rewriting ONLY the files whose zone
-   * map admits a match, in one count job and one write job through the
-   * copy-on-write step merge uses ([[rewriteTouched]]) — every other file
+   * matching `condition` (a SQL boolean expression over the table's
+   * columns), rewriting ONLY the files whose partition values, zone maps
+   * and blooms admit a match ([[candidateFiles]]), in one count job and
+   * one write job through the copy-on-write step merge uses
+   * ([[rewriteTouched]]) — every other file
    * stays (re-linked when it shares a dir with a touched one), so I/O is
    * O(files that may contain matches), not O(table). At 100 TB a targeted
    * delete (one doc id, one day) touches a handful of files when the table
-   * records stats on the predicate column (ideally Z-ordered). A predicate
+   * records stats on the predicate column (ideally Z-ordered). A condition
    * no file admits commits nothing. Returns the number of rows deleted.
    * With change feed enabled the deleted rows are materialized as
    * `_change_type = 'delete'`.
    */
-  def delete(preds: Seq[ZonePred]): Long = mutateWhere(preds, None)
+  def delete(condition: String): Long = mutateWhere(condition, None)
 
   /**
    * MERGE-ON-READ DELETE (Delta deletion vectors): logically remove the
@@ -2780,13 +2772,16 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * vector under `_dv/`, and every read anti-joins live vectors out of the
    * scan. At 100 TB this makes a point delete O(matched rows), not O(files
    * that may contain matches): the copy-on-write [[delete]] rewrites
-   * whole files to drop one row; this writes a few coordinates.
+   * whole files to drop one row; this writes a few coordinates. The
+   * condition reaches the snapshot scan as a pushed-down filter, so its
+   * file index skips the files whose partition values, zone maps and
+   * blooms prove no match before any row is read.
    *
    * Semantics match [[delete]]: returns the number of rows deleted; with
    * change feed enabled the deleted rows are materialized as
    * `_change_type = 'delete'`. Deleting already-deleted rows is a no-op
    * (matching runs against the LIVE snapshot). Reads of every form —
-   * [[read]], [[readWhere]], [[readVersion]], merge sources — apply the
+   * [[read]], [[readVersion]], merge sources — apply the
    * vectors; full-rewrite commits (overwrite / compact / unpartitioned
    * merge) read through them and clear them. Later appends are untouched
    * by earlier vectors (coordinates are per existing file).
@@ -2798,60 +2793,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    */
   def deleteWhere(condition: String): Long = synchronized {
     val (v0, m) = commit.pin()
-    deleteRows(m, v0, coalesce(expr(condition), lit(false)))
-  }
-
-  /**
-   * MERGE-ON-READ POINT DELETE with file skipping — the merge-on-read twin
-   * of the copy-on-write [[delete]]: the preds reach the snapshot scan as a
-   * pushed-down filter, so its file index prunes by zone maps AND the bloom
-   * index (the preds name which files can hold a match), then the
-   * surviving rows are filtered by the same preds and their coordinates
-   * written as a deletion vector. At 100 TB a keyed
-   * delete on a stats/bloom-indexed column touches the handful of files
-   * that can contain the key instead of scanning the table to locate the
-   * rows it will not rewrite anyway. Semantics ≡ `deleteWhere(<preds as
-   * conjunction>)` — pruning uses the same predicates row-filtering does,
-   * so it can never miss a match.
-   */
-  def deleteWhere(preds: Seq[ZonePred]): Long = synchronized {
-    require(exists, s"LakeTable at $root does not exist")
-    require(preds.nonEmpty, "refusing a whole-table delete with no predicate")
-    preds.foreach(p => require(p.lo.isDefined || p.hi.isDefined,
-      s"predicate on ${p.col} has neither a lower nor an upper bound — " +
-        "an unbounded ZonePred matches every row (use delete() for a full rewrite)"))
-    val (v0, m) = commit.pin()
-    preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
-      s"unknown predicate column ${p.col}"))
-    deleteRows(m, v0, zonePredCondition(m, preds))
-  }
-
-  /** Conjunction of [[ZonePred]] bounds as a row-level Column: bounds cast
-   *  to the column's type, equal bounds as `=` (the shape bloom sidecars
-   *  answer), no bound at all as `true`. */
-  private def zonePredCondition(m: Manifest, preds: Seq[ZonePred]): Column =
-    GraftColumnBridge.column(zonePredExpr(m, preds, UnresolvedAttribute.quoted))
-
-  /** [[zonePredCondition]] as Catalyst filters over the scan's physical
-   *  columns — what the file index prunes with when a caller needs the
-   *  candidate files themselves ([[skippingStats]], copy-on-write DML). */
-  private def zoneFilters(m: Manifest, preds: Seq[ZonePred]): Seq[Expression] =
-    preds.map(pr => zonePredExpr(m, Seq(pr), c =>
-      AttributeReference(physName(m, c), m.schema(c).dataType)()))
-
-  private def zonePredExpr(m: Manifest, preds: Seq[ZonePred],
-      column: String => Expression): Expression = {
-    val zone = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    preds.flatMap { pr =>
-      val a = column(pr.col)
-      def v(s: String) = Cast(Literal(s), m.schema(pr.col).dataType, zone)
-      (pr.lo, pr.hi) match {
-        case (Some(lo), Some(hi)) if lo == hi => Seq(EqualTo(a, v(lo)))
-        case (lo, hi) =>
-          lo.map(x => GreaterThanOrEqual(a, v(x))).toSeq ++
-            hi.map(x => LessThanOrEqual(a, v(x)))
-      }
-    }.reduceOption(And).getOrElse(Literal(true))
+    deleteRows(m, v0, expr(condition))
   }
 
   /** Materialize a commit's change rows under `_changes/` — physical
@@ -2973,46 +2915,46 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * partition values transfers to the freshly written dir, every other
    * entry is carried UNCHANGED (same paths, same inodes, like
    * [[optimizeWhere]]), and no existing data is read at all — cost is
-   * O(new data) + O(manifest), independent of table size. Incoming rows
-   * must all fall inside the replaced partition range (Delta's replaceWhere
-   * contract). Deletion vectors over replaced partitions become inert
-   * (their coordinates address disowned files); vectors over untouched
-   * partitions stay live.
+   * O(new data) + O(manifest), independent of table size. `condition` (a
+   * SQL boolean expression) may reference only the partition column; the
+   * replaced partitions are those its candidate files hold
+   * ([[candidateFiles]]), and incoming rows must all satisfy it (Delta's
+   * replaceWhere contract). Deletion vectors over replaced partitions
+   * become inert (their coordinates address disowned files); vectors over
+   * untouched partitions stay live.
    */
-  def overwritePartitions(preds: Seq[ZonePred], df0: DataFrame): Unit =
+  def overwritePartitions(condition: String, df0: DataFrame): Unit =
     synchronized {
       val (v0, m) = commit.pin()
       val p = m.pcol.getOrElse(throw new IllegalArgumentException(
         "overwritePartitions needs a partitioned table — use overwriteWhere"))
-      require(preds.nonEmpty, "overwritePartitions with no predicate")
-      preds.foreach(pr => require(pr.col == p,
+      require(condition.trim.nonEmpty, "overwritePartitions with no predicate")
+      columnsOf(m, condition).foreach(c => require(c == p,
         s"overwritePartitions must predicate only the partition column $p, " +
-          s"got ${pr.col}"))
+          s"got $c"))
       val cols = m.schema.fieldNames.toSeq
       val df = materializeGenerated(df0, m)
       require(df.columns.toSet == cols.toSet,
         s"replace batch columns ${df.columns.sorted.mkString(",")} != table " +
           s"schema ${cols.sorted.mkString(",")}")
-      val inScope = zonePredCondition(m, preds)
       val data = df.select(cols.map(col): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        require(data.filter(!coalesce(inScope, lit(false))).limit(1).count() == 0L,
+        require(data.filter(!coalesce(expr(condition), lit(false))).limit(1).count() == 0L,
           "replaceWhere contract: every incoming row must fall inside the " +
             s"replaced partition range on $p")
         enforceConstraints(data, m.constraints)
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        val replaced = partitionInRange(m, preds)
+        val scoped = candidateFiles(m, snapshotFiles(m), expr(condition))
+        val replaced = ownedValuesOf(m, scoped)
         val chDir =
           if (m.cdfEnabled) {
             // CDF needs the replaced rows' delete images: read ONLY the
             // replaced partitions (partition-pruned — the zero-scan promise
             // relaxes to O(replaced region) exactly when CDF demands it)
-            val scope = m.entries.flatMap(_.owned.getOrElse(Nil))
-              .distinct.filter(replaced).toSet
-            Some(writeChanges(m, snapshot(m, Some(scope))
+            Some(writeChanges(m, snapshot(m, scoped, withRowIds = false, version = None)
               .withColumn(ChangeTypeCol, lit("delete"))
               .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else None
@@ -3023,17 +2965,17 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /**
    * Copy-on-write UPDATE (Delta `UPDATE ... SET ... WHERE`): assign
-   * `set` (column → expression over the row) on rows matching `preds`,
-   * with the same zone-map-pruned file rewrite as [[delete]]. The partition
+   * `set` (column → expression over the row) on rows matching `condition`,
+   * with the same pruned file rewrite as [[delete]]. The partition
    * column cannot be assigned (a row may not change partition). Returns the
    * number of rows updated; change feed records pre/post images.
    */
-  def update(preds: Seq[ZonePred], set: Map[String, Column]): Long =
-    mutateWhere(preds, Some(set))
+  def update(condition: String, set: Map[String, Column]): Long =
+    mutateWhere(condition, Some(set))
 
-  private def mutateWhere(preds: Seq[ZonePred],
+  private def mutateWhere(condition: String,
       set: Option[Map[String, Column]]): Long = synchronized {
-    require(preds.nonEmpty, "refusing a whole-table mutation with no predicate")
+    require(condition.trim.nonEmpty, "refusing a whole-table mutation with no predicate")
     val (v0, m) = commit.pin()
     val opName = if (set.isEmpty) "delete" else "update"
     // CoW rewrites read raw files and re-link untouched ones under new dirs —
@@ -3042,17 +2984,15 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     require(m.deleteVectors.isEmpty,
       s"copy-on-write $opName on $root with live deletion vectors — " +
         "compact() first to materialize them, or use deleteWhere()")
-    preds.foreach(p => require(m.schema.fieldNames.contains(p.col),
-      s"unknown predicate column ${p.col}"))
     set.foreach(_.keys.foreach { c =>
       require(m.schema.fieldNames.contains(c), s"unknown update column $c")
       require(!m.pcol.contains(c), s"cannot update partition column $c")
     })
     val cols = m.schema.fieldNames.toSeq
-    val hit = coalesce(zonePredCondition(m, preds), lit(false))
-    // the touched set: the files whose partition values and zone maps admit
-    // a match (none: nothing to rewrite, nothing to commit)
-    val touched = fileIndex(m, snapshotFiles(m)).filesMatching(zoneFilters(m, preds))
+    val hit = coalesce(expr(condition), lit(false))
+    // the touched set: the files whose partition values, zone maps and
+    // blooms admit a match (none: nothing to rewrite, nothing to commit)
+    val touched = candidateFiles(m, snapshotFiles(m), expr(condition))
     if (touched.isEmpty) return 0L
     val rows = scanFiles(m, touched)
     val matched = rows.filter(hit).count()
@@ -3085,7 +3025,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * MERGE-ON-READ UPDATE (the deletion-vector twin of the copy-on-write
    * [[update]], Delta's DV-enabled `UPDATE`): assign `set` on rows matching
    * `condition` — an ARBITRARY SQL boolean expression over the table's
-   * columns, not just zone-expressible bounds — WITHOUT rewriting any
+   * columns, any shape — WITHOUT rewriting any
    * existing data file. One commit carries both halves: the matched rows'
    * coordinates land in a deletion vector (the old images vanish from every
    * read) and the updated images are appended as a fresh data dir. At
@@ -3375,23 +3315,21 @@ final class LakeTable private (val spark: SparkSession, val root: String,
     rwFiles.size
   }
 
-  /** Whether a partition value, as the manifest records it, lies inside
-   *  the conjunction of `preds` on the partition column — compared in the
-   *  column's type under Catalyst's ordering (an unreadable bound fails
-   *  loudly rather than scoping the wrong partitions). */
-  private def partitionInRange(m: Manifest, preds: Seq[ZonePred]): String => Boolean = {
+  /** The owned partition values of `m` (as the manifest records them)
+   *  that the snapshot files `scoped` sit in. */
+  private def ownedValuesOf(m: Manifest, scoped: Seq[SnapshotFile]): Set[String] = {
     val dt = m.schema(m.pcol.get).dataType
-    val ord = PhysicalDataType.ordering(dt)
+    val hit = scoped.map(_.partition.get(0, dt)).toSet
     val typed = typedValue(dt)
-    def bound(v: String): Any = {
-      val x = typed(v)
-      require(x != null, s"cannot read partition bound '$v' as $dt")
-      x
-    }
-    val bounds = preds.map(pr => (pr.lo.map(bound), pr.hi.map(bound)))
-    v => Option(typed(v)).exists(x => bounds.forall { case (lo, hi) =>
-      lo.forall(ord.gteq(x, _)) && hi.forall(ord.lteq(x, _)) })
+    m.entries.flatMap(_.owned.getOrElse(Nil)).filter(v => hit(typed(v))).toSet
   }
+
+  /** The table columns `condition` references, resolved against `m`'s
+   *  schema (an unknown column fails analysis). */
+  private def columnsOf(m: Manifest, condition: String): Seq[String] =
+    scanFiles(m, Nil).filter(condition).queryExecution.analyzed.collectFirst {
+      case Filter(c, _) => c.references.toSeq.map(_.name)
+    }.getOrElse(Nil).distinct
 
   /** Hive-layout partition value of a file's dir-relative subpath, if any. */
   private def partitionValueOf(sub: String, pcol: String): Option[String] = {
@@ -3405,8 +3343,8 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * clustered on the interleaved-bit order of `zcols`, so the per-file zone
    * maps become selective on EVERY z-ordered column at once — a linear sort
    * clusters only its leading column; Z-order gives each of k columns
-   * ~(1/file_count)^(1/k) selectivity. The payoff is [[readWhere]] skipping
-   * on whichever of the columns a query filters.
+   * ~(1/file_count)^(1/k) selectivity. The payoff is file skipping on
+   * whichever of the columns a filtered read names.
    *
    * Mechanics: each column is quantized to an 8-bit bin via approximate
    * quantile boundaries (equi-DEPTH bins, so skew cannot collapse the curve
@@ -3637,7 +3575,7 @@ final class LakeTable private (val spark: SparkSession, val root: String,
 
   /**
    * PARTITION-SCOPED OPTIMIZE (Delta `OPTIMIZE t WHERE <partition pred>
-   * [ZORDER BY (...)]`): rewrite ONLY the partitions matching `preds` —
+   * [ZORDER BY (...)]`): rewrite ONLY the partitions matching `condition` —
    * bin-packed, or Z-order clustered when `zcols` is non-empty — and leave
    * every other partition's files byte-for-byte untouched: the commit
    * transfers ownership of the matching partition values to the freshly
@@ -3648,35 +3586,35 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * partitions), independent of table size, where [[compactZOrder]] /
    * [[optimizeCompact]] are O(table) per invocation.
    *
-   * `preds` must name only the partition column (Delta's rule: only
-   * partition predicates can scope whole-file maintenance); values are
-   * matched against the manifest's owned partition values — no data scan
-   * decides the scope. Deletion vectors over the scoped partitions are
-   * materialized by the rewrite; vectors over untouched partitions stay
+   * `condition` (a SQL boolean expression) may reference only the
+   * partition column (Delta's rule: only partition predicates can scope
+   * whole-file maintenance); the scope is the partitions its candidate
+   * files hold ([[candidateFiles]]: the condition evaluated on each file's
+   * partition value) — no data scan decides the scope. Deletion vectors
+   * over the scoped partitions are materialized by the rewrite; vectors
+   * over untouched partitions stay
    * live (their coordinates still address the untouched files, and stale
    * coordinates into rewritten partitions can never match a scanned row).
    * Returns files rewritten (new files), files kept untouched, and bytes
    * of scoped input rewritten.
    */
-  def optimizeWhere(preds: Seq[ZonePred], zcols: Seq[String] = Nil,
+  def optimizeWhere(condition: String, zcols: Seq[String] = Nil,
       targetFiles: Int = 16): OptimizeStats = synchronized {
     val (v0, m) = commit.pin()
     val p = m.pcol.getOrElse(throw new IllegalArgumentException(
       "OPTIMIZE ... WHERE needs a partitioned table — use optimizeCompact()/" +
         "compactZOrder() for whole-table maintenance"))
-    require(preds.nonEmpty,
+    require(condition.trim.nonEmpty,
       "OPTIMIZE ... WHERE with no predicate — use optimizeCompact()/compactZOrder()")
-    preds.foreach(pr => require(pr.col == p,
+    columnsOf(m, condition).foreach(c => require(c == p,
       s"OPTIMIZE WHERE must predicate only the partition column $p, " +
-        s"got ${pr.col} (Delta's rule — only partition predicates scope files)"))
-    val scopeSet = m.entries.flatMap(_.owned.getOrElse(Nil))
-      .filter(partitionInRange(m, preds)).toSet
+        s"got $c (Delta's rule — only partition predicates scope files)"))
     // live files in scope are rewritten; the rest stay untouched (files of
     // partitions a dir no longer owns are dead — vacuum's business)
-    val pt = m.schema(p).dataType
-    val inScope = scopeSet.map(typedValue(pt))
-    val (scoped, kept) = snapshotFiles(m).partition(f => inScope(f.partition.get(0, pt)))
-    val keptFiles = kept.size
+    val files = snapshotFiles(m)
+    val scoped = candidateFiles(m, files, expr(condition))
+    val keptFiles = files.size - scoped.size
+    val scopeSet = ownedValuesOf(m, scoped)
     if (scopeSet.isEmpty) return OptimizeStats(0, keptFiles, 0L)
     val scopedBytes = scoped.map(_.status.getLen).sum
     // scoped snapshot rows, deletion vectors applied (the rewrite
@@ -3933,19 +3871,6 @@ object LakeTable {
       case Seq(Some(s)) if pure => Some(s)
       case _ => None
     }
-  }
-
-  /** Conjunctive data-skipping predicate: `col` between `lo` and `hi`, both
-   *  inclusive, either bound open. Bound values are Spark CAST-to-STRING
-   *  renderings of the column's type (timestamps as
-   *  `yyyy-MM-dd HH:mm:ss[.S]`, UTC). */
-  final case class ZonePred(col: String, lo: Option[String], hi: Option[String])
-  object ZonePred {
-    def eq(col: String, v: String): ZonePred = ZonePred(col, Some(v), Some(v))
-    def atLeast(col: String, v: String): ZonePred = ZonePred(col, Some(v), None)
-    def atMost(col: String, v: String): ZonePred = ZonePred(col, None, Some(v))
-    def between(col: String, lo: String, hi: String): ZonePred =
-      ZonePred(col, Some(lo), Some(hi))
   }
 
   def apply(spark: SparkSession, root: String): LakeTable =

@@ -2372,8 +2372,8 @@ object CoreQueries {
           pt.append(o.filter(year(col("o_orderdate")).between(a, b)).coalesce(1))
         }
       }
-      tbl.readWhere(Seq(LakeTable.ZonePred.between("o_orderdate",
-          "1997-03-01 00:00:00", "1998-06-01 00:00:00")))
+      tbl.read.filter("o_orderdate >= TIMESTAMP '1997-03-01 00:00:00' " +
+          "AND o_orderdate <= TIMESTAMP '1998-06-01 00:00:00'")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
         .orderBy("o_orderkey")
     },
@@ -2396,11 +2396,11 @@ object CoreQueries {
           pt.append(o.filter(year(col("o_orderdate")).between(a, b)).coalesce(1))
         }
       }
-      tbl.delete(Seq(LakeTable.ZonePred.between("o_orderdate",
-        "1996-01-01 00:00:00", "1996-12-31 23:59:59")))
+      tbl.delete("o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' " +
+        "AND o_orderdate <= TIMESTAMP '1996-12-31 23:59:59'")
       tbl.update(
-        Seq(LakeTable.ZonePred.between("o_orderdate",
-          "1999-01-01 00:00:00", "1999-12-31 23:59:59")),
+        "o_orderdate >= TIMESTAMP '1999-01-01 00:00:00' " +
+          "AND o_orderdate <= TIMESTAMP '1999-12-31 23:59:59'",
         Map("o_totalprice" -> (col("o_totalprice") + lit(100000.0))))
       tbl.read.select("o_orderkey", "o_totalprice", "o_orderdate")
         .orderBy("o_orderkey")
@@ -2454,7 +2454,7 @@ object CoreQueries {
         (0 until 3).foreach(i =>
           pt.append(o.filter(col("o_orderkey") % 3 === i).coalesce(1)))
       }
-      tbl.readWhere(Seq(LakeTable.ZonePred.eq("o_orderkey", "7")))
+      tbl.read.filter("o_orderkey = 7")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     },
@@ -2588,7 +2588,7 @@ object CoreQueries {
     // spark.sql text; this runs the s11 scenario as statements: DELETE
     // (merge-on-read, writes deletion vectors), OPTIMIZE (bin-packs and
     // materializes the vectors — the required step before copy-on-write),
-    // UPDATE (CoW with zone-pred file skipping). Hash equality against the
+    // UPDATE (CoW with file skipping). Hash equality against the
     // s11 oracle proves statement dispatch ≡ the programmatic API.
     Q("s22_sql_dml", (s, d) => {
       val o = t(s, d, "orders")
@@ -2635,7 +2635,7 @@ object CoreQueries {
           pt.append(o.filter(col("o_orderkey") % 3 === r).coalesce(1)))
       }
       tbl.compactZOrder(Seq("o_custkey", "o_totalprice"))
-      tbl.readWhere(Seq(LakeTable.ZonePred.between("o_custkey", "100", "300")))
+      tbl.read.filter("o_custkey >= 100 AND o_custkey <= 300")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     },
@@ -2663,7 +2663,7 @@ object CoreQueries {
         s.sql("ALTER TABLE s42_orders CLUSTER BY (o_custkey, o_totalprice)")
         s.sql("OPTIMIZE s42_orders") // routes to the clustering key
       } finally LakeSql.unregister("s42_orders")
-      tbl.readWhere(Seq(LakeTable.ZonePred.between("o_custkey", "100", "300")))
+      tbl.read.filter("o_custkey >= 100 AND o_custkey <= 300")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     },
@@ -2696,7 +2696,7 @@ object CoreQueries {
           st.getAs[Int]("files_rewritten") >= 1,
           s"OPTIMIZE was not incremental: $st")
       } finally LakeSql.unregister("s48_orders")
-      tbl.readWhere(Seq(LakeTable.ZonePred.between("o_custkey", "100", "300")))
+      tbl.read.filter("o_custkey >= 100 AND o_custkey <= 300")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     },
@@ -2844,8 +2844,7 @@ object CoreQueries {
       try s.sql(
         "OPTIMIZE s26_orders WHERE o_year = 1997 ZORDER BY (o_custkey)")
       finally LakeSql.unregister("s26_orders")
-      tbl.readWhere(Seq(LakeTable.ZonePred("o_year", Some("1997"), Some("1997")),
-          LakeTable.ZonePred.between("o_custkey", "100", "500")))
+      tbl.read.filter("o_year = 1997 AND o_custkey >= 100 AND o_custkey <= 500")
         .select("o_orderkey", "o_custkey", "o_totalprice")
         .orderBy("o_orderkey")
     },
@@ -2855,8 +2854,8 @@ object CoreQueries {
         ORDER BY o_orderkey""")),
 
     // S27: SQL UPDATE with an ARBITRARY predicate — parity with DELETE's
-    // merge-on-read path: the modulo+inequality WHERE is not
-    // zone-expressible, so the statement routes to updateWhere (old images
+    // merge-on-read path: the modulo+inequality WHERE is not a range
+    // bound, so the statement routes to updateWhere (old images
     // deletion-vectored, new images appended, ONE commit, O(matched rows)
     // at any table size — no full-table rewrite). The change feed must
     // carry exactly one pre+post image pair per matched row. 1.5 is
@@ -3709,7 +3708,7 @@ object CoreQueries {
         partitionBy = Some("ship_month"),
         generatedColumns = Map("ship_month" -> "date_format(l_shipdate, 'yyyy-MM')"))
       tbl.append(li) // no ship_month in the batch: computed at write
-      tbl.readPartitions(Seq("1997-03", "1998-11"))
+      tbl.read.filter("ship_month IN ('1997-03', '1998-11')")
         .orderBy("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
           "l_shipdate", "l_quantity")
     },

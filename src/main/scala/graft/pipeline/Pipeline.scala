@@ -2,7 +2,7 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 import graft.gold.GoldBuilder
 import graft.lake.LakeTable
@@ -3003,7 +3003,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
     // the FACT-side key type: the single source's column, or for a union
     // the branches' mapped columns — which must ALL agree exactly (the
     // widened set-op type would change ordering semantics under the
-    // zone-pred residual, so any disagreement keeps recompute)
+    // fact-slice bounds, so any disagreement keeps recompute)
     def factKeyType(fc: String): org.apache.spark.sql.types.DataType =
       if (union.isEmpty) source.schema(fc).dataType
       else {
@@ -3023,12 +3023,11 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
           if eqKeys.nonEmpty
           dt <- dims.collectFirst { case (n, d) if n == dn => d }
           // EXACT KEY-TYPE equality gate: the fact-slice bounds below are
-          // rendered from DIM-side key values but applied under the FACT
-          // column's type and ordering (ZonePred residual). With mixed
-          // types (string fact code vs numeric dim key) lexicographic vs
-          // numeric ordering disagree and the residual would silently
-          // drop matching fact rows — so a mixed-type key keeps the
-          // documented recompute instead.
+          // DIM-side key values applied under the FACT column's type and
+          // ordering. With mixed types (string fact code vs numeric dim
+          // key) lexicographic vs numeric ordering disagree and the bounds
+          // would silently drop matching fact rows — so a mixed-type key
+          // keeps the documented recompute instead.
           if scala.util.Try(eqKeys.forall { case (fc, dc) =>
             factKeyType(fc) == dt.schema(dc).dataType
           }).getOrElse(false)
@@ -3164,11 +3163,10 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
             // residual — an IN-list for single-column keys (reaches the
             // parquet scan for row-group pruning), a broadcast semi-join
             // against the metadata-sized key set for composite keys.
-            // Bounds use Spark's own CAST-to-STRING rendering (the
-            // ZonePred contract).
-            val bAggs = dcs.flatMap(c =>
-              Seq(min(col(c)).cast("string"), max(col(c)).cast("string")))
+            // Bounds are typed literals of the key column's own type.
+            val bAggs = dcs.flatMap(c => Seq(min(col(c)), max(col(c))))
             val b = keysDf.agg(bAggs.head, bAggs.tail: _*).head()
+            def bound(i: Int, fc: String) = lit(b.get(i)).cast(factKeyType(fc))
             // TIME-BAND box (interval/as-of residuals, round 18): per
             // fact ts column, the conservative [min lower, max upper]
             // over the changed validity IMAGES — both versions' rows
@@ -3179,8 +3177,8 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
             // validity, the live SCD2 row) leaves that side unbounded;
             // any failure (missing/mistyped columns, several bound
             // columns per side) skips the band — pruning only.
-            //   (fact ts col, lower (typed, string), upper (typed, string))
-            val bandBox: Seq[(String, Option[(Any, String)], Option[(Any, String)])] =
+            //   (fact ts col, lower literal, upper literal)
+            val bandBox: Seq[(String, Option[Column], Option[Column])] =
               bandSpecs.groupBy(_._1).toSeq.flatMap { case (ftc, bs) =>
                 scala.util.Try {
                   val los = bs.filter(_._3).map(_._2).distinct
@@ -3190,50 +3188,43 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
                   val ftype = factKeyType(ftc)
                   require((los ++ his).forall(c =>
                     dt.schema(c).dataType == ftype), "band type mismatch")
-                  // ONE job for both sides: (bound, bound-as-string,
-                  // NULL count) per side — a NULL image bound (the open
-                  // SCD2 row) leaves that side unbounded
+                  // ONE job for both sides: (bound, NULL count) per side
+                  // — a NULL image bound (the open SCD2 row) leaves that
+                  // side unbounded
                   val sideAggs = los.map(c => (min(col(c)), c)) ++
                     his.map(c => (max(col(c)), c))
                   val aggs = sideAggs.flatMap { case (f, c) =>
-                    Seq(f, f.cast("string"),
-                      sum(when(col(c).isNull, lit(1L)).otherwise(lit(0L)))) }
+                    Seq(f, sum(when(col(c).isNull, lit(1L)).otherwise(lit(0L)))) }
                   val r = imagesRaw.agg(aggs.head, aggs.tail: _*).head()
-                  def bound(i: Int): Option[(Any, String)] =
-                    if (r.isNullAt(3 * i) || r.getLong(3 * i + 2) > 0L) None
-                    else Some((r.get(3 * i), r.getString(3 * i + 1)))
+                  def bound(i: Int): Option[Column] =
+                    if (r.isNullAt(2 * i) || r.getLong(2 * i + 1) > 0L) None
+                    else Some(lit(r.get(2 * i)).cast(ftype))
                   val lo = if (los.nonEmpty) bound(0) else None
                   val hi =
                     if (his.nonEmpty) bound(los.size) else None
                   (ftc, lo, hi)
                 }.toOption.filter(t => t._2.nonEmpty || t._3.nonEmpty)
               }
-            // manifest-level zone predicates per PHYSICAL table: the
-            // single fact's own columns, or for a UNION fact each
-            // branch's positionally-mapped columns — each branch is
-            // zone-pruned, branch-filtered, projected and renamed to the
-            // union output names, then the slices union (the exact key
-            // residual below applies to the unioned frame)
-            def zonePruned(bt: LakeTable, bcols: Option[Seq[(String, String)]],
-                colOf: String => String, v: Long): DataFrame = {
-              val preds = fcs.zipWithIndex.map { case (fc2, i) =>
-                graft.lake.LakeTable.ZonePred.between(
-                  colOf(fc2), b.getString(2 * i), b.getString(2 * i + 1)) }
-              // the band box rides as extra manifest-level preds — a
-              // per-branch mapping failure drops that band, never the
-              // key preds
-              val bandPreds = bandBox.flatMap { case (ftc, lo, hi) =>
-                scala.util.Try(graft.lake.LakeTable.ZonePred(
-                  colOf(ftc), lo.map(_._2), hi.map(_._2))).toOption
+            // manifest-level zone bounds per PHYSICAL table: the single
+            // fact's own columns, or for a UNION fact each branch's
+            // positionally-mapped columns (bare columns: factKeyType
+            // checked every branch's key and band column) — each branch
+            // is zone-pruned, branch-filtered, projected and renamed to
+            // the union output names, then the slices union (the exact
+            // key residual below applies to the unioned frame)
+            def zonePruned(bt: LakeTable, colOf: String => String, v: Long): DataFrame = {
+              val keyBox = fcs.zipWithIndex.map { case (fc2, i) =>
+                col(colOf(fc2)).between(bound(2 * i, fc2), bound(2 * i + 1, fc2)) }
+              // the band box rides as extra bounds on the same scan
+              val bandBounds = bandBox.flatMap { case (ftc, lo, hi) =>
+                lo.map(col(colOf(ftc)) >= _) ++ hi.map(col(colOf(ftc)) <= _)
               }
-              scala.util.Try(bt.readWhere(preds ++ bandPreds, asOf = Some(v)))
-                .getOrElse(bt.readVersion(v))
+              bt.readVersion(v).filter((keyBox ++ bandBounds).reduce(_ && _))
             }
             val zoneSliced =
-              if (union.isEmpty) zonePruned(source, None, identity, cur)
+              if (union.isEmpty) zonePruned(source, identity, cur)
               else branches.zip(curs).map { case ((_, bt, bcols, bw), v) =>
-                val z = zonePruned(bt, bcols,
-                  fc2 => branchKeyCol(bt, bcols, fc2), v)
+                val z = zonePruned(bt, fc2 => branchKeyCol(bt, bcols, fc2), v)
                 val f = bw.fold(z)(w => z.filter(expr(w)))
                 val cs = bcols.getOrElse(
                   bt.schema.fieldNames.toSeq.map(n => (n, n)))
@@ -3267,8 +3258,7 @@ final class Pipeline(val spark: SparkSession, storageRoot: String) {
             // Try so a missing fact column only skips that band
             val factSlice = bandBox.foldLeft(factSliceKeys) {
               case (acc, (ftc, lo, hi)) => scala.util.Try {
-                val conds = lo.map(l => col(ftc) >= lit(l._1)).toSeq ++
-                  hi.map(h => col(ftc) <= lit(h._1))
+                val conds = lo.map(col(ftc) >= _).toSeq ++ hi.map(col(ftc) <= _)
                 conds.foldLeft(acc)(_ filter _)
               }.getOrElse(acc)
             }

@@ -30,7 +30,7 @@ class BloomIndexSpec extends SparkSpec {
 
   test("point lookup on an unclustered indexed column prunes to ~one file") {
     val t = interleaved("bloom_point")
-    val pred = Seq(LakeTable.ZonePred.eq("uid", "u1234"))
+    val pred = "uid = 'u1234'"
     val (kept, skipped) = t.skippingStats(pred)
     assert(kept + skipped == 3)
     // u1234 lives in one file; the other two prune (fpp could keep an
@@ -40,16 +40,16 @@ class BloomIndexSpec extends SparkSpec {
     // zone maps alone CANNOT prune this predicate: uid min/max are
     // lexicographic over interleaved ids — prove the bloom is what pruned
     // by checking the k zone-map pred keeps everything
-    val (keptZm, _) = t.skippingStats(Seq(LakeTable.ZonePred.between("k", "1", "3000")))
+    val (keptZm, _) = t.skippingStats("k >= 1 AND k <= 3000")
     assert(keptZm == 3)
     // and the pruned read returns exactly the unpruned result
-    assert(t.readWhere(pred).as[(Long, String)].collect().toSeq == Seq((1234L, "u1234")))
+    assert(t.read.filter(pred).as[(Long, String)].collect().toSeq == Seq((1234L, "u1234")))
     // DESCRIBE DETAIL names the indexed columns
     assert(t.detail.bloomFilterColumns == Seq("uid"))
     // a value that exists nowhere prunes everything (modulo fpp)
-    val (keptNone, _) = t.skippingStats(Seq(LakeTable.ZonePred.eq("uid", "nope")))
+    val (keptNone, _) = t.skippingStats("uid = 'nope'")
     assert(keptNone <= 1, s"phantom value kept $keptNone files")
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("uid", "nope"))).count() == 0)
+    assert(t.read.filter("uid = 'nope'").count() == 0)
   }
 
   test("a many-file single commit indexes distributed: one merged bloom per file") {
@@ -60,11 +60,11 @@ class BloomIndexSpec extends SparkSpec {
     val df = (1L to 20000L).map(k => (k, s"u$k")).toDF("k", "uid").repartition(64)
     t.create(df.schema, bloomFilterColumns = Seq("uid"))
     t.append(df)
-    val pred = Seq(LakeTable.ZonePred.eq("uid", "u7777"))
+    val pred = "uid = 'u7777'"
     val (kept, skipped) = t.skippingStats(pred)
     assert(kept + skipped >= 60, s"expected a many-file commit, got ${kept + skipped}")
     assert(kept <= 4, s"kept=$kept of ${kept + skipped}") // 1 true file + ~1% fpp
-    assert(t.readWhere(pred).as[(Long, String)].collect().toSeq == Seq((7777L, "u7777")))
+    assert(t.read.filter(pred).as[(Long, String)].collect().toSeq == Seq((7777L, "u7777")))
   }
 
   test("bloom partial OR-merge (the reduceByKey combiner) unions value sets") {
@@ -90,15 +90,15 @@ class BloomIndexSpec extends SparkSpec {
   test("range predicates never consult blooms; missing sidecars never prune") {
     val t = interleaved("bloom_range")
     // RANGE pred on the bloom column: blooms answer only equality — all kept
-    val (kept, _) = t.skippingStats(Seq(LakeTable.ZonePred.between("uid", "u1", "u9999")))
+    val (kept, _) = t.skippingStats("uid >= 'u1' AND uid <= 'u9999'")
     assert(kept == 3)
     // deleting the sidecars loses pruning, never correctness
     val bloomDir = Paths.get(t.root, "_bloom")
     Files.list(bloomDir).iterator().asScala.foreach(p => Files.delete(p))
     val fresh = LakeTable(spark, t.root) // no cached index
-    val (keptNoIdx, _) = fresh.skippingStats(Seq(LakeTable.ZonePred.eq("uid", "u1234")))
+    val (keptNoIdx, _) = fresh.skippingStats("uid = 'u1234'")
     assert(keptNoIdx == 3)
-    assert(fresh.readWhere(Seq(LakeTable.ZonePred.eq("uid", "u1234"))).count() == 1)
+    assert(fresh.read.filter("uid = 'u1234'").count() == 1)
   }
 
   test("addBloomFilterColumn indexes LATER writes only; old files never prune") {
@@ -111,20 +111,20 @@ class BloomIndexSpec extends SparkSpec {
     // a key living in the POST-index file: the pre-index file has no
     // sidecar entry (never prunes), the other indexed file would prune if
     // there were one — here both files stay ≤ fpp noise
-    val hit = Seq(LakeTable.ZonePred.eq("uid", "u700"))
-    assert(t.readWhere(hit).as[(Long, String)].collect().toSeq == Seq((700L, "u700")))
+    val hit = "uid = 'u700'"
+    assert(t.read.filter(hit).as[(Long, String)].collect().toSeq == Seq((700L, "u700")))
     // a phantom key prunes the indexed file but must keep the pre-index one
-    val miss = Seq(LakeTable.ZonePred.eq("uid", "nope"))
+    val miss = "uid = 'nope'"
     val (kept, skipped) = t.skippingStats(miss)
     assert(kept >= 1 && skipped >= 1, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(miss).count() == 0)
+    assert(t.read.filter(miss).count() == 0)
     // optimize rewrites everything under the index → full pruning
     t.optimizeCompact(targetFileBytes = 512 * 1024 * 1024)
-    assert(t.readWhere(hit).count() == 1)
+    assert(t.read.filter(hit).count() == 1)
     // drop lifts the index; reads stay correct
     t.dropBloomFilterColumn("uid")
     assert(t.skippingStats(miss)._1 >= 1) // no bloom pruning anymore
-    assert(t.readWhere(hit).count() == 1)
+    assert(t.read.filter(hit).count() == 1)
     intercept[IllegalArgumentException](t.dropBloomFilterColumn("uid"))
     // metadata-only commits don't break the append-only streaming guard
     val t2 = LakeTable(spark, s"${tmpDir("bloom_add2")}/t")
@@ -139,21 +139,21 @@ class BloomIndexSpec extends SparkSpec {
     val df = Seq((1L, "a", "p1"), (2L, "b", "p1"), (3L, "c", "p2")).toDF("k", "uid", "pt")
     t.create(df.schema, partitionBy = Some("pt"), bloomFilterColumns = Seq("uid"))
     t.append(df)
-    assert(t.skippingStats(Seq(LakeTable.ZonePred.eq("uid", "zzz")))._1 <= 1)
+    assert(t.skippingStats("uid = 'zzz'")._1 <= 1)
     // partitioned merge rebuilds indexed files for touched partitions
     t.merge(Seq((3L, "c2", "p2")).toDF("k", "uid", "pt"), Seq("k"))
-    val pred = Seq(LakeTable.ZonePred.eq("uid", "c2"))
-    assert(t.readWhere(pred).count() == 1)
+    val pred = "uid = 'c2'"
+    assert(t.read.filter(pred).count() == 1)
     assert(t.skippingStats(pred)._2 >= 1) // p1's file pruned
     // clone carries the sidecars
     val c = t.shallowClone(s"$base/clone")
     assert(c.skippingStats(pred)._2 >= 1)
-    assert(c.readWhere(pred).count() == 1)
+    assert(c.read.filter(pred).count() == 1)
     // vacuum keeps live sidecars, drops orphaned ones
     t.overwrite(t.read)
     t.vacuum(keepVersions = 1)
     val live = LakeTable(spark, t.root)
-    assert(live.readWhere(pred).count() == 1)
+    assert(live.read.filter(pred).count() == 1)
     val idxFiles = Files.list(Paths.get(t.root, "_bloom")).iterator().asScala.toList
     assert(idxFiles.size == 1, idxFiles.toString) // only the overwrite's dir
   }

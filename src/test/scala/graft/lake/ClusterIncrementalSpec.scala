@@ -115,7 +115,7 @@ class ClusterIncrementalSpec extends SparkSpec {
     assert(s.filesRewritten > 1, s.toString)
     assert(t.read.count() == 20000)
     // zone maps on the new leading key actually prune after the re-cluster
-    val (kept, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("b", "7")))
+    val (kept, skipped) = t.skippingStats("b = 7")
     assert(skipped >= 1, s"kept=$kept skipped=$skipped")
   }
 

@@ -271,7 +271,7 @@ class ConcurrencySpec extends SparkSpec {
     val root = s"${tmpDir("conc_cow")}/t"
     threeFiles(root)
     // 40..50 sit in the first file, 1001..1010 in the second
-    val preds = Seq(LakeTable.ZonePred.between("id", "40", "1010"))
+    val preds = "id >= 40 AND id <= 1010"
     val t = assertLostThenConverges(root,
         Seq((5000L, "winner", 0L)).toDF("id", "tag", "n"))(
       LakeTable(spark, root).update(preds, Map("n" -> (CasGate.pass(col("n")) + 1))))(
@@ -320,7 +320,7 @@ class ConcurrencySpec extends SparkSpec {
       "winner's snapshot and converges on retry") {
     val root = s"${tmpDir("conc_part_replace")}/t"
     threeFiles(root, partitioned = true)
-    val b1 = Seq(LakeTable.ZonePred.eq("tag", "b1"))
+    val b1 = "tag = 'b1'"
     val rows = (1 to 10).map(i => (1000L + i, "b1", 1L)).toDF("id", "tag", "n")
     val t = assertClockLostThenConverges(root)(_.overwritePartitions(b1, rows))(
       _.overwritePartitions(b1, rows))
@@ -343,7 +343,7 @@ class ConcurrencySpec extends SparkSpec {
       "the winner's snapshot and converges on retry") {
     val root = s"${tmpDir("conc_opt_where")}/t"
     threeFiles(root, partitioned = true)
-    val b1 = Seq(LakeTable.ZonePred.eq("tag", "b1"))
+    val b1 = "tag = 'b1'"
     val b1Files = liveFiles(LakeTable(spark, root).read.filter(col("tag") === "b1"))
     val t = assertClockLostThenConverges(root)(_.optimizeWhere(b1))(
       t => assert(t.optimizeWhere(b1).filesRewritten == 1))

@@ -47,11 +47,11 @@ class ConstraintSpec extends SparkSpec {
     t.append(df)
     t.addCheckConstraint("v_capped", "v <= 100")
     intercept[IllegalArgumentException](
-      t.update(Seq(LakeTable.ZonePred.eq("k", "1")), Map("v" -> (col("v") + 500))))
+      t.update("k = 1", Map("v" -> (col("v") + 500))))
     assert(t.read.orderBy("k").as[(Long, Double)].collect().toSeq ==
       Seq((1L, 10.0), (2L, 20.0)))
-    t.update(Seq(LakeTable.ZonePred.eq("k", "1")), Map("v" -> (col("v") + 50)))
-    t.delete(Seq(LakeTable.ZonePred.eq("k", "2")))
+    t.update("k = 1", Map("v" -> (col("v") + 50)))
+    t.delete("k = 2")
     assert(t.read.as[(Long, Double)].collect().toSeq == Seq((1L, 60.0)))
   }
 

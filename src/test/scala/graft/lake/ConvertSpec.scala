@@ -58,12 +58,12 @@ class ConvertSpec extends SparkSpec {
       .convertFrom(src, partitionBy = Some("year"), statsColumns = Seq("price"))
     assert(t.partitionColumn.contains("year"))
     assert(t.ownedPartitionValues.sorted == Seq("1996", "1997", "1998"))
-    assert(t.readPartitions(Seq("1997")).as[(Long, Double, String)]
+    assert(t.read.filter("year = '1997'").as[(Long, Double, String)]
       .collect().toSeq.map(_._1) == Seq(3L))
     // zone maps were collected at convert: a narrow price range prunes files
-    val (kept, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("price", "2.0")))
+    val (kept, skipped) = t.skippingStats("price = 2.0")
     assert(skipped > 0, s"expected pruning, kept=$kept skipped=$skipped")
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("price", "2.0")))
+    assert(t.read.filter("price = 2.0")
       .as[(Long, Double, String)].collect().toSeq.map(_._1) == Seq(4L))
   }
 

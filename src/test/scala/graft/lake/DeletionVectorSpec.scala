@@ -71,13 +71,13 @@ class DeletionVectorSpec extends SparkSpec {
       Seq((1L, "old"), (2L, "new")))
   }
 
-  test("readWhere (zone-map scan), readVersion and restore honor vectors") {
+  test("a filtered (zone-map) read, readVersion and restore honor vectors") {
     val t = LakeTable(spark, s"${tmpDir("dv_scan")}/t")
     val df = (1L to 100L).map(k => (k, k * 10.0)).toDF("k", "v")
     t.create(df.schema, statsColumns = Seq("k"))
     t.append(df)                                   // v1
     t.deleteWhere("k >= 40 AND k <= 60")           // v2
-    val scanned = t.readWhere(Seq(LakeTable.ZonePred.between("k", "30", "70")))
+    val scanned = t.read.filter("k >= 30 AND k <= 70")
     assert(scanned.count() == 20)                  // 41 alive of 30..70 minus dead 40..60 → 30..39,61..70
     assert(scanned.filter(col("k") === 50).count() == 0)
     // time travel to the pre-delete snapshot still sees every row
@@ -96,12 +96,12 @@ class DeletionVectorSpec extends SparkSpec {
     t.deleteWhere("k > 30")
     // CoW mutations would resurrect DV-deleted rows — refused with guidance
     val e = intercept[IllegalArgumentException](
-      t.update(Seq(LakeTable.ZonePred.eq("k", "5")), Map("v" -> lit("x"))))
+      t.update("k = 5", Map("v" -> lit("x"))))
     assert(e.getMessage.contains("compact"), e.getMessage)
     t.compact()
     assert(t.deleteVectorDirs.isEmpty) // vectors materialized away
     assert(t.read.count() == 30)
-    t.update(Seq(LakeTable.ZonePred.eq("k", "5")), Map("v" -> lit("x")))
+    t.update("k = 5", Map("v" -> lit("x")))
     assert(t.read.filter(col("v") === "x").count() == 1)
   }
 
@@ -145,17 +145,17 @@ class DeletionVectorSpec extends SparkSpec {
       t.append(df.filter(col("k").between(a, b)).coalesce(1))
     }
     // zone-map-pruned range delete
-    assert(t.deleteWhere(Seq(LakeTable.ZonePred.between("k", "1500", "1600"))) == 101L)
+    assert(t.deleteWhere("k >= 1500 AND k <= 1600") == 101L)
     assert(t.read.count() == 2899)
     assert(t.read.filter(col("k").between(1500, 1600)).count() == 0)
     // bloom-pruned keyed delete (uid is unclustered ACROSS the k-ranged
     // files only in the sense that zone maps on uid don't exist — the
     // bloom is what locates the file)
-    assert(t.deleteWhere(Seq(LakeTable.ZonePred.eq("uid", "u42"))) == 1L)
+    assert(t.deleteWhere("uid = 'u42'") == 1L)
     assert(t.read.filter(col("uid") === "u42").count() == 0)
     // deleting an absent key is a no-op commit-wise
     val v = t.currentVersion
-    assert(t.deleteWhere(Seq(LakeTable.ZonePred.eq("uid", "nope"))) == 0L)
+    assert(t.deleteWhere("uid = 'nope'") == 0L)
     assert(t.currentVersion == v)
     // semantics ≡ the string form on the same predicate
     val t2 = LakeTable(spark, s"${tmpDir("dv_pruned2")}/t")

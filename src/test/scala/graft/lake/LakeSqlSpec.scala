@@ -360,9 +360,9 @@ class LakeSqlSpec extends SparkSpec {
       bad("UPDATE dml_e SET v = 'x'", "without where")
       bad("OPTIMIZE dml_e ZORDER BY ( )", "names no columns")
       // OPTIMIZE WHERE scopes by partition — meaningless on an
-      // unpartitioned table, and the predicate must be zone-expressible
+      // unpartitioned table, whatever the condition's shape
       bad("OPTIMIZE dml_e WHERE k = 1", "partitioned table")
-      bad("OPTIMIZE dml_e WHERE k > 1", "conjunction")
+      bad("OPTIMIZE dml_e WHERE k > 1", "partitioned table")
       // a statement referencing no registered lake relation is Spark's
       assert(spark.sql("SELECT 1 AS one").as[Int].head() == 1)
       // identical target/source aliases cannot disambiguate guard refs
@@ -497,7 +497,7 @@ class LakeSqlSpec extends SparkSpec {
     t.append(df)
     LakeSql.register("mor_t", t)
     try {
-      // strict inequality + modulo: not zone-expressible → merge-on-read
+      // strict inequality + modulo: not a range bound → merge-on-read
       val n = spark.sql(
         "UPDATE mor_t SET seq = seq + 100 WHERE k > 1 AND k % 2 = 1")
         .as[Long].head()
@@ -509,7 +509,7 @@ class LakeSqlSpec extends SparkSpec {
         .select("k", "seq", "_change_type").orderBy("_change_type")
         .as[(Long, Int, String)].collect().toSeq
       assert(ch == Seq((3L, 130, "update_postimage"), (3L, 30, "update_preimage")))
-      // with a live DV even a zone-expressible UPDATE routes MoR (the CoW
+      // with a live DV even a range-bound UPDATE routes MoR (the CoW
       // path cannot see vectors) — it must still apply exactly once
       assert(spark.sql(
         "UPDATE mor_t SET v = 'B' WHERE k = 2").as[Long].head() == 1L)
@@ -544,6 +544,15 @@ class LakeSqlSpec extends SparkSpec {
       assert(z.getAs[Int]("files_rewritten") >= 1)
       assert(t.read.orderBy("k").as[(Long, String, String)].collect().map(_._1).toSeq ==
         Seq(1L, 2L, 3L, 11L, 12L, 13L))
+      // any condition over the partition column alone scopes (Delta's
+      // rule): pt > 'a' leaves pt=a's one packed file untouched
+      val gt = spark.sql("OPTIMIZE opt_t WHERE pt > 'a'").collect().head
+      assert(gt.getAs[Int]("files_untouched") == 1, gt)
+      // a condition naming another column is refused
+      val e = intercept[IllegalArgumentException](
+        spark.sql("OPTIMIZE opt_t WHERE pt = 'a' OR k > 1"))
+      assert(e.getMessage.contains("partition column pt, got k"), e.getMessage)
+      assert(t.read.count() == 6)
     } finally LakeSql.unregister("opt_t")
   }
 
@@ -684,7 +693,7 @@ class LakeSqlSpec extends SparkSpec {
     t.append(df)
     LakeSql.register("rep_t", t)
     try {
-      // k > 1: not zone-expressible bounds-on-partition → merge-on-read
+      // k > 1: not range bounds on the partition → merge-on-read
       val n = spark.sql(
         "INSERT INTO rep_t REPLACE WHERE k > 1 VALUES (5, 'e', 50), (6, 'f', 60)")
         .as[Long].head()
@@ -735,6 +744,55 @@ class LakeSqlSpec extends SparkSpec {
         "INSERT INTO rpp_t REPLACE WHERE pt = 'a' VALUES (9, 'zz', 'b')")).isFailure)
       assert(t.read.count() == 3)
     } finally LakeSql.unregister("rpp_t")
+  }
+
+  test("TIMESTAMP literals scope UPDATE, REPLACE WHERE and OPTIMIZE WHERE " +
+      "exactly under a non-UTC session zone") {
+    val zoneKey = "spark.sql.session.timeZone"
+    spark.conf.set(zoneKey, "America/Los_Angeles")
+    try {
+      def ts(hour: Int) = expr(s"TIMESTAMP '2024-01-01 0$hour:00:00'")
+      // UPDATE: the bounds shape takes the copy-on-write path
+      val u = LakeTable(spark, s"${tmpDir("sql_ts_update")}/t")
+      val rows = (0 to 2).map(h => (h.toLong, h)).toDF("id", "h")
+        .withColumn("ts", expr("TIMESTAMP '2024-01-01 00:00:00' + make_interval(0, 0, 0, 0, h)"))
+        .select(col("id"), col("ts"), lit("o").as("v"))
+      u.create(rows.schema, statsColumns = Seq("ts"))
+      u.append(rows.coalesce(1))
+      LakeSql.register("ts_u", u)
+      try {
+        def changed = u.read.filter("v = 'x'").select("id").as[Long].collect().toSet
+        assert(spark.sql("UPDATE ts_u SET v = 'x' WHERE ts = " +
+          "TIMESTAMP '2024-01-01 01:00:00'").as[Long].head() == 1L)
+        assert(changed == Set(1L))
+        assert(spark.sql("UPDATE ts_u SET v = 'x' WHERE ts >= " +
+          "TIMESTAMP '2024-01-01 01:00:00'").as[Long].head() == 2L)
+        assert(changed == Set(1L, 2L))
+      } finally LakeSql.unregister("ts_u")
+      // REPLACE WHERE / OPTIMIZE WHERE over a TIMESTAMP partition column:
+      // three hourly partitions, two files each
+      val p = LakeTable(spark, s"${tmpDir("sql_ts_part")}/t")
+      def hourRows(h: Int, k: Long) =
+        Seq((k, h)).toDF("k", "h").select(col("k"), ts(h).as("pts"))
+      p.create(hourRows(0, 0L).schema, partitionBy = Some("pts"))
+      for (h <- 0 to 2; i <- 0 to 1) p.append(hourRows(h, h * 10L + i))
+      LakeSql.register("ts_p", p)
+      try {
+        spark.sql("INSERT INTO ts_p REPLACE WHERE pts = " +
+          "TIMESTAMP '2024-01-01 01:00:00' " +
+          "SELECT 99L AS k, TIMESTAMP '2024-01-01 01:00:00' AS pts")
+        assert(p.read.select("k").as[Long].collect().toSet == Set(0L, 1L, 99L, 20L, 21L))
+        p.append(hourRows(1, 98L))
+        // pts >= 01:00 scopes the 01:00 and 02:00 partitions (two files
+        // each) and leaves 00:00's two files untouched
+        val r = spark.sql("OPTIMIZE ts_p WHERE pts >= " +
+          "TIMESTAMP '2024-01-01 01:00:00'").collect().head
+        assert(r.getAs[Int]("files_rewritten") == 2)
+        assert(r.getAs[Int]("files_untouched") == 2)
+        assert(p.read.select("k").as[Long].collect().toSet ==
+          Set(0L, 1L, 98L, 99L, 20L, 21L))
+      } finally LakeSql.unregister("ts_p")
+    } finally spark.conf.set(zoneKey, "UTC")
   }
 
   test("CREATE TABLE / CTAS stand up a lake table purely in SQL; SHOW PARTITIONS lists it") {

@@ -113,7 +113,7 @@ class ManifestDeltaSpec extends SparkSpec {
     assert(isDelta(files.last), "a MoR delete adds a DV dir — delta-sized commit")
     assert(t.read.count() == 9)
     // zone pruning consults chain-resolved per-file stats
-    val (kept, pruned) = t.skippingStats(Seq(LakeTable.ZonePred.eq("k", "40")))
+    val (kept, pruned) = t.skippingStats("k = 40")
     assert(pruned > 0, s"expected pruned files, got kept=$kept pruned=$pruned")
     // CDF reads the delta commit's change dir
     val cdf = t.readChangeFeed(t.currentVersion, Some(t.currentVersion))

@@ -109,11 +109,11 @@ class MergePruneSpec extends SparkSpec {
       t.merge(src(), Seq("id"))
     }
     // point reads through zone maps still see every row exactly once
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("id", "1500")))
+    assert(t.read.filter("id = 1500")
       .collect().map(_.getString(1)).toSeq == Seq("B"))
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("id", "50")))
+    assert(t.read.filter("id = 50")
       .collect().map(_.getString(1)).toSeq == Seq("a"))
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("id", "1605")))
+    assert(t.read.filter("id = 1605")
       .collect().map(_.getString(1)).toSeq == Seq("N"))
   }
 
@@ -168,7 +168,7 @@ class MergePruneSpec extends SparkSpec {
   }
 
   test("string keys prune in UTF8 byte order: a supplementary-plane key is " +
-      "found by readWhere, a SQL point SELECT and a pruned merge") {
+      "found by a filtered read, a SQL point SELECT and a pruned merge") {
     // "\uFFFF" (UTF8 EF BF BF) sorts BELOW the emoji (F0 9F 98 80) in byte
     // order — the order the file's stats record — but ABOVE it in UTF-16
     // code units (FFFF > D83D)
@@ -177,7 +177,7 @@ class MergePruneSpec extends SparkSpec {
     t.create(Seq(("", 0)).toDF("k", "v").schema, statsColumns = Seq("k"))
     t.append(Seq(("\uFFFF", 1), (emoji, 2)).toDF("k", "v").coalesce(1))
     t.append(Seq(("a", 3), ("b", 4)).toDF("k", "v").coalesce(1))
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("k", emoji)))
+    assert(t.read.filter(s"k = '$emoji'")
       .select("v").as[Int].collect().toSeq == Seq(2))
     LakeSql.register("utf8_keys", t)
     try assert(spark.sql(s"SELECT v FROM utf8_keys WHERE k = '$emoji'")

@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.LakeTable.ZonePred
 
 class MutationSpec extends SparkSpec {
   import spark.implicits._
@@ -27,7 +26,7 @@ class MutationSpec extends SparkSpec {
 
   test("delete removes exactly the matching rows and reports the count") {
     val t = ranged()
-    val n = t.delete(Seq(ZonePred.between("id", "150", "250")))
+    val n = t.delete("id >= 150 AND id <= 250")
     assert(n == 101)
     assert(t.read.count() == 199)
     assert(t.read.filter(col("id").between(150, 250)).count() == 0)
@@ -38,7 +37,7 @@ class MutationSpec extends SparkSpec {
       "untouched files are re-referenced (hard link, same physical file)") {
     val t = ranged()
     val before = fileNames(t)
-    t.delete(Seq(ZonePred.between("id", "120", "130")))
+    t.delete("id >= 120 AND id <= 130")
     val after = fileNames(t)
     // batch-1 and batch-3 physical files survive verbatim; only the middle
     // file was rewritten under a new name
@@ -48,7 +47,7 @@ class MutationSpec extends SparkSpec {
 
   test("update assigns only matched rows and leaves the rest bit-identical") {
     val t = ranged()
-    val n = t.update(Seq(ZonePred.between("id", "101", "110")),
+    val n = t.update("id >= 101 AND id <= 110",
       Map("v" -> (col("v") + 1000.0), "tag" -> lit("upd")))
     assert(n == 10)
     val got = t.read.filter(col("id").between(99, 112))
@@ -68,9 +67,9 @@ class MutationSpec extends SparkSpec {
     t.create(df.schema, partitionBy = Some("part"))
     t.append(df)
     intercept[IllegalArgumentException] {
-      t.update(Seq(ZonePred.eq("id", "1")), Map("part" -> lit("y")))
+      t.update("id = 1", Map("part" -> lit("y")))
     }
-    intercept[IllegalArgumentException] { t.delete(Nil) }
+    intercept[IllegalArgumentException] { t.delete("") }
   }
 
   test("partitioned delete prunes by partition ownership and zone maps") {
@@ -79,7 +78,7 @@ class MutationSpec extends SparkSpec {
       .toDF("id", "part", "v")
     t.create(df.schema, partitionBy = Some("part"), statsColumns = Seq("id"))
     t.append(df)
-    val n = t.delete(Seq(ZonePred.between("id", "10", "20")))
+    val n = t.delete("id >= 10 AND id <= 20")
     assert(n == 11)
     assert(t.read.count() == 89)
     assert(t.read.filter(col("part") === "p2").count() == 50) // untouched
@@ -90,8 +89,8 @@ class MutationSpec extends SparkSpec {
     val df = (1 to 10).map(i => (i.toLong, i * 1.0)).toDF("id", "v")
     t.create(df.schema, enableChangeFeed = true, statsColumns = Seq("id"))
     t.append(df.coalesce(1))
-    t.delete(Seq(ZonePred.between("id", "9", "10")))                 // v2
-    t.update(Seq(ZonePred.eq("id", "1")), Map("v" -> lit(42.0)))     // v3
+    t.delete("id >= 9 AND id <= 10")               // v2
+    t.update("id = 1", Map("v" -> lit(42.0)))      // v3
     val feed = t.readChangeFeed(2, Some(3))
       .select("id", "v", LakeTable.ChangeTypeCol, LakeTable.CommitVersionCol)
       .as[(Long, Double, String, Long)].collect().toSet
@@ -102,22 +101,22 @@ class MutationSpec extends SparkSpec {
 
   test("readStream refuses a table whose history contains a delete") {
     val t = ranged()
-    t.delete(Seq(ZonePred.eq("id", "1")))
+    t.delete("id = 1")
     val e = intercept[IllegalArgumentException] { t.readStream }
     assert(e.getMessage.contains("delete"))
   }
 
   test("zone maps stay consistent after a mutation: skipping read equals filter") {
     val t = ranged()
-    t.delete(Seq(ZonePred.between("id", "50", "150")))
-    t.update(Seq(ZonePred.between("id", "250", "260")), Map("v" -> lit(-1.0)))
-    val preds = Seq(ZonePred.between("id", "240", "270"))
-    val got = t.readWhere(preds).select("id", "v").as[(Long, Double)].collect().toSet
+    t.delete("id >= 50 AND id <= 150")
+    t.update("id >= 250 AND id <= 260", Map("v" -> lit(-1.0)))
+    val preds = "id >= 240 AND id <= 270"
+    val got = t.read.filter(preds).select("id", "v").as[(Long, Double)].collect().toSet
     val want = t.read.filter(col("id").between(240, 270))
       .select("id", "v").as[(Long, Double)].collect().toSet
     assert(got == want)
     // rewritten file's refreshed stats still allow pruning of other ranges
-    val (_, skipped) = t.skippingStats(Seq(ZonePred.atMost("id", "40")))
+    val (_, skipped) = t.skippingStats("id <= 40")
     assert(skipped >= 1)
   }
 }

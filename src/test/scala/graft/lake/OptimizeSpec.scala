@@ -42,7 +42,7 @@ class OptimizeSpec extends SparkSpec {
     val sharedInodes = afterKeys.values.toSet intersect beforeKeys.values.toSet
     assert(sharedInodes.nonEmpty)
     // zone maps still prune after the pack (stats were carried/rebuilt)
-    val (kept, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("k", "100001")))
+    val (kept, skipped) = t.skippingStats("k = 100001")
     assert(skipped >= 1, s"kept=$kept skipped=$skipped")
   }
 
@@ -56,7 +56,7 @@ class OptimizeSpec extends SparkSpec {
     t.create(df.schema, statsColumns = Seq("d"))
     t.append(df.repartition(8, col("k")))
     val before = t.read.select("k", "d").collect().toSet
-    val window = Seq(LakeTable.ZonePred.between("d", "2024-03-01", "2024-03-10"))
+    val window = "d >= DATE '2024-03-01' AND d <= DATE '2024-03-10'"
     val (_, skippedBefore) = t.skippingStats(window)
     LakeSql.register("opt_zdate_t", t)
     try spark.sql("OPTIMIZE opt_zdate_t ZORDER BY (d)").collect()
@@ -83,7 +83,7 @@ class OptimizeSpec extends SparkSpec {
     assert(t.read.count() == 901)
     assert(t.read.filter(col("k") <= 100).count() == 0)
     // copy-on-write works again now that the vectors are gone
-    t.update(Seq(LakeTable.ZonePred.eq("k", "101")), Map("v" -> lit(0.0)))
+    t.update("k = 101", Map("v" -> lit(0.0)))
     assert(t.read.filter(col("v") === 0.0).count() == 2)
   }
 
@@ -98,8 +98,8 @@ class OptimizeSpec extends SparkSpec {
     assert(t.detail.numFiles == 3)
     assert(t.read.count() == 300)
     // partition-scoped reads still prune; bloom sidecar rebuilt for the dir
-    assert(t.readPartitions(Seq("p1")).count() == 100)
-    val (kept, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("uid", "zzz")))
+    assert(t.read.filter("pt = 'p1'").count() == 100)
+    val (kept, skipped) = t.skippingStats("uid = 'zzz'")
     assert(kept <= 1 && skipped >= 2, s"kept=$kept skipped=$skipped")
   }
 
@@ -134,7 +134,7 @@ class OptimizeSpec extends SparkSpec {
           Files.getAttribute(p, "fileKey"))
         .toMap
     val before = liveFiles()
-    val st = t.optimizeWhere(Seq(LakeTable.ZonePred.eq("pt", "p1")))
+    val st = t.optimizeWhere("pt = 'p1'")
     assert(st.filesRewritten == 1, st.toString) // p1's 4 files packed to 1
     assert(st.filesLinked == 8, st.toString)    // p0+p2 files untouched
     // untouched partitions: SAME path, SAME inode — not even relinked
@@ -143,18 +143,18 @@ class OptimizeSpec extends SparkSpec {
       assert(after.get(path).contains(key), s"$path was touched")
     }
     assert(t.read.count() == 300)
-    assert(t.readPartitions(Seq("p1")).count() == 100)
+    assert(t.read.filter("pt = 'p1'").count() == 100)
     // deletion vectors over the SCOPED partition materialize; vectors over
     // untouched partitions stay live and still filter
     t.deleteWhere("k = 5")   // p2 (5 % 3 = 2)
     t.deleteWhere("k = 7")   // p1
     assert(t.deleteVectorDirs.nonEmpty)
-    val st2 = t.optimizeWhere(Seq(LakeTable.ZonePred.eq("pt", "p1")))
+    val st2 = t.optimizeWhere("pt = 'p1'")
     assert(st2.filesRewritten >= 1)
     assert(t.read.count() == 298)               // both deletes still honored
     assert(t.read.filter(col("k").isin(5L, 7L)).count() == 0)
     // scoped Z-order: same rows, reorganized physically
-    val st3 = t.optimizeWhere(Seq(LakeTable.ZonePred.eq("pt", "p0")),
+    val st3 = t.optimizeWhere("pt = 'p0'",
       zcols = Seq("k"))
     assert(st3.filesRewritten >= 1)
     assert(t.read.count() == 298)

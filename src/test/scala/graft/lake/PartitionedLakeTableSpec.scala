@@ -58,7 +58,7 @@ class PartitionedLakeTableSpec extends SparkSpec {
     val t = LakeTable(spark, root)
     t.overwrite(Seq((1L, "d1", 1.0), (2L, "d2", 2.0), (3L, "d3", 3.0))
       .toDF("k", "day", "v"), partitionBy = Some("day"))
-    val scoped = t.readPartitions(Seq("d2"))
+    val scoped = t.read.filter(col("day") === "d2")
     assert(scoped.as[(Long, String, Double)].collect().toSeq == Seq((2L, "d2", 2.0)))
     val plan = scoped.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters"), plan)
@@ -70,7 +70,7 @@ class PartitionedLakeTableSpec extends SparkSpec {
     t.overwrite(Seq((1L, "d1", 1.0)).toDF("k", "day", "v"), partitionBy = Some("day"))
     t.append(Seq((2L, "d1", 2.0), (3L, "d2", 3.0)).toDF("k", "day", "v"))
     assert(t.read.count() == 3)
-    assert(t.readPartitions(Seq("d1")).count() == 2)
+    assert(t.read.filter(col("day") === "d1").count() == 2)
   }
 
   test("merge on a typed (date) partition column with guard semantics") {
@@ -122,7 +122,7 @@ class PartitionedLakeTableSpec extends SparkSpec {
       .toDF("k", "day", "v"), partitionBy = Some("day"))
     assert(t.read.orderBy("k").as[(Long, String, String)].collect().toSeq ==
       Seq((1L, special, "a"), (2L, "plain", "b")))
-    assert(t.readPartitions(Seq(special)).as[(Long, String, String)]
+    assert(t.read.filter(col("day") === special).as[(Long, String, String)]
       .collect().toSeq == Seq((1L, special, "a")))
     // merge touching the escaped partition must see and update its rows
     t.merge(Seq((1L, special, "a2"), (3L, special, "c")).toDF("k", "day", "v"),

@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.LakeTable.ZonePred
 
 /** METADATA-ONLY RENAME COLUMN (Delta column-mapping `name` mode) +
  *  TBLPROPERTIES. The invariant under test everywhere: a rename rewrites
@@ -74,9 +73,9 @@ class RenameColumnSpec extends SparkSpec {
     t.append((1 to 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
     t.append((101 to 200).map(i => (i.toLong, i * 1.0)).toDF("id", "v").coalesce(1))
     t.renameColumn("id", "doc_id")
-    val (kept, skipped) = t.skippingStats(Seq(ZonePred.between("doc_id", "150", "160")))
+    val (kept, skipped) = t.skippingStats("doc_id >= 150 AND doc_id <= 160")
     assert(kept == 1 && skipped == 1, s"kept=$kept skipped=$skipped")
-    val got = t.readWhere(Seq(ZonePred.between("doc_id", "150", "160")))
+    val got = t.read.filter("doc_id >= 150 AND doc_id <= 160")
     assert(got.count() == 11)
     assert(got.columns.toSeq == Seq("doc_id", "v"))
   }
@@ -88,9 +87,9 @@ class RenameColumnSpec extends SparkSpec {
     t.append((1 to 50).map(i => (i.toLong, s"p$i")).toDF("k", "payload").coalesce(1))
     t.append((51 to 100).map(i => (i.toLong, s"p$i")).toDF("k", "payload").coalesce(1))
     t.renameColumn("k", "key")
-    val (kept, skipped) = t.skippingStats(Seq(ZonePred.eq("key", "7")))
+    val (kept, skipped) = t.skippingStats("key = 7")
     assert(kept == 1 && skipped == 1, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(Seq(ZonePred.eq("key", "7"))).count() == 1)
+    assert(t.read.filter("key = 7").count() == 1)
   }
 
   test("renaming the PARTITION column keeps partition-scoped reads, " +
@@ -101,14 +100,14 @@ class RenameColumnSpec extends SparkSpec {
     t.append(df)
     t.renameColumn("month", "ship_month")
     assert(t.partitionColumn.contains("ship_month"))
-    assert(t.readPartitions(Seq("2024-01")).count() == 1)
+    assert(t.read.filter("ship_month = '2024-01'").count() == 1)
     // merge keyed on (id) into a partition-scoped target, post-rename
     t.merge(Seq((2L, "2024-02", 60.0), (3L, "2024-02", 7.0))
       .toDF("id", "ship_month", "amt"), keys = Seq("id", "ship_month"))
     assert(t.read.count() == 3)
     assert(t.read.filter(col("id") === 2).select("amt").as[Double].head() == 60.0)
     // untouched partition survived by reference
-    assert(t.readPartitions(Seq("2024-01")).count() == 1)
+    assert(t.read.filter("ship_month = '2024-01'").count() == 1)
   }
 
   test("MoR delete and update accept conditions on the renamed name") {

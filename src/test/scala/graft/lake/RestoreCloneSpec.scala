@@ -101,7 +101,7 @@ class RestoreCloneSpec extends SparkSpec {
     val clone = src.shallowClone(s"$root/clone")
     assert(clone.partitionColumn.contains("p"))
     assert(clone.ownedPartitionValues.toSet == Set("p1", "p2"))
-    assert(clone.readPartitions(Seq("p2")).as[(Long, String, String)]
+    assert(clone.read.filter("p = 'p2'").as[(Long, String, String)]
       .collect().toSeq == Seq((2L, "y", "p2")))
   }
 

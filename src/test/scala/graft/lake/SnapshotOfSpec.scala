@@ -32,7 +32,6 @@ class SnapshotOfSpec extends SparkSpec {
   test("scoped, local, file, deletion-vector and multi-table reads have no snapshot") {
     val t = table("snap_none", partitioned = true)
     val u = table("snap_other")
-    assert(LakeTable.snapshotOf(t.readPartitions(Seq("p"))).isEmpty)
     assert(LakeTable.snapshotOf(Seq(1L).toDF("k")).isEmpty)
     assert(LakeTable.snapshotOf(spark.read.parquet(s"${t.root}/data")).isEmpty)
     assert(LakeTable.snapshotOf(t.read.join(u.read, "k")).isEmpty)

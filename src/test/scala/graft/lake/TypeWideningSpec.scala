@@ -64,9 +64,9 @@ class TypeWideningSpec extends SparkSpec {
     // float values widen exactly (1.5f reads as the double 1.5f.toDouble)
     assert(t.read.filter(col("k") === 3).head.getDouble(1) == (3.toFloat / 3).toDouble)
     // zone maps on the widened column still prune, and exactly
-    val (kept, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("k", "49999")))
+    val (kept, skipped) = t.skippingStats("k = 49999")
     assert(skipped >= 1, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("k", "49999"))).count() == 1)
+    assert(t.read.filter("k = 49999").count() == 1)
   }
 
   test("widening refusals: property off, lossy directions, load-bearing columns") {
@@ -129,16 +129,16 @@ class TypeWideningSpec extends SparkSpec {
     // the promoted double of 0.1f — its decimal rendering disagrees with
     // the float-era stat string "0.1"; stale stats would prune this file
     val promoted = 0.1f.toDouble.toString
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("v", promoted))).count() == 1)
+    assert(t.read.filter(s"v = $promoted").count() == 1)
     // the INTEGRAL column's stats survived the widen (decimal-exact)
     t.alterColumnType("k", LongType)
-    val (_, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("k", "999")))
+    val (_, skipped) = t.skippingStats("k = 999")
     assert(skipped >= 1)
     // a post-widen FLOAT batch is cast up at write: its file carries real
     // doubles, so its stats prune correctly under high-precision bounds
     t.append(Seq((3, 0.3f)).toDF("k", "v"), mergeSchema = true)
     val p3 = 0.3f.toDouble.toString
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("v", p3))).count() == 1)
+    assert(t.read.filter(s"v = $p3").count() == 1)
     assert(t.read.filter(col("k") === 3).head.getDouble(1) == 0.3f.toDouble)
   }
 
@@ -158,9 +158,9 @@ class TypeWideningSpec extends SparkSpec {
     // float-era row must be reachable under its promoted double value —
     // with stale float stats the zone map would skip its file
     val promoted = 0.1f.toDouble.toString
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("v", promoted))).count() == 1)
+    assert(t.read.filter(s"v = $promoted").count() == 1)
     // the INTEGRAL column's stats survived (decimal-exact renderings)
-    val (_, skipped) = t.skippingStats(Seq(LakeTable.ZonePred.eq("k", "999")))
+    val (_, skipped) = t.skippingStats("k = 999")
     assert(skipped >= 1)
   }
 
@@ -184,8 +184,8 @@ class TypeWideningSpec extends SparkSpec {
       .select(col("i").cast(DecimalType(18, 0)).as("i"),
         col("l").cast(DecimalType(20, 0)).as("l"),
         col("d").cast(DecimalType(12, 4)).as("d")))
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("d", "12345.67"))).count() == 1)
-    assert(t.readWhere(Seq(LakeTable.ZonePred.eq("i", "900"))).count() == 1)
+    assert(t.read.filter("d = 12345.67").count() == 1)
+    assert(t.read.filter("i = 900").count() == 1)
     // lossless guards: integer capacity may never shrink, scale never drop
     intercept[IllegalArgumentException](t.alterColumnType("d", DecimalType(12, 6)))
     intercept[IllegalArgumentException](t.alterColumnType("d", DecimalType(13, 2)))

@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.lake.LakeTable.ZonePred
 
 class ZoneMapSpec extends SparkSpec {
   import spark.implicits._
@@ -34,14 +33,14 @@ class ZoneMapSpec extends SparkSpec {
     t.append(Seq(("", 1)).toDF("k", "v").coalesce(1)) // min = max = ""
     t.setTableProperties(Map("note" -> ""))
     assert(t.read.as[(String, Int)].collect().toSeq == Seq(("", 1)))
-    assert(t.readWhere(Seq(ZonePred.eq("k", ""))).count() == 1)
+    assert(t.read.filter("k = ''").count() == 1)
     assert(t.tableProperties.get("note").contains(""))
   }
 
-  test("readWhere equals read.filter exactly, and skips files outside the range") {
+  test("read.filter returns the matching rows and skips files outside the range") {
     val t = rangedTable(Seq("id", "ts", "v"))
-    val preds = Seq(ZonePred.between("id", "120", "180"))
-    val got = t.readWhere(preds).select("id", "v")
+    val preds = "id >= 120 AND id <= 180"
+    val got = t.read.filter(preds).select("id", "v")
       .as[(Long, Double)].collect().toSet
     val want = t.read.filter(col("id") >= 120 && col("id") <= 180)
       .select("id", "v").as[(Long, Double)].collect().toSet
@@ -53,20 +52,20 @@ class ZoneMapSpec extends SparkSpec {
 
   test("timestamp zone maps prune on time ranges") {
     val t = rangedTable(Seq("ts"))
-    val preds = Seq(ZonePred.atLeast("ts", "2024-01-15 00:00:00"))
+    val preds = "ts >= TIMESTAMP '2024-01-15 00:00:00'"
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 1 && skipped == 2)
-    assert(t.readWhere(preds).count() == 100)
+    assert(t.read.filter(preds).count() == 100)
   }
 
   test("conjunction of predicates prunes the union of each one's exclusions") {
     val t = rangedTable(Seq("id", "ts"))
-    val preds = Seq(
-      ZonePred.atLeast("id", "101"),                  // excludes batch 1
-      ZonePred.atMost("ts", "2024-01-15 00:00:00"))   // excludes batch 3
+    val preds =
+      "id >= 101 " +                                   // excludes batch 1
+        "AND ts <= TIMESTAMP '2024-01-15 00:00:00'"    // excludes batch 3
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 1 && skipped == 2)
-    assert(t.readWhere(preds).select("id").as[Long].collect().toSet ==
+    assert(t.read.filter(preds).select("id").as[Long].collect().toSet ==
       (101L to 200L).toSet)
   }
 
@@ -74,18 +73,18 @@ class ZoneMapSpec extends SparkSpec {
     val t = rangedTable(Seq("id"))
     // lexicographically '90' > '200', so a string compare would wrongly
     // prune every file; numerically files 1 and 2 must both survive
-    val preds = Seq(ZonePred.between("id", "90", "110"))
+    val preds = "id >= 90 AND id <= 110"
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 2 && skipped == 1, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(preds).count() == 21)
+    assert(t.read.filter(preds).count() == 21)
   }
 
   test("a table without stats columns never skips but stays correct") {
     val t = rangedTable(Nil)
-    val preds = Seq(ZonePred.eq("id", "150"))
+    val preds = "id = 150"
     val (kept, skipped) = t.skippingStats(preds)
     assert(skipped == 0 && kept == 3)
-    assert(t.readWhere(preds).count() == 1)
+    assert(t.read.filter(preds).count() == 1)
   }
 
   test("all-null stats column keeps the file (absent stats never prune)") {
@@ -94,10 +93,10 @@ class ZoneMapSpec extends SparkSpec {
       .toDF("id", "v")
     t.create(df.schema, statsColumns = Seq("v"))
     t.append(df.coalesce(1))
-    val preds = Seq(ZonePred.atLeast("v", "99.0"))
+    val preds = "v >= 99.0"
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 1 && skipped == 0)
-    assert(t.readWhere(preds).count() == 0) // residual filter still applies
+    assert(t.read.filter(preds).count() == 0) // residual filter still applies
   }
 
   test("zone maps survive a partitioned merge: untouched dirs keep stats") {
@@ -108,8 +107,8 @@ class ZoneMapSpec extends SparkSpec {
     t.append(df0)
     // merge touches only partition b; partition a's file stats must survive
     t.merge(Seq((3L, "b", 31.0), (4L, "b", 40.0)).toDF("id", "part", "v"), Seq("id"))
-    val predsA = Seq(ZonePred.atMost("id", "2"))
-    val got = t.readWhere(predsA).select("id", "v").as[(Long, Double)].collect().toSet
+    val predsA = "id <= 2"
+    val got = t.read.filter(predsA).select("id", "v").as[(Long, Double)].collect().toSet
     assert(got == Set((1L, 10.0), (2L, 20.0)))
     // id <= 2 lives only in partition a's file; the rewritten b file (ids
     // 3..4) must be skipped via its fresh stats
@@ -126,19 +125,19 @@ class ZoneMapSpec extends SparkSpec {
     t.append(df) // one file per partition
     // the partition column has NO zone stats — its value IS the dir name;
     // an equality pred must still skip the other partitions' files
-    val preds = Seq(ZonePred.eq("part", "b"))
+    val preds = "part = 'b'"
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept == 1 && skipped == 2, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(preds).select("id").as[Long].collect().toSeq == Seq(2L))
-    // beside a zone pred on another column it still prunes by partition
-    assert(t.skippingStats(preds :+ ZonePred.atLeast("id", "2"))._1 == 1)
+    assert(t.read.filter(preds).select("id").as[Long].collect().toSeq == Seq(2L))
+    // beside a bound on another column it still prunes by partition
+    assert(t.skippingStats(s"$preds AND id >= 2")._1 == 1)
     // a range pred on the partition column prunes exactly as well: it is
     // evaluated on each file's typed partition value, so only c's file goes
-    val range = Seq(ZonePred.between("part", "a", "b"))
+    val range = "part >= 'a' AND part <= 'b'"
     assert(t.skippingStats(range)._1 == 2)
-    assert(t.readWhere(range).count() == 2)
+    assert(t.read.filter(range).count() == 2)
     // and a pruned MoR delete keyed on the partition value touches one file
-    assert(t.deleteWhere(Seq(ZonePred.eq("part", "c"))) == 1L)
+    assert(t.deleteWhere("part = 'c'") == 1L)
     assert(t.read.count() == 2)
   }
 
@@ -154,8 +153,8 @@ class ZoneMapSpec extends SparkSpec {
     }
     // 1/16 ranges aligned to the top-2-bits-of-bin boundary (bin 64..79 of
     // 256), so the range doesn't straddle a z-curve class split
-    val xPred = Seq(ZonePred.between("x", "1024", "1279"))
-    val yPred = Seq(ZonePred.between("y", "1024", "1279"))
+    val xPred = "x >= 1024 AND x <= 1279"
+    val yPred = "y >= 1024 AND y <= 1279"
 
     val linear = mk()
     linear.append(spark.range(0, 4096).select(
@@ -184,7 +183,7 @@ class ZoneMapSpec extends SparkSpec {
       linear.read.select("x", "y").as[(Long, Long)].collect().toSet)
     assert(zt.history.last._2 == "compact")
     // and the skipping read returns exactly the filtered rows
-    assert(zt.readWhere(yPred).count() ==
+    assert(zt.read.filter(yPred).count() ==
       zt.read.filter(col("y").between(1000, 1255)).count())
   }
 
@@ -198,7 +197,7 @@ class ZoneMapSpec extends SparkSpec {
     t.append(df)
     t.compactZOrder(Seq("x", "y"), targetFiles = 8)
     assert(t.read.count() == 4000)
-    val (_, skippedHighY) = t.skippingStats(Seq(ZonePred.atLeast("y", "3000")))
+    val (_, skippedHighY) = t.skippingStats("y >= 3000")
     assert(skippedHighY >= 4, s"skew tail should be separable, got $skippedHighY of 8")
   }
 
@@ -224,22 +223,21 @@ class ZoneMapSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().toSet == before)
     assert(t.partitionColumn.contains("part"))
     assert(t.ownedPartitionValues.toSet == Set("a", "b"))
-    assert(t.readPartitions(Seq("b")).count() == 2048)
+    assert(t.read.filter("part = 'b'").count() == 2048)
     assert(t.history.last._2 == "compact")
 
     // a 1/8 x-range inside partition b must skip partition a's files
     // entirely (zone maps) plus most of b's (the local z-curve)
-    val total = t.skippingStats(Seq(ZonePred.atLeast("x", "0")))._1 +
-      t.skippingStats(Seq(ZonePred.atLeast("x", "0")))._2
+    val total = t.skippingStats("x >= 0")._1 + t.skippingStats("x >= 0")._2
     val (keptX, skippedX) =
-      t.skippingStats(Seq(ZonePred.between("x", "100512", "100767")))
+      t.skippingStats("x >= 100512 AND x <= 100767")
     assert(skippedX > total / 2, s"kept=$keptX skipped=$skippedX of $total")
     // and the y dimension skips too — that's what z-order buys over a sort
     val (keptY, skippedY) =
-      t.skippingStats(Seq(ZonePred.between("y", "100512", "100767")))
+      t.skippingStats("y >= 100512 AND y <= 100767")
     assert(skippedY > total / 2, s"kept=$keptY skipped=$skippedY of $total")
     // skipping read equals the plain filtered read
-    assert(t.readWhere(Seq(ZonePred.between("x", "100512", "100767"))).count() ==
+    assert(t.read.filter("x >= 100512 AND x <= 100767").count() ==
       t.read.filter(col("x").between(100512, 100767)).count())
 
     // the table stays fully functional: a partition-scoped merge after the
@@ -249,16 +247,16 @@ class ZoneMapSpec extends SparkSpec {
       .collect().toSeq == Seq(-1L))
   }
 
-  test("readWhere on a multi-file append prunes within the dir") {
+  test("a filtered read of a multi-file append prunes within the dir") {
     val t = LakeTable(spark, tmpDir("zm_multi"))
     val df = spark.range(0, 1000).select(col("id"), (col("id") * 2).as("v"))
       .repartitionByRange(8, col("id")) // 8 files with disjoint id ranges
     t.create(df.schema, statsColumns = Seq("id"))
     t.append(df)
-    val preds = Seq(ZonePred.between("id", "0", "100"))
+    val preds = "id >= 0 AND id <= 100"
     val (kept, skipped) = t.skippingStats(preds)
     assert(kept + skipped == 8)
     assert(skipped >= 6, s"kept=$kept skipped=$skipped")
-    assert(t.readWhere(preds).count() == 101)
+    assert(t.read.filter(preds).count() == 101)
   }
 }

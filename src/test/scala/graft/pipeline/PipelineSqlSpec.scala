@@ -1876,7 +1876,7 @@ class PipelineSqlSpec extends SparkSpec {
     // the dim-delta slice rides (same pred, same file index)
     dim.merge(Seq(("c0003", 5L), ("c0007", 5L)).toDF("cat", "w"), Seq("cat"))
     val (_, skipped) = fact.skippingStats(
-      Seq(LakeTable.ZonePred.between("cat", "c0003", "c0007")))
+      "cat >= 'c0003' AND cat <= 'c0007'")
     assert(skipped >= 1, s"expected the high-range file skipped, got $skipped")
     p.run()
     def ev = p.eventLog.filter(col("dataset") === "gold")
@@ -1934,9 +1934,9 @@ class PipelineSqlSpec extends SparkSpec {
     // BOTH branches' high-range files are zone-skippable under the
     // changed-key bounds — branch b through its RENAMED key column
     val (_, skipA) = a.skippingStats(
-      Seq(LakeTable.ZonePred.between("cat", "c0003", "c0007")))
+      "cat >= 'c0003' AND cat <= 'c0007'")
     val (_, skipB) = b.skippingStats(
-      Seq(LakeTable.ZonePred.between("cat2", "c0003", "c0007")))
+      "cat2 >= 'c0003' AND cat2 <= 'c0007'")
     assert(skipA >= 1 && skipB >= 1, (skipA, skipB))
     p.run()
     val ev = p.eventLog.filter(col("dataset") === "gold")
@@ -2615,11 +2615,10 @@ class PipelineSqlSpec extends SparkSpec {
     // the box the pipeline just rode skips 2 of the 3 fact files at the
     // manifest level; the key residual alone (rk ∈ {1}) skips NONE —
     // the band is the lever for this shape
-    val (keptB, skippedB) = fact.skippingStats(Seq(LakeTable.ZonePred(
-      "ts", Some("2024-01-01 00:00:00"), Some("2024-12-31 00:00:00"))))
+    val (keptB, skippedB) = fact.skippingStats(
+      "ts >= TIMESTAMP '2024-01-01 00:00:00' AND ts <= TIMESTAMP '2024-12-31 00:00:00'")
     assert((keptB, skippedB) == ((1, 2)), (keptB, skippedB))
-    val (keptK, skippedK) = fact.skippingStats(Seq(
-      LakeTable.ZonePred.eq("rk", "1")))
+    val (keptK, skippedK) = fact.skippingStats("rk = 1")
     assert(skippedK == 0, (keptK, skippedK))
     // AMBIGUOUS band: two lower-bound conjuncts on the same ts column —
     // extraction keeps both, the runtime box refuses (one bound column

@@ -637,9 +637,7 @@ object LakeSql {
         val incoming = GraftColumnBridge.dataset(spark, o.query)
         val df = insertShape(tbl, incoming, Nil, byName = false)
         val stripped = stripTableQualifiers(o.deleteExpr, name, alias)
-        val onPartition = tbl.partitionColumn.exists(p => stripped.collect {
-          case a: UnresolvedAttribute => a.nameParts.last }.forall(_ == p))
-        if (isBounds(stripped) && onPartition) {
+        if (isBounds(stripped) && tbl.onPartitionOnly(stripped.sql)) {
           tbl.overwritePartitions(stripped.sql, df)
           Seq(-1L).toDF("replaced_rows") // zero-scan: count not known
         } else Seq(tbl.overwriteWhere(stripped.sql, df)).toDF("replaced_rows")

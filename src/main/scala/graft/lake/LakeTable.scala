@@ -8,14 +8,15 @@ import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal, PythonFuncExpression, UserDefinedExpression, UserDefinedGenerator}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, ObjectConsumer, ObjectProducer}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EvalMode, Expression, Literal, PythonFuncExpression, UserDefinedExpression, UserDefinedGenerator}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LocalRelation, ObjectConsumer, ObjectProducer}
 import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, ObjectType, StructType}
+import org.apache.spark.sql.types.{DataType, ObjectType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.jdk.CollectionConverters._
 
@@ -828,13 +829,17 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *  `m` that may hold a row satisfying `cond` — what their
    *  [[ManifestFileIndex]] keeps for the partition and data filters
    *  Catalyst pushes from `cond` into the scan, exactly as a read of the
-   *  filtered snapshot prunes. Planning only: no Spark job runs. */
+   *  filtered snapshot prunes. A plan left with no scan is one the
+   *  optimizer proved empty (a condition folded to false or NULL): no
+   *  file. Planning only: no Spark job runs. The set may over-approximate
+   *  (an unevaluable pushed filter keeps its files), so it names what to
+   *  READ, never what to drop unread. */
   private def candidateFiles(m: Manifest, files: Seq[SnapshotFile],
       cond: Column): Seq[SnapshotFile] = {
-    val pushed = scanFiles(m, files).filter(cond).queryExecution.sparkPlan.collect {
+    val scans = scanFiles(m, files).filter(cond).queryExecution.sparkPlan.collect {
       case s: FileSourceScanExec => s.partitionFilters ++ s.dataFilters
-    }.flatten
-    fileIndex(m, files).filesMatching(pushed)
+    }
+    if (scans.isEmpty) Nil else fileIndex(m, files).filesMatching(scans.flatten)
   }
 
   /** Candidate files for a FILE-PRUNED unpartitioned merge, or None when
@@ -2917,8 +2922,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    * [[optimizeWhere]]), and no existing data is read at all — cost is
    * O(new data) + O(manifest), independent of table size. `condition` (a
    * SQL boolean expression) may reference only the partition column; the
-   * replaced partitions are those its candidate files hold
-   * ([[candidateFiles]]), and incoming rows must all satisfy it (Delta's
+   * replaced partitions are the owned values it holds for, each decided
+   * exactly ([[ownedValuesMatching]] — an over-inclusive scope would
+   * disown data), and incoming rows must all satisfy it (Delta's
    * replaceWhere contract). Deletion vectors over replaced partitions
    * become inert (their coordinates address disowned files); vectors over
    * untouched partitions stay live.
@@ -2947,14 +2953,14 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         val (dir, owned, fstats) =
           writeData(data, m.pcol, m.statsCols, bloomCols = m.bloomCols,
             colMap = m.colMap)
-        val scoped = candidateFiles(m, snapshotFiles(m), expr(condition))
-        val replaced = ownedValuesOf(m, scoped)
+        val replaced = ownedValuesMatching(m, condition)
         val chDir =
           if (m.cdfEnabled) {
             // CDF needs the replaced rows' delete images: read ONLY the
             // replaced partitions (partition-pruned — the zero-scan promise
             // relaxes to O(replaced region) exactly when CDF demands it)
-            Some(writeChanges(m, snapshot(m, scoped, withRowIds = false, version = None)
+            Some(writeChanges(m, snapshot(m, snapshotFiles(m, Some(replaced)),
+              withRowIds = false, version = None)
               .withColumn(ChangeTypeCol, lit("delete"))
               .unionByName(data.withColumn(ChangeTypeCol, lit("insert")))))
           } else None
@@ -3316,20 +3322,36 @@ final class LakeTable private (val spark: SparkSession, val root: String,
   }
 
   /** The owned partition values of `m` (as the manifest records them)
-   *  that the snapshot files `scoped` sit in. */
-  private def ownedValuesOf(m: Manifest, scoped: Seq[SnapshotFile]): Set[String] = {
-    val dt = m.schema(m.pcol.get).dataType
-    val hit = scoped.map(_.partition.get(0, dt)).toSet
-    val typed = typedValue(dt)
-    m.entries.flatMap(_.owned.getOrElse(Nil)).filter(v => hit(typed(v))).toSet
+   *  that satisfy `condition`, a condition over the partition column: each
+   *  value, typed, is one row of a local relation the condition filters,
+   *  so Catalyst decides every value exactly — a condition folded to false
+   *  scopes nothing, a subquery runs as in any query. No file is read. */
+  private def ownedValuesMatching(m: Manifest, condition: String): Set[String] = {
+    val f = m.schema(m.pcol.get)
+    val typed = typedValue(f.dataType)
+    val values = m.entries.flatMap(_.owned.getOrElse(Nil)).distinct
+      .map(v => (v, typed(v))).filter(_._2 != null)
+    val owned = AttributeReference(OwnedValueCol, StringType, nullable = false)()
+    val rel = LocalRelation(Seq(AttributeReference(f.name, f.dataType)(), owned),
+      values.map { case (v, x) => InternalRow(x, UTF8String.fromString(v)) })
+    GraftColumnBridge.dataset(spark, rel).filter(condition).select(OwnedValueCol)
+      .collect().map(_.getString(0)).toSet
   }
 
   /** The table columns `condition` references, resolved against `m`'s
-   *  schema (an unknown column fails analysis). */
+   *  schema (an unknown column fails analysis) and named as the schema
+   *  spells them — a resolved reference keeps the condition's spelling. */
   private def columnsOf(m: Manifest, condition: String): Seq[String] =
     scanFiles(m, Nil).filter(condition).queryExecution.analyzed.collectFirst {
-      case Filter(c, _) => c.references.toSeq.map(_.name)
-    }.getOrElse(Nil).distinct
+      case Filter(c, child) => child.output.filter(c.references.contains).map(_.name)
+    }.getOrElse(Nil)
+
+  /** Whether `condition` references the partition column and no other —
+   *  the rule [[overwritePartitions]] and [[optimizeWhere]] enforce. */
+  private[lake] def onPartitionOnly(condition: String): Boolean = {
+    val m = manifest
+    m.pcol.exists(p => columnsOf(m, condition).forall(_ == p))
+  }
 
   /** Hive-layout partition value of a file's dir-relative subpath, if any. */
   private def partitionValueOf(sub: String, pcol: String): Option[String] = {
@@ -3588,9 +3610,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
    *
    * `condition` (a SQL boolean expression) may reference only the
    * partition column (Delta's rule: only partition predicates can scope
-   * whole-file maintenance); the scope is the partitions its candidate
-   * files hold ([[candidateFiles]]: the condition evaluated on each file's
-   * partition value) — no data scan decides the scope. Deletion vectors
+   * whole-file maintenance); the scope is the owned partition values it
+   * holds for ([[ownedValuesMatching]]: the condition evaluated on each
+   * typed value) — no data scan decides the scope. Deletion vectors
    * over the scoped partitions are materialized by the rewrite; vectors
    * over untouched partitions stay
    * live (their coordinates still address the untouched files, and stale
@@ -3611,10 +3633,9 @@ final class LakeTable private (val spark: SparkSession, val root: String,
         s"got $c (Delta's rule — only partition predicates scope files)"))
     // live files in scope are rewritten; the rest stay untouched (files of
     // partitions a dir no longer owns are dead — vacuum's business)
-    val files = snapshotFiles(m)
-    val scoped = candidateFiles(m, files, expr(condition))
-    val keptFiles = files.size - scoped.size
-    val scopeSet = ownedValuesOf(m, scoped)
+    val scopeSet = ownedValuesMatching(m, condition)
+    val scoped = snapshotFiles(m, Some(scopeSet))
+    val keptFiles = snapshotFiles(m).size - scoped.size
     if (scopeSet.isEmpty) return OptimizeStats(0, keptFiles, 0L)
     val scopedBytes = scoped.map(_.status.getLen).sum
     // scoped snapshot rows, deletion vectors applied (the rewrite
@@ -3752,6 +3773,9 @@ object LakeTable {
   /** Deletion-vector row coordinates attached to scans (internal). */
   private val DvFileCol = "__dv_file"
   private val DvPosCol = "__dv_pos"
+  /** The manifest-text column beside each typed partition value when a
+   *  condition scopes partitions (internal). */
+  private val OwnedValueCol = "__owned_value"
   /** Bloom index sizing: per-file expected distinct values and target false
    *  positive rate. 50k items @ 1% ≈ 60 KB/file/column — a production
    *  deployment writing ~1M-row files would size these from write stats;

@@ -743,6 +743,11 @@ class LakeSqlSpec extends SparkSpec {
       assert(scala.util.Try(spark.sql(
         "INSERT INTO rpp_t REPLACE WHERE pt = 'a' VALUES (9, 'zz', 'b')")).isFailure)
       assert(t.read.count() == 3)
+      // the column rule is overwritePartitions' own: `PT` resolves to pt
+      // (case-insensitive analysis), so it takes the zero-scan path too
+      assert(spark.sql("INSERT INTO rpp_t REPLACE WHERE PT = 'a' " +
+        "VALUES (4, 'a4', 'a')").as[Long].head() == -1L)
+      assert(t.read.filter("pt = 'a'").select("k").as[Long].collect().toSeq == Seq(4L))
     } finally LakeSql.unregister("rpp_t")
   }
 

@@ -84,6 +84,46 @@ class MutationSpec extends SparkSpec {
     assert(t.read.filter(col("part") === "p2").count() == 50) // untouched
   }
 
+  test("a condition the optimizer folds to false or NULL matches no file " +
+      "and commits nothing") {
+    val t = ranged()
+    val v0 = t.currentVersion
+    assert(t.delete("id = NULL") == 0L)
+    assert(t.delete("id >= 1 AND 1 = 0") == 0L)
+    assert(t.update("id = NULL", Map("tag" -> lit("x"))) == 0L)
+    assert(t.currentVersion == v0)
+    assert(t.skippingStats("id >= 1 AND 1 = 0") == ((0, 3)))
+    assert(t.read.count() == 300)
+  }
+
+  test("partition scope is exact: a subquery or a folded-false condition " +
+      "replaces and optimizes only the partitions it holds for") {
+    val t = LakeTable(spark, tmpDir("mut_scope"))
+    val df = (1L to 30L).map(k => (k, s"p${k % 3}")).toDF("k", "pt")
+    t.create(df.schema, partitionBy = Some("pt"), statsColumns = Seq("k"))
+    (0 until 2).foreach(s => t.append(df.filter(col("k") % 2 === s)))
+    def counts = t.read.groupBy("pt").count().as[(String, Long)].collect().toMap
+    Seq("p1").toDF("pt").createOrReplaceTempView("mut_scope_staging")
+    try {
+      val sub = "pt = (SELECT max(pt) FROM mut_scope_staging)"
+      t.overwritePartitions(sub, Seq((99L, "p1")).toDF("k", "pt"))
+      assert(counts == Map("p0" -> 10L, "p1" -> 1L, "p2" -> 10L))
+      // folded to false / NULL: no partition is replaced (an empty batch
+      // meets the contract)
+      Seq("pt = 'p0' AND 1 = 0", "pt = NULL").foreach { c =>
+        t.overwritePartitions(c, df.limit(0))
+        assert(counts == Map("p0" -> 10L, "p1" -> 1L, "p2" -> 10L), c)
+      }
+      val none = t.optimizeWhere("pt = 'p0' AND 1 = 0")
+      assert(none.filesRewritten == 0 && none.filesLinked == 5, none.toString)
+      // p0 and p2 hold two files each; p1 the one replacing file
+      t.append(Seq((98L, "p1")).toDF("k", "pt"))
+      val st = t.optimizeWhere(sub)
+      assert(st.filesRewritten == 1 && st.filesLinked == 4, st.toString)
+      assert(counts == Map("p0" -> 10L, "p1" -> 2L, "p2" -> 10L))
+    } finally spark.catalog.dropTempView("mut_scope_staging")
+  }
+
   test("change feed records delete and update pre/post images") {
     val t = LakeTable(spark, tmpDir("mut_cdf"))
     val df = (1 to 10).map(i => (i.toLong, i * 1.0)).toDF("id", "v")
